@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -18,6 +18,16 @@ final case class DqIssue(
 /** Metadata-driven load config row (audit.etl_config, ddl_audit.sql:65-72). */
 final case class EtlConfig(
     source_table: String, target_table: String, is_active: Boolean)
+
+/** A frame a load step writes, with a row counter that the writing action
+  * fills in: the step's `rows_loaded` is observed at write time instead of
+  * read back from the table with a second `count()` job. Write [[frame]]
+  * exactly once; [[rows]] waits for that write's metrics. */
+final class Counted(df: DataFrame) {
+  private val obs = Observation()
+  val frame: DataFrame = df.observe(obs, count(lit(1)).as("rows"))
+  def rows: Long = obs.get("rows").asInstanceOf[Long]
+}
 
 /** Audit logging + in-pipeline DQ validation (SURVEY.md §2.9 I8-I9).
   *

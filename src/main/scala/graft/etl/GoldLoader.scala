@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   */
 final case class GoldLoader(wh: Warehouse, audit: Audit) {
 
-  def run(spark: SparkSession, batchId: Long): Unit = {
+  /** Load the three gold tables; returns the fact's row count. */
+  def run(spark: SparkSession, batchId: Long): Long = {
     dimCustomers(spark, batchId)
     dimProducts(spark, batchId)
     factSales(spark, batchId)
@@ -66,12 +67,13 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
       val keyed = SurrogateKeys.scalable(joined, "customer_key",
         Seq(col("customer_id")))
         .select(unknownCustomer(spark).columns.map(col): _*)
-      wh.rebuild(keyed.unionByName(unknownCustomer(spark)), "gold", "dim_customers")
+      val out = new Counted(keyed.unionByName(unknownCustomer(spark)))
+      wh.rebuild(out.frame, "gold", "dim_customers")
       val dups = wh.read(spark, "gold", "dim_customers")
         .groupBy("customer_key").count().filter(col("count") > 1)
       audit.check(spark, batchId, "dim_customers", "surrogate_uniqueness",
         dups, "customer_key must be unique")
-      wh.read(spark, "gold", "dim_customers").count()
+      out.rows
     }
 
   private def unknownProduct(spark: SparkSession): DataFrame = {
@@ -108,14 +110,15 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
       val keyed = SurrogateKeys.scalable(joined, "product_key",
         Seq(col("product_id")))
         .select(unknownProduct(spark).columns.map(col): _*)
-      wh.rebuild(keyed.unionByName(unknownProduct(spark)), "gold", "dim_products")
-      wh.read(spark, "gold", "dim_products").count()
+      val out = new Counted(keyed.unionByName(unknownProduct(spark)))
+      wh.rebuild(out.frame, "gold", "dim_products")
+      out.rows
     }
 
   /** Fact build: dim-key lookups with −1 fallback, year-partitioned write
     * (proc_load_gold.sql:133-179 + ddl_gold.sql partitioning). Dims are
     * broadcast — the fact side never shuffles. */
-  def factSales(spark: SparkSession, batchId: Long): Unit =
+  def factSales(spark: SparkSession, batchId: Long): Long =
     audit.timed(spark, batchId, "gold", "fact_sales") {
       val sd = wh.read(spark, "silver", "crm_sales_details")
       // Current versions of distinct products can still share a
@@ -129,7 +132,7 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
         .select(col("product_key"), col("product_number"))
       val dc = wh.read(spark, "gold", "dim_customers")
         .select(col("customer_key"), col("customer_id"))
-      val fact = sd
+      val fact = new Counted(sd
         .join(broadcast(dp), col("sls_prd_key") === col("product_number"), "left")
         .join(broadcast(dc), col("sls_cust_id") === col("customer_id"), "left")
         .select(
@@ -142,13 +145,13 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
           col("sls_sales").as("sales_amount"),
           col("sls_quantity").as("quantity"),
           col("sls_price").as("price"),
-          coalesce(year(col("sls_order_dt")), lit(0)).as("order_year"))
-      wh.overwritePartitioned(fact, "gold", "fact_sales", Seq("order_year"))
+          coalesce(year(col("sls_order_dt")), lit(0)).as("order_year")))
+      wh.overwritePartitioned(fact.frame, "gold", "fact_sales", Seq("order_year"))
       // I9: referential integrity — count of −1 fallbacks is logged, not fatal
       val orphans = wh.read(spark, "gold", "fact_sales")
         .filter(col("product_key") === -1L || col("customer_key") === -1L)
       audit.check(spark, batchId, "fact_sales", "unknown_member_fallbacks",
         orphans, "fact rows resolved to the -1 unknown member")
-      wh.read(spark, "gold", "fact_sales").count()
+      fact.rows
     }
 }

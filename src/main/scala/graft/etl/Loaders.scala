@@ -17,11 +17,11 @@ final case class BronzeLoader(wh: Warehouse, audit: Audit) {
       val path = s"$sourceDir/$file"
       if (new java.io.File(path).exists()) {
         audit.timed(spark, batchId, "bronze", table) {
-          val df = spark.read.schema(schema)
+          val out = new Counted(spark.read.schema(schema)
             .option("header", "true").option("mode", "PERMISSIVE")
-            .csv(path)
-          wh.overwrite(df, "bronze", table)
-          wh.read(spark, "bronze", table).count()
+            .csv(path))
+          wh.overwrite(out.frame, "bronze", table)
+          out.rows
         }
       }
     }
@@ -61,19 +61,19 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         gender(col("cst_gndr")).as("cst_gndr"),
         col("cst_create_date"))
       val hashed = Scd.withHash(cleaned, custTracked)
-      val merged =
+      val merged = new Counted(
         if (!wh.exists("silver", "crm_cust_info"))
           hashed.withColumn("dwh_create_date", lit(loadTs))
             .withColumn("dwh_update_date", lit(loadTs))
         else Scd.scd1Merge(wh.read(spark, "silver", "crm_cust_info"), hashed,
-          Seq("cst_id"), "dwh_hash_full", loadTs)
-      wh.rebuild(merged, "silver", "crm_cust_info")
+          Seq("cst_id"), "dwh_hash_full", loadTs))
+      wh.rebuild(merged.frame, "silver", "crm_cust_info")
       // I9: post-merge duplicate-key check (quality_checks_silver.sql:25-30)
       val dups = wh.read(spark, "silver", "crm_cust_info")
         .groupBy("cst_id").count().filter(col("count") > 1)
       audit.check(spark, batchId, "crm_cust_info", "duplicate_pk", dups,
         "cst_id must be unique after merge")
-      wh.read(spark, "silver", "crm_cust_info").count()
+      merged.rows
     }
 
   /** SCD2 products: split compound key, parse dd-MM-yyyy dates, cost/line
@@ -94,17 +94,17 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         parseDmyDate(col("prd_start_dt")).as("prd_start_dt"),
         parseDmyDate(col("prd_end_dt")).as("prd_end_dt"))
       val hashed = Scd.withHash(cleaned, prdTracked)
-      val applied =
+      val applied = new Counted(
         if (!wh.exists("silver", "crm_prd_info")) Scd.scd2Init(hashed, loadTs)
         else Scd.scd2Apply(wh.read(spark, "silver", "crm_prd_info"), hashed,
-          Seq("prd_id"), "dwh_hash_full", loadTs)
-      wh.rebuild(applied, "silver", "crm_prd_info")
+          Seq("prd_id"), "dwh_hash_full", loadTs))
+      wh.rebuild(applied.frame, "silver", "crm_prd_info")
       val multiCurrent = wh.read(spark, "silver", "crm_prd_info")
         .filter(col("is_current")).groupBy("prd_id").count()
         .filter(col("count") > 1)
       audit.check(spark, batchId, "crm_prd_info", "multiple_current_rows",
         multiCurrent, "exactly one is_current per prd_id")
-      wh.read(spark, "silver", "crm_prd_info").count()
+      applied.rows
     }
 
   /** Watermarked fact delta: yyyyMMdd int dates → DATE, sales-fix rule,
@@ -131,32 +131,35 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         "sls_order_dt null/garbage — row excluded from delta loads")
       val delta = cleaned.filter(col("sls_order_dt") > lit(new java.sql.Date(wm.getTime)))
       val deltaCached = delta.cache()
-      val n = deltaCached.count()
-      if (n > 0) {
-        if (!wh.exists("silver", "crm_sales_details"))
-          wh.overwrite(deltaCached, "silver", "crm_sales_details")
-        else {
-          // The 1-day late-data buffer re-reads the tail window on every
-          // run; make the append idempotent by anti-joining rows already
-          // landed (natural line grain: order number + product key).
-          val existing = wh.read(spark, "silver", "crm_sales_details")
-            .select("sls_ord_num", "sls_prd_key")
-          wh.append(deltaCached.join(existing,
-            Seq("sls_ord_num", "sls_prd_key"), "left_anti"),
-            "silver", "crm_sales_details")
+      // unpersist on every exit: a throw from the append, the watermark
+      // advance or the revenue check must not leave the delta cached
+      try {
+        val n = deltaCached.count()
+        if (n > 0) {
+          if (!wh.exists("silver", "crm_sales_details"))
+            wh.overwrite(deltaCached, "silver", "crm_sales_details")
+          else {
+            // The 1-day late-data buffer re-reads the tail window on every
+            // run; make the append idempotent by anti-joining rows already
+            // landed (natural line grain: order number + product key).
+            val existing = wh.read(spark, "silver", "crm_sales_details")
+              .select("sls_ord_num", "sls_prd_key")
+            wh.append(deltaCached.join(existing,
+              Seq("sls_ord_num", "sls_prd_key"), "left_anti"),
+              "silver", "crm_sales_details")
+          }
+          wmCtl.nextWatermark(deltaCached, "sls_order_dt")
+            .foreach(wmCtl.advance(spark, "crm_sales_details", _))
+          // I9: revenue reconciliation — sales must equal qty × |price|
+          val bad = wh.read(spark, "silver", "crm_sales_details")
+            .filter(col("sls_sales") =!=
+              (col("sls_quantity").cast(DecimalType(19, 4)) * abs(col("sls_price")))
+                .cast(DecimalType(19, 4)))
+          audit.check(spark, batchId, "crm_sales_details", "revenue_reconciliation",
+            bad, "sls_sales = sls_quantity * abs(sls_price)")
         }
-        wmCtl.nextWatermark(deltaCached, "sls_order_dt")
-          .foreach(wmCtl.advance(spark, "crm_sales_details", _))
-        // I9: revenue reconciliation — sales must equal qty × |price|
-        val bad = wh.read(spark, "silver", "crm_sales_details")
-          .filter(col("sls_sales") =!=
-            (col("sls_quantity").cast(DecimalType(19, 4)) * abs(col("sls_price")))
-              .cast(DecimalType(19, 4)))
-        audit.check(spark, batchId, "crm_sales_details", "revenue_reconciliation",
-          bad, "sls_sales = sls_quantity * abs(sls_price)")
-      }
-      deltaCached.unpersist()
-      n
+        n
+      } finally deltaCached.unpersist()
     }
 
   /** ERP tables: metadata-driven copy + the documented-but-unimplemented
@@ -165,26 +168,25 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
   def erp(spark: SparkSession, batchId: Long): Unit = {
     if (wh.exists("bronze", "erp_cust_az12"))
       audit.timed(spark, batchId, "silver", "erp_cust_az12") {
-        val df = wh.read(spark, "bronze", "erp_cust_az12").select(
+        val out = new Counted(wh.read(spark, "bronze", "erp_cust_az12").select(
           stripNasPrefix(col("cid")).as("cid"),
           when(col("bdate") > current_date(), lit(null)).otherwise(col("bdate")).as("bdate"),
-          gender(col("gen")).as("gen"))
-        wh.overwrite(df, "silver", "erp_cust_az12")
-        wh.read(spark, "silver", "erp_cust_az12").count()
+          gender(col("gen")).as("gen")))
+        wh.overwrite(out.frame, "silver", "erp_cust_az12")
+        out.rows
       }
     if (wh.exists("bronze", "erp_loc_a101"))
       audit.timed(spark, batchId, "silver", "erp_loc_a101") {
-        val df = wh.read(spark, "bronze", "erp_loc_a101").select(
+        val out = new Counted(wh.read(spark, "bronze", "erp_loc_a101").select(
           regexp_replace(col("cid"), "-", "").as("cid"),
-          country(col("cntry")).as("cntry"))
-        wh.overwrite(df, "silver", "erp_loc_a101")
-        wh.read(spark, "silver", "erp_loc_a101").count()
+          country(col("cntry")).as("cntry")))
+        wh.overwrite(out.frame, "silver", "erp_loc_a101")
+        out.rows
       }
     if (wh.exists("bronze", "erp_px_cat_g1v2"))
       audit.timed(spark, batchId, "silver", "erp_px_cat_g1v2") {
         MetadataDriven.copy(spark, wh, "bronze", "erp_px_cat_g1v2",
           "silver", "erp_px_cat_g1v2")
-        wh.read(spark, "silver", "erp_px_cat_g1v2").count()
       }
   }
 }
@@ -196,15 +198,18 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
   */
 object MetadataDriven {
 
+  /** Copy one table; returns the number of rows written. */
   def copy(spark: SparkSession, wh: Warehouse, srcLayer: String, srcTable: String,
-           tgtLayer: String, tgtTable: String): Unit = {
+           tgtLayer: String, tgtTable: String): Long = {
     val src = wh.read(spark, srcLayer, srcTable)
     val cols: Seq[String] =
       if (wh.exists(tgtLayer, tgtTable))
         src.columns.toSeq.intersect(wh.read(spark, tgtLayer, tgtTable).columns.toSeq)
       else src.columns.toSeq
     require(cols.nonEmpty, s"no intersecting columns for $srcTable → $tgtTable")
-    wh.overwrite(src.select(cols.map(col): _*), tgtLayer, tgtTable)
+    val out = new Counted(src.select(cols.map(col): _*))
+    wh.overwrite(out.frame, tgtLayer, tgtTable)
+    out.rows
   }
 
   /** Run every active config row; throw on empty config (the reference's

@@ -101,7 +101,6 @@ object Scd {
       .unionByName(newVersions.select(stillCurrent.columns.map(col): _*))
   }
 
-  /** Bootstrap an SCD2 table from a first snapshot. */
   /** Late-arriving dimension handling: facts can reference members the
     * dimension hasn't loaded yet (the fact feed outruns the dim feed).
     * Emit the dimension plus one INFERRED placeholder row per unknown
@@ -122,6 +121,8 @@ object Scd {
       .unionByName(placeholder.withColumn("is_inferred", lit(true)))
   }
 
+  /** Bootstrap an SCD2 table from a first snapshot: every row opens a
+    * current version effective at `loadTs`. */
   def scd2Init(source: DataFrame, loadTs: java.sql.Timestamp): DataFrame =
     source.withColumn("effective_date", lit(loadTs))
       .withColumn("expiry_date", lit(null).cast("timestamp"))

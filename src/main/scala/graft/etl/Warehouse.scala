@@ -20,18 +20,24 @@ final case class Warehouse(root: String) {
 
   def path(layer: String, table: String): String = s"$root/$layer/$table"
 
-  /** Read a table. Holds the table's rename lock across PLAN
-    * construction (listing + schema inference), so planning can never
-    * observe [[swapIn]]'s mid-rename window; recovery of a genuinely
-    * crashed swap happens under the same lock. Execution of the
-    * returned frame is outside the lock — a concurrent swap completing
-    * before the action can still fail it LOUDLY (never partially), the
+  /** Read a table. A table with a declared schema ([[Schemas.declared]])
+    * is opened with that schema, so planning is a driver-side file
+    * listing and submits no Spark job; any other table's schema is
+    * inferred from a Parquet footer, which costs one job. Holds the
+    * table's rename lock across PLAN construction (listing, plus footer
+    * inference when undeclared), so planning can never observe
+    * [[swapIn]]'s mid-rename window; recovery of a genuinely crashed
+    * swap happens under the same lock. Execution of the returned frame
+    * is outside the lock — a concurrent swap completing before the
+    * action can still fail it LOUDLY (never partially), the
     * plain-parquet snapshot limitation a manifest table format lifts. */
   def read(spark: SparkSession, layer: String, table: String): DataFrame =
     Warehouse.locked(path(layer, table)) {
       recoverLocked(Paths.get(path(layer, table)),
         Paths.get(path(layer, table + "._old")))
-      spark.read.parquet(path(layer, table))
+      val reader = Schemas.declared.get((layer, table))
+        .fold(spark.read)(spark.read.schema(_))
+      reader.parquet(path(layer, table))
     }
 
   def exists(layer: String, table: String): Boolean =
