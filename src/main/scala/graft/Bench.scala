@@ -98,14 +98,7 @@ private[graft] object BenchCalib {
   * sustained (median-of-window-factors) estimator in [[Bench]]. */
 object CalibRef {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(Bench.defaultCpus)
     // two discarded warmup windows (JIT + scheduler), then 9 measured
     (1 to 2).foreach { _ => BenchCalib.calibJvm(); BenchCalib.calibSpark(spark) }
     val windows = (1 to 9).map { _ =>
@@ -141,28 +134,15 @@ object CalibRef {
   * number only if it hits the same query in both passes.
   */
 object Bench {
+  /** Bench's core count, shared by [[CalibRef]] and [[Inspect]] so their
+    * measurements run on the session shape Bench times. */
+  def defaultCpus: Int =
+    Sessions.cpus(math.min(32, Runtime.getRuntime.availableProcessors()))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // The generated-class cache defaults to 100 entries — a few
-      // queries' worth. A driver running hundreds of queries (or any
-      // iterative operator whose per-round plans are structurally
-      // identical) recompiles evicted classes all day: raising the
-      // cache measured 0.70-0.85x on the iterative dedup/graph entries
-      // (r15 A/B) with bounded memory (generated classes are ~KB-scale;
-      // static conf, so it must be set before the first session).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build(defaultCpus)
     // warmup: scan/agg/join path, text/sketch/window paths, vector path
     Seq("q02_date_range", "d_dup_clusters", "d_simhash_pairs",
         "d_ngram_jaccard", "ev_sessionization", "ann_ivf_topk").foreach { n =>

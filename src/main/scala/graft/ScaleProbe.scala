@@ -1,12 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.textops.Dedup
 
 /** Dev harness: stress the heavy operator families at ~10x sf0.1, built
   * by replicating the base tables with shifted ids — perf probe only,
   * not a correctness input. `runMain graft.ScaleProbe [dedup,events]`
-  * picks families (default: both).
+  * picks families (default: dedup, events, ann, graph, behavior) and
+  * runs on `SPARK_GRAFT_CPUS` cores, 32 when unset. Every family here
+  * has numbers cited in SURVEY or the OPTIMIZATION notes; a family
+  * whose numbers nothing cites is deleted, not kept "just in case".
   *
   *  - dedup: 50k docs (worst case — every doc exactly replicated 10x);
   *  - events: 1M events over 15k users (10x users, same per-user series
@@ -15,26 +18,94 @@ import graft.textops.Dedup
   *    join of clicks to their latest prior error.
   */
 object ScaleProbe {
+  /** `copies` versions of every document of `base`, ids `doc_id * copies
+    * + rep` and text suffixed " v<rep>": near-duplicates of each other,
+    * never exact ones. */
+  private def distinctCopies(base: DataFrame, copies: Long): DataFrame =
+    base.select(col("doc_id"), col("text"),
+        explode(sequence(lit(0L), lit(copies - 1L))).as("rep"))
+      .select((col("doc_id") * copies + col("rep")).as("doc_id"),
+        concat(col("text"), lit(" v"), col("rep")).as("text"))
+
+  /** The byte probes' corpus, written to `gold/docs_kb` and read back:
+    * ~3 KB docs with UNIQUE content per base doc (the real ~50-word text
+    * + 450 doc-keyed hashed filler words — repeated-segment padding
+    * would parquet-compress 16× and fake the byte story), 5 near-dup
+    * variants per group (one appended token, J ≈ 0.998). */
+  private def kbCorpus(spark: SparkSession, base: DataFrame,
+                       wh: graft.etl.Warehouse): DataFrame = {
+    val kb = base.select(col("doc_id"), concat(col("text"), lit(" "),
+        expr("array_join(transform(sequence(0, 449), " +
+          "i -> concat('w', abs(xxhash64(doc_id, i)) % 30000)), ' ')"))
+        .as("text"))
+    wh.overwrite(distinctCopies(kb, 5), "gold", "docs_kb")
+    wh.read(spark, "gold", "docs_kb")
+  }
+
+  /** An ingest batch over the first `n` corpus docs, persisted: a third
+    * exact re-ingests, a third near-dup versions, a third reversed text
+    * (genuinely new). */
+  private def ingestBatch(corpus: DataFrame, n: Long): DataFrame =
+    corpus.filter(col("doc_id") < n)
+      .select((col("doc_id") + 100000000L).as("doc_id"),
+        when(col("doc_id") % 3 === 0, col("text"))
+          .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" vnew")))
+          .otherwise(concat_ws(" ", reverse(split(col("text"), " "))))
+          .as("text"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Ten copies of the sf0.1 events with shifted event and user ids:
+    * 10× users at the same per-user series length (the realistic growth
+    * axis). */
+  private def events10x(base: DataFrame): DataFrame =
+    (0 until 10).map(i =>
+      base.select((col("event_id") + lit(i * 10000000L)).as("event_id"),
+        (col("user_id") + lit(i * 100000L)).as("user_id"),
+        col("ts"), col("event_type"), col("value")))
+      .reduce(_ unionByName _)
+
+  /** Megabytes on disk under `p`. */
+  private def dirMb(p: String): Double = {
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+    val s = try w.filter(java.nio.file.Files.isRegularFile(_))
+      .mapToLong(java.nio.file.Files.size(_)).sum()
+    finally w.close()
+    s / 1048576.0
+  }
+
+  private def mb(mb: Double): String = f"$mb%9.1f MB"
+
+  /** Task-level InputMetrics.bytesRead (public listener API) of every
+    * job from now on; `apply` prints what one block read. */
+  private final class BytesRead(spark: SparkSession) {
+    private val read = new java.util.concurrent.atomic.AtomicLong(0L)
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskMetrics != null)
+            read.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
+      })
+    // listener events are async: settle = poll until two reads agree
+    private def settled(): Long = {
+      var prev = -1L; var cur = read.get()
+      while (cur != prev) { Thread.sleep(300); prev = cur; cur = read.get() }
+      cur
+    }
+    def apply(n: String)(b: => Long): Unit = {
+      val b0 = settled(); val t0 = System.nanoTime(); val r = b
+      val dt = (System.nanoTime() - t0) / 1e9
+      println(f"BYTES $n%-26s ${mb((settled() - b0) / 1048576.0)} $dt%8.2f s rows=$r")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val families: Set[String] =
       if (args.nonEmpty) args(0).split(",").toSet
       else Set("dedup", "events", "ann", "graph", "behavior")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // dev: PROBE_STAGES=1 prints each stage's callsite as it is
-    // submitted — enough to attribute an OOM to a pipeline step without
-    // the UI or event logs
-    if (sys.env.contains("PROBE_STAGES"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageSubmitted(
-              s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-            println(s"STAGE ${s.stageInfo.stageId} " +
-              s"[${s.stageInfo.numTasks} tasks]: ${s.stageInfo.name}")
-        })
+    val spark = Sessions.build(Sessions.cpus(32))
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def time(n: String)(b: => Long): Unit = {
       val t0 = System.nanoTime(); val r = b
       println(f"PROBE $n%-22s ${(System.nanoTime()-t0)/1e9}%8.2f s rows=$r")
@@ -106,11 +177,7 @@ object ScaleProbe {
     if (families("dedupdistinct")) {
       spark.conf.set("spark.sql.shuffle.partitions", "128")
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = base
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(49L))).as("rep"))
-        .select((col("doc_id") * 50L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
+      val big = distinctCopies(base, 50)
       val cached = big.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"docsDistinct: ${cached.count()}")
       time("ngram_jaccard_distinct50")(Dedup.ngramJaccardPairs(cached,
@@ -132,11 +199,7 @@ object ScaleProbe {
         .get.stripPrefix("distgroup").toIntOption.getOrElse(10)
       spark.conf.set("spark.sql.shuffle.partitions", "128")
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = base
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(copies - 1L))).as("rep"))
-        .select((col("doc_id") * copies + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
+      val big = distinctCopies(base, copies)
       val cached = big.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"docsDistinctGrouped: ${cached.count()}")
       val forced = !families.contains("distbroad")
@@ -185,11 +248,7 @@ object ScaleProbe {
     if (families("increment")) {
       spark.conf.set("spark.sql.shuffle.partitions", "128")
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = base
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(49L))).as("rep"))
-        .select((col("doc_id") * 50L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
+      val big = distinctCopies(base, 50)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"docsIncrement: ${big.count()}")
       val wh = graft.etl.Warehouse(java.nio.file.Files
@@ -203,13 +262,7 @@ object ScaleProbe {
       // (AQE coalesces, but the explicit knob removes the tail): the
       // corpus never re-shingles — only its skinny index rows scan
       spark.conf.set("spark.sql.shuffle.partitions", "32")
-      def mkBatch(n: Long) = big.filter(col("doc_id") < n)
-        .select((col("doc_id") + 100000000L).as("doc_id"),
-          when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" vnew")))
-            .otherwise(concat_ws(" ", reverse(split(col("text"), " "))))
-            .as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def mkBatch(n: Long) = ingestBatch(big, n)
       val batch = mkBatch(2500)
       println(s"batch: ${batch.count()}")
       time("nd_increment_pairs_1pct") {
@@ -242,52 +295,12 @@ object ScaleProbe {
     // the corpus-rebuild job they replace. Also prints on-disk sizes
     // of the corpus vs each index table.
     if (families("byteratio")) {
-      val read = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              read.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-        })
-      // listener events are async: settle = poll until two reads agree
-      def settled(): Long = {
-        var prev = -1L; var cur = read.get()
-        while (cur != prev) { Thread.sleep(300); prev = cur; cur = read.get() }
-        cur
-      }
-      def mb(b: Long): String = f"${b / 1048576.0}%9.1f MB"
-      def bytesOf(n: String)(b: => Long): Unit = {
-        val b0 = settled(); val t0 = System.nanoTime(); val r = b
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"BYTES $n%-26s ${mb(settled() - b0)} $dt%8.2f s rows=$r")
-      }
-      def dirMb(p: String): String = {
-        val root = java.nio.file.Paths.get(p)
-        val w = java.nio.file.Files.walk(root)
-        val s = try w.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally w.close()
-        mb(s)
-      }
+      val bytesOf = new BytesRead(spark)
       spark.conf.set("spark.sql.shuffle.partitions", "64")
       val wh = graft.etl.Warehouse(java.nio.file.Files
         .createTempDirectory("graft_probe_bytes").toString)
-      // ~3 KB docs with UNIQUE content per base doc (the real ~50-word
-      // text + 450 doc-keyed hashed filler words — repeated-segment
-      // padding would parquet-compress 16× and fake the byte story),
-      // 5 near-dup variants per group (one appended token, J ≈ 0.998)
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val kb = base.select(col("doc_id"), concat(col("text"), lit(" "),
-          expr("array_join(transform(sequence(0, 449), " +
-            "i -> concat('w', abs(xxhash64(doc_id, i)) % 30000)), ' ')"))
-          .as("text"))
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(4L))).as("rep"))
-        .select((col("doc_id") * 5L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
-      wh.overwrite(kb, "gold", "docs_kb")
-      val corpus = wh.read(spark, "gold", "docs_kb")
+      val corpus = kbCorpus(spark, base, wh)
       println(s"docsKb: ${corpus.count()} " +
         s"avgBytes=${corpus.agg(avg(length(col("text")))).head().getDouble(0).toInt}")
       bytesOf("kb_index_build") {
@@ -295,17 +308,11 @@ object ScaleProbe {
           wh, "gold", "nd", shingleK = 3, numHashes = 32, bands = 8)
         spark.read.parquet(wh.path("gold", "nd_bands")).count()
       }
-      println(s"  corpus parquet ${dirMb(wh.path("gold", "docs_kb"))}  " +
-        s"bands ${dirMb(wh.path("gold", "nd_bands"))}  " +
-        s"sets ${dirMb(wh.path("gold", "nd_sets"))}")
+      println(s"  corpus parquet ${mb(dirMb(wh.path("gold", "docs_kb")))}  " +
+        s"bands ${mb(dirMb(wh.path("gold", "nd_bands")))}  " +
+        s"sets ${mb(dirMb(wh.path("gold", "nd_sets")))}")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
-      def mkBatch(n: Long) = corpus.filter(col("doc_id") < n)
-        .select((col("doc_id") + 100000000L).as("doc_id"),
-          when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" vnew")))
-            .otherwise(concat_ws(" ", reverse(split(col("text"), " "))))
-            .as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def mkBatch(n: Long) = ingestBatch(corpus, n)
       val batch = mkBatch(250); println(s"batch: ${batch.count()}")
       bytesOf("kb_increment_pairs_1pct") {
         Dedup.nearDedupIncrementPairs(batch, "doc_id", "text",
@@ -343,50 +350,12 @@ object ScaleProbe {
     // and the dictionary-scan small-batch floor made visible as the
     // 0.1% batch's byte count).
     if (families("ngbyteratio")) {
-      val read = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              read.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-        })
-      def settled(): Long = {
-        var prev = -1L; var cur = read.get()
-        while (cur != prev) { Thread.sleep(300); prev = cur; cur = read.get() }
-        cur
-      }
-      def mb(b: Long): String = f"${b / 1048576.0}%9.1f MB"
-      def bytesOf(n: String)(b: => Long): Unit = {
-        val b0 = settled(); val t0 = System.nanoTime(); val r = b
-        val dt = (System.nanoTime() - t0) / 1e9
-        println(f"BYTES $n%-26s ${mb(settled() - b0)} $dt%8.2f s rows=$r")
-      }
-      def dirMb(p: String): String = {
-        val root = java.nio.file.Paths.get(p)
-        val w = java.nio.file.Files.walk(root)
-        val s = try w.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally w.close()
-        mb(s)
-      }
+      val bytesOf = new BytesRead(spark)
       spark.conf.set("spark.sql.shuffle.partitions", "64")
       val wh = graft.etl.Warehouse(java.nio.file.Files
         .createTempDirectory("graft_probe_ngbytes").toString)
-      // same unique-content ~3 KB docs as `byteratio` (doc-keyed hashed
-      // filler — repeated segments would parquet-compress and fake the
-      // byte story), 5 near-dup variants per group
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val kb = base.select(col("doc_id"), concat(col("text"), lit(" "),
-          expr("array_join(transform(sequence(0, 449), " +
-            "i -> concat('w', abs(xxhash64(doc_id, i)) % 30000)), ' ')"))
-          .as("text"))
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(4L))).as("rep"))
-        .select((col("doc_id") * 5L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
-      wh.overwrite(kb, "gold", "docs_kb")
-      val corpus = wh.read(spark, "gold", "docs_kb")
+      val corpus = kbCorpus(spark, base, wh)
       println(s"docsKb: ${corpus.count()} " +
         s"avgBytes=${corpus.agg(avg(length(col("text")))).head().getDouble(0).toInt}")
       bytesOf("ng_index_build") {
@@ -394,18 +363,12 @@ object ScaleProbe {
           wh, "gold", "ng", shingleK = 3, maxShingleFreq = 1000)
         spark.read.parquet(wh.path("gold", "ng_post")).count()
       }
-      println(s"  corpus parquet ${dirMb(wh.path("gold", "docs_kb"))}  " +
-        s"freq ${dirMb(wh.path("gold", "ng_freq"))}  " +
-        s"post ${dirMb(wh.path("gold", "ng_post"))}  " +
-        s"sets ${dirMb(wh.path("gold", "ng_sets"))}")
+      println(s"  corpus parquet ${mb(dirMb(wh.path("gold", "docs_kb")))}  " +
+        s"freq ${mb(dirMb(wh.path("gold", "ng_freq")))}  " +
+        s"post ${mb(dirMb(wh.path("gold", "ng_post")))}  " +
+        s"sets ${mb(dirMb(wh.path("gold", "ng_sets")))}")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
-      def mkBatch(n: Long) = corpus.filter(col("doc_id") < n)
-        .select((col("doc_id") + 100000000L).as("doc_id"),
-          when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" vnew")))
-            .otherwise(concat_ws(" ", reverse(split(col("text"), " "))))
-            .as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def mkBatch(n: Long) = ingestBatch(corpus, n)
       val batch = mkBatch(250); println(s"batch: ${batch.count()}")
       bytesOf("ng_increment_pairs_1pct") {
         Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
@@ -444,9 +407,9 @@ object ScaleProbe {
           containment = false, tMinJaccard = 0.5)
         spark.read.parquet(wh.path("gold", "ngf_post")).count()
       }
-      println(s"  floor:  freq ${dirMb(wh.path("gold", "ngf_freq"))}  " +
-        s"post ${dirMb(wh.path("gold", "ngf_post"))}  " +
-        s"sets ${dirMb(wh.path("gold", "ngf_sets"))}")
+      println(s"  floor:  freq ${mb(dirMb(wh.path("gold", "ngf_freq")))}  " +
+        s"post ${mb(dirMb(wh.path("gold", "ngf_post")))}  " +
+        s"sets ${mb(dirMb(wh.path("gold", "ngf_sets")))}")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       bytesOf("ngf_increment_pairs_1pct") {
         Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
@@ -479,32 +442,14 @@ object ScaleProbe {
     //      bounded re-shingle CPU cost over only the candidates'
     //      pruned dbucket partitions.
     if (families("setsprobe")) {
-      def dirMb(p: String): Double = {
-        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        val s = try w.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally w.close()
-        s / 1048576.0
-      }
       spark.conf.set("spark.sql.shuffle.partitions", "64")
       val wh = graft.etl.Warehouse(java.nio.file.Files
         .createTempDirectory("graft_probe_sets").toString)
-      // same unique-content ~3 KB docs as `ngbyteratio`
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val kb = base.select(col("doc_id"), concat(col("text"), lit(" "),
-          expr("array_join(transform(sequence(0, 449), " +
-            "i -> concat('w', abs(xxhash64(doc_id, i)) % 30000)), ' ')"))
-          .as("text"))
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(4L))).as("rep"))
-        .select((col("doc_id") * 5L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
-      wh.overwrite(kb, "gold", "docs_kb")
-      val corpus = wh.read(spark, "gold", "docs_kb")
+      val corpus = kbCorpus(spark, base, wh)
       println(s"docsKb: ${corpus.count()}")
       Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh, "gold", "ng",
         shingleK = 3, maxShingleFreq = 1000)
-      val root = wh.path("gold", "")
       val sets = spark.read.parquet(wh.path("gold", "ng_sets"))
       val out = java.nio.file.Files
         .createTempDirectory("graft_probe_sets_var").toString
@@ -543,27 +488,11 @@ object ScaleProbe {
     // `_bands` table (identical across layouts) for the whole-index
     // ratio.
     if (families("ndsetsprobe")) {
-      def dirMb(p: String): Double = {
-        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        val s = try w.filter(java.nio.file.Files.isRegularFile(_))
-          .mapToLong(java.nio.file.Files.size(_)).sum()
-        finally w.close()
-        s / 1048576.0
-      }
       spark.conf.set("spark.sql.shuffle.partitions", "64")
       val wh = graft.etl.Warehouse(java.nio.file.Files
         .createTempDirectory("graft_probe_ndsets").toString)
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val kb = base.select(col("doc_id"), concat(col("text"), lit(" "),
-          expr("array_join(transform(sequence(0, 449), " +
-            "i -> concat('w', abs(xxhash64(doc_id, i)) % 30000)), ' ')"))
-          .as("text"))
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(4L))).as("rep"))
-        .select((col("doc_id") * 5L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
-      wh.overwrite(kb, "gold", "docs_kb")
-      val corpus = wh.read(spark, "gold", "docs_kb")
+      val corpus = kbCorpus(spark, base, wh)
       println(s"docsKb: ${corpus.count()}")
       println(f"NDSETS corpus_parquet        ${dirMb(wh.path("gold", "docs_kb"))}%9.1f MB")
       for ((tag, texts) <- Seq(("arrays", false), ("texts", true))) {
@@ -585,11 +514,7 @@ object ScaleProbe {
     if (families("ngramincrement")) {
       spark.conf.set("spark.sql.shuffle.partitions", "128")
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = base
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(49L))).as("rep"))
-        .select((col("doc_id") * 50L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
+      val big = distinctCopies(base, 50)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"docsNgramIncrement: ${big.count()}")
       val wh = graft.etl.Warehouse(java.nio.file.Files
@@ -600,13 +525,7 @@ object ScaleProbe {
         spark.read.parquet(wh.path("gold", "ng_post")).count()
       }
       spark.conf.set("spark.sql.shuffle.partitions", "32")
-      def mkBatch(n: Long) = big.filter(col("doc_id") < n)
-        .select((col("doc_id") + 100000000L).as("doc_id"),
-          when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1, concat(col("text"), lit(" vnew")))
-            .otherwise(concat_ws(" ", reverse(split(col("text"), " "))))
-            .as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      def mkBatch(n: Long) = ingestBatch(big, n)
       val batch = mkBatch(2500)
       println(s"batch: ${batch.count()}")
       time("ng_increment_pairs_1pct") {
@@ -633,40 +552,6 @@ object ScaleProbe {
       spark.conf.set("spark.sql.shuffle.partitions", "64")
     }
 
-    if (families("ingestdebug")) {
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = base
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(49L))).as("rep"))
-        .select((col("doc_id") * 50L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"docs: ${big.count()}")
-      val wh = graft.etl.Warehouse(java.nio.file.Files
-        .createTempDirectory("graft_probe_ingdbg").toString)
-      Dedup.nearDedupIndexPersist(big, "doc_id", "text", wh, "gold", "nd",
-        shingleK = 3, numHashes = 32, bands = 8)
-      val k = 0
-      val b = big.filter(col("doc_id") < 2500)
-        .select((col("doc_id") + 100000000L + k * 10000L).as("doc_id"),
-          when(col("doc_id") % 3 === 0, col("text"))
-            .when(col("doc_id") % 3 === 1,
-              concat(col("text"), lit(s" vnew$k")))
-            .otherwise(concat_ws(" ",
-              reverse(split(concat(col("text"), lit(s" b$k")), " "))))
-            .as("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"batch: ${b.count()}")
-      val pairs = Dedup.nearDedupIncrementPairs(b, "doc_id", "text",
-        wh, "gold", "nd", threshold = 0.5)
-      println(s"pairs: ${pairs.count()}")
-      val kept = Dedup.nearDedupIncrementKeep(b, "doc_id", "text",
-        wh, "gold", "nd", threshold = 0.5)
-      println(s"kept: ${kept.count()}")
-      spark.conf.set("spark.sql.shuffle.partitions", "64")
-    }
-
     // The streaming ingest LOOP against the 250k index: 5 micro-batches
     // of 2,500 docs drain through nearDedupIngestStream (file source,
     // one file per trigger). Each batch is a third exact corpus dups, a
@@ -680,11 +565,7 @@ object ScaleProbe {
     if (families("ingeststream")) {
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = base
-        .select(col("doc_id"), col("text"),
-          explode(sequence(lit(0L), lit(49L))).as("rep"))
-        .select((col("doc_id") * 50L + col("rep")).as("doc_id"),
-          concat(col("text"), lit(" v"), col("rep")).as("text"))
+      val big = distinctCopies(base, 50)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"docsIngest: ${big.count()}")
       val wh = graft.etl.Warehouse(java.nio.file.Files
@@ -1111,11 +992,7 @@ object ScaleProbe {
     if (families("events")) {
       import org.apache.spark.sql.expressions.Window
       val base = Tables.load(spark, "/root/testdata/sf0.1", "events")
-      val big = (0 until 10).map(i =>
-        base.select((col("event_id") + lit(i * 10000000L)).as("event_id"),
-          (col("user_id") + lit(i * 100000L)).as("user_id"),
-          col("ts"), col("event_type"), col("value")))
-        .reduce(_ unionByName _)
+      val big = events10x(base)
       val ev = big.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"events: ${ev.count()}")
       time("hourly_agg") {
@@ -1317,11 +1194,7 @@ object ScaleProbe {
       // path mining, per-user TWAP, transition matrix
       import org.apache.spark.sql.expressions.Window
       val base = Tables.load(spark, "/root/testdata/sf0.1", "events")
-      val big = (0 until 10).map(i =>
-        base.select((col("event_id") + lit(i * 10000000L)).as("event_id"),
-          (col("user_id") + lit(i * 100000L)).as("user_id"),
-          col("ts"), col("event_type"), col("value")))
-        .reduce(_ unionByName _)
+      val big = events10x(base)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       println(s"events10x: ${big.count()}")
       time("dau_wau_10x") {
@@ -1408,126 +1281,6 @@ object ScaleProbe {
       }
     }
 
-    if (families("strsim")) {
-      // 10x parts (200k names) through the blocked Jaro-Winkler match:
-      // the (brand, first-word) block key caps candidate pairs per task,
-      // the length-ratio guard prunes before the scorer, and the native
-      // top-k bounds the exchange — the j20/j21 shapes at 10x.
-      val p0 = spark.read.parquet("/root/testdata/sf0.1/part.parquet")
-      val p = (0 until 10).map(i =>
-        p0.select((col("p_partkey") + lit(i * 10000000L)).as("p_partkey"),
-                  col("p_brand"), col("p_name")))
-        .reduce(_ unionByName _)
-        .withColumn("w1", split(col("p_name"), " ").getItem(0))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"parts: ${p.count()}")
-      val a = p.select(col("p_brand"), col("w1"),
-        col("p_partkey").as("ka"), col("p_name").as("na"))
-        .repartition(64, col("p_brand"), col("w1"))
-      val b = p.select(col("p_brand"), col("w1"),
-        col("p_partkey").as("kb"), col("p_name").as("nb"))
-        .repartition(64, col("p_brand"), col("w1"))
-      val guard = least(length(col("na")), length(col("nb"))).cast("double") >=
-        lit(0.749999) * greatest(length(col("na")), length(col("nb"))).cast("double")
-      time("jw_blocked_10x") {
-        val pairs = a.hint("shuffle_hash").join(b, Seq("p_brand", "w1"))
-          .filter(col("ka") < col("kb")).filter(guard)
-          .withColumn("jw", round(graft.functions.StrSim
-            .jaro_winkler(col("na"), col("nb")), 6))
-          .filter(col("jw") >= 0.95)
-        graft.plans.TopKPerGroup.topK(pairs, Seq("p_brand"),
-          Seq(("jw", true), ("ka", false), ("kb", false)), k = 3).count()
-      }
-    }
-
-    if (families("ml")) {
-      // 10x embeddings (50k vecs = 3.2M long-layout rows) through the
-      // k-means / PCA kernels, and 10x docs through the NB scorer. The
-      // iteration loops run on domain-bounded state (512-row centroids,
-      // 4096-cell covariance, |vocab|x5 model), so the only things that
-      // grow with the corpus are these three kernels.
-      import org.apache.spark.sql.types.DecimalType
-      val base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-      val big = (0 until 10).map(i =>
-        base.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"),
-          col("embedding")))
-        .reduce(_ unionByName _)
-      val pts = big
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .select(col("vec_id"), col("dim"),
-          round(col("v").cast("double"), 6).cast(DecimalType(18, 6)).as("vd"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"ml points: ${pts.count()}")
-      val cent = pts.filter(col("vec_id") < 8)
-        .select((col("vec_id") + 1).cast("int").as("cid"), col("dim"),
-          col("vd").as("cd"))
-      time("kmeans_assign_10x") {
-        val sq = (col("vd") - col("cd")).cast(DecimalType(12, 6))
-        import org.apache.spark.sql.expressions.Window
-        pts.join(broadcast(cent), "dim")
-          .withColumn("sq", sq * sq)
-          .groupBy("vec_id", "cid").agg(sum(col("sq")).as("d2"))
-          .withColumn("rn", row_number().over(Window.partitionBy("vec_id")
-            .orderBy(col("d2").asc, col("cid").asc)))
-          .filter(col("rn") === 1).count()
-      }
-      time("pca_cov_10x") {
-        val a = pts.select(col("vec_id"), col("dim").as("i"), col("vd").as("vi"))
-        val b = pts.select(col("vec_id"), col("dim").as("j"), col("vd").as("vj"))
-        a.join(b, "vec_id")
-          .groupBy("i", "j").agg(sum(col("vi") * col("vj")).as("sij"))
-          .count()
-      }
-      pts.unpersist()
-      val docs0 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val docsBig = (0 until 10).map(i =>
-        docs0.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          col("lang"), col("text")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"ml docs: ${docsBig.count()}")
-      time("nb_train_score_10x") {
-        val toks = docsBig.select(col("doc_id"), col("lang"),
-          explode(split(graft.textops.TextFunctions.normText(col("text")),
-            " ")).as("term")).filter(length(col("term")) > 0)
-        val model = toks.groupBy("lang", "term").agg(count(lit(1)).as("tc"))
-        val classes = toks.groupBy("lang").agg(count(lit(1)).as("tot"))
-        val scored = toks.select(col("doc_id"), col("term"))
-          .join(model.withColumnRenamed("lang", "c"), "term")
-          .groupBy("doc_id", "c").agg(sum(log(col("tc") + 1)).as("s"))
-        scored.count()
-      }
-      docsBig.unpersist()
-    }
-
-    if (families("packing")) {
-      // 50k docs through the PrefixSum concat-and-chop packer: the
-      // global running sum is the only coordination point and it is
-      // range-partitioned — no single-task window at any corpus size.
-      val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-      val big = (0 until 10).map(i =>
-        base.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-        .reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      println(s"docs: ${big.count()}")
-      time("seq_packing_10x") {
-        val toks = big.select(col("doc_id"),
-            graft.textops.TextFunctions.bpeTokenEstimate(col("text")).as("tk"))
-          .filter(col("tk") > 0)
-          .withColumn("tkd", col("tk").cast(
-            org.apache.spark.sql.types.DecimalType(38, 0)))
-        graft.operators.PrefixSum
-          .withRunningSum(toks, Seq(col("doc_id")), col("tkd"), "cumd",
-            partitions = 64)
-          .withColumn("cum", col("cumd").cast("long"))
-          .withColumn("first_seq", expr("(cum - tk) div 512"))
-          .withColumn("last_seq", expr("(cum - 1) div 512"))
-          .agg(count(lit(1)).as("n"),
-               sum(when(col("last_seq") > col("first_seq"), 1L).otherwise(0L)))
-          .count()
-      }
-    }
-
     // TRUE streaming drain at 10x (1M events / 150k users), distinct from
     // the batch `events` family: this runs the state-store path — file
     // source split into 10 parquet files (maxFilesPerTrigger=4 → 3
@@ -1541,11 +1294,7 @@ object ScaleProbe {
     // resets; no memory cliff at 150k concurrent keys.
     if (families("streaming")) {
       val base = Tables.load(spark, "/root/testdata/sf0.1", "events")
-      val big = (0 until 10).map(i =>
-        base.select((col("event_id") + lit(i * 10000000L)).as("event_id"),
-          (col("user_id") + lit(i * 100000L)).as("user_id"),
-          col("ts"), col("event_type"), col("value")))
-        .reduce(_ unionByName _)
+      val big = events10x(base)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_probe_stream").toString
       big.repartition(10).write.mode("overwrite").parquet(dir)

@@ -247,7 +247,8 @@ object StreamingQueries {
   // closed form from the source table — the entry hash-proves Spark's
   // watermark semantics, not just liveness. (A two-file version CANNOT
   // drop anything — the lag means batch 2 still filters at wm = 0; the
-  // probe that discovered this is ProbeLate.scala.)
+  // probe that discovered this is ProbeLate.scala, deleted after commit
+  // 464cec7.)
   private val lateDayUs = 19724L * 86400000000L  // 2024-01-02 in µs
   private val splitAUs = 19735L * 86400000000L   // 2024-01-13 in µs
   private val splitBUs = 19737L * 86400000000L   // 2024-01-15 in µs

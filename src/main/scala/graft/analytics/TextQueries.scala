@@ -1278,7 +1278,6 @@ object TextQueries {
   // iff it touches a pair into a KEPT bootstrap doc — the index holds
   // survivors only, so only those pairs count).
   private val pipeCurationStream: QFn = (s, dir) => {
-    import s.implicits._
     val initial = docs(s, dir).filter(col("doc_id") % 5 =!= 0)
       .select("doc_id", "text")
     val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
@@ -1385,7 +1384,6 @@ object TextQueries {
   // keep, corpus-wins epoch policy. The two entries deliberately share
   // one oracle: what differs (and is under test) is the ENGINE path.
   private val pipeCurationExact: QFn = (s, dir) => {
-    import s.implicits._
     val initial = docs(s, dir).filter(col("doc_id") % 5 =!= 0)
       .select("doc_id", "text")
     val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
@@ -1442,7 +1440,6 @@ object TextQueries {
         filler("a").as("fa"), filler("c").as("fc"))
   }
   private val dKeepDivergence: QFn = (s, dir) => {
-    import s.implicits._
     val b = divChain(s, dir)
     val xs = b.select((col("doc_id") * 4).as("doc_id"), col("text"))
     val ys = b.select((col("doc_id") * 4 + 1).as("doc_id"),

@@ -2,7 +2,6 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** The two gold report views (12_report_customers.sql, 13_report_products
   * .sql) as DataFrame builders, registered as temp views so SQL entry works

@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry — the `EXEC init.load_all` analog: run the full medallion
   * pipeline over a directory of source CSVs into a warehouse root.
   *
@@ -10,15 +8,7 @@ import org.apache.spark.sql.SparkSession
 object RunPipeline {
   def main(args: Array[String]): Unit = {
     val Array(sourceDir, whRoot) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build(graft.Sessions.cpus(4))
     val batch = Pipeline.runAll(spark, PipelineConf(sourceDir, whRoot))
     val wh = Warehouse(whRoot)
     println(s"[pipeline] batch $batch complete")

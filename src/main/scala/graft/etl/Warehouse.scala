@@ -131,7 +131,7 @@ final case class Warehouse(root: String) {
     * aside, rename tmp in, then delete the old copy. The no-table window
     * is a single rename (old→aside ↔ tmp→live), not the delete-then-move
     * gap the naive form had (r9 ADVICE) — and a crash INSIDE that window
-    * is recoverable, not just reclaimable: [[recoverIfCrashed]] (run on
+    * is recoverable, not just reclaimable: [[recoverLocked]] (run on
     * every read and on swap entry) restores `._old` to the live path
     * whenever the live table is missing, so a restart after a mid-swap
     * crash reads the pre-swap content instead of failing (r10 ADVICE).
@@ -183,20 +183,14 @@ final case class Warehouse(root: String) {
     * that vanished while its `._old` copy survives means a swap died
     * between the two renames — restore the old copy. One existence
     * check per read; at cluster scale the same contract holds with
-    * object-store list/rename. Takes the same per-table lock as
-    * [[swapIn]], so a read can never observe (or interfere with) the
-    * mid-swap window of a swap in this JVM; two concurrent recoverers
-    * of a genuine crash are serialized the same way. */
-  private def recoverIfCrashed(layer: String, table: String): Unit =
-    Warehouse.locked(path(layer, table)) {
-      recoverLocked(Paths.get(path(layer, table)),
-        Paths.get(path(layer, table + "._old")))
-    }
-
-  /** The recovery body — caller must hold the table lock. Tolerant to a
-    * cross-process racer completing the swap (or the recovery) first:
-    * if the restore rename fails but the live table now exists, the
-    * table IS recovered — treat it as such instead of propagating. */
+    * object-store list/rename. The caller must hold the table lock
+    * ([[read]] and [[swapIn]] take the same per-table lock), so a read
+    * can never observe (or interfere with) the mid-swap window of a
+    * swap in this JVM; two concurrent recoverers of a genuine crash are
+    * serialized the same way. Tolerant to a cross-process racer
+    * completing the swap (or the recovery) first: if the restore rename
+    * fails but the live table now exists, the table IS recovered —
+    * treat it as such instead of propagating. */
   private def recoverLocked(target: java.nio.file.Path,
                             old: java.nio.file.Path): Unit =
     if (!Files.exists(target) && Files.exists(old))

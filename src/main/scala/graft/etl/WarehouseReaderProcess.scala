@@ -1,7 +1,5 @@
 package graft.etl
 
-import org.apache.spark.sql.SparkSession
-
 /** Second-JVM reader for the cross-process warehouse spec — the only
   * real exercise of [[Warehouse]]'s cross-process story (the JVM-wide
   * rename locks cover one driver; a concurrent Verify run against an
@@ -36,11 +34,7 @@ object WarehouseReaderProcess {
   def main(args: Array[String]): Unit = {
     val Array(root, layer, table, itersS) = args.take(4)
     val groupMarker = args.lift(4)
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.build(2)
     val wh = Warehouse(root)
     println("READY")
     var ok = 0

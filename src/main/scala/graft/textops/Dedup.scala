@@ -908,7 +908,6 @@ object Dedup {
       excludeEpoch: Long = Long.MinValue)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val meta = readIndexMeta(spark, wh, layer, table)
     val nSetBuckets = meta.nSetBuckets
     label(batch, "nd-probe: batch sketch")
@@ -1527,7 +1526,6 @@ object Dedup {
       textCol: String, wh: graft.etl.Warehouse, layer: String,
       table: String, meta: NgramMeta, tracker: PersistTracker,
       broadcastShingleLimit: Long = 2000000L): (DataFrame, DataFrame) = {
-    val spark = batch.sparkSession
     val shB = tracker.add(
       shingledHashed(batch, idCol, textCol, meta.shingleK)
         .withColumn("sbucket",
@@ -1540,7 +1538,7 @@ object Dedup {
     // shingles (no exchange of dictionary rows), and the now-tiny
     // survivor set broadcasts back into the left join — and the scan
     // itself shrinks to the batch's per-bucket key RANGES
-    // ([[bucketRangeFilter]]): index files are sorted by `sh` within
+    // ([[rangesToFilter]]): index files are sorted by `sh` within
     // each bucket, so parquet row-group stats skip the dictionary
     // pages outside them (the measured 28 MB small-batch floor).
     // Above the limit the plain shuffle join over isin-pruned buckets
@@ -1569,7 +1567,7 @@ object Dedup {
     * signal (they must measure through the same join or the signal
     * diverges from what probes actually pay). Below the broadcast
     * limit the dictionary scan stays map-side: per-bucket key ranges
-    * ([[bucketRangeFilter]] — row-group skipping over sh-sorted bucket
+    * ([[rangesToFilter]] — row-group skipping over sh-sorted bucket
     * files), a broadcast left-semi pruning to exactly the batch's
     * shingles, and the now-tiny survivor set broadcast back. Above it,
     * isin bucket pruning + shuffle join (both sides large). */
@@ -1597,20 +1595,6 @@ object Dedup {
     }
   }
 
-  /** Per-bucket probe-key range predicate: (bucket, min key, max key)
-    * of the batch's rows — a bounded collect, ≤ nPostBuckets rows by
-    * construction — becomes one OR-of-conjunctions filter. The bucket
-    * equalities prune PARTITIONS (each disjunct's partition conjunct
-    * survives Catalyst's extraction); the BETWEEN terms reach parquet
-    * as pushed filters, and because index files are sorted by the key
-    * within each bucket partition, row-group min/max stats skip
-    * everything outside the batch's ranges — data skipping with no
-    * table format. An empty batch prunes the whole scan. */
-  private def bucketRangeFilter(df: DataFrame, bucketCol: String,
-      keyCol: String): Column =
-    rangesToFilter(bucketStats(df, bucketCol, keyCol)._2,
-      bucketCol, keyCol)
-
   /** ONE bounded aggregate job returning (total row count, per-bucket
     * (bucket, min key, max key) ranges): every probe needs both a
     * broadcast-gate count AND a pruning predicate over the same frame,
@@ -1627,6 +1611,15 @@ object Dedup {
       rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1))
   }
 
+  /** Per-bucket probe-key range predicate: (bucket, min key, max key)
+    * of the batch's rows — a bounded collect, ≤ nPostBuckets rows by
+    * construction — becomes one OR-of-conjunctions filter. The bucket
+    * equalities prune PARTITIONS (each disjunct's partition conjunct
+    * survives Catalyst's extraction); the BETWEEN terms reach parquet
+    * as pushed filters, and because index files are sorted by the key
+    * within each bucket partition, row-group min/max stats skip
+    * everything outside the batch's ranges — data skipping with no
+    * table format. An empty batch prunes the whole scan. */
   private def rangesToFilter(ranges: Array[(Int, Long, Long)],
       bucketCol: String, keyCol: String): Column =
     ranges.map { case (b, lo, hi) =>
@@ -1871,7 +1864,6 @@ object Dedup {
       excludeEpoch: Long = Long.MinValue)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val meta = readNgramIndexMeta(spark, wh, layer, table)
     require(meta.containment || threshold >= meta.tMin - 1e-12,
       s"Jaccard probe at threshold $threshold against a Jaccard-only " +
@@ -2482,7 +2474,6 @@ object Dedup {
       val need = k.select(col("__g"), col(aCol).as("doc_id"))
         .unionByName(k.select(col("__g"), col(bCol).as("doc_id")))
         .distinct()
-      debugGroups("grouped-verify", Some(comp), Some(big), k)
       (k, sets.join(need, "doc_id").select("__g", "doc_id", "set"))
     } else {
       // BLOCK-ONLY grouping — the prefix-filter family's path. Its
@@ -2506,7 +2497,6 @@ object Dedup {
         col("doc_id"), col("set"))
       val setsAll = setsLeft.unionByName(
         sets.join(needR, "doc_id").select("__g", "doc_id", "set"))
-      debugGroups("grouped-verify-blocks", None, None, k)
       (k, setsAll)
     }
     val pk = keyed.as[(Long, Long, Long)].groupByKey(_._1)
@@ -2542,27 +2532,6 @@ object Dedup {
       }
     }.toDF(aCol, bCol, outCol)
   }
-
-  /** Dev-only: env-gated sizing printout for the grouped verify path
-    * (GRAFT_VERIFY_DEBUG=1) — component/doc counts, how many
-    * components subdivide into blocks, and the final group count. The
-    * counts run only when enabled; production plans are untouched. */
-  private def debugGroups(tag: String, comp: Option[DataFrame],
-                          big: Option[DataFrame], keyed: DataFrame): Unit =
-    if (sys.env.contains("GRAFT_VERIFY_DEBUG")) {
-      def timed[A](b: => A): (A, Long) = {
-        val t0 = System.nanoTime(); val r = b
-        (r, (System.nanoTime() - t0) / 1000000L)
-      }
-      val (nPairs, tP) = timed(keyed.count())
-      val compStats = comp.map { c =>
-        val nComp = c.select("comp").distinct().count()
-        s"comps=$nComp docs=${c.count()} bigComps=${big.get.count()} "
-      }.getOrElse("")
-      val nGroups = keyed.select("__g").distinct().count()
-      println(s"[verify-debug] $tag: pairs=$nPairs (${tP}ms incl key) " +
-        s"${compStats}groups=$nGroups")
-    }
 
   private[textops] def verifyJaccardByComponent(cands: DataFrame, sets: DataFrame,
       threshold: Double, maxComponentShingles: Long = 1000000L,

@@ -93,7 +93,6 @@ object Similarity {
     */
   def ivfTrain(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                nlist: Int, iterations: Int = 3): Map[Int, Array[Double]] = {
-    val spark = df.sparkSession
     var centroids: Map[Int, Array[Double]] =
       df.orderBy(col(idCol)).limit(nlist)
         .select(col(vecCol).cast("array<double>")).collect()

@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.window.WindowExec
   * and died on first execution at the driver, because nothing in the
   * suite ran them. This spec makes "declared" imply "executed at least
   * once at sf0.001" for all of SparkEntry.queries, and folds in the
-  * physical-plan audit (AuditWindows) so a scale anti-pattern —
+  * physical-plan audit (the former `AuditWindows` main, deleted after
+  * commit 464cec7) so a scale anti-pattern —
   * unpartitioned window, cartesian product, broadcast nested-loop —
   * can't slip in unannotated either.
   */
