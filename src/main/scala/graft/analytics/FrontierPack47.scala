@@ -1999,7 +1999,6 @@ object Frontier57Queries {
   // form over the PLAINTEXT the round trip must reproduce.
   // ------------------------------------------------------------------
   private val x22ColumnEncryption: QFn = (s, dir) => {
-    val key = lit("0123456789abcdef") // 16-byte AES-128 demo key
     val enc = expr("aes_encrypt(cast(c_name as binary), " +
       "'0123456789abcdef', 'ECB')")
     t(s, dir, "customer")

@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -21,12 +21,16 @@ final case class EtlConfig(
 
 /** A frame a load step writes, with a row counter that the writing action
   * fills in: the step's `rows_loaded` is observed at write time instead of
-  * read back from the table with a second `count()` job. Write [[frame]]
-  * exactly once; [[rows]] waits for that write's metrics. */
-final class Counted(df: DataFrame) {
+  * read back from the table with a second `count()` job. `metrics` are
+  * further named counts observed the same way (a DQ check over the rows
+  * written). Write [[frame]] exactly once; [[rows]] and [[apply]] wait
+  * for that write's metrics. */
+final class Counted(df: DataFrame, metrics: (String, Column)*) {
   private val obs = Observation()
-  val frame: DataFrame = df.observe(obs, count(lit(1)).as("rows"))
-  def rows: Long = obs.get("rows").asInstanceOf[Long]
+  val frame: DataFrame = df.observe(obs, count(lit(1)).as("rows"),
+    metrics.map { case (name, c) => c.as(name) }: _*)
+  def rows: Long = apply("rows")
+  def apply(metric: String): Long = obs.get(metric).asInstanceOf[Long]
 }
 
 /** Audit logging + in-pipeline DQ validation (SURVEY.md §2.9 I8-I9).
@@ -46,28 +50,39 @@ final case class Audit(wh: Warehouse) {
 
   def log(spark: SparkSession, e: EtlLogEntry): Unit = {
     import spark.implicits._
-    val df = Seq(e).toDF()
-    if (!wh.exists("audit", "etl_log")) wh.overwrite(df, "audit", "etl_log")
-    else wh.append(df, "audit", "etl_log")
+    appendRow(Seq(e).toDF(), "etl_log")
   }
 
   def logIssue(spark: SparkSession, i: DqIssue): Unit = {
     import spark.implicits._
-    val df = Seq(i).toDF()
-    if (!wh.exists("audit", "data_quality_issues"))
-      wh.overwrite(df, "audit", "data_quality_issues")
-    else wh.append(df, "audit", "data_quality_issues")
+    appendRow(Seq(i).toDF(), "data_quality_issues")
   }
+
+  /** Append to an audit table, creating it on the first write. The steps
+    * of a layer log at the same time, so the existence check and the
+    * write hold the table's lock together: two first writers can't both
+    * overwrite, and two appends never share one `_temporary` commit
+    * directory. */
+  private def appendRow(df: DataFrame, table: String): Unit =
+    Warehouse.locked(wh.path("audit", table)) {
+      if (!wh.exists("audit", table)) wh.overwrite(df, "audit", table)
+      else wh.append(df, "audit", table)
+    }
 
   /** Run a counting DQ check; log an issue row iff violations exist.
     * Returns the violation count so loaders can also surface it. */
   def check(spark: SparkSession, batchId: Long, tableName: String,
-            checkName: String, violations: DataFrame, detail: String): Long = {
-    val n = violations.count()
-    if (n > 0)
-      logIssue(spark, DqIssue(batchId, tableName, checkName, n, detail,
+            checkName: String, violations: DataFrame, detail: String): Long =
+    checkCount(spark, batchId, tableName, checkName, violations.count(), detail)
+
+  /** [[check]] for a violation count the caller already has (observed on
+    * the frame a step wrote, or taken in one aggregate with other counts). */
+  def checkCount(spark: SparkSession, batchId: Long, tableName: String,
+                 checkName: String, violations: Long, detail: String): Long = {
+    if (violations > 0)
+      logIssue(spark, DqIssue(batchId, tableName, checkName, violations, detail,
         new Timestamp(System.currentTimeMillis())))
-    n
+    violations
   }
 
   /** Wrap a table load with timing + success/failure audit rows

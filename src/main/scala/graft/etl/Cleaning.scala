@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType}
+import org.apache.spark.sql.types.DecimalType
 
 /** Silver-layer cleaning/standardization rules (SURVEY.md §2.2, §2.8).
   *

@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   */
 final case class GoldLoader(wh: Warehouse, audit: Audit) {
 
-  /** Load the three gold tables; returns the fact's row count. */
+  /** Load the two dimensions at once, then the fact that looks both up;
+    * returns the fact's row count. */
   def run(spark: SparkSession, batchId: Long): Long = {
-    dimCustomers(spark, batchId)
-    dimProducts(spark, batchId)
+    Steps.inParallel(spark)(
+      () => dimCustomers(spark, batchId),
+      () => dimProducts(spark, batchId))
     factSales(spark, batchId)
   }
 
@@ -132,6 +134,8 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
         .select(col("product_key"), col("product_number"))
       val dc = wh.read(spark, "gold", "dim_customers")
         .select(col("customer_key"), col("customer_id"))
+      // I9: referential integrity — the −1 fallbacks are counted as the
+      // fact is written, and logged, not fatal
       val fact = new Counted(sd
         .join(broadcast(dp), col("sls_prd_key") === col("product_number"), "left")
         .join(broadcast(dc), col("sls_cust_id") === col("customer_id"), "left")
@@ -145,13 +149,11 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
           col("sls_sales").as("sales_amount"),
           col("sls_quantity").as("quantity"),
           col("sls_price").as("price"),
-          coalesce(year(col("sls_order_dt")), lit(0)).as("order_year")))
+          coalesce(year(col("sls_order_dt")), lit(0)).as("order_year")),
+        "orphans" -> count_if(col("product_key") === -1L || col("customer_key") === -1L))
       wh.overwritePartitioned(fact.frame, "gold", "fact_sales", Seq("order_year"))
-      // I9: referential integrity — count of −1 fallbacks is logged, not fatal
-      val orphans = wh.read(spark, "gold", "fact_sales")
-        .filter(col("product_key") === -1L || col("customer_key") === -1L)
-      audit.check(spark, batchId, "fact_sales", "unknown_member_fallbacks",
-        orphans, "fact rows resolved to the -1 unknown member")
+      audit.checkCount(spark, batchId, "fact_sales", "unknown_member_fallbacks",
+        fact("orphans"), "fact rows resolved to the -1 unknown member")
       fact.rows
     }
 }

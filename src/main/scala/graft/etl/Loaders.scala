@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import java.sql.Timestamp
 
 /** Bronze: CSV extracts → declared-schema Parquet tables
@@ -10,20 +10,24 @@ import java.sql.Timestamp
   */
 final case class BronzeLoader(wh: Warehouse, audit: Audit) {
 
-  /** Load every source CSV found under `sourceDir` (header row skipped via
-    * `header=true`, comma-delimited — the BULK INSERT contract). */
+  /** Load every source CSV found under `sourceDir`, all at once: each
+    * source truncates and loads its own table. */
   def run(spark: SparkSession, sourceDir: String, batchId: Long): Unit =
-    Schemas.bronzeSources.foreach { case (file, table, schema) =>
-      val path = s"$sourceDir/$file"
-      if (new java.io.File(path).exists()) {
-        audit.timed(spark, batchId, "bronze", table) {
-          val out = new Counted(spark.read.schema(schema)
-            .option("header", "true").option("mode", "PERMISSIVE")
-            .csv(path))
-          wh.overwrite(out.frame, "bronze", table)
-          out.rows
-        }
-      }
+    Steps.inParallel(spark)(Schemas.bronzeSources.collect {
+      case (file, table, schema) if new java.io.File(s"$sourceDir/$file").exists() =>
+        () => load(spark, s"$sourceDir/$file", batchId, table, schema)
+    }: _*)
+
+  /** Load one source CSV (header row skipped via `header=true`,
+    * comma-delimited — the BULK INSERT contract). */
+  def load(spark: SparkSession, path: String, batchId: Long, table: String,
+           schema: StructType): Unit =
+    audit.timed(spark, batchId, "bronze", table) {
+      val out = new Counted(spark.read.schema(schema)
+        .option("header", "true").option("mode", "PERMISSIVE")
+        .csv(path))
+      wh.overwrite(out.frame, "bronze", table)
+      out.rows
     }
 }
 
@@ -38,12 +42,16 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
   private val prdTracked = Seq("cat_id", "prd_key", "prd_nm", "prd_cost",
     "prd_line", "prd_start_dt", "prd_end_dt")
 
-  def run(spark: SparkSession, batchId: Long, loadTs: Timestamp): Unit = {
-    customers(spark, batchId, loadTs)
-    products(spark, batchId, loadTs)
-    sales(spark, batchId, loadTs)
-    erp(spark, batchId)
-  }
+  /** The six silver steps, all at once: each reads its own bronze table
+    * and writes its own silver table. */
+  def run(spark: SparkSession, batchId: Long, loadTs: Timestamp): Unit =
+    Steps.inParallel(spark)(
+      () => customers(spark, batchId, loadTs),
+      () => products(spark, batchId, loadTs),
+      () => sales(spark, batchId, loadTs),
+      () => erpCustomers(spark, batchId),
+      () => erpLocations(spark, batchId),
+      () => erpCategories(spark, batchId))
 
   /** SCD1 customers: filter null keys → keep-latest dedup → standardize →
     * hash → merge (proc_load_silver.sql:48-137). */
@@ -123,49 +131,49 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         fixedSales(col("sls_sales"), col("sls_quantity"), col("sls_price")).as("sls_sales"),
         col("sls_quantity"),
         fixedPrice(col("sls_sales"), col("sls_quantity"), col("sls_price")).as("sls_price"))
+      val inDelta = col("sls_order_dt") > lit(new java.sql.Date(wm.getTime))
+      // One aggregate over the extract gives the DQ count, the delta's
+      // size and its newest order date.
+      val stats = cleaned.agg(count_if(col("sls_order_dt").isNull),
+        count_if(inDelta), max(when(inDelta, col("sls_order_dt"))).cast("timestamp")).head()
       // I9: rows whose order date cleaned to NULL can never pass a
       // watermark filter — count them out loud instead of dropping
       // silently (the reference's int-compare filter drops them too).
-      audit.check(spark, batchId, "crm_sales_details", "unparseable_order_date",
-        cleaned.filter(col("sls_order_dt").isNull),
-        "sls_order_dt null/garbage — row excluded from delta loads")
-      val delta = cleaned.filter(col("sls_order_dt") > lit(new java.sql.Date(wm.getTime)))
-      val deltaCached = delta.cache()
-      // unpersist on every exit: a throw from the append, the watermark
-      // advance or the revenue check must not leave the delta cached
-      try {
-        val n = deltaCached.count()
-        if (n > 0) {
-          if (!wh.exists("silver", "crm_sales_details"))
-            wh.overwrite(deltaCached, "silver", "crm_sales_details")
-          else {
-            // The 1-day late-data buffer re-reads the tail window on every
-            // run; make the append idempotent by anti-joining rows already
-            // landed (natural line grain: order number + product key).
-            val existing = wh.read(spark, "silver", "crm_sales_details")
-              .select("sls_ord_num", "sls_prd_key")
-            wh.append(deltaCached.join(existing,
-              Seq("sls_ord_num", "sls_prd_key"), "left_anti"),
-              "silver", "crm_sales_details")
-          }
-          wmCtl.nextWatermark(deltaCached, "sls_order_dt")
-            .foreach(wmCtl.advance(spark, "crm_sales_details", _))
-          // I9: revenue reconciliation — sales must equal qty × |price|
-          val bad = wh.read(spark, "silver", "crm_sales_details")
-            .filter(col("sls_sales") =!=
-              (col("sls_quantity").cast(DecimalType(19, 4)) * abs(col("sls_price")))
-                .cast(DecimalType(19, 4)))
-          audit.check(spark, batchId, "crm_sales_details", "revenue_reconciliation",
-            bad, "sls_sales = sls_quantity * abs(sls_price)")
+      audit.checkCount(spark, batchId, "crm_sales_details", "unparseable_order_date",
+        stats.getLong(0), "sls_order_dt null/garbage — row excluded from delta loads")
+      val n = stats.getLong(1)
+      if (n > 0) {
+        val delta = cleaned.filter(inDelta)
+        if (!wh.exists("silver", "crm_sales_details"))
+          wh.overwrite(delta, "silver", "crm_sales_details")
+        else {
+          // The 1-day late-data buffer re-reads the tail window on every
+          // run; make the append idempotent by anti-joining rows already
+          // landed (natural line grain: order number + product key).
+          val existing = wh.read(spark, "silver", "crm_sales_details")
+            .select("sls_ord_num", "sls_prd_key")
+          wh.append(delta.join(existing,
+            Seq("sls_ord_num", "sls_prd_key"), "left_anti"),
+            "silver", "crm_sales_details")
         }
-        n
-      } finally deltaCached.unpersist()
+        Option(stats.getTimestamp(2)).map(wmCtl.buffered)
+          .foreach(wmCtl.advance(spark, "crm_sales_details", _))
+        // I9: revenue reconciliation — sales must equal qty × |price|
+        val bad = wh.read(spark, "silver", "crm_sales_details")
+          .filter(col("sls_sales") =!=
+            (col("sls_quantity").cast(DecimalType(19, 4)) * abs(col("sls_price")))
+              .cast(DecimalType(19, 4)))
+        audit.check(spark, batchId, "crm_sales_details", "revenue_reconciliation",
+          bad, "sls_sales = sls_quantity * abs(sls_price)")
+      }
+      n
     }
 
-  /** ERP tables: metadata-driven copy + the documented-but-unimplemented
-    * cleanings the analytics need (SURVEY.md §4 quirk 2): NAS prefix strip,
-    * country standardization. */
-  def erp(spark: SparkSession, batchId: Long): Unit = {
+  // ERP tables: metadata-driven copy + the documented-but-unimplemented
+  // cleanings the analytics need (SURVEY.md §4 quirk 2): NAS prefix strip,
+  // country standardization. Each step skips a table bronze doesn't have.
+
+  def erpCustomers(spark: SparkSession, batchId: Long): Unit =
     if (wh.exists("bronze", "erp_cust_az12"))
       audit.timed(spark, batchId, "silver", "erp_cust_az12") {
         val out = new Counted(wh.read(spark, "bronze", "erp_cust_az12").select(
@@ -175,6 +183,8 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         wh.overwrite(out.frame, "silver", "erp_cust_az12")
         out.rows
       }
+
+  def erpLocations(spark: SparkSession, batchId: Long): Unit =
     if (wh.exists("bronze", "erp_loc_a101"))
       audit.timed(spark, batchId, "silver", "erp_loc_a101") {
         val out = new Counted(wh.read(spark, "bronze", "erp_loc_a101").select(
@@ -183,12 +193,13 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         wh.overwrite(out.frame, "silver", "erp_loc_a101")
         out.rows
       }
+
+  def erpCategories(spark: SparkSession, batchId: Long): Unit =
     if (wh.exists("bronze", "erp_px_cat_g1v2"))
       audit.timed(spark, batchId, "silver", "erp_px_cat_g1v2") {
         MetadataDriven.copy(spark, wh, "bronze", "erp_px_cat_g1v2",
           "silver", "erp_px_cat_g1v2")
       }
-  }
 }
 
 /** Metadata-driven full loads (proc_load_metadata_driven.sql:26-118): a

@@ -13,6 +13,18 @@ final case class PipelineConf(
   * (init_load_all.sql:24-111): batch id → config hard-stop validation →
   * bronze → silver → gold → finalize, with per-layer audit rows and
   * failure capture.
+  *
+  * The layers run one after another, but inside a layer the steps that
+  * share no table run at the same time ([[Steps.inParallel]]): the bronze
+  * CSV loads; the six silver steps (customers, products, sales and the
+  * three ERP copies); `dim_customers` with `dim_products`, then
+  * `fact_sales` once both are done.
+  *
+  * Failure: a layer waits for all of its steps. Each step writes its own
+  * Success or Failed `etl_log` row; if any failed, no later layer starts,
+  * the `MASTER_PIPELINE` row is Failed, and [[runAll]] throws the first
+  * failing step's error (in step order), with the others attached as
+  * suppressed.
   */
 object Pipeline {
 

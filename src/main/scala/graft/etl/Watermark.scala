@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -39,10 +39,13 @@ final case class Watermark(wh: Warehouse) {
     * empty delta (watermark must not move backwards). */
   def nextWatermark(delta: DataFrame, eventCol: String): Option[Timestamp] = {
     val row = delta.agg(max(col(eventCol).cast("timestamp"))).collect().head
-    Option(row.getTimestamp(0)).map { m =>
-      Timestamp.from(m.toInstant.minus(java.time.Duration.ofDays(1)))
-    }
+    Option(row.getTimestamp(0)).map(buffered)
   }
+
+  /** The watermark after a load whose newest event is `newest`: one day
+    * behind it (the late-data buffer). */
+  def buffered(newest: Timestamp): Timestamp =
+    Timestamp.from(newest.toInstant.minus(java.time.Duration.ofDays(1)))
 
   def advance(spark: SparkSession, tableName: String, wm: Timestamp): Unit = {
     import spark.implicits._

@@ -1046,7 +1046,7 @@ object Dedup {
       idCol: String, textCol: String, wh: graft.etl.Warehouse,
       layer: String, table: String, threshold: Double,
       broadcastDocLimit: Long, tracker: PersistTracker,
-      excludeEpoch: Long = Long.MinValue)
+      excludeEpoch: Long)
       : (DataFrame, DataFrame, DataFrame) = {
     val meta = readIndexMeta(batch.sparkSession, wh, layer, table)
     val (crossPairs, shB, keysB) = incrementCrossPairs(batch, idCol,
@@ -1989,7 +1989,7 @@ object Dedup {
       layer: String, table: String, threshold: Double,
       broadcastDocLimit: Long, maxComponentShingles: Long,
       broadcastShingleLimit: Long, tracker: PersistTracker,
-      excludeEpoch: Long = Long.MinValue)
+      excludeEpoch: Long)
       : (DataFrame, DataFrame, DataFrame) = {
     val (cross, internal, postB, setsB) = ngramIncrementParts(batch,
       idCol, textCol, wh, layer, table, threshold, broadcastDocLimit,
@@ -2351,7 +2351,7 @@ object Dedup {
     * callers scoring many corpora should spark.catalog.clearCache()). */
   private def verifyJaccard(cands: DataFrame, sh: DataFrame, threshold: Double,
                             broadcastDocLimit: Long,
-                            tracker: PersistTracker = PersistTracker.noop)
+                            tracker: PersistTracker)
       : DataFrame = {
     val sets = tracker.add(sh.groupBy("doc_id")
       .agg(collect_list(col("sh")).as("set"), count(lit(1)).as("n"))

@@ -1,6 +1,8 @@
 package org.apache.spark
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
@@ -19,8 +21,10 @@ object JobCounting {
   private val Key = "graft.jobCount"
 
   /** One job the block submitted. `seconds` is NaN for a job that had not
-    * ended when the block returned; `description` is the job
-    * description if one was set, else its stages' call sites. */
+    * ended when the block returned. `description` is the job description
+    * if one was set; else the call site of the SQL execution the job ran
+    * under (AQE query-stage jobs have no call site of their own); else
+    * its stages' call sites. */
   final case class Job(id: Int, seconds: Double, description: String)
 
   def countJobs[A](sc: SparkContext)(body: => A): (A, Int) = {
@@ -32,10 +36,19 @@ object JobCounting {
     val tag = java.util.UUID.randomUUID().toString
     val starts = new ConcurrentHashMap[Int, (Long, String)]
     val ends = new ConcurrentHashMap[Int, Long]
+    // execution id -> its description, which is the call site of the
+    // action unless a job description was set; execution starts reach
+    // the listener before the jobs of the execution
+    val executions = new ConcurrentHashMap[String, String]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          executions.put(x.executionId.toString, x.description)
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(Key) == tag)
-          starts.put(e.jobId, (e.time, describe(e)))
+          starts.put(e.jobId, (e.time, describe(e, executions)))
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (starts.containsKey(e.jobId)) ends.put(e.jobId, e.time)
     }
@@ -57,10 +70,13 @@ object JobCounting {
     }
   }
 
-  private def describe(e: SparkListenerJobStart): String = {
+  private def describe(e: SparkListenerJobStart,
+                       executions: ConcurrentHashMap[String, String]): String = {
     val sites = e.stageInfos.map(_.name.takeWhile(_ != '<'))
       .filterNot(_.contains("CompletableFuture")).distinct
     Option(e.properties.getProperty(SparkContext.SPARK_JOB_DESCRIPTION))
+      .orElse(Option(e.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+        .flatMap(id => Option(executions.get(id))))
       .getOrElse(if (sites.nonEmpty) sites.mkString(" | ") else "?")
   }
 }

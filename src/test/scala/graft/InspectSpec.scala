@@ -20,6 +20,9 @@ class InspectSpec extends AnyFunSuite {
 
   test("writes the returned plan and every executed plan, and counts the jobs it ran") {
     val dir = Files.createTempDirectory("graft_inspect").toString
+    // a label an earlier operator left on this thread must not name the
+    // entry's jobs
+    spark.sparkContext.setJobDescription("stale label")
     val r = Inspect.inspect(spark, entry, sf, dir, "spec")
     assert(r.planFile == s"$dir/${entry}_spec.txt")
     val txt = Files.readString(Paths.get(r.planFile))
@@ -34,5 +37,11 @@ class InspectSpec extends AnyFunSuite {
     assert(r.rows == rows)
     assert(r.jobs.size == jobs)
     assert(jobs > 0)
+
+    // the count runs as AQE query-stage jobs, whose stages carry only
+    // CompletableFuture call sites: they are named by the call site of
+    // their SQL execution instead of printing `?`
+    assert(!r.jobs.exists(_.description == "?"), r.jobs)
+    assert(r.jobs.exists(_.description.startsWith("count at Inspect.scala")), r.jobs)
   }
 }

@@ -63,4 +63,29 @@ class AuditWatermarkSpec extends AnyFunSuite {
     assert(wh.read(spark, "audit", "data_quality_issues")
       .filter(col("check_name") === "some").head().getAs[Long]("n_bad_rows") === 2L)
   }
+
+  test("audit: N threads logging at once onto a fresh warehouse leave N rows") {
+    val n = 8
+    // fresh warehouses: the first writes race to create the table
+    (1 to 3).foreach { round =>
+      val wh = freshWh()
+      val audit = Audit(wh)
+      val start = new java.util.concurrent.CyclicBarrier(n)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = (1 to n).map { i =>
+        new Thread(() =>
+          try {
+            start.await()
+            val t = new Timestamp(System.currentTimeMillis())
+            audit.log(spark, EtlLogEntry(1L, "bronze", s"t$i", t, t, i, "Success", ""))
+          } catch { case e: Throwable => errors.add(e) })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(errors.isEmpty, s"round $round: $errors")
+      val tables = wh.read(spark, "audit", "etl_log").select("table_name")
+        .as[String].collect().sorted.toSeq
+      assert(tables === (1 to n).map(i => s"t$i").sorted, s"round $round")
+    }
+  }
 }

@@ -3,7 +3,9 @@ package graft.etl
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.JobCounting
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import java.security.MessageDigest
+import java.sql.Timestamp
 
 /** End-to-end medallion pipeline over the dirty fixtures, asserting the
   * reference's quality checks (tests/quality_checks_silver.sql,
@@ -14,10 +16,12 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
 
   /** Spark jobs of the incremental `Pipeline.runAll` over [[Fixtures]]
-    * (`writeDelta` after `write`) in the test session: 73 with declared
-    * schemas and observed row counts, 147 with footer inference on every
+    * (`writeDelta` after `write`) in the test session: 66 with the fact's
+    * unknown-member count observed at write time and one aggregate for
+    * silver sales' counts and watermark; 73 before that, with declared
+    * schemas and observed row counts; 147 with footer inference on every
     * read and a `count()` read-back per step. */
-  private val IncrementalBatchJobs = 73
+  private val IncrementalBatchJobs = 66
 
   private def freshRun(): Warehouse = {
     val src = Files.createTempDirectory("graft_src")
@@ -174,7 +178,8 @@ class PipelineSpec extends AnyFunSuite {
       batchId: Long,
       jobs: Int,
       schemaDrift: Seq[String],
-      rowsLoaded: Seq[((String, String), Long, Long)]) // (layer, table), logged, actual
+      rowsLoaded: Seq[((String, String), Long, Long)], // (layer, table), logged, actual
+      digests: Map[String, String])
 
   /** Every declared table whose declared schema differs — in names, order,
     * types or nullability — from the schema Parquet infers from its files. */
@@ -224,8 +229,96 @@ class PipelineSpec extends AnyFunSuite {
       val salesDelta = wh2.read(spark, "bronze", "crm_sales_details")
         .filter(Cleaning.intDate(col("sls_order_dt")) > lit(new java.sql.Date(wm.getTime)))
         .count()
-      BatchRecord(batchId, jobs, schemaDrift(wh2), rowsLoaded(wh2, batchId, salesDelta))
+      BatchRecord(batchId, jobs, schemaDrift(wh2), rowsLoaded(wh2, batchId, salesDelta),
+        digests(wh2))
     }
+
+  private val silverGold = Seq(
+    "silver" -> "crm_cust_info", "silver" -> "crm_prd_info",
+    "silver" -> "crm_sales_details", "silver" -> "erp_cust_az12",
+    "silver" -> "erp_loc_a101", "silver" -> "erp_px_cat_g1v2",
+    "gold" -> "dim_customers", "gold" -> "dim_products", "gold" -> "fact_sales")
+
+  /** Columns stamped with the batch's load time, which differs between
+    * two runs over the same data. */
+  private val loadTimeColumns =
+    Seq("dwh_create_date", "dwh_update_date", "effective_date", "expiry_date")
+
+  /** SHA-1 of each silver and gold table's sorted rows, load-time columns
+    * left out. */
+  private def digests(w: Warehouse): Map[String, String] =
+    silverGold.map { case (layer, table) =>
+      val rows = w.read(spark, layer, table).drop(loadTimeColumns: _*)
+        .collect().map(_.mkString("|")).sorted
+      val sha = MessageDigest.getInstance("SHA-1")
+        .digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+      s"$layer.$table" -> s"${rows.length} rows $sha"
+    }.toMap
+
+  /** One batch with every step method called on this thread, one at a
+    * time, in the order the pipeline ran them before its layers ran
+    * their steps concurrently. */
+  private def sequentialBatch(src: Path, w: Warehouse): Unit = {
+    val audit = Audit(w)
+    val batchId = audit.nextBatchId(spark)
+    val loadTs = new Timestamp(System.currentTimeMillis())
+    val bronze = BronzeLoader(w, audit)
+    Schemas.bronzeSources.foreach { case (file, table, schema) =>
+      if (Files.exists(src.resolve(file)))
+        bronze.load(spark, src.resolve(file).toString, batchId, table, schema)
+    }
+    val silver = SilverLoader(w, audit)
+    silver.customers(spark, batchId, loadTs)
+    silver.products(spark, batchId, loadTs)
+    silver.sales(spark, batchId, loadTs)
+    silver.erpCustomers(spark, batchId)
+    silver.erpLocations(spark, batchId)
+    silver.erpCategories(spark, batchId)
+    val gold = GoldLoader(w, audit)
+    gold.dimCustomers(spark, batchId)
+    gold.dimProducts(spark, batchId)
+    gold.factSales(spark, batchId)
+  }
+
+  test("concurrent layers load the same silver and gold tables as the steps run one at a time") {
+    val w = Warehouse(Files.createTempDirectory("graft_wh_seq").toString)
+    val sequential = Seq(Fixtures.write _, Fixtures.writeDelta _).map { fixture =>
+      val src = Files.createTempDirectory("graft_src")
+      fixture(src)
+      sequentialBatch(src, w)
+      digests(w)
+    }
+    Seq("initial", "delta").zip(twoBatches.zip(sequential)).foreach {
+      case (batch, (concurrent, seq)) =>
+        assert(concurrent.digests === seq, batch)
+    }
+  }
+
+  test("a failing silver step: siblings finish, gold never starts, runAll throws its error") {
+    val src = Files.createTempDirectory("graft_src_fail")
+    Fixtures.write(src)
+    // no products extract, so bronze keeps its crm_prd_info table, which
+    // is corrupt: the silver products step fails reading it
+    Files.delete(src.resolve("prd_info.csv"))
+    val w = Warehouse(Files.createTempDirectory("graft_wh_fail").toString)
+    val prd = Files.createDirectories(Path.of(w.path("bronze", "crm_prd_info")))
+    Files.write(prd.resolve("part-00000.parquet"), "not parquet".getBytes)
+
+    val thrown = intercept[Throwable] {
+      Pipeline.runAll(spark, PipelineConf(src.toString, w.root))
+    }
+    val log = w.read(spark, "audit", "etl_log").filter(col("batch_id") === 1L)
+      .select("layer", "table_name", "status", "error_message").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getString(2), r.getString(3))).toMap
+    assert(log(("silver", "crm_prd_info")) === (("Failed", thrown.getMessage)))
+    Seq("crm_cust_info", "crm_sales_details", "erp_cust_az12", "erp_loc_a101",
+        "erp_px_cat_g1v2").foreach { t =>
+      assert(log(("silver", t))._1 === "Success", t)
+    }
+    assert(!log.keys.exists(_._1 == "gold"), log.keys)
+    assert(!w.exists("gold", "dim_customers") && !w.exists("gold", "fact_sales"))
+    assert(log(("init", "MASTER_PIPELINE")) === (("Failed", thrown.getMessage)))
+  }
 
   test("declared schemas equal the written ones after initial and incremental loads") {
     twoBatches.foreach { b =>
