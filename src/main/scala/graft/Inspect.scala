@@ -45,8 +45,8 @@ object Inspect {
                              exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
-    // a job description an earlier entry left on this thread (e.g.
-    // ConnectedComponents' "cc: ..." labels) would name this entry's jobs
+    // a job description the caller left on this thread would name this
+    // entry's jobs
     spark.sparkContext.setJobDescription(null)
     try {
       // recordJobs drains the listener bus, so `executed` is complete

@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.textops.Dedup
+import graft.textops.CurationStream.{ExactNgramFamily, MinHashFamily}
 
 /** Dev harness: stress the heavy operator families at ~10x sf0.1, built
   * by replicating the base tables with shifted ids — perf probe only,
@@ -553,7 +554,7 @@ object ScaleProbe {
     }
 
     // The streaming ingest LOOP against the 250k index: 5 micro-batches
-    // of 2,500 docs drain through nearDedupIngestStream (file source,
+    // of 2,500 docs drain through Dedup.ingestStream (file source,
     // one file per trigger). Each batch is a third exact corpus dups, a
     // third near-dup versions, a third reversed-text docs that are
     // near-dups of EVERY batch's reversed third — so exactly one
@@ -595,7 +596,7 @@ object ScaleProbe {
           .schema("doc_id LONG, text STRING")
           .option("maxFilesPerTrigger", "1")
           .parquet(stageDir)
-        val q = Dedup.nearDedupIngestStream(src, "doc_id", "text",
+        val q = Dedup.ingestStream(MinHashFamily, src, "doc_id", "text",
           wh, "gold", "nd", threshold = 0.5, ckpt)
         q.processAllAvailable(); q.stop()
         spark.read.parquet(wh.path("gold", "nd_kept")).count()
@@ -653,16 +654,16 @@ object ScaleProbe {
         val pre0 = tableBytes(wh)
         (1L to 30L).foreach { e =>
           val preAppend = tableBytes(wh)
-          Dedup.nearDedupIndexAppend(batchAt(e), "doc_id", "text",
+          Dedup.indexAppend(MinHashFamily, batchAt(e), "doc_id", "text",
             wh, "gold", "nd", epoch = e)
           ingested += tableBytes(wh) - preAppend
           val t0 = System.nanoTime()
           val folded =
             if (every > 0 && e % every == 0) {
-              Dedup.nearDedupIndexCompact(spark, wh, "gold", "nd",
+              Dedup.indexCompact(MinHashFamily, spark, wh, "gold", "nd",
                 foldEpochsBelow = e); true
             } else if (ratio > 0.0)
-              Dedup.nearDedupIndexCompactIfDue(spark, wh, "gold", "nd",
+              Dedup.indexCompactIfDue(MinHashFamily, spark, wh, "gold", "nd",
                 e, ratio)
             else false
           if (folded) {
@@ -870,12 +871,12 @@ object ScaleProbe {
         .option("maxFilesPerTrigger", "1").parquet(stageDir)
       val q =
         if (idx == "ng")
-          Dedup.ngramIngestStream(src, "doc_id", "text", wh, "gold", idx,
-            threshold = 0.5, ckpt, compactEvery = 5,
+          Dedup.ingestStream(ExactNgramFamily, src, "doc_id", "text", wh,
+            "gold", idx, threshold = 0.5, ckpt, compactEvery = 5,
             rebuildCheckEvery = 5, unseenThreshold = 0.5,
             baseCorpus = Some(bootstrap))
         else
-          Dedup.nearDedupIngestStream(src, "doc_id", "text", wh, "gold",
+          Dedup.ingestStream(MinHashFamily, src, "doc_id", "text", wh, "gold",
             idx, threshold = 0.5, ckpt,
             compactEvery = if (foldRatio > 0.0) 0 else 5,
             compactMinRatio = foldRatio)

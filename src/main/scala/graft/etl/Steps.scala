@@ -5,7 +5,10 @@ import org.apache.spark.sql.execution.SQLExecution
 import java.util.concurrent.{CompletionException, Executors, ThreadFactory}
 import java.util.concurrent.atomic.AtomicInteger
 
-/** Runs the independent steps of one medallion layer at the same time.
+/** Runs independent Spark steps at the same time. Two callers use it:
+  * the ETL, for the steps of one medallion layer, and the dedup index
+  * row write ([[graft.textops.Dedup]]), for the key table and `_sets`
+  * of one epoch.
   *
   * At warehouse sizes where a step is a handful of small Spark jobs, its
   * wall time goes to per-job fixed cost (planning, scheduling, the write
@@ -35,7 +38,9 @@ object Steps {
   /** Run `steps` concurrently and wait for every one of them. A failing
     * step does not cancel its siblings; once all have ended, the first
     * failure in step order is thrown with the others attached as
-    * suppressed. Steps must not call back into this method. */
+    * suppressed. Steps must not call back into this method: a step
+    * waiting on steps queued behind it on the fixed pool could wait
+    * forever. */
   def inParallel(spark: SparkSession)(steps: (() => Unit)*): Unit = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val running = steps.map(s => SQLExecution.withThreadLocalCaptured(session, pool)(s()))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.JobCounting
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -36,50 +37,50 @@ object ConnectedComponents {
     * `component` is the minimum node id reachable from `id`. */
   def components(edges: DataFrame, aCol: String, bCol: String,
                  maxIterations: Int = 20): DataFrame = {
-    // materialize the edge projection BEFORE symmetrizing: both union
-    // branches reference it, and a lazy plan there is evaluated twice —
-    // for pair streams from a dedup pipeline that re-runs the whole
-    // sketch+verify cascade a second time (measured 2× the pipeline
-    // cost at sf0.1 before this cut lineage)
-    edges.sparkSession.sparkContext
-      .setJobDescription("cc: min-label propagation")
-    val fwd = edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
-    val und = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // seed with min(id, min neighbor): exactly the result of round one
-    // from identity labels, for the price of the node-list aggregate
-    // the init needed anyway — one fewer join round every call
-    var labels = und.groupBy("a").agg(min(col("b")).as("__mn"))
-      .select(col("a").as("id"), least(col("a"), col("__mn")).as("comp"))
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
-    // exact sum (no long overflow for any ids) — the monotone potential
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      // sum over zero rows is null — an empty graph must converge on
-      // round one (0 == 0), not NPE in the compare
-      Option(df.agg(sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val nbrMin = und.join(labels.select(col("id").as("b"), col("comp").as("nbr_comp")), "b")
-        .groupBy(col("a").as("id"))
-        .agg(min(col("nbr_comp")).as("nbr_min"))
-      labels = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"))
+    JobCounting.described(edges.sparkSession.sparkContext, "cc: min-label propagation") {
+      // materialize the edge projection BEFORE symmetrizing: both union
+      // branches reference it, and a lazy plan there is evaluated twice —
+      // for pair streams from a dedup pipeline that re-runs the whole
+      // sketch+verify cascade a second time (measured 2× the pipeline
+      // cost at sf0.1 before this cut lineage)
+      val fwd = edges.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
         .localCheckpoint(true, StorageLevel.DISK_ONLY)
-      val curSum = labelSum(labels)
-      converged = curSum.compareTo(prevSum) == 0
-      prevSum = curSum
-      i += 1
+      val und = fwd.union(fwd.select(col("b").as("a"), col("a").as("b")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // seed with min(id, min neighbor): exactly the result of round one
+      // from identity labels, for the price of the node-list aggregate
+      // the init needed anyway — one fewer join round every call
+      var labels = und.groupBy("a").agg(min(col("b")).as("__mn"))
+        .select(col("a").as("id"), least(col("a"), col("__mn")).as("comp"))
+        .localCheckpoint(true, StorageLevel.DISK_ONLY)
+      // exact sum (no long overflow for any ids) — the monotone potential
+      def labelSum(df: DataFrame): java.math.BigDecimal =
+        // sum over zero rows is null — an empty graph must converge on
+        // round one (0 == 0), not NPE in the compare
+        Option(df.agg(sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+          .head().getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO)
+      var prevSum = labelSum(labels)
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIterations) {
+        val nbrMin = und.join(labels.select(col("id").as("b"), col("comp").as("nbr_comp")), "b")
+          .groupBy(col("a").as("id"))
+          .agg(min(col("nbr_comp")).as("nbr_min"))
+        labels = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"))
+          .localCheckpoint(true, StorageLevel.DISK_ONLY)
+        val curSum = labelSum(labels)
+        converged = curSum.compareTo(prevSum) == 0
+        prevSum = curSum
+        i += 1
+      }
+      require(converged,
+        s"connected components did not converge within $maxIterations rounds " +
+          "(component diameter too large — use componentsStarContraction)")
+      labels
     }
-    require(converged,
-      s"connected components did not converge within $maxIterations rounds " +
-        "(component diameter too large — use componentsStarContraction)")
-    labels
   }
 
   /** Connected components by alternating large-star / small-star
@@ -130,37 +131,37 @@ object ConnectedComponents {
       canon(e.join(m, "u").select(col("v").as("u"), col("m").as("v"))
         .union(m.select(col("u"), col("m").as("v"))))
     }
-    // materialize the raw edge projection BEFORE canon: canon's
-    // greatest/least/filter constraints over a union-shaped input (e.g.
-    // a dedup verifier's grouped∪fallback pair set, or expandPairs'
-    // intra∪cross union) trip Catalyst's Union.rewriteConstraints with
-    // a "key not found" on a contraction-internal attribute; an RDD
-    // boundary makes the iterative plan self-contained
-    edges.sparkSession.sparkContext
-      .setJobDescription("cc: star contraction")
-    val raw = edges.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
-    var cur = canon(raw)
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
-    // the canon() distinct makes each round's edge frame a SET, and its
-    // checkpointed count is known from the previous round's convergence
-    // check — carry it instead of re-counting (one fewer job per round)
-    var curCount = cur.count()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(true, StorageLevel.DISK_ONLY)
-      val nextCount = next.count()
-      converged = nextCount == curCount && next.exceptAll(cur).isEmpty
-      cur = next
-      curCount = nextCount
-      i += 1
+    JobCounting.described(edges.sparkSession.sparkContext, "cc: star contraction") {
+      // materialize the raw edge projection BEFORE canon: canon's
+      // greatest/least/filter constraints over a union-shaped input (e.g.
+      // a dedup verifier's grouped∪fallback pair set, or expandPairs'
+      // intra∪cross union) trip Catalyst's Union.rewriteConstraints with
+      // a "key not found" on a contraction-internal attribute; an RDD
+      // boundary makes the iterative plan self-contained
+      val raw = edges.select(col(aCol).cast("long").as("u"),
+          col(bCol).cast("long").as("v"))
+        .localCheckpoint(true, StorageLevel.DISK_ONLY)
+      var cur = canon(raw)
+        .localCheckpoint(true, StorageLevel.DISK_ONLY)
+      // the canon() distinct makes each round's edge frame a SET, and its
+      // checkpointed count is known from the previous round's convergence
+      // check — carry it instead of re-counting (one fewer job per round)
+      var curCount = cur.count()
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIterations) {
+        val next = smallStar(largeStar(cur)).localCheckpoint(true, StorageLevel.DISK_ONLY)
+        val nextCount = next.count()
+        converged = nextCount == curCount && next.exceptAll(cur).isEmpty
+        cur = next
+        curCount = nextCount
+        i += 1
+      }
+      require(converged,
+        s"star contraction did not converge within $maxIterations rounds")
+      sym(cur).groupBy(col("u").as("id"))
+        .agg(min("v").as("__mn"))
+        .select(col("id"), least(col("id"), col("__mn")).as("comp"))
     }
-    require(converged,
-      s"star contraction did not converge within $maxIterations rounds")
-    sym(cur).groupBy(col("u").as("id"))
-      .agg(min("v").as("__mn"))
-      .select(col("id"), least(col("id"), col("__mn")).as("comp"))
   }
 }

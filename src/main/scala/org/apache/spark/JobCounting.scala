@@ -7,7 +7,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 /** Records the Spark jobs a block submits: the one job-counting path for
-  * `graft.Inspect` and the specs that pin job counts.
+  * `graft.Inspect` and the specs that pin job counts. [[described]] is
+  * the one way an operator names the jobs of its phases.
   *
   * Jobs are attributed through a local property set on the calling
   * thread, which Spark hands on to every job the block causes (broadcast
@@ -30,6 +31,16 @@ object JobCounting {
   def countJobs[A](sc: SparkContext)(body: => A): (A, Int) = {
     val (a, jobs) = recordJobs(sc)(body)
     (a, jobs.size)
+  }
+
+  /** Runs `body` with `description` as the job description of every job
+    * it submits, then restores the caller's description — or its
+    * absence — so an operator phase never names a later caller's jobs. */
+  def described[A](sc: SparkContext, description: String)(body: => A): A = {
+    val outer = sc.getLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION)
+    sc.setJobDescription(description)
+    try body
+    finally sc.setLocalProperty(SparkContext.SPARK_JOB_DESCRIPTION, outer)
   }
 
   def recordJobs[A](sc: SparkContext)(body: => A): (A, Seq[Job]) = {

@@ -30,7 +30,6 @@ class Frontier29QueriesSpec extends AnyFunSuite {
     }
     // spot-reconcile one month-status cell against a direct rebuild
     val (mon0, st0, _, _, mf0, _) = got.head
-    val y = (mon0 / 12).toInt; val m = (mon0 % 12).toInt
     val cell = spark.read.parquet(s"$sf/orders.parquet")
       .filter(year(col("o_orderdate")) * 12 + month(col("o_orderdate"))
         === mon0 && col("o_orderstatus") === st0)

@@ -69,13 +69,9 @@ class Frontier31QueriesSpec extends AnyFunSuite {
       assert(d >= 0 && d <= 10, s"decile $d") // index 1.0 → bucket 10
       assert(n > 0)
     }
-    // the top user (max events) must land in the highest occupied decile
-    val per = graft.Tables.load(spark, sf, "events")
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-      .as[(Long, Long)].collect()
-    val topUser = per.maxBy(_._2)._1
-    // rebuild that user's decile membership via checksum inclusion is
-    // overkill; assert structure instead: the max decile holds >= 1 user
+    // rebuilding the top user's decile membership via checksum
+    // inclusion is overkill; assert structure instead: the max decile
+    // holds >= 1 user
     assert(got.map(_._1).max >= got.map(_._1).min)
   }
 }

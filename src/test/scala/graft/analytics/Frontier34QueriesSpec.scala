@@ -55,8 +55,6 @@ class Frontier34QueriesSpec extends AnyFunSuite {
     val total = srcRows.map(_._2).sum
     assert(total === spark.read.parquet(s"$sf/documents.parquet").count())
     // ESS from the emitted weights
-    def r6(v: Double) =
-      BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     val sw = srcRows.map(r => BigDecimal(r._3.get).toDouble * r._2).sum
     val sw2 = srcRows.map(r =>
       math.pow(BigDecimal(r._3.get).toDouble, 2) * r._2).sum

@@ -73,4 +73,20 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(a === b)
     assert(a(9L) === 2L && a(11L) === 10L)
   }
+
+  test("both variants hand the caller's job description back") {
+    // each labels its rounds' jobs; a label left on the thread would
+    // name every later job of the caller
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    sc.setJobDescription("caller's phase")
+    try {
+      ConnectedComponents.components(edges, "a", "b").collect()
+      assert(sc.getLocalProperty("spark.job.description") ===
+        "caller's phase")
+      ConnectedComponents.componentsStarContraction(edges, "a", "b").collect()
+      assert(sc.getLocalProperty("spark.job.description") ===
+        "caller's phase")
+    } finally sc.setJobDescription(null)
+  }
 }

@@ -1,7 +1,6 @@
 package graft.textops
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import graft.etl.TestSessions
 
 /** Container-metadata extraction: the expression-level RIFF/ISO-BMFF

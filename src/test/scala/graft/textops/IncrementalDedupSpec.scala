@@ -3,6 +3,7 @@ package graft.textops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.etl.TestSessions
+import CurationStream.MinHashFamily
 
 /** Incremental near-dedup against a persisted band index: the probe must
   * (1) return exactly the corpus-rebuild pair set restricted to batch
@@ -34,6 +35,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     (105L, "tiny doc"))
   private lazy val corpus = corpusRows.toDF("doc_id", "text")
   private lazy val batch = batchRows.toDF("doc_id", "text")
+
+  /** Spark jobs of one ingest epoch of `batch` against the index over
+    * `corpus`, in the test session: 83 with the index meta read once,
+    * in one action; 91 when each epoch read it 3 times at 3 jobs a
+    * read. */
+  private val IngestEpochJobs = 83
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
     java.nio.file.Files.createTempDirectory(s"graft_ndidx_$tag").toString)
@@ -101,7 +108,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       val extra = Seq((base,
         s"fresh appended content number $base about storage compaction today"))
         .toDF("doc_id", "text")
-      Dedup.nearDedupIndexAppend(extra, "doc_id", "text", wh, "gold", "nd")
+      Dedup.indexAppend(MinHashFamily, extra, "doc_id", "text", wh, "gold", "nd")
     }
     val before = pairSet(Dedup.nearDedupIncrementPairs(batch, "doc_id",
       "text", wh, "gold", "nd", threshold = 0.5))
@@ -119,7 +126,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       cnt(wh.path("gold", "nd_bands")) + cnt(wh.path("gold", "nd_sets"))
     }
     val filesBefore = nFiles
-    Dedup.nearDedupIndexCompact(spark, wh, "gold", "nd")
+    Dedup.indexCompact(MinHashFamily, spark, wh, "gold", "nd")
     val after = pairSet(Dedup.nearDedupIncrementPairs(batch, "doc_id",
       "text", wh, "gold", "nd", threshold = 0.5))
     assert(after === before)
@@ -135,7 +142,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val src =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = Dedup.nearDedupIngestStream(
+    val q = Dedup.ingestStream(MinHashFamily,
       src.toDF().toDF("doc_id", "text"), "doc_id", "text",
       wh, "gold", "nd", threshold = 0.5, ckpt)
     // batch 1: 200 = exact dup of corpus doc 0 (dropped);
@@ -191,7 +198,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val wh = freshWh("replay")
     Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", wh, "gold", "nd",
       shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8, nSetBuckets = 4)
-    Dedup.nearDedupIngestBatch(batch, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id", "text",
       wh, "gold", "nd", threshold = 0.5)
     val afterFirst = ingestState(wh)
     // full replay of the committed epoch (crash after all writes but
@@ -199,7 +206,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // overwrite and the keep pipeline excludes its own epoch's index
     // rows, so the second run recomputes the identical survivors and
     // overwrites its own partitions — nothing doubles, nothing vanishes
-    Dedup.nearDedupIngestBatch(batch, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id", "text",
       wh, "gold", "nd", threshold = 0.5)
     assert(ingestState(wh) === afterFirst)
     // partial-failure replay: epoch 1 crashes after the index append
@@ -210,9 +217,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (301L, "replayed epochs must not double count their own survivors once"))
       .toDF("doc_id", "text")
     val survivors2 = batch2.filter(col("doc_id") === 300L)
-    Dedup.nearDedupIndexAppend(survivors2, "doc_id", "text",
+    Dedup.indexAppend(MinHashFamily, survivors2, "doc_id", "text",
       wh, "gold", "nd", epoch = 1L)
-    Dedup.nearDedupIngestBatch(batch2, epoch = 1L, "doc_id", "text",
+    Dedup.ingestBatch(MinHashFamily, batch2, epoch = 1L, "doc_id", "text",
       wh, "gold", "nd", threshold = 0.5)
     val replayed = ingestState(wh)
     // clean-path control: the same two epochs with no crash anywhere
@@ -220,9 +227,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", whClean, "gold",
       "nd", shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8,
       nSetBuckets = 4)
-    Dedup.nearDedupIngestBatch(batch, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id", "text",
       whClean, "gold", "nd", threshold = 0.5)
-    Dedup.nearDedupIngestBatch(batch2, epoch = 1L, "doc_id", "text",
+    Dedup.ingestBatch(MinHashFamily, batch2, epoch = 1L, "doc_id", "text",
       whClean, "gold", "nd", threshold = 0.5)
     assert(replayed === ingestState(whClean))
     // 300/301 are an intra-batch near-dup cluster: min id survives, and
@@ -250,7 +257,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       val b = Seq((400L + e,
         s"novel cadence document number $e with its own distinct wording"))
         .toDF("doc_id", "text")
-      Dedup.nearDedupIngestBatch(b, epoch = e.toLong, "doc_id", "text",
+      Dedup.ingestBatch(MinHashFamily, b, epoch = e.toLong, "doc_id", "text",
         wh, "gold", "nd", threshold = 0.5, compactEvery = 2)
       nFiles
     }
@@ -291,7 +298,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", whInc, "gold", "nd",
       shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8, nSetBuckets = 4)
     val survivors = batch.filter(col("doc_id").isin(102L, 104L, 105L))
-    Dedup.nearDedupIndexAppend(survivors, "doc_id", "text",
+    Dedup.indexAppend(MinHashFamily, survivors, "doc_id", "text",
       whInc, "gold", "nd")
     val whFull = freshWh("appfull")
     Dedup.nearDedupIndexPersist(corpus.unionByName(survivors), "doc_id",
@@ -341,9 +348,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(keep(whT, batch) === keep(whA, batch))
     // the full ingest epoch (keep → epoch-keyed index append → sink)
     // writes texts rows for its survivors on the texts index
-    assert(Dedup.nearDedupIngestBatch(batch, epoch = 0L, "doc_id",
+    assert(Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id",
         "text", whT, "gold", "nd", threshold = 0.5) ===
-      Dedup.nearDedupIngestBatch(batch, epoch = 0L, "doc_id", "text",
+      Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id", "text",
         whA, "gold", "nd", threshold = 0.5))
     val colsIng = spark.read.parquet(whT.path("gold", "nd_sets")).columns.toSet
     assert(colsIng.contains("text") && !colsIng.contains("set"))
@@ -352,10 +359,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // groups by epoch too — merged union sets would diverge here)
     def ep(id: Long, text: String) = Seq((id, text)).toDF("doc_id", "text")
     for (w <- Seq(whT, whA)) {
-      Dedup.nearDedupIndexAppend(
+      Dedup.indexAppend(MinHashFamily,
         ep(300L, "two epoch versions of one document first variant body text"),
         "doc_id", "text", w, "gold", "nd", epoch = 1L)
-      Dedup.nearDedupIndexAppend(
+      Dedup.indexAppend(MinHashFamily,
         ep(300L, "two epoch versions of one document second variant body text"),
         "doc_id", "text", w, "gold", "nd", epoch = 2L)
     }
@@ -363,8 +370,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
       "two epoch versions of one document first variant body text here")
     assert(pairs(whT, b2) === pairs(whA, b2) && pairs(whT, b2).nonEmpty)
     // compaction (fold epochs into base) preserves layout and results
-    Dedup.nearDedupIndexCompact(spark, whT, "gold", "nd", foldEpochsBelow = 2L)
-    Dedup.nearDedupIndexCompact(spark, whA, "gold", "nd", foldEpochsBelow = 2L)
+    Dedup.indexCompact(MinHashFamily, spark, whT, "gold", "nd", foldEpochsBelow = 2L)
+    Dedup.indexCompact(MinHashFamily, spark, whA, "gold", "nd", foldEpochsBelow = 2L)
     assert(pairs(whT, b2) === pairs(whA, b2))
     assert(pairs(whT, batch) === pairs(whA, batch))
     // and the compacted texts files stayed zstd (codec survives the
@@ -379,52 +386,16 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("ratio-triggered compaction folds only when the delta earns its rewrite") {
-    // the geometric policy: a fixed cadence rewrites the O(corpus)
-    // base on a schedule (quadratic total rewrite work); the ratio
-    // trigger folds only when committed-delta bytes reach
-    // minFoldRatio × base bytes — constant write amplification
-    val wh = freshWh("ratio")
-    Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", wh, "gold", "nd",
-      shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8, nSetBuckets = 4)
-    def epochDirs: Set[String] = {
-      val root = new java.io.File(wh.path("gold", "nd_bands"))
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(_.isDirectory)
-        .flatMap(b => Option(b.listFiles()).getOrElse(Array.empty))
-        .map(_.getName).filter(_.startsWith("epoch="))
-        .filterNot(_ == "epoch=-1").toSet
-    }
-    // a tiny committed epoch: delta ≪ ratio × base → NOT due, no fold
-    Dedup.nearDedupIndexAppend(
-      Seq((900L, "one small appended document about nothing in particular"))
-        .toDF("doc_id", "text"),
-      "doc_id", "text", wh, "gold", "nd", epoch = 1L)
-    assert(!Dedup.nearDedupIndexCompactIfDue(spark, wh, "gold", "nd",
-      currentEpoch = 99L, minFoldRatio = 0.5))
-    assert(epochDirs.contains("epoch=1"))
-    val before = pairSet(Dedup.nearDedupIncrementPairs(batch, "doc_id",
-      "text", wh, "gold", "nd", threshold = 0.5))
-    // pile on corpus-sized committed epochs until delta ≥ ratio × base
-    // (doc-keyed vocabulary — these must never pair with the probe
-    // batch, so the before/after comparison isolates the fold)
-    (2L to 4L).foreach { e =>
-      Dedup.nearDedupIndexAppend(
-        corpus.select((col("doc_id") + lit(1000L * e)).as("doc_id"),
-          concat_ws(" ", (1 to 14).map(i =>
-            concat(lit(s"zfill${e}w$i"), col("doc_id"))): _*).as("text")),
-        "doc_id", "text", wh, "gold", "nd", epoch = e)
-    }
-    assert(Dedup.nearDedupIndexCompactIfDue(spark, wh, "gold", "nd",
-      currentEpoch = 99L, minFoldRatio = 0.5))
-    assert(epochDirs.isEmpty) // all committed epochs folded into base
-    // the fold changed nothing a probe can see (beyond the new docs,
-    // which both sides of this comparison include)
-    val after = pairSet(Dedup.nearDedupIncrementPairs(batch, "doc_id",
-      "text", wh, "gold", "nd", threshold = 0.5))
-    assert(after === before)
-    // and once folded, the same trigger is quiescent
-    assert(!Dedup.nearDedupIndexCompactIfDue(spark, wh, "gold", "nd",
-      currentEpoch = 99L, minFoldRatio = 0.5))
+    IndexLifecycle.ratioTriggeredCompaction(MinHashFamily, corpus, batch)
+  }
+
+  test("compaction after a crashed group promotion resumes it, not clobbers the staged tables") {
+    IndexLifecycle.crashedPromotionCompaction(MinHashFamily, corpus, batch)
+  }
+
+  test("one ingest epoch: job count pinned, caller's job description restored") {
+    val jobs = IndexLifecycle.ingestEpochJobs(MinHashFamily, corpus, batch)
+    assert(jobs <= IngestEpochJobs, s"jobs: $jobs")
   }
 
   test("format_version: a pre-v2 minhash index fails with an explicit rebuild-required error") {

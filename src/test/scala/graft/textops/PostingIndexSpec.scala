@@ -3,6 +3,7 @@ package graft.textops
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.etl.TestSessions
+import CurationStream.ExactNgramFamily
 
 /** Incremental exact-similarity dedup (the prefix-filter family) against
   * the persisted posting index: the probe must (1) return exactly the
@@ -36,6 +37,12 @@ class PostingIndexSpec extends AnyFunSuite {
     (105L, "tiny doc"))
   private lazy val corpus = corpusRows.toDF("doc_id", "text")
   private lazy val batch = batchRows.toDF("doc_id", "text")
+
+  /** Spark jobs of one ingest epoch of `batch` against the index over
+    * `corpus`, in the test session: 69 with the index meta read once,
+    * in one action; 73 when each epoch read it 2 times at 3 jobs a
+    * read. */
+  private val IngestEpochJobs = 69
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
     java.nio.file.Files.createTempDirectory(s"graft_ngidx_$tag").toString)
@@ -127,7 +134,7 @@ class PostingIndexSpec extends AnyFunSuite {
     // pairs against the APPENDED batch1 docs
     val wh = freshWh("append")
     build(wh)
-    Dedup.ngramIndexAppend(batch, "doc_id", "text", wh, "gold", "ng")
+    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", wh, "gold", "ng")
     val batch2 = Seq(
       (300L, batchRows.find(_._1 == 102L).get._2), // exact copy of appended 102
       (301L, "genuinely novel follow up content sharing nothing with any earlier document"))
@@ -217,13 +224,13 @@ class PostingIndexSpec extends AnyFunSuite {
   test("kill-and-replay: a replayed epoch leaves sink and index unchanged") {
     val wh = freshWh("replay")
     build(wh)
-    Dedup.ngramIngestBatch(batch, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, batch, epoch = 0L, "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5)
     val afterFirst = ingestState(wh)
     // full replay of the committed epoch: every write is epoch-keyed
     // dynamic overwrite and the keep probe excludes its own epoch's
     // index rows — nothing doubles, nothing vanishes
-    Dedup.ngramIngestBatch(batch, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, batch, epoch = 0L, "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5)
     assert(ingestState(wh) === afterFirst)
     // epoch 0 kept exactly the increment-keep survivors: 102 (cluster
@@ -236,17 +243,17 @@ class PostingIndexSpec extends AnyFunSuite {
       (300L, "replayed epochs must not double count their own survivors ever"),
       (301L, "replayed epochs must not double count their own survivors once"))
       .toDF("doc_id", "text")
-    Dedup.ngramIndexAppend(batch2.filter(col("doc_id") === 300L),
+    Dedup.indexAppend(ExactNgramFamily, batch2.filter(col("doc_id") === 300L),
       "doc_id", "text", wh, "gold", "ng", epoch = 1L)
-    Dedup.ngramIngestBatch(batch2, epoch = 1L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, batch2, epoch = 1L, "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5)
     val replayed = ingestState(wh)
     // clean-path control: the same two epochs with no crash anywhere
     val whClean = freshWh("replayclean")
     build(whClean)
-    Dedup.ngramIngestBatch(batch, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, batch, epoch = 0L, "doc_id", "text",
       whClean, "gold", "ng", threshold = 0.5)
-    Dedup.ngramIngestBatch(batch2, epoch = 1L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, batch2, epoch = 1L, "doc_id", "text",
       whClean, "gold", "ng", threshold = 0.5)
     assert(replayed === ingestState(whClean))
     // 300/301 are an intra-batch near-dup cluster: min id survives, and
@@ -262,7 +269,7 @@ class PostingIndexSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val src =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = Dedup.ngramIngestStream(
+    val q = Dedup.ingestStream(ExactNgramFamily,
       src.toDF().toDF("doc_id", "text"), "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5, ckpt)
     // batch 1: 200 = exact dup of corpus doc 0 (dropped); 201 = new
@@ -298,7 +305,7 @@ class PostingIndexSpec extends AnyFunSuite {
       val b = Seq((400L + e,
         s"novel cadence document number $e with its own distinct wording"))
         .toDF("doc_id", "text")
-      Dedup.ngramIngestBatch(b, epoch = e.toLong, "doc_id", "text",
+      Dedup.ingestBatch(ExactNgramFamily, b, epoch = e.toLong, "doc_id", "text",
         wh, "gold", "ng", threshold = 0.5, compactEvery = 2)
       nFiles
     }
@@ -344,7 +351,7 @@ class PostingIndexSpec extends AnyFunSuite {
     def mkB(e: Int) = Seq((900L + e,
       s"kept fold document number $e with wholly distinct content tokens"))
       .toDF("doc_id", "text")
-    def run(e: Int) = Dedup.ngramIngestBatch(mkB(e), epoch = e.toLong,
+    def run(e: Int) = Dedup.ingestBatch(ExactNgramFamily, mkB(e), epoch = e.toLong,
       "doc_id", "text", wh, "gold", "ng", threshold = 0.5,
       compactEvery = 3)
     val dirCounts = (0 to 9).map { e => run(e); keptDirs.size }
@@ -384,7 +391,7 @@ class PostingIndexSpec extends AnyFunSuite {
       (600L, "freshly drifted vocabulary alpha beta gamma delta epsilon zeta eta theta"),
       (601L, "freshly drifted vocabulary alpha beta gamma delta epsilon zeta eta iota"))
       .toDF("doc_id", "text")
-    Dedup.ngramIngestBatch(b0, epoch = 0L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, b0, epoch = 0L, "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5,
       rebuildCheckEvery = 1, unseenThreshold = 0.5,
       baseCorpus = Some(corpus))
@@ -400,7 +407,7 @@ class PostingIndexSpec extends AnyFunSuite {
     // epoch 0 — the drifted vocabulary enters the dictionary — then
     // dedups: 610 near-matches kept 600 and is dropped. (600/601 were
     // themselves an intra-batch near-dup cluster: 600 kept, size 2.)
-    Dedup.ngramIngestBatch(b1, epoch = 1L, "doc_id", "text",
+    Dedup.ingestBatch(ExactNgramFamily, b1, epoch = 1L, "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5,
       rebuildCheckEvery = 1, unseenThreshold = 0.5,
       baseCorpus = Some(corpus))
@@ -527,8 +534,8 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(probe(whFloor, 0.7) === probe(whFull, 0.7))
     // appends honor the floor: appended rows are prefix rows only, and
     // post-append probes still match the full layout's
-    Dedup.ngramIndexAppend(batch, "doc_id", "text", whFloor, "gold", "ng")
-    Dedup.ngramIndexAppend(batch, "doc_id", "text", whFull, "gold", "ng")
+    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whFloor, "gold", "ng")
+    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whFull, "gold", "ng")
     val b2 = Seq((300L, batchRows.find(_._1 == 102L).get._2))
       .toDF("doc_id", "text")
     def probe2(w: graft.etl.Warehouse) =
@@ -579,9 +586,9 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(jac(whT, batch) === jac(whA, batch) && jac(whT, batch).nonEmpty)
     assert(con(whT, batch) === con(whA, batch) && con(whT, batch).nonEmpty)
     // epoch append writes texts rows; post-append probes still agree
-    Dedup.ngramIndexAppend(batch, "doc_id", "text", whT, "gold", "ng",
+    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whT, "gold", "ng",
       epoch = 1L)
-    Dedup.ngramIndexAppend(batch, "doc_id", "text", whA, "gold", "ng",
+    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whA, "gold", "ng",
       epoch = 1L)
     val colsApp = spark.read.parquet(whT.path("gold", "ng_sets")).columns.toSet
     assert(colsApp.contains("text") && !colsApp.contains("set"))
@@ -590,8 +597,8 @@ class PostingIndexSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     assert(jac(whT, b2) === jac(whA, b2) && jac(whT, b2).nonEmpty)
     // compaction (fold epochs into base) preserves layout and results
-    Dedup.ngramIndexCompact(spark, whT, "gold", "ng", foldEpochsBelow = 2L)
-    Dedup.ngramIndexCompact(spark, whA, "gold", "ng", foldEpochsBelow = 2L)
+    Dedup.indexCompact(ExactNgramFamily, spark, whT, "gold", "ng", foldEpochsBelow = 2L)
+    Dedup.indexCompact(ExactNgramFamily, spark, whA, "gold", "ng", foldEpochsBelow = 2L)
     assert(jac(whT, b2) === jac(whA, b2))
     assert(con(whT, b2) === con(whA, b2))
     // and the compacted texts files stayed zstd (codec survives the
@@ -627,7 +634,7 @@ class PostingIndexSpec extends AnyFunSuite {
 
   test("texts _sets layout survives both staleness-rebuild paths") {
     // Both rebuild paths — the one-shot policy (ngramRebuildIfStale)
-    // and the mid-stream re-freeze inside ngramIngestBatch — must
+    // and the mid-stream re-freeze inside the ingest epoch — must
     // re-persist with the INDEX'S OWN layout flags: an omitted
     // setsAsTexts re-froze a texts index as arrays on the first
     // rebuild, silently reverting the footprint win (r14 ADVICE).
@@ -656,10 +663,10 @@ class PostingIndexSpec extends AnyFunSuite {
     Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh2, "gold", "ng",
       shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
       nSetBuckets = 4, setsAsTexts = true)
-    Dedup.ngramIngestBatch(novel, epoch = 1L, "doc_id", "text", wh2,
+    Dedup.ingestBatch(ExactNgramFamily, novel, epoch = 1L, "doc_id", "text", wh2,
       "gold", "ng", threshold = 0.5, rebuildCheckEvery = 1,
       unseenThreshold = 0.1, baseCorpus = Some(corpus))
-    assertTexts(wh2, "ngramIngestBatch mid-stream rebuild")
+    assertTexts(wh2, "ingestBatch mid-stream rebuild")
     // and the rebuilt index still probes identically to an arrays twin
     val whA = freshWh("textsrebref")
     build(whA)
@@ -687,10 +694,10 @@ class PostingIndexSpec extends AnyFunSuite {
     val whA = freshWh("textsepochref")
     build(whA)
     for (w <- Seq(whT, whA)) {
-      Dedup.ngramIndexAppend(
+      Dedup.indexAppend(ExactNgramFamily,
         ep(600L, "two epoch versions of one document first variant body text"),
         "doc_id", "text", w, "gold", "ng", epoch = 1L)
-      Dedup.ngramIndexAppend(
+      Dedup.indexAppend(ExactNgramFamily,
         ep(600L, "two epoch versions of one document second variant body text"),
         "doc_id", "text", w, "gold", "ng", epoch = 2L)
     }
@@ -737,86 +744,20 @@ class PostingIndexSpec extends AnyFunSuite {
   }
 
   test("compaction after a crashed group promotion resumes it, not clobbers the staged tables") {
-    // A one-shot maintenance call writes into the same `._tmp`
-    // namespace the staged-group protocol uses. Without resuming the
-    // pending group first, compaction after a mid-promotion crash
-    // overwrote the staged tables and the later marker-triggered
-    // resume promoted a half-group — a silently mixed index.
-    val wh = freshWh("cresume")
-    build(wh) // the OLD index
-    val whNew = freshWh("cresumenew")
-    Dedup.ngramIndexPersist(corpus.unionByName(batch), "doc_id", "text",
-      whNew, "gold", "ng", shingleK = 3, maxShingleFreq = 1000,
-      nPostBuckets = 8, nSetBuckets = 4)
-    val tables = Seq("ng_meta", "ng_freq", "ng_post", "ng_sets")
-    tables.foreach { t =>
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(whNew.path("gold", t)),
-        java.nio.file.Paths.get(wh.path("gold", t + "._tmp")),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(wh.path("gold", "ng._pending")))
-    wh.promoteStaged("gold", "ng_meta")
-    wh.promoteStaged("gold", "ng_freq")
-    // the crash replay path is a DIRECT compaction call, not a probe
-    Dedup.ngramIndexCompact(spark, wh, "gold", "ng")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(wh.path("gold", "ng._pending"))))
-    tables.foreach { t =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(wh.path("gold", t + "._tmp"))),
-        s"stranded tmp for $t")
-    }
-    // logically identical to a clean from-scratch rebuild over the union
-    val whCtl = freshWh("cresumectl")
-    Dedup.ngramIndexPersist(corpus.unionByName(batch), "doc_id", "text",
-      whCtl, "gold", "ng", shingleK = 3, maxShingleFreq = 1000,
-      nPostBuckets = 8, nSetBuckets = 4)
-    def snap(w: graft.etl.Warehouse) = (
-      spark.read.parquet(w.path("gold", "ng_freq"))
-        .select("sh", "freq").as[(Long, Int)].collect().toSeq.sorted,
-      spark.read.parquet(w.path("gold", "ng_post"))
-        .select(col("doc_id"), col("sh"), col("__pos"), col("__n"))
-        .as[(Long, Long, Int, Int)].collect().toSeq.sorted,
-      spark.read.parquet(w.path("gold", "ng_sets"))
-        .select(col("doc_id"), sort_array(col("set")), col("n"))
-        .as[(Long, Seq[Long], Int)].collect().toSeq.sortBy(_._1))
-    assert(snap(wh) === snap(whCtl))
+    IndexLifecycle.crashedPromotionCompaction(ExactNgramFamily, corpus, batch)
   }
 
-  test("pepoch layout migration: a pre-fold epoch-partitioned sink re-keys without wedging") {
-    // Sinks built before the pepoch fold key were partitioned by
-    // `epoch` itself. A stream resuming across the layout change would
-    // write pepoch=N dirs next to epoch=N dirs and wedge every later
-    // read with conflicting partition columns; the migration re-keys
-    // the PARTITION layout as pepoch := epoch before the first
-    // post-upgrade write or fold touches the sink.
-    val wh = freshWh("mig")
-    Seq((1L, 0L), (2L, 0L), (3L, 1L)).toDF("doc_id", "epoch")
-      .write.partitionBy("epoch").parquet(wh.path("gold", "ng_kept"))
-    Dedup.foldSinkPartitions(spark, wh, "gold", "ng_kept",
-      foldEpochsBelow = 1L)
-    val dirs = new java.io.File(wh.path("gold", "ng_kept")).listFiles()
-      .map(_.getName).filter(_.contains("=")).toSet
-    assert(dirs === Set("pepoch=-1", "pepoch=1"),
-      s"epoch 0 folds, epoch 1 (>= bound) survives as its own partition: $dirs")
-    // epoch stays a DATA column with its pre-migration values
-    val rows = spark.read.parquet(wh.path("gold", "ng_kept"))
-      .select("doc_id", "epoch").as[(Long, Long)].collect().toSet
-    assert(rows === Set((1L, 0L), (2L, 0L), (3L, 1L)))
-    // replay idempotence survives the migration: a replayed epoch's
-    // dynamic overwrite REPLACES its migrated pepoch partition
-    wh.overwritePartitionsDynamic(
-      Seq((30L, 1L, 1L)).toDF("doc_id", "epoch", "pepoch"),
-      "gold", "ng_kept", Seq("pepoch"))
-    val ids = spark.read.parquet(wh.path("gold", "ng_kept"))
-      .select("doc_id").as[Long].collect().toSet
-    assert(ids === Set(1L, 2L, 30L))
+  test("ratio-triggered compaction folds only when the delta earns its rewrite") {
+    IndexLifecycle.ratioTriggeredCompaction(ExactNgramFamily, corpus, batch)
+  }
+
+  test("one ingest epoch: job count pinned, caller's job description restored") {
+    val jobs = IndexLifecycle.ingestEpochJobs(ExactNgramFamily, corpus, batch)
+    assert(jobs <= IngestEpochJobs, s"jobs: $jobs")
   }
 
   test("one-shot compaction (no fold bound) leaves the kept sink untouched") {
-    // foldKeptSink used to read-and-rewrite the entire kept sink even
+    // the kept-sink fold used to read-and-rewrite the entire sink even
     // on the Long.MinValue default, where no epoch can fold — a
     // corpus-sized no-op added to every plain index compaction.
     val wh = freshWh("nofold")
@@ -825,7 +766,7 @@ class PostingIndexSpec extends AnyFunSuite {
       .write.partitionBy("pepoch").parquet(wh.path("gold", "ng_kept"))
     val before = new java.io.File(wh.path("gold", "ng_kept"))
       .listFiles().map(f => f.getName -> f.lastModified()).toMap
-    Dedup.ngramIndexCompact(spark, wh, "gold", "ng")
+    Dedup.indexCompact(ExactNgramFamily, spark, wh, "gold", "ng")
     val after = new java.io.File(wh.path("gold", "ng_kept"))
       .listFiles().map(f => f.getName -> f.lastModified()).toMap
     assert(after === before, "kept sink rewritten by a fold-less compaction")
