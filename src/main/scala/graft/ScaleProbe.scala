@@ -74,6 +74,10 @@ object ScaleProbe {
     s / 1048576.0
   }
 
+  /** Live bytes of a warehouse table: its current version's files. */
+  private def tableMb(wh: graft.etl.Warehouse, t: String): Double =
+    wh.snapshot("gold", t).tables(t).files.map(_.size).sum / 1048576.0
+
   private def mb(mb: Double): String = f"$mb%9.1f MB"
 
   /** Task-level InputMetrics.bytesRead (public listener API) of every
@@ -257,7 +261,7 @@ object ScaleProbe {
       time("nd_index_build_250k") {
         Dedup.nearDedupIndexPersist(big, "doc_id", "text", wh, "gold", "nd",
           shingleK = 3, numHashes = 32, bands = 8)
-        spark.read.parquet(wh.path("gold", "nd_bands")).count()
+        wh.read(spark, "gold", "nd_bands").count()
       }
       // the daily job sizes its shuffle to the BATCH, not the corpus
       // (AQE coalesces, but the explicit knob removes the tail): the
@@ -307,11 +311,11 @@ object ScaleProbe {
       bytesOf("kb_index_build") {
         Dedup.nearDedupIndexPersist(corpus, "doc_id", "text",
           wh, "gold", "nd", shingleK = 3, numHashes = 32, bands = 8)
-        spark.read.parquet(wh.path("gold", "nd_bands")).count()
+        wh.read(spark, "gold", "nd_bands").count()
       }
-      println(s"  corpus parquet ${mb(dirMb(wh.path("gold", "docs_kb")))}  " +
-        s"bands ${mb(dirMb(wh.path("gold", "nd_bands")))}  " +
-        s"sets ${mb(dirMb(wh.path("gold", "nd_sets")))}")
+      println(s"  corpus parquet ${mb(tableMb(wh, "docs_kb"))}  " +
+        s"bands ${mb(tableMb(wh, "nd_bands"))}  " +
+        s"sets ${mb(tableMb(wh, "nd_sets"))}")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       def mkBatch(n: Long) = ingestBatch(corpus, n)
       val batch = mkBatch(250); println(s"batch: ${batch.count()}")
@@ -362,12 +366,12 @@ object ScaleProbe {
       bytesOf("ng_index_build") {
         Dedup.ngramIndexPersist(corpus, "doc_id", "text",
           wh, "gold", "ng", shingleK = 3, maxShingleFreq = 1000)
-        spark.read.parquet(wh.path("gold", "ng_post")).count()
+        wh.read(spark, "gold", "ng_post").count()
       }
-      println(s"  corpus parquet ${mb(dirMb(wh.path("gold", "docs_kb")))}  " +
-        s"freq ${mb(dirMb(wh.path("gold", "ng_freq")))}  " +
-        s"post ${mb(dirMb(wh.path("gold", "ng_post")))}  " +
-        s"sets ${mb(dirMb(wh.path("gold", "ng_sets")))}")
+      println(s"  corpus parquet ${mb(tableMb(wh, "docs_kb"))}  " +
+        s"freq ${mb(tableMb(wh, "ng_freq"))}  " +
+        s"post ${mb(tableMb(wh, "ng_post"))}  " +
+        s"sets ${mb(tableMb(wh, "ng_sets"))}")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       def mkBatch(n: Long) = ingestBatch(corpus, n)
       val batch = mkBatch(250); println(s"batch: ${batch.count()}")
@@ -406,11 +410,11 @@ object ScaleProbe {
         Dedup.ngramIndexPersist(corpus, "doc_id", "text",
           wh, "gold", "ngf", shingleK = 3, maxShingleFreq = 1000,
           containment = false, tMinJaccard = 0.5)
-        spark.read.parquet(wh.path("gold", "ngf_post")).count()
+        wh.read(spark, "gold", "ngf_post").count()
       }
-      println(s"  floor:  freq ${mb(dirMb(wh.path("gold", "ngf_freq")))}  " +
-        s"post ${mb(dirMb(wh.path("gold", "ngf_post")))}  " +
-        s"sets ${mb(dirMb(wh.path("gold", "ngf_sets")))}")
+      println(s"  floor:  freq ${mb(tableMb(wh, "ngf_freq"))}  " +
+        s"post ${mb(tableMb(wh, "ngf_post"))}  " +
+        s"sets ${mb(tableMb(wh, "ngf_sets"))}")
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       bytesOf("ngf_increment_pairs_1pct") {
         Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
@@ -451,7 +455,7 @@ object ScaleProbe {
       println(s"docsKb: ${corpus.count()}")
       Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh, "gold", "ng",
         shingleK = 3, maxShingleFreq = 1000)
-      val sets = spark.read.parquet(wh.path("gold", "ng_sets"))
+      val sets = wh.read(spark, "gold", "ng_sets")
       val out = java.nio.file.Files
         .createTempDirectory("graft_probe_sets_var").toString
       def writeVar(name: String, df: org.apache.spark.sql.DataFrame,
@@ -460,8 +464,8 @@ object ScaleProbe {
           .option("compression", codec).parquet(s"$out/$name")
         println(f"SETSVAR $name%-22s ${dirMb(s"$out/$name")}%9.1f MB")
       }
-      println(f"SETSVAR corpus_parquet        ${dirMb(wh.path("gold", "docs_kb"))}%9.1f MB")
-      println(f"SETSVAR arrays_snappy_base    ${dirMb(wh.path("gold", "ng_sets"))}%9.1f MB")
+      println(f"SETSVAR corpus_parquet        ${tableMb(wh, "docs_kb")}%9.1f MB")
+      println(f"SETSVAR arrays_snappy_base    ${tableMb(wh, "ng_sets")}%9.1f MB")
       writeVar("arrays_zstd", sets, "zstd")
       // sorted-delta arrays: d[0]=s[0], d[i]=s[i]−s[i−1] — reversible
       val delta = sets.withColumn("sset", sort_array(col("set")))
@@ -495,13 +499,13 @@ object ScaleProbe {
       val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       val corpus = kbCorpus(spark, base, wh)
       println(s"docsKb: ${corpus.count()}")
-      println(f"NDSETS corpus_parquet        ${dirMb(wh.path("gold", "docs_kb"))}%9.1f MB")
+      println(f"NDSETS corpus_parquet        ${tableMb(wh, "docs_kb")}%9.1f MB")
       for ((tag, texts) <- Seq(("arrays", false), ("texts", true))) {
         Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", wh, "gold",
           s"nd_$tag", shingleK = 3, numHashes = 32, bands = 8,
           setsAsTexts = texts)
-        println(f"NDSETS ${s"${tag}_sets"}%-22s ${dirMb(wh.path("gold", s"nd_${tag}_sets"))}%9.1f MB")
-        println(f"NDSETS ${s"${tag}_bands"}%-22s ${dirMb(wh.path("gold", s"nd_${tag}_bands"))}%9.1f MB")
+        println(f"NDSETS ${s"${tag}_sets"}%-22s ${tableMb(wh, s"nd_${tag}_sets")}%9.1f MB")
+        println(f"NDSETS ${s"${tag}_bands"}%-22s ${tableMb(wh, s"nd_${tag}_bands")}%9.1f MB")
       }
     }
 
@@ -523,7 +527,7 @@ object ScaleProbe {
       time("ng_index_build_250k") {
         Dedup.ngramIndexPersist(big, "doc_id", "text", wh, "gold", "ng",
           shingleK = 3, maxShingleFreq = 1000)
-        spark.read.parquet(wh.path("gold", "ng_post")).count()
+        wh.read(spark, "gold", "ng_post").count()
       }
       spark.conf.set("spark.sql.shuffle.partitions", "32")
       def mkBatch(n: Long) = ingestBatch(big, n)
@@ -574,7 +578,7 @@ object ScaleProbe {
       time("ingest_index_build_250k") {
         Dedup.nearDedupIndexPersist(big, "doc_id", "text", wh, "gold", "nd",
           shingleK = 3, numHashes = 32, bands = 8)
-        spark.read.parquet(wh.path("gold", "nd_bands")).count()
+        wh.read(spark, "gold", "nd_bands").count()
       }
       val stageDir = java.nio.file.Files
         .createTempDirectory("graft_probe_ingest").toString
@@ -599,9 +603,9 @@ object ScaleProbe {
         val q = Dedup.ingestStream(MinHashFamily, src, "doc_id", "text",
           wh, "gold", "nd", threshold = 0.5, ckpt)
         q.processAllAvailable(); q.stop()
-        spark.read.parquet(wh.path("gold", "nd_kept")).count()
+        wh.read(spark, "gold", "nd_kept").count()
       }
-      spark.read.parquet(wh.path("gold", "nd_kept"))
+      wh.read(spark, "gold", "nd_kept")
         .groupBy("epoch").count().orderBy("epoch").collect()
         .foreach(r => println(s"INGEST epoch ${r.getLong(0)}: kept ${r.getLong(1)}"))
       big.unpersist()
@@ -643,7 +647,7 @@ object ScaleProbe {
           concat(col("text"), lit(" e"), lit(e)).as("text"))
       def tableBytes(wh: graft.etl.Warehouse): Long =
         Seq("nd_bands", "nd_sets").map { t =>
-          val (b, d) = Dedup.epochFootprint(wh.path("gold", t), -999L)
+          val (b, d) = Dedup.epochFootprint(wh.snapshot("gold", t), t, -999L)
           b + d
         }.sum
       for ((policy, every, ratio) <- Seq(("cadence5", 5, 0.0),
@@ -838,27 +842,22 @@ object ScaleProbe {
         if (idx == "ng") {
           Dedup.ngramIndexPersist(bootstrap, "doc_id", "text", wh, "gold",
             idx, shingleK = 3, maxShingleFreq = 1000)
-          spark.read.parquet(wh.path("gold", s"${idx}_post")).count()
+          wh.read(spark, "gold", s"${idx}_post").count()
         } else {
           Dedup.nearDedupIndexPersist(bootstrap, "doc_id", "text", wh,
             "gold", idx, shingleK = 3, numHashes = 32, bands = 8,
             setsAsTexts = textsLayout)
-          spark.read.parquet(wh.path("gold", s"${idx}_bands")).count()
+          wh.read(spark, "gold", s"${idx}_bands").count()
         }
       }
-      // (parquet files, dirs, parquet bytes): the ratio lane's pass bar
+      // (live files, partitions, live bytes): the ratio lane's pass bar
       // is BYTES bounded between folds, not just file/dir counts
-      def fsStats(t: String): (Int, Int, Long) = {
-        def walk(f: java.io.File): (Int, Int, Long) =
-          if (!f.exists) (0, 0, 0L)
-          else if (f.isDirectory) {
-            val kids = f.listFiles().map(walk)
-            (kids.map(_._1).sum, kids.map(_._2).sum + 1,
-              kids.map(_._3).sum)
-          } else if (f.getName.endsWith(".parquet")) (1, 0, f.length)
-          else (0, 0, 0L)
-        walk(new java.io.File(wh.path("gold", t)))
-      }
+      def fsStats(t: String): (Int, Int, Long) =
+        if (!wh.exists("gold", t)) (0, 0, 0L)
+        else {
+          val fs = wh.snapshot("gold", t).tables(t).files
+          (fs.size, fs.map(_.partition).distinct.size, fs.map(_.size).sum)
+        }
       val tables =
         if (idx == "ng") Seq(s"${idx}_post", s"${idx}_sets", s"${idx}_kept")
         else Seq(s"${idx}_bands", s"${idx}_sets", s"${idx}_kept")
@@ -893,7 +892,7 @@ object ScaleProbe {
         val st = tables.map(t => t -> fsStats(t))
         val freqN =
           if (idx == "ng")
-            s" freq=${spark.read.parquet(wh.path("gold", s"${idx}_freq")).count()}"
+            s" freq=${wh.read(spark, "gold", s"${idx}_freq").count()}"
           else ""
         // candidate-density series (minhash lanes): rep-level band-key
         // collisions of THIS epoch's batch against the pre-epoch index
@@ -907,7 +906,7 @@ object ScaleProbe {
             val bk = Dedup.bandKeysFor(reps, "doc_id", "text",
               shingleK = 3, numHashes = 32, bands = 8)
             val n = bk.join(
-                spark.read.parquet(wh.path("gold", s"${idx}_bands"))
+                wh.read(spark, "gold", s"${idx}_bands")
                   .filter(col("doc_id") < lit(1000000L * (k + 1)))
                   .select(col("band"), col("band_hash"),
                     col("doc_id").as("cid")),
@@ -921,7 +920,7 @@ object ScaleProbe {
           }.mkString(" ") + freqN + candN)
       }
       q.stop()
-      val keptN = spark.read.parquet(wh.path("gold", s"${idx}_kept")).count()
+      val keptN = wh.read(spark, "gold", s"${idx}_kept").count()
       println(s"$tag kept total: $keptN")
       bootstrap.unpersist()
       spark.conf.set("spark.sql.shuffle.partitions", "64")

@@ -59,15 +59,11 @@ final case class Audit(wh: Warehouse) {
   }
 
   /** Append to an audit table, creating it on the first write. The steps
-    * of a layer log at the same time, so the existence check and the
-    * write hold the table's lock together: two first writers can't both
-    * overwrite, and two appends never share one `_temporary` commit
-    * directory. */
+    * of a layer log at the same time; each append commits its own version
+    * ([[Warehouse.append]]), so concurrent first writers and appenders
+    * all keep their rows. */
   private def appendRow(df: DataFrame, table: String): Unit =
-    Warehouse.locked(wh.path("audit", table)) {
-      if (!wh.exists("audit", table)) wh.overwrite(df, "audit", table)
-      else wh.append(df, "audit", table)
-    }
+    wh.append(df, "audit", table)
 
   /** Run a counting DQ check; log an issue row iff violations exist.
     * Returns the violation count so loaders can also surface it. */

@@ -70,7 +70,7 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
         Seq(col("customer_id")))
         .select(unknownCustomer(spark).columns.map(col): _*)
       val out = new Counted(keyed.unionByName(unknownCustomer(spark)))
-      wh.rebuild(out.frame, "gold", "dim_customers")
+      wh.overwrite(out.frame, "gold", "dim_customers")
       val dups = wh.read(spark, "gold", "dim_customers")
         .groupBy("customer_key").count().filter(col("count") > 1)
       audit.check(spark, batchId, "dim_customers", "surrogate_uniqueness",
@@ -113,7 +113,7 @@ final case class GoldLoader(wh: Warehouse, audit: Audit) {
         Seq(col("product_id")))
         .select(unknownProduct(spark).columns.map(col): _*)
       val out = new Counted(keyed.unionByName(unknownProduct(spark)))
-      wh.rebuild(out.frame, "gold", "dim_products")
+      wh.overwrite(out.frame, "gold", "dim_products")
       out.rows
     }
 

@@ -75,7 +75,7 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
             .withColumn("dwh_update_date", lit(loadTs))
         else Scd.scd1Merge(wh.read(spark, "silver", "crm_cust_info"), hashed,
           Seq("cst_id"), "dwh_hash_full", loadTs))
-      wh.rebuild(merged.frame, "silver", "crm_cust_info")
+      wh.overwrite(merged.frame, "silver", "crm_cust_info")
       // I9: post-merge duplicate-key check (quality_checks_silver.sql:25-30)
       val dups = wh.read(spark, "silver", "crm_cust_info")
         .groupBy("cst_id").count().filter(col("count") > 1)
@@ -106,7 +106,7 @@ final case class SilverLoader(wh: Warehouse, audit: Audit) {
         if (!wh.exists("silver", "crm_prd_info")) Scd.scd2Init(hashed, loadTs)
         else Scd.scd2Apply(wh.read(spark, "silver", "crm_prd_info"), hashed,
           Seq("prd_id"), "dwh_hash_full", loadTs))
-      wh.rebuild(applied.frame, "silver", "crm_prd_info")
+      wh.overwrite(applied.frame, "silver", "crm_prd_info")
       val multiCurrent = wh.read(spark, "silver", "crm_prd_info")
         .filter(col("is_current")).groupBy("prd_id").count()
         .filter(col("count") > 1)

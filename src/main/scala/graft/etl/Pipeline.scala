@@ -25,6 +25,10 @@ final case class PipelineConf(
   * the `MASTER_PIPELINE` row is Failed, and [[runAll]] throws the first
   * failing step's error (in step order), with the others attached as
   * suppressed.
+  *
+  * A finished batch vacuums the warehouse ([[Warehouse.vacuum]]): table
+  * versions the batch superseded stay readable for the retention period,
+  * and a later batch reclaims them.
   */
 object Pipeline {
 
@@ -43,6 +47,7 @@ object Pipeline {
       Reports.registerViews(spark, wh)
       factRows
     }
+    wh.vacuum()
     batchId
   }
 }

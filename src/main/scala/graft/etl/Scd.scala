@@ -35,7 +35,7 @@ object Scd {
 
   /** SCD Type 1 MERGE (proc_load_silver.sql:58-113): update matched rows
     * whose hash changed, insert new keys, keep everything else — as a
-    * functional rebuild (no Delta ⇒ write via Warehouse.rebuild).
+    * functional rebuild (no MERGE ⇒ write via Warehouse.overwrite).
     *
     * Both sides must already carry `hashCol`. Audit columns:
     * `dwh_create_date` survives updates; `dwh_update_date` reflects the

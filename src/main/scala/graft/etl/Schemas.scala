@@ -6,9 +6,10 @@ import org.apache.spark.sql.types._
   * §1.3-1.4).
   *
   * The pipeline never infers schemas: bronze CSVs load into these exact
-  * StructTypes, and [[Warehouse.read]] hands the declared schema of every
-  * table listed in [[declared]] to the Parquet reader, so opening a table
-  * plans without a footer-inference Spark job. They mirror the reference
+  * StructTypes, and [[Warehouse]] refuses to commit a write of a table
+  * listed in [[declared]] whose columns differ from its declaration, so
+  * the schema every read plans from (its manifest's) is the declared
+  * one. They mirror the reference
   * DDL (`scripts/bronze/ddl_bronze.sql`, `ddl_silver.sql`, `ddl_gold.sql`,
   * `ddl_audit.sql`). MONEY columns are DecimalType(19,4) so revenue
   * reconciliation is exact; raw-quirk columns (yyyyMMdd INT dates,

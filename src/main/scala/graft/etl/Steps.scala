@@ -6,9 +6,9 @@ import java.util.concurrent.{CompletionException, Executors, ThreadFactory}
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Runs independent Spark steps at the same time. Two callers use it:
-  * the ETL, for the steps of one medallion layer, and the dedup index
-  * row write ([[graft.textops.Dedup]]), for the key table and `_sets`
-  * of one epoch.
+  * the ETL, for the steps of one medallion layer, and a multi-table
+  * warehouse commit ([[Warehouse.commit]]), for the data files of each
+  * table of a dedup index group.
   *
   * At warehouse sizes where a step is a handful of small Spark jobs, its
   * wall time goes to per-job fixed cost (planning, scheduling, the write

@@ -1,87 +1,95 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Warehouse path layout + atomic table writes over plain Parquet.
+/** Warehouse tables over plain Parquet, committed through numbered
+  * manifests.
   *
   * Layers are directories (`<root>/bronze|silver|gold|audit/<table>`),
   * the Spark analog of the reference's schemas (`init_database.sql:37-51`).
   *
-  * Parquet has no transactional MERGE/DELETE (no Delta/Iceberg jars in this
-  * build), so every mutation is a functional rebuild + [[overwrite]]:
-  * write to `<table>._tmp`, then swap directories. Readers-of-own-input
-  * rebuilds (SCD merges read the table they replace) MUST go through
-  * [[rebuild]], which materializes the new content before the swap —
-  * otherwise the lazy plan would scan a half-deleted input at action time.
-  * At cluster scale the same contract holds with an object-store rename.
+  * A table directory holds immutable data and a log. Every write puts its
+  * files in a fresh `_c<uuid>/` directory (Spark's `k=v` partition
+  * directories below it); nothing is renamed or deleted by a write. The
+  * write becomes visible when a commit links `_log/<N+1>.json`: the
+  * schema, partition columns and every live file (size and partition
+  * values). The link is atomic and fails if version N+1 exists, so of two
+  * writers exactly one wins; the loser re-reads the latest version and
+  * re-applies its change to it without rewriting data. A read pins the
+  * latest version (the highest number in `_log`) and plans from its file
+  * list and schema: no data-directory listing, no footer inference, no
+  * Spark job. Old files outlive the commit that supersedes them, so every
+  * overwrite is atomic and safe to compute from the table it replaces,
+  * and a reader keeps its snapshot until [[vacuum]] reclaims it. This is
+  * the Delta Lake log design (Armbrust et al., VLDB 2020), for one
+  * filesystem with atomic create-if-absent links.
+  *
+  * A TABLE GROUP is several tables that change together (a standing dedup
+  * index: `_meta`, its key table, `_sets`, ...): one log at
+  * `<layer>/<group>/_log` records every member, so a multi-table change is
+  * one version and a reader of several members pins one version of all of
+  * them ([[snapshot]]). A member is named `<group>_<suffix>`; [[read]],
+  * [[exists]] and the single-table writes find its group by that prefix.
   */
 final case class Warehouse(root: String) {
+  import Warehouse._
 
   def path(layer: String, table: String): String = s"$root/$layer/$table"
 
-  /** Read a table. A table with a declared schema ([[Schemas.declared]])
-    * is opened with that schema, so planning is a driver-side file
-    * listing and submits no Spark job; any other table's schema is
-    * inferred from a Parquet footer, which costs one job. Holds the
-    * table's rename lock across PLAN construction (listing, plus footer
-    * inference when undeclared), so planning can never observe
-    * [[swapIn]]'s mid-rename window; recovery of a genuinely crashed
-    * swap happens under the same lock. Execution of the returned frame
-    * is outside the lock — a concurrent swap completing before the
-    * action can still fail it LOUDLY (never partially), the
-    * plain-parquet snapshot limitation a manifest table format lifts. */
+  /** The latest committed version of the log holding `table` (a table, a
+    * group, or a group member). */
+  def snapshot(layer: String, table: String): Snapshot =
+    resolve(layer, table).getOrElse(
+      throw new NoSuchElementException(s"no table $layer/$table under $root"))
+
   def read(spark: SparkSession, layer: String, table: String): DataFrame =
-    Warehouse.locked(path(layer, table)) {
-      recoverLocked(Paths.get(path(layer, table)),
-        Paths.get(path(layer, table + "._old")))
-      val reader = Schemas.declared.get((layer, table))
-        .fold(spark.read)(spark.read.schema(_))
-      reader.parquet(path(layer, table))
-    }
+    snapshot(layer, table).read(spark, table)
 
   def exists(layer: String, table: String): Boolean =
-    Files.exists(Paths.get(path(layer, table)))
+    resolve(layer, table).exists(_.tables.contains(table))
 
-  /** Truncate-and-load (S2): plain overwrite, no self-read involved. */
+  /** Truncate-and-load: the table becomes exactly `df`. */
   def overwrite(df: DataFrame, layer: String, table: String): Unit =
-    df.write.mode("overwrite").parquet(path(layer, table))
+    commitTable(layer, Write(table, df))
 
   /** Partitioned overwrite for the year-partitioned fact
     * (ddl_gold.sql:78-103 → `partitionBy`, giving Catalyst partition
     * pruning on year predicates). */
   def overwritePartitioned(df: DataFrame, layer: String, table: String,
                            partCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(path(layer, table))
+    commitTable(layer, Write(table, df, Overwrite, partCols))
 
+  /** Adds `df`'s rows; creates the table on its first write. */
   def append(df: DataFrame, layer: String, table: String): Unit =
-    df.write.mode("append").parquet(path(layer, table))
+    commitTable(layer, Write(table, df, Append))
 
-  /** Partitioned append — new rows land in their partition directories
-    * without touching existing files (the index-maintenance primitive:
-    * ingest survivors join a persisted index in place). */
+  /** Partitioned append — new rows land in their partitions without
+    * touching existing files (the index-maintenance primitive). */
   def appendPartitioned(df: DataFrame, layer: String, table: String,
                         partCols: Seq[String],
                         options: Map[String, String] = Map.empty): Unit =
-    df.write.mode("append").options(options).partitionBy(partCols: _*)
-      .parquet(path(layer, table))
+    commitTable(layer, Write(table, df, Append, partCols, options))
 
-  /** Idempotent partitioned append via DYNAMIC partition overwrite: only
-    * the partitions present in `df` are replaced, everything else is
-    * untouched — so a replayed write of the same keyed data (an epoch
-    * retry) overwrites its own partitions instead of double-appending.
-    * [[graft.streaming.EventStream.exactlyOnceBatchWriter]]'s discipline
-    * as a warehouse primitive; the caller keys `partCols` by the replay
-    * unit (e.g. an `epoch` column). */
+  /** Idempotent partitioned append: the partitions present in `df` are
+    * replaced, everything else is untouched — so a replayed write of the
+    * same keyed data (an epoch retry) replaces its own partitions instead
+    * of double-appending. The caller keys `partCols` by the replay unit
+    * (e.g. an `epoch` column). */
   def overwritePartitionsDynamic(df: DataFrame, layer: String,
                                  table: String, partCols: Seq[String],
                                  options: Map[String, String] = Map.empty): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .options(options)
-      .partitionBy(partCols: _*)
-      .parquet(path(layer, table))
+    commitTable(layer, Write(table, df, ReplacePartitions, partCols, options))
 
   /** Compaction — the columnstore REORGANIZE analog
     * (proc_load_silver.sql:277-283): rewrite a table into `targetFiles`
@@ -89,7 +97,7 @@ final case class Warehouse(root: String) {
     * (at cluster scale: size files to ~HDFS-block units). */
   def compact(spark: SparkSession, layer: String, table: String,
               targetFiles: Int): Unit =
-    rebuild(read(spark, layer, table).coalesce(targetFiles), layer, table)
+    overwrite(read(spark, layer, table).coalesce(targetFiles), layer, table)
 
   /** Clustered compaction — the CLUSTERED COLUMNSTORE analog
     * (ddl_silver.sql:83-86): repartition on the cluster keys, sort rows
@@ -102,258 +110,264 @@ final case class Warehouse(root: String) {
                        targetFiles: Int, clusterCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.col
     val cols = clusterCols.map(col)
-    rebuild(read(spark, layer, table)
+    overwrite(read(spark, layer, table)
       .repartition(targetFiles, cols: _*)
       .sortWithinPartitions(cols: _*), layer, table)
   }
 
-  /** Atomic rebuild of a table whose new content is derived from its own
-    * current content: materialize to a tmp dir, swap, drop the old copy. */
-  def rebuild(df: DataFrame, layer: String, table: String): Unit = {
-    val tmp = Paths.get(path(layer, table + "._tmp"))
-    df.write.mode("overwrite").parquet(tmp.toString)
-    swapIn(layer, table, tmp)
-  }
+  /** One version of `group`'s log carrying every write: each write's
+    * files are written concurrently ([[Steps.inParallel]] — so this must
+    * not be called from inside a step), then one manifest records them
+    * all. Members keep their other files and tables untouched. */
+  def commit(layer: String, group: String, writes: Write*): Unit =
+    commitTo(Paths.get(path(layer, group)), layer, writes)
 
-  /** [[rebuild]] preserving a partition layout — the compaction path
-    * for partitioned-append tables (persisted indexes): rewrite into
-    * the same `partitionBy` directories, then swap atomically. */
-  def rebuildPartitioned(df: DataFrame, layer: String, table: String,
-                         partCols: Seq[String],
-                         options: Map[String, String] = Map.empty): Unit = {
-    val tmp = Paths.get(path(layer, table + "._tmp"))
-    df.write.mode("overwrite").options(options).partitionBy(partCols: _*)
-      .parquet(tmp.toString)
-    swapIn(layer, table, tmp)
-  }
-
-  /** Swap a fully-written tmp dir into place: rename the live table
-    * aside, rename tmp in, then delete the old copy. The no-table window
-    * is a single rename (old→aside ↔ tmp→live), not the delete-then-move
-    * gap the naive form had (r9 ADVICE) — and a crash INSIDE that window
-    * is recoverable, not just reclaimable: [[recoverLocked]] (run on
-    * every read and on swap entry) restores `._old` to the live path
-    * whenever the live table is missing, so a restart after a mid-swap
-    * crash reads the pre-swap content instead of failing (r10 ADVICE).
-    * `._old` is only deleted after tmp→live succeeded.
-    *
-    * Swap and recovery SERIALIZE per table path ([[Warehouse.locked]]):
-    * without it, a read landing inside the rename window would restore
-    * `._old` onto the live path and make this swap's second move throw,
-    * stranding `._tmp` (r11 ADVICE) — reachable in production, since
-    * the ingest loop compacts the same index concurrent probes read.
-    * The lock covers every reader/writer in this JVM (the driver is
-    * where all table-level renames happen); a cross-PROCESS reader in
-    * the same window is additionally tolerated by the retry below. */
-  private def swapIn(layer: String, table: String,
-                     tmp: java.nio.file.Path): Unit =
-    Warehouse.locked(path(layer, table)) {
-      val target = Paths.get(path(layer, table))
-      val old = Paths.get(path(layer, table + "._old"))
-      recoverLocked(target, old)
-      // any ._old still present is stale (its swap completed: the live
-      // table exists) — reclaim before taking its name
-      if (Files.exists(old)) deleteRecursively(old)
-      if (Files.exists(target))
-        Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-      // a cross-process reader can restore ._old onto the live path
-      // between our two renames: take the restored copy aside again
-      // (._old is free — the reader consumed it) and retry. BOUNDED
-      // LOOP, not one-shot: a descheduled writer thread on a loaded
-      // machine stretches both rename windows to milliseconds, long
-      // enough for the reader to restore inside the retry too (the
-      // r15 CrossProcessWarehouseSpec flake — the second move threw
-      // out of the promotion).
-      var attempts = 0
-      var done = false
-      while (!done) {
-        try { Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE); done = true }
-        catch {
-          case e: java.nio.file.FileSystemException =>
-            attempts += 1
-            if (!Files.exists(target) || attempts > 50) throw e
-            if (Files.exists(old)) deleteRecursively(old)
-            Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-        }
+  /** Reclaims what no reader can need: manifests superseded more than
+    * [[Retention]] ago (never the latest), then every file under a table
+    * that no remaining manifest references and that is older than
+    * [[Retention]] — superseded data, data of writes that crashed before
+    * their commit, and temp manifests of crashed commits. Manifests go
+    * first, so a vacuum that stops half way leaves every remaining
+    * version whole. `now` is the clock. */
+  def vacuum(now: Long = System.currentTimeMillis()): Unit =
+    for (layer <- children(Paths.get(root)); owner <- children(layer)
+         if Files.isDirectory(owner.resolve(Log))) {
+      val log = owner.resolve(Log)
+      val vs = versions(log)
+      val retained = vs.zip(vs.drop(1)).collect {
+        case (v, next) if now - mtime(manifest(log, next)) < Retention => v
+      } ++ vs.lastOption
+      vs.filterNot(retained.contains).foreach(v => Files.deleteIfExists(manifest(log, v)))
+      val s = Files.walk(owner)
+      // children before parents, so emptied directories go too
+      val old = try s.iterator().asScala.filter(p => now - mtime(p) >= Retention)
+        .toList.reverse finally s.close()
+      lazy val live = retained.flatMap(v => load(owner, v).tables.values)
+        .flatMap(_.files.map(f => owner.resolve(f.path))).toSet
+      old.foreach { p =>
+        val n = p.getFileName.toString
+        // a checksum file lives and dies with its data file
+        val data = if (n.startsWith(".") && n.endsWith(".crc"))
+          p.resolveSibling(n.stripPrefix(".").stripSuffix(".crc")) else p
+        if (Files.isRegularFile(p)) {
+          if (if (p.getParent == log) !VersionFile.matches(n) else !live(data))
+            Files.delete(p)
+        } else if (p != owner && p != log && children(p).isEmpty) Files.delete(p)
       }
-      if (Files.exists(old)) deleteRecursively(old)
     }
 
-  /** Crash recovery for [[swapIn]]'s single-rename window: a live table
-    * that vanished while its `._old` copy survives means a swap died
-    * between the two renames — restore the old copy. One existence
-    * check per read; at cluster scale the same contract holds with
-    * object-store list/rename. The caller must hold the table lock
-    * ([[read]] and [[swapIn]] take the same per-table lock), so a read
-    * can never observe (or interfere with) the mid-swap window of a
-    * swap in this JVM; two concurrent recoverers of a genuine crash are
-    * serialized the same way. Tolerant to a cross-process racer
-    * completing the swap (or the recovery) first: if the restore rename
-    * fails but the live table now exists, the table IS recovered —
-    * treat it as such instead of propagating. */
-  private def recoverLocked(target: java.nio.file.Path,
-                            old: java.nio.file.Path): Unit =
-    if (!Files.exists(target) && Files.exists(old))
-      try Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case e: java.nio.file.FileSystemException =>
-          if (!Files.exists(target)) throw e
+  /** Writes one table's change, in its group's log if it has one. */
+  private def commitTable(layer: String, w: Write): Unit =
+    commitTo(resolve(layer, w.table).fold(Paths.get(path(layer, w.table)))(_.dir),
+      layer, Seq(w))
+
+  private def commitTo(owner: Path, layer: String, writes: Seq[Write]): Unit = {
+    val written = new Array[TableFiles](writes.size)
+    if (writes.size == 1) written(0) = writeFiles(owner, layer, writes.head)
+    else Steps.inParallel(writes.head.df.sparkSession)(writes.indices.map(i =>
+      () => written(i) = writeFiles(owner, layer, writes(i))): _*)
+    val log = owner.resolve(Log)
+    Files.createDirectories(log)
+    var committed = false
+    while (!committed) {
+      val cur = latest(owner)
+      val tables = writes.zip(written).foldLeft(cur.fold(Map.empty[String, TableFiles])(_.tables)) {
+        case (ts, (w, t)) => ts.updated(w.table, applied(ts.get(w.table), w, t))
       }
-
-  // ------------------------------------------- multi-table atomic swaps
-  //
-  // A derived-index REBUILD often spans several tables that must change
-  // together (the posting index's _meta/_freq/_post/_sets). Each table's
-  // swap is atomic, but four sequential overwrites are not: a crash
-  // between them leaves a new dictionary over old postings — a silently
-  // mixed index (r11 ADVICE). The protocol here makes the group
-  // resumable: stage every table to `._tmp`, drop a PENDING marker,
-  // swap each staged table in, delete the marker. A crash at any point
-  // replays safely — [[resumePending]] (run by readers before trusting
-  // the group) finishes any staged-but-unswapped tables, so the visible
-  // state is always either all-old (marker + all tmps intact) or
-  // all-new (marker gone, or every tmp already consumed).
-
-  private def markerPath(layer: String, marker: String) =
-    Paths.get(path(layer, marker + "._pending"))
-
-  /** Stage a table's new content to `<table>._tmp` WITHOUT swapping it
-    * live — the first half of [[rebuildPartitioned]], for multi-table
-    * groups that must promote together ([[promoteStaged]]). */
-  def stagePartitioned(df: DataFrame, layer: String, table: String,
-                       partCols: Seq[String],
-                       options: Map[String, String] = Map.empty): Unit =
-    df.write.mode("overwrite").options(options).partitionBy(partCols: _*)
-      .parquet(path(layer, table + "._tmp"))
-
-  /** Unpartitioned [[stagePartitioned]]. */
-  def stage(df: DataFrame, layer: String, table: String): Unit =
-    df.write.mode("overwrite").parquet(path(layer, table + "._tmp"))
-
-  /** Swap a previously [[stage]]d table live (no-op if its `._tmp` was
-    * already consumed — what makes a replayed group promotion safe).
-    * The exists-check and the swap share the table lock (reentrant), so
-    * two concurrent promoters can't both consume one tmp. */
-  def promoteStaged(layer: String, table: String): Unit =
-    Warehouse.locked(path(layer, table)) {
-      val tmp = Paths.get(path(layer, table + "._tmp"))
-      if (Files.exists(tmp)) swapIn(layer, table, tmp)
-    }
-
-  /** Promote a STAGED GROUP atomically-by-protocol: marker down, each
-    * staged table swapped in (each swap itself atomic), group-version
-    * stamp bumped, marker up. The `marker` names the group
-    * (conventionally the index's base table); tables promote in the
-    * given order. Group promotions/resumes serialize on the marker
-    * path (group lock taken before any table lock — the one ordering
-    * everywhere, so no deadlock with plain readers, which take only
-    * table locks).
-    *
-    * The version stamp ([[groupVersion]]) is bumped INSIDE the marker
-    * window — strictly after every table swap, strictly before the
-    * marker clears — so a cross-process reader spanning any part of a
-    * promotion observes the marker at one of its endpoints OR a stamp
-    * change ([[readGroupConsistent]]); a crash before the bump leaves
-    * the marker, which the resume path clears after re-bumping. A
-    * resume may double-bump a completed promotion: the stamp is an
-    * opaque change detector, not a generation count. */
-  def promoteStagedGroup(layer: String, marker: String,
-                         tables: Seq[String]): Unit =
-    Warehouse.locked(markerPath(layer, marker).toString) {
-      val m = markerPath(layer, marker)
-      Files.createDirectories(m.getParent)
-      if (!Files.exists(m)) Files.createFile(m)
-      tables.foreach(promoteStaged(layer, _))
-      bumpGroupVersion(layer, marker)
-      Files.deleteIfExists(m)
-    }
-
-  private def gverPath(layer: String, marker: String) =
-    Paths.get(path(layer, marker + "._gver"))
-
-  /** The group's promotion stamp: 0 before any stamped promotion.
-    * Reads race the stamp's atomic-rename replace safely (old or new,
-    * never torn). */
-  def groupVersion(layer: String, marker: String): Long = {
-    val p = gverPath(layer, marker)
-    try {
-      if (Files.exists(p)) new String(Files.readAllBytes(p), "UTF-8").trim.toLong
-      else 0L
-    } catch {
-      // a reader racing the replace rename on a filesystem without
-      // atomic visibility, or a torn manual edit: treat as "changed"
-      case _: Throwable => -1L
+      val tmp = Files.createTempFile(log, ".", ".tmp")
+      try {
+        Files.writeString(tmp, toJson(tables))
+        Files.createLink(manifest(log, cur.fold(0L)(_.version + 1)), tmp)
+        committed = true
+      } catch { case _: FileAlreadyExistsException => () } // lost the race: re-apply
+      finally Files.delete(tmp)
     }
   }
 
-  private def bumpGroupVersion(layer: String, marker: String): Unit = {
-    val p = gverPath(layer, marker)
-    val tmp = Paths.get(p.toString + "._tmp")
-    Files.writeString(tmp, (groupVersion(layer, marker).max(0L) + 1L).toString)
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** Writes `w`'s rows to a fresh data directory of `owner` and lists
+    * what the write produced. */
+  private def writeFiles(owner: Path, layer: String, w: Write): TableFiles = {
+    val schema = nullable(w.df.schema).asInstanceOf[StructType]
+    Schemas.declared.get((layer, w.table)).foreach(d =>
+      require(sameColumns(d, schema),
+        s"$layer.${w.table}: written schema ${schema.simpleString} differs " +
+        s"from its declaration ${d.simpleString}"))
+    val out = owner.resolve("_c" + java.util.UUID.randomUUID())
+    w.df.write.options(w.options).partitionBy(w.partCols: _*).parquet(out.toString)
+    val s = Files.walk(out)
+    val files = try s.iterator().asScala.filter { p =>
+      val n = p.getFileName.toString
+      Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
+    }.toList finally s.close()
+    TableFiles(schema, w.partCols, files.map { p =>
+      val kv = out.relativize(p).iterator().asScala.toList.init.map { seg =>
+        val Array(k, v) = seg.toString.split("=", 2)
+        ExternalCatalogUtils.unescapePathName(k) ->
+          (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+           else ExternalCatalogUtils.unescapePathName(v))
+      }.toMap
+      DataFile(owner.relativize(p).toString, Files.size(p), w.partCols.map(kv))
+    })
   }
 
-  /** Optimistic CROSS-PROCESS group read — the read-side half of the
-    * staged-group protocol: a pure reader in another process (a Verify
-    * or bench run against a live ingest driver's warehouse) must never
-    * trust a multi-table read that overlapped a group promotion, and —
-    * unlike [[resumePending]], which is the WRITER process's crash
-    * recovery — must never write into a warehouse it doesn't own.
-    * `read` runs (and must fully materialize its result) only when the
-    * group is quiescent at entry; the result is kept only if the
-    * marker is still absent and the promotion stamp unchanged at exit.
-    * Returns None when a promotion raced the read — the caller retries,
-    * exactly like the documented loud single-table snapshot failure. */
-  def readGroupConsistent[A](layer: String, marker: String)(read: => A): Option[A] = {
-    if (Files.exists(markerPath(layer, marker))) None
-    else {
-      val g1 = groupVersion(layer, marker)
-      val a = read
-      val g2 = groupVersion(layer, marker)
-      if (g1 >= 0L && g1 == g2 && !Files.exists(markerPath(layer, marker)))
-        Some(a)
-      else None
-    }
-  }
-
-  /** Finish a group promotion that crashed mid-way: if the marker is
-    * present, swap in whatever `._tmp` stages remain and clear it.
-    * Idempotent and safe against a completed group (every tmp consumed
-    * → every promote is a no-op). Callers that read multi-table groups
-    * invoke this first, so they can never observe a mixed group. */
-  def resumePending(layer: String, marker: String,
-                    tables: Seq[String]): Unit =
-    Warehouse.locked(markerPath(layer, marker).toString) {
-      if (Files.exists(markerPath(layer, marker)))
-        promoteStagedGroup(layer, marker, tables)
-    }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.isDirectory(p)) {
-      // Files.list holds an open directory fd until CLOSED — the lazy
-      // stream must not ride on GC. Unclosed, a compaction deleting a
-      // thousands-of-partition-dirs `._old` tree leaks one fd per dir
-      // and dies with "Too many open files" (caught live by the r13
-      // 20-epoch ingest probe at its third compaction).
-      val s = Files.list(p)
-      val kids = try s.iterator().asScala.toList finally s.close()
-      kids.foreach(deleteRecursively)
-    }
-    Files.deleteIfExists(p)
-  }
+  /** The latest version of the log holding `name`: its own (a table or a
+    * group), else that of the longest `_`-prefix group that has it as a
+    * member. */
+  private def resolve(layer: String, name: String): Option[Snapshot] =
+    latest(Paths.get(path(layer, name))).orElse(
+      name.indices.reverse.filter(name(_) == '_').iterator
+        .flatMap(i => latest(Paths.get(path(layer, name.take(i)))))
+        .find(_.tables.contains(name)))
 }
 
 object Warehouse {
-  /** Per-table-path rename locks: table-level swap/recovery renames are
-    * driver-side metadata operations, so a JVM-wide monitor per path is
-    * the whole story on local[*] — and the cheap part of the contract
-    * an object-store deployment would replace with conditional renames.
-    * Keyed by the path string (Warehouse is a value class over `root`,
-    * so two instances on one root share locks). */
-  private val renameLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[graft] def locked[A](key: String)(body: => A): A =
-    renameLocks.computeIfAbsent(key, _ => new Object).synchronized(body)
+  /** How long a superseded version, and data no manifest references,
+    * stay readable before [[Warehouse.vacuum]] may delete them. */
+  val Retention: Long = 60L * 60 * 1000
+
+  /** How a write changes its table: [[Overwrite]] — the table becomes
+    * exactly the write; [[Append]] — the write's files join the table's;
+    * [[ReplacePartitions]] — the partitions the write covers are replaced
+    * by its files. */
+  sealed trait Mode
+  case object Overwrite extends Mode
+  case object Append extends Mode
+  case object ReplacePartitions extends Mode
+
+  /** `old` after write `w`, whose new files are `t`. */
+  private def applied(old: Option[TableFiles], w: Write, t: TableFiles): TableFiles =
+    old match {
+      case Some(o) if w.mode != Overwrite =>
+        require(o.partCols == t.partCols && sameColumns(o.schema, t.schema),
+          s"${w.table}: cannot add ${t.schema.simpleString} by ${t.partCols} " +
+          s"to ${o.schema.simpleString} by ${o.partCols}")
+        val covered =
+          if (w.mode == Append) Set.empty[Seq[String]] else t.files.map(_.partition).toSet
+        o.copy(files = o.files.filterNot(f => covered(f.partition)) ++ t.files)
+      case _ => t
+    }
+
+  /** One table's part of a [[Warehouse.commit]]. */
+  final case class Write(table: String, df: DataFrame, mode: Mode = Overwrite,
+                         partCols: Seq[String] = Nil,
+                         options: Map[String, String] = Map.empty)
+
+  /** A live data file: its path relative to the table (or group)
+    * directory, its size, and its values of the partition columns in
+    * their order (null for a null partition). */
+  final case class DataFile(path: String, size: Long, partition: Seq[String])
+
+  /** One table as a manifest records it. */
+  final case class TableFiles(schema: StructType, partCols: Seq[String],
+                              files: Seq[DataFile])
+
+  /** One committed version of a log: every table it holds. */
+  final case class Snapshot(dir: Path, version: Long,
+                            tables: Map[String, TableFiles]) {
+    /** `table` as of this version; planning submits no Spark job. */
+    def read(spark: SparkSession, table: String): DataFrame = {
+      val t = tables.getOrElse(table, throw new NoSuchElementException(
+        s"no table $table in version $version of $dir"))
+      val part = StructType(t.partCols.map(t.schema(_)))
+      val data = StructType(t.schema.filterNot(f => t.partCols.contains(f.name)))
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        new ManifestIndex(spark, dir, part, t.files), part, data, None,
+        new ParquetFileFormat, Map.empty)(spark))
+    }
+  }
+
+  /** The files of one table version as Spark's scan sees them: partition
+    * pruning evaluates the scan's partition filters against each
+    * partition's recorded values, so `PartitionFilters` prune exactly as
+    * for a listed directory, without listing one. */
+  private final class ManifestIndex(spark: SparkSession, dir: Path,
+      val partitionSchema: StructType, files: Seq[DataFile]) extends FileIndex {
+    private lazy val partitions: Seq[PartitionDirectory] = {
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      val byPart = files.groupBy(_.partition)
+      files.map(_.partition).distinct.map { vs =>
+        val values = partitionSchema.fields.toSeq.zip(vs).map { case (f, v) =>
+          if (v == null) null else Cast(Literal(v), f.dataType, tz).eval()
+        }
+        PartitionDirectory(InternalRow.fromSeq(values), byPart(vs).map(f =>
+          FileStatusWithMetadata(new FileStatus(f.size, false, 1, f.size, 0L,
+            new HPath(dir.resolve(f.path).toString)))))
+      }
+    }
+    def rootPaths: Seq[HPath] = Seq(new HPath(dir.toString))
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      if (partitionFilters.isEmpty) partitions
+      else {
+        val keep = Predicate.createInterpreted(partitionFilters.reduce(And)
+          .transform { case a: AttributeReference =>
+            val i = partitionSchema.fieldNames.indexOf(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+          })
+        keep.initialize(0)
+        partitions.filter(p => keep.eval(p.values))
+      }
+    def inputFiles: Array[String] =
+      files.map(f => dir.resolve(f.path).toUri.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.size).sum
+  }
+
+  private val Log = "_log"
+  private val VersionFile = "\\d+\\.json".r
+
+  private def manifest(log: Path, v: Long): Path = log.resolve(s"$v.json")
+
+  private def children(dir: Path): List[Path] =
+    if (!Files.isDirectory(dir)) Nil
+    else { val s = Files.list(dir); try s.iterator().asScala.toList finally s.close() }
+
+  private def mtime(p: Path): Long = Files.getLastModifiedTime(p).toMillis
+
+  private def versions(log: Path): List[Long] =
+    children(log).map(_.getFileName.toString)
+      .collect { case n if VersionFile.matches(n) => n.stripSuffix(".json").toLong }
+      .sorted
+
+  /** The latest version of `owner`'s log. A version can only disappear
+    * under a newer one ([[Warehouse.vacuum]] keeps the latest), so a
+    * vanished file means: look again. */
+  private def latest(owner: Path): Option[Snapshot] =
+    versions(owner.resolve(Log)).lastOption.flatMap { v =>
+      try Some(load(owner, v)) catch { case _: NoSuchFileException => latest(owner) }
+    }
+
+  /** A manifest as stored: each table's schema as `StructType.json`. */
+  private final case class Manifest(tables: Map[String, StoredTable])
+  private final case class StoredTable(schema: String, partCols: Seq[String],
+                                       files: Seq[DataFile])
+  private val json = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  private def load(owner: Path, v: Long): Snapshot = {
+    val m = json.readValue(Files.readString(manifest(owner.resolve(Log), v)),
+      classOf[Manifest])
+    Snapshot(owner, v, m.tables.map { case (name, t) => name -> TableFiles(
+      DataType.fromJson(t.schema).asInstanceOf[StructType], t.partCols, t.files) })
+  }
+
+  private def toJson(tables: Map[String, TableFiles]): String =
+    json.writeValueAsString(Manifest(tables.map { case (name, t) =>
+      name -> StoredTable(t.schema.json, t.partCols, t.files) }))
+
+  /** `dt` as a Parquet read returns it: every field, element and value
+    * nullable. */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      StructField(f.name, nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** Same column names and types, in any order, nullability aside. */
+  private def sameColumns(a: StructType, b: StructType): Boolean = {
+    def cols(s: StructType) = s.fields.map(f => f.name -> nullable(f.dataType)).toMap
+    cols(a) == cols(b)
+  }
 }

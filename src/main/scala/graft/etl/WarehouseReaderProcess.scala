@@ -1,94 +1,64 @@
 package graft.etl
 
-/** Second-JVM reader for the cross-process warehouse spec — the only
-  * real exercise of [[Warehouse]]'s cross-process story (the JVM-wide
-  * rename locks cover one driver; a concurrent Verify run against an
-  * ingest driver's warehouse root is two processes).
+/** Second-JVM reader for `CrossProcessWarehouseSpec`: reads a warehouse
+  * another process is committing to, the way a Verify or bench run reads
+  * a live ingest driver's warehouse.
   *
-  * Reads `<layer>/<table>` in a loop and checks each SUCCESSFUL read
-  * is internally consistent under the version protocol the spec
-  * writes: every row carries the table's version `v` and the table
-  * holds exactly `v` rows, so a read that mixed files from two table
-  * versions — or saw a half-swapped directory — is detected, not
-  * lucky. The documented plain-parquet contract allows a read racing
-  * a completing swap to fail LOUDLY (snapshot limitation a manifest
-  * format lifts); loud failures are counted and tolerated, PARTIAL
-  * reads exit 2 and fail the spec.
+  *   WarehouseReaderProcess <root> <layer> <tables> <iters> [<group>]
   *
-  * GROUP mode (5th arg = the group marker; 3rd arg = comma-separated
-  * tables): the INGEST-side two-process story — a Verify/bench reader
-  * against a live driver's multi-table staged-GROUP promotions. Every
-  * row of every group table carries the group's generation `g`; each
-  * iteration reads all tables under [[Warehouse.readGroupConsistent]]
-  * (the read-only optimistic protocol — a pure reader never writes
-  * into a warehouse it doesn't own) and requires exactly ONE distinct
-  * generation across the whole group. A read the protocol discards
-  * (promotion raced it) counts as loud.
+  * Each iteration pins ONE version ([[Warehouse.snapshot]]) and reads
+  * every table of `<tables>` (comma-separated) from it. The writer stamps
+  * each version into its rows, so a read is checked against the version
+  * it pinned:
+  *   - one table (no group): version v holds exactly v rows, each with
+  *     `v = v`;
+  *   - a group: every row of every member carries the same generation
+  *     `g`.
   *
-  * stdout protocol: prints `READY` once the session is up (the spec
-  * starts swapping then), `READER ok=<n> loud=<m>` at the end.
-  * Exit codes: 0 = all successful reads consistent (≥1 success),
-  * 2 = a mixed/partial read was observed, 3 = no read ever succeeded.
+  * stdout: `READY` once the session is up, `FAILED <class>: <message>`
+  * for every read that threw, `MIXED ...` for an inconsistent read, and
+  * `READER ok=<n> versions=<m>` at the end (m = distinct versions seen).
+  * Exit codes: 0 = every read succeeded and was consistent, 2 = a mixed
+  * read, 3 = no read succeeded, 4 = a read failed.
   */
 object WarehouseReaderProcess {
   def main(args: Array[String]): Unit = {
-    val Array(root, layer, table, itersS) = args.take(4)
-    val groupMarker = args.lift(4)
+    val Array(root, layer, tablesArg, itersS) = args.take(4)
+    val group = args.lift(4)
+    val tables = tablesArg.split(',').toSeq
     val spark = graft.Sessions.build(2)
     val wh = Warehouse(root)
     println("READY")
     var ok = 0
-    var loud = 0
+    var failed = 0
+    val seen = scala.collection.mutable.Set.empty[Long]
+    def mixed(what: String): Unit = {
+      println(s"MIXED $what")
+      spark.stop()
+      sys.exit(2)
+    }
     (1 to itersS.toInt).foreach { _ =>
       try {
-        groupMarker match {
-          case Some(marker) =>
-            val tables = table.split(',').toSeq
-            wh.readGroupConsistent(layer, marker) {
-              tables.flatMap(t => wh.read(spark, layer, t)
-                .select("g").collect().map(_.getLong(0)))
-            } match {
-              case None => loud += 1 // promotion raced the read
-              case Some(gs) if gs.isEmpty => loud += 1
-              case Some(gs) =>
-                val d = gs.distinct
-                if (d.length != 1) {
-                  println(s"MIXED gens=${d.mkString(",")}")
-                  spark.stop()
-                  sys.exit(2)
-                } else {
-                  ok += 1
-                  // progress line per accepted read: the spec's writer
-                  // gates its next group promotion on this count
-                  // advancing, so the reader is never starved of
-                  // quiescent windows on a loaded machine (a promotion
-                  // discards any read it overlaps — an unthrottled
-                  // promoter can race EVERY read when reads are slow)
-                  println(s"PROG ok=$ok loud=$loud")
-                }
-            }
-          case None =>
-            val vs = wh.read(spark, layer, table)
-              .select("v").collect().map(_.getLong(0))
-            val distinct = vs.distinct
-            if (vs.isEmpty) {
-              // a successful read returning zero rows is a momentarily
-              // empty snapshot (a swap's rename window), not a version
-              // mix — count it like a loud failure, don't fail the
-              // spec (r14 ADVICE: this exited 2 on a consistent empty
-              // read)
-              loud += 1
-            } else if (distinct.length != 1 ||
-                vs.length != distinct.head.toInt) {
-              println(s"MIXED versions=${distinct.mkString(",")} rows=${vs.length}")
-              spark.stop()
-              sys.exit(2)
-            } else ok += 1
-        }
-      } catch { case _: Throwable => loud += 1 }
+        val snap = wh.snapshot(layer, group.getOrElse(tables.head))
+        val stamps = tables.map(t =>
+          snap.read(spark, t).select(if (group.isEmpty) "v" else "g")
+            .collect().map(_.getLong(0)).toSeq)
+        val distinct = stamps.flatten.distinct
+        if (distinct.length != 1) mixed(s"version ${snap.version}: stamps ${distinct.mkString(",")}")
+        if (group.isEmpty && stamps.head.length != distinct.head.toInt)
+          mixed(s"version ${snap.version}: ${stamps.head.length} rows of v=${distinct.head}")
+        seen += snap.version
+        ok += 1
+      } catch {
+        case t: Throwable =>
+          failed += 1
+          println(s"FAILED ${t.getClass.getName}: " +
+            Option(t.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+      }
     }
-    println(s"READER ok=$ok loud=$loud")
+    println(s"READER ok=$ok versions=${seen.size}")
     spark.stop()
+    if (failed > 0) sys.exit(4)
     if (ok == 0) sys.exit(3)
   }
 }

@@ -50,7 +50,6 @@ final case class Watermark(wh: Warehouse) {
   def advance(spark: SparkSession, tableName: String, wm: Timestamp): Unit = {
     import spark.implicits._
     val row = Seq((tableName, wm)).toDF("table_name", "last_load")
-    if (!wh.exists(layer, table)) wh.overwrite(row, layer, table)
-    else wh.append(row, layer, table)
+    wh.append(row, layer, table)
   }
 }

@@ -339,8 +339,7 @@ object EventStream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (wh.exists(layer, table)) wh.append(batch, layer, table)
-        else wh.overwrite(batch, layer, table)
+        wh.append(batch, layer, table)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -54,12 +54,8 @@ object CurationStream {
     private[textops] def indexName: String
     private[textops] def persistName: String
     private[textops] def formatVersion: Int
-    /** `_meta`'s one row, read by column name. */
-    private[textops] def meta(m: Row): Meta
-    /** The table group in promote order (the marker makes order
-      * irrelevant to readers; a fixed order keeps replays
-      * deterministic). */
-    private[textops] def tables(table: String): Seq[String]
+    /** `_meta`'s one row, read by column name, of group version `snap`. */
+    private[textops] def meta(m: Row, snap: Warehouse.Snapshot): Meta
     /** The epoch-partitioned key table: its name suffix, its bucket
       * column, and the probe's join keys that sort rows in a bucket. */
     private[textops] def keyTable: String
@@ -79,12 +75,12 @@ object CurationStream {
         meta: Meta, keys: DataFrame, sets: DataFrame, threshold: Double,
         broadcastDocLimit: Long, tracker: PersistTracker,
         excludeEpoch: Long): DataFrame
-    /** Re-freeze frozen statistics at epoch start; a family without
-      * them has nothing to do. */
+    /** Re-freeze frozen statistics at epoch start; whether the index was
+      * rebuilt. A family without them has nothing to do. */
     private[textops] def refreeze(batch: DataFrame, epoch: Long,
         idCol: String, textCol: String, wh: Warehouse, layer: String,
         table: String, meta: Meta, unseenThreshold: Double,
-        baseCorpus: Option[DataFrame]): Unit = ()
+        baseCorpus: Option[DataFrame]): Boolean = false
   }
 
   /** MinHash band index ([[Dedup.nearDedupIndexPersist]]): sketch
@@ -96,12 +92,10 @@ object CurationStream {
     private[textops] def indexName = "MinHash index"
     private[textops] def persistName = "nearDedupIndexPersist"
     private[textops] def formatVersion = Dedup.NearDedupIndexFormatVersion
-    private[textops] def meta(m: Row) = Dedup.MinhashMeta(
-      m.getAs[Int]("shingle_k"), m.getAs[Int]("num_hashes"),
-      m.getAs[Int]("bands"), m.getAs[Int]("n_buckets"),
-      m.getAs[Int]("n_set_buckets"), m.getAs[String]("sets_layout"))
-    private[textops] def tables(table: String) =
-      Seq(s"${table}_meta", s"${table}_bands", s"${table}_sets")
+    private[textops] def meta(m: Row, snap: Warehouse.Snapshot) =
+      Dedup.MinhashMeta(m.getAs[Int]("shingle_k"), m.getAs[Int]("num_hashes"),
+        m.getAs[Int]("bands"), m.getAs[Int]("n_buckets"),
+        m.getAs[Int]("n_set_buckets"), m.getAs[String]("sets_layout"))(snap)
     private[textops] def keyTable = "_bands"
     private[textops] def keyPart = "pb"
     private[textops] def keySort = Seq("band", "band_hash")
@@ -127,14 +121,11 @@ object CurationStream {
     private[textops] def indexName = "posting index"
     private[textops] def persistName = "ngramIndexPersist"
     private[textops] def formatVersion = Dedup.NgramIndexFormatVersion
-    private[textops] def meta(m: Row) = Dedup.NgramMeta(
-      m.getAs[Int]("shingle_k"), m.getAs[Int]("max_freq"),
-      m.getAs[Int]("n_post_buckets"), m.getAs[Int]("n_set_buckets"),
-      m.getAs[Boolean]("containment"), m.getAs[Double]("t_min"),
-      m.getAs[String]("sets_layout"))
-    private[textops] def tables(table: String) =
-      Seq(s"${table}_meta", s"${table}_freq", s"${table}_post",
-        s"${table}_sets")
+    private[textops] def meta(m: Row, snap: Warehouse.Snapshot) =
+      Dedup.NgramMeta(m.getAs[Int]("shingle_k"), m.getAs[Int]("max_freq"),
+        m.getAs[Int]("n_post_buckets"), m.getAs[Int]("n_set_buckets"),
+        m.getAs[Boolean]("containment"), m.getAs[Double]("t_min"),
+        m.getAs[String]("sets_layout"))(snap)
     private[textops] def keyTable = "_post"
     private[textops] def keyPart = "sbucket"
     private[textops] def keySort = Seq("sh", "doc_id")
@@ -157,7 +148,7 @@ object CurationStream {
     override private[textops] def refreeze(batch: DataFrame, epoch: Long,
         idCol: String, textCol: String, wh: Warehouse, layer: String,
         table: String, meta: Meta, unseenThreshold: Double,
-        baseCorpus: Option[DataFrame]): Unit =
+        baseCorpus: Option[DataFrame]): Boolean =
       Dedup.ngramRefreeze(batch, epoch, idCol, textCol, wh, layer, table,
         meta, unseenThreshold, baseCorpus)
   }

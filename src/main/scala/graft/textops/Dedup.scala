@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
-import graft.etl.{Steps, Warehouse}
+import graft.etl.Warehouse
 import CurationStream.{DedupFamily, ExactNgramFamily, MinHashFamily}
 
 /** Deduplication operators for training-data pipelines, smallest-shuffle
@@ -398,12 +398,17 @@ object Dedup {
   //                     (positioned postings, partitioned by `sbucket`),
   //                     `_sets`
   //
-  // The family supplies its table group, its key table's partition and
+  // An index is one warehouse table group named `<table>` ([[Warehouse]]):
+  // every build, append and compaction commits one version of all of its
+  // tables, and a probe reads all of them from the version its `_meta`
+  // came from ([[IndexMeta]]).
+  //
+  // The family supplies its key table's name, partition and
   // sort keys, its `_meta` columns and format version, a batch's per-doc
   // sketch rows (key rows + shingle sets), its probe and keep, and — the
   // exact family only — the statistics re-freeze. Everything else exists
-  // once, below: reading `_meta` ([[readMeta]]), staging `_sets` in its
-  // arrays or texts layout and promoting the group ([[stageAndPromote]]),
+  // once, below: reading `_meta` ([[readMeta]]), writing `_sets` in its
+  // arrays or texts layout and committing the group ([[commitBuild]]),
   // the epoch-keyed row write ([[writeIndexRows]]), [[indexAppend]],
   // [[indexCompact]] / [[indexCompactIfDue]] with the kept-sink fold, one
   // ingest epoch ([[ingestBatch]]) and its stream ([[ingestStream]]).
@@ -422,32 +427,26 @@ object Dedup {
     * never skew. The lifecycle needs only the fields declared here; each
     * family's case class carries its own sketch parameters.
     *
-    * Consistency scope: the meta collect and the subsequent table scans
-    * are individually serialized against swaps, but not jointly — a
-    * rebuild that CHANGES build parameters landing between a probe's
-    * meta read and its table reads would shingle the batch under the
-    * old parameters against the new tables. That window is accepted
-    * and documented rather than locked: all index maintenance runs on
-    * the single ingest driver (re-parameterization is an operator
-    * action, not a concurrent code path), and holding a group lock
-    * across probe PLAN construction would serialize every probe behind
-    * every compaction. Same-parameter rebuilds (compaction, the
-    * statistics re-freeze) are unaffected — any mix of old/new
-    * generation scans is row-identical by construction. */
+    * `snap` is the group version the meta was read from: a probe reads
+    * every index table from it ([[Warehouse.Snapshot.read]]), so its
+    * parameters and tables are one committed version whatever a
+    * concurrent rebuild commits meanwhile. */
   private[textops] sealed abstract class IndexMeta {
     def shingleK: Int
     def nSetBuckets: Int
     def setsLayout: String
+    def snap: Warehouse.Snapshot
     final def texts: Boolean = setsLayout == SetsLayoutTexts
   }
 
   private[textops] final case class MinhashMeta(shingleK: Int,
       numHashes: Int, bands: Int, nBuckets: Int, nSetBuckets: Int,
-      setsLayout: String) extends IndexMeta
+      setsLayout: String)(val snap: Warehouse.Snapshot) extends IndexMeta
 
   private[textops] final case class NgramMeta(shingleK: Int, maxFreq: Int,
       nPostBuckets: Int, nSetBuckets: Int, containment: Boolean,
-      tMin: Double, setsLayout: String) extends IndexMeta
+      tMin: Double, setsLayout: String)(val snap: Warehouse.Snapshot)
+      extends IndexMeta
 
   /** MinHash band-index on-disk format: v2 added `format_version` and
     * the `sets_layout` flag (`arrays` | `texts`) to `_meta` — the same
@@ -489,23 +488,17 @@ object Dedup {
   private def setsOptions(texts: Boolean): Map[String, String] =
     if (texts) SetsTextsWriteOptions else Map.empty
 
-  /** Read a standing index's `_meta` — THE resume point: every probe,
-    * append and compaction reads it first, so a (re)build that crashed
-    * between table swaps finishes promoting here, before anything
-    * trusts the group. Compaction depends on it most: it writes into
-    * the same `._tmp` namespace the staged protocol uses, so without
-    * the resume a one-shot compaction after a mid-promotion crash would
-    * clobber the staged tables and the later marker-triggered resume
-    * would promote a half-group — exactly the mixed index the protocol
-    * exists to prevent. A version other than the family's is rejected
-    * with an explicit rebuild-required error (a pre-v4 posting index
-    * used to surface as a bare AnalysisException from a missing column —
-    * r11 ADVICE). Every column comes back in ONE action; callers read
-    * the meta once per entry point and pass it down. */
+  /** Read a standing index's `_meta` from the group's latest version,
+    * which the meta then pins ([[IndexMeta]]). A version other than the
+    * family's is rejected with an explicit rebuild-required error (a
+    * pre-v4 posting index used to surface as a bare AnalysisException
+    * from a missing column — r11 ADVICE). Every column comes back in ONE
+    * action; callers read the meta once per entry point and pass it
+    * down. */
   private[textops] def readMeta(family: DedupFamily, spark: SparkSession,
       wh: Warehouse, layer: String, table: String): family.Meta = {
-    wh.resumePending(layer, table, family.tables(table))
-    val m = wh.read(spark, layer, s"${table}_meta").head()
+    val snap = wh.snapshot(layer, table)
+    val m = snap.read(spark, s"${table}_meta").head()
     val ver =
       if (m.schema.fieldNames.contains("format_version"))
         m.getAs[Int]("format_version")
@@ -515,7 +508,7 @@ object Dedup {
         s"${family.indexName} $layer/$table has on-disk format v$ver; " +
         s"this build reads v${family.formatVersion} — rebuild the index " +
         s"with Dedup.${family.persistName} over the durable corpus")
-    family.meta(m)
+    family.meta(m, snap)
   }
 
   /** Cluster index rows for their partitioned write: repartition on the
@@ -562,60 +555,53 @@ object Dedup {
       "dbucket", "doc_id")
   }
 
-  /** The build half of the lifecycle, shared by both persists: stage
-    * `_meta`, the key table and `_sets` to `._tmp`, then promote the
-    * family's whole group as ONE marker-gated swap. A (re)build over a
-    * live index used to be sequential non-atomic overwrites — a crash
+  /** The build half of the lifecycle, shared by both persists: `_meta`,
+    * the key table, `_sets` and the family's `extra` tables (the exact
+    * `_freq`) commit as ONE version of the index group. A (re)build over
+    * a live index used to be sequential non-atomic overwrites — a crash
     * between the posting index's `_freq` and `_post` writes left a new
     * dictionary over old-ordered postings, and the replayed staleness
     * check would read the NEW `_freq`, measure low, and skip the
-    * rebuild: a silently mixed index (r11 ADVICE). Readers resume a
-    * crashed promotion before trusting the group ([[readMeta]]). A
-    * family's extra tables (the exact `_freq`) are staged by its
-    * persist before the call. */
-  private def stageAndPromote(family: DedupFamily, meta: DataFrame,
+    * rebuild: a silently mixed index (r11 ADVICE). With one manifest a
+    * crash before the commit leaves the old group whole. */
+  private def commitBuild(family: DedupFamily, meta: DataFrame,
       keys: DataFrame, sets: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, setsAsTexts: Boolean, nSetBuckets: Int,
-      wh: Warehouse, layer: String, table: String): Unit = {
-    wh.stage(meta, layer, s"${table}_meta")
-    wh.stagePartitioned(keyRows(family, keys, -1L), layer,
-      table + family.keyTable, Seq(family.keyPart, "epoch"))
-    wh.stagePartitioned(
-      setsRows(sets, docs, idCol, textCol, setsAsTexts, nSetBuckets, -1L),
-      layer, s"${table}_sets", Seq("dbucket", "epoch"),
-      setsOptions(setsAsTexts))
-    wh.promoteStagedGroup(layer, table, family.tables(table))
-  }
+      wh: Warehouse, layer: String, table: String,
+      extra: Warehouse.Write*): Unit =
+    wh.commit(layer, table, Seq(
+      Warehouse.Write(s"${table}_meta", meta),
+      Warehouse.Write(table + family.keyTable, keyRows(family, keys, -1L),
+        partCols = Seq(family.keyPart, "epoch")),
+      Warehouse.Write(s"${table}_sets",
+        setsRows(sets, docs, idCol, textCol, setsAsTexts, nSetBuckets, -1L),
+        partCols = Seq("dbucket", "epoch"),
+        options = setsOptions(setsAsTexts))) ++ extra: _*)
 
   /** The epoch-keyed row write: a batch's key rows (carrying the
     * family's bucket column) and sets land in their (bucket, epoch)
-    * partitions. `epoch` ≥ 0 writes by dynamic partition overwrite, so
-    * a replay of the same epoch (a streaming retry) replaces its own
-    * partitions instead of double-appending — which once emitted
-    * duplicate candidates and wrong set sizes on retry (r10 verdict);
-    * −1 is a plain partitioned append into the base epoch (one-shot
-    * maintenance, where the caller owns retry semantics). A texts
-    * `_sets` stores `docs`' texts, zstd-compressed as at build. The two
-    * writes are independent (different tables, no ordering contract: a
-    * crash between them replays both under the epoch-keyed overwrite),
-    * so they run concurrently — the second job's tasks back-fill the
-    * executors the first job's tail leaves idle. */
+    * partitions, as one new version of the index group. `epoch` ≥ 0
+    * replaces its own partitions, so a replay of the same epoch (a
+    * streaming retry) overwrites itself instead of double-appending —
+    * which once emitted duplicate candidates and wrong set sizes on
+    * retry (r10 verdict); −1 is a plain partitioned append into the base
+    * epoch (one-shot maintenance, where the caller owns retry
+    * semantics). A texts `_sets` stores `docs`' texts, zstd-compressed
+    * as at build. The two tables' files are written concurrently
+    * ([[Warehouse.commit]]). */
   private def writeIndexRows(family: DedupFamily)(meta: family.Meta,
       keys: DataFrame, sets: DataFrame, docs: DataFrame, idCol: String,
       textCol: String, wh: Warehouse, layer: String, table: String,
       epoch: Long): Unit = {
-    def write(df: DataFrame, t: String, part: String,
-              options: Map[String, String]): Unit =
-      if (epoch >= 0L)
-        wh.overwritePartitionsDynamic(df, layer, t, Seq(part, "epoch"),
-          options)
-      else wh.appendPartitioned(df, layer, t, Seq(part, "epoch"), options)
-    val k = keyRows(family, family.stored(keys, meta), epoch)
-    val s = setsRows(sets, docs, idCol, textCol, meta.texts,
-      meta.nSetBuckets, epoch)
-    Steps.inParallel(keys.sparkSession)(
-      () => write(k, table + family.keyTable, family.keyPart, Map.empty),
-      () => write(s, s"${table}_sets", "dbucket", setsOptions(meta.texts)))
+    val mode =
+      if (epoch >= 0L) Warehouse.ReplacePartitions else Warehouse.Append
+    wh.commit(layer, table,
+      Warehouse.Write(table + family.keyTable,
+        keyRows(family, family.stored(keys, meta), epoch), mode,
+        Seq(family.keyPart, "epoch")),
+      Warehouse.Write(s"${table}_sets", setsRows(sets, docs, idCol, textCol,
+        meta.texts, meta.nSetBuckets, epoch), mode, Seq("dbucket", "epoch"),
+        setsOptions(meta.texts)))
   }
 
   /** Append new docs to a standing index without touching existing
@@ -651,9 +637,10 @@ object Dedup {
     * touched (bucket, epoch) partition, and a year of daily batches
     * leaves thousands of tiny files per bucket — degraded scan
     * parallelism, the failure mode [[Warehouse.compact]] exists for.
-    * Rewrites the key table and `_sets` partition-preserving (atomic
-    * rebuild, clustered within partitions; a texts `_sets` keeps its
-    * zstd codec — a snappy rewrite would silently grow it ~1.7×);
+    * Rewrites the key table and `_sets` partition-preserving (one group
+    * version for both, clustered within partitions; a texts `_sets` keeps
+    * its zstd codec — a snappy rewrite would silently grow it ~1.7×),
+    * then vacuums the warehouse ([[Warehouse.vacuum]]);
     * probes are row-identical before and after because row content is
     * untouched (spec-enforced). `_freq` is never appended to, so it has
     * no small-file accumulation to compact.
@@ -676,18 +663,21 @@ object Dedup {
   private def compact(family: DedupFamily, meta: IndexMeta,
       spark: SparkSession, wh: Warehouse, layer: String, table: String,
       foldEpochsBelow: Long): Unit = {
+    // the latest version, not the meta's: an ingest epoch compacts after
+    // its own append
+    val snap = wh.snapshot(layer, table)
     def rewrite(t: String, part: String, sort: Seq[String],
-                options: Map[String, String]): Unit =
-      wh.rebuildPartitioned(
-        clusterFor(wh.read(spark, layer, t)
+                options: Map[String, String]) =
+      Warehouse.Write(t, clusterFor(snap.read(spark, t)
           .withColumn("epoch", foldedBelow("epoch", foldEpochsBelow)),
-          part, sort: _*),
-        layer, t, Seq(part, "epoch"), options)
-    rewrite(table + family.keyTable, family.keyPart, family.keySort,
-      Map.empty)
-    rewrite(s"${table}_sets", "dbucket", Seq("doc_id"),
-      setsOptions(meta.texts))
+          part, sort: _*), partCols = Seq(part, "epoch"), options = options)
+    wh.commit(layer, table,
+      rewrite(table + family.keyTable, family.keyPart, family.keySort,
+        Map.empty),
+      rewrite(s"${table}_sets", "dbucket", Seq("doc_id"),
+        setsOptions(meta.texts)))
     foldSinkPartitions(spark, wh, layer, s"${table}_kept", foldEpochsBelow)
+    wh.vacuum()
   }
 
   /** Ratio-triggered (GEOMETRIC) fold policy — the bounded form of the
@@ -729,8 +719,9 @@ object Dedup {
   private def foldIfDue(family: DedupFamily, wh: Warehouse, layer: String,
       table: String, currentEpoch: Long, minFoldRatio: Double)(
       fold: => Unit): Boolean = {
+    val snap = wh.snapshot(layer, table)
     val (base, delta) = Seq(table + family.keyTable, s"${table}_sets")
-      .map(t => epochFootprint(wh.path(layer, t), currentEpoch))
+      .map(t => epochFootprint(snap, t, currentEpoch))
       .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
     val due = delta > 0L && delta.toDouble >= minFoldRatio * base.toDouble
     if (due) fold
@@ -751,75 +742,49 @@ object Dedup {
     * sink-sized read-and-rewrite when nothing can fold: the one-shot
     * compaction default (Long.MinValue) folds no epoch by definition,
     * and an already-folded sink has no `pepoch >= 0` partition below
-    * the bound (cheap driver-side dir listing,
-    * [[hasFoldablePartitions]]). */
+    * the bound (the sink's manifest says so, [[hasFoldablePartitions]]). */
   private[textops] def foldSinkPartitions(spark: SparkSession,
       wh: Warehouse, layer: String, sink: String,
       foldEpochsBelow: Long): Unit =
-    if (wh.exists(layer, sink) &&
-        hasFoldablePartitions(wh.path(layer, sink), foldEpochsBelow))
-      wh.rebuildPartitioned(
-        wh.read(spark, layer, sink)
-          .withColumn("pepoch", foldedBelow("pepoch", foldEpochsBelow)),
-        layer, sink, Seq("pepoch"))
+    if (wh.exists(layer, sink)) {
+      val snap = wh.snapshot(layer, sink)
+      if (hasFoldablePartitions(snap, sink, foldEpochsBelow))
+        wh.overwritePartitioned(snap.read(spark, sink)
+            .withColumn("pepoch", foldedBelow("pepoch", foldEpochsBelow)),
+          layer, sink, Seq("pepoch"))
+    }
 
   /** Epoch column `c` with every epoch below `bound` folded into the
     * base epoch −1. */
   private def foldedBelow(c: String, bound: Long): Column =
     when(col(c) < lit(bound), lit(-1L)).otherwise(col(c).cast(LongType))
 
-  /** Driver-side (base, delta) on-disk byte sizes of an
-    * epoch-sub-partitioned index table: base = the `epoch=-1`
-    * partitions, delta = committed `epoch=N ≥ 0` partitions other than
-    * `currentEpoch` (the in-flight epoch is never foldable). One file
-    * walk, no Spark job — O(files), i.e. exactly what compaction
-    * bounds. Walked under the table's rename lock so a concurrent
-    * swap's rename window can't yield a partial view
-    * ([[hasFoldablePartitions]]' r13 lesson). */
-  private[graft] def epochFootprint(tablePath: String,
-      currentEpoch: Long): (Long, Long) = {
-    def du(f: java.io.File): Long =
-      if (f.isDirectory) {
-        val fs = f.listFiles(); if (fs == null) 0L else fs.map(du).sum
-      } else f.length()
-    Warehouse.locked(tablePath) {
-      val buckets = new java.io.File(tablePath).listFiles()
-      if (buckets == null) (0L, 0L)
-      else {
-        var base = 0L; var delta = 0L
-        for (b <- buckets if b.isDirectory;
-             e <- Option(b.listFiles()).getOrElse(Array.empty)
-             if e.getName.startsWith("epoch=")) {
-          val ep = try e.getName.stripPrefix("epoch=").toLong
-                   catch { case _: NumberFormatException => Long.MinValue }
-          if (ep == -1L) base += du(e)
-          else if (ep >= 0L && ep != currentEpoch) delta += du(e)
-        }
-        (base, delta)
-      }
-    }
+  /** The values of partition column `c` of `table`'s files in `snap`,
+    * with each file's size. */
+  private def partitionSizes(snap: Warehouse.Snapshot, table: String,
+      c: String): Seq[(Long, Long)] = {
+    val t = snap.tables(table)
+    val i = t.partCols.indexOf(c)
+    t.files.map(f => (f.partition(i).toLong, f.size))
   }
 
-  /** Any committed `pepoch=N` (N ≥ 0) partition strictly below the fold
-    * bound? Driver-side listing — one readdir, no Spark job. Listed
-    * under the table's rename lock: during a concurrent swap's rename
-    * window the raw readdir can return null (table briefly absent) or
-    * a partial view, silently deferring the fold to the next cadence
-    * (r13 ADVICE). */
-  private[textops] def hasFoldablePartitions(tablePath: String,
-      foldEpochsBelow: Long): Boolean = {
-    val dirs = Warehouse.locked(tablePath) {
-      new java.io.File(tablePath).listFiles()
-    }
-    dirs != null && dirs.exists { f =>
-      val n = f.getName
-      n.startsWith("pepoch=") &&
-        (try {
-          val v = n.stripPrefix("pepoch=").toLong
-          v >= 0 && v < foldEpochsBelow
-        } catch { case _: NumberFormatException => false })
-    }
+  /** (base, delta) byte sizes of an epoch-sub-partitioned index table in
+    * `snap`: base = the `epoch=-1` files, delta = committed `epoch=N ≥ 0`
+    * files other than `currentEpoch` (the in-flight epoch is never
+    * foldable). Read from the manifest: no listing, no Spark job. */
+  private[graft] def epochFootprint(snap: Warehouse.Snapshot, table: String,
+      currentEpoch: Long): (Long, Long) = {
+    val sizes = partitionSizes(snap, table, "epoch")
+    (sizes.collect { case (-1L, b) => b }.sum,
+      sizes.collect { case (e, b) if e >= 0L && e != currentEpoch => b }.sum)
   }
+
+  /** Any committed `pepoch=N` (N ≥ 0) partition of `sink` in `snap`
+    * strictly below the fold bound? */
+  private[textops] def hasFoldablePartitions(snap: Warehouse.Snapshot,
+      sink: String, foldEpochsBelow: Long): Boolean =
+    partitionSizes(snap, sink, "pepoch")
+      .exists { case (v, _) => v >= 0 && v < foldEpochsBelow }
 
   /** The streaming INGEST LOOP — the composition a 100 TB pipeline
     * runs continuously: each micro-batch dedups against the standing
@@ -892,10 +857,15 @@ object Dedup {
     val batch = b.select(col(idCol).cast(LongType).as(idCol),
       col(textCol)).persist()
     try {
-      val meta = readMeta(family, spark, wh, layer, table)
-      if (rebuildCheckEvery > 0 && epoch > 0 && epoch % rebuildCheckEvery == 0)
-        family.refreeze(batch, epoch, idCol, textCol, wh, layer, table, meta,
-          unseenThreshold, baseCorpus)
+      val meta0 = readMeta(family, spark, wh, layer, table)
+      // a re-freeze commits a new group version, which the epoch probes
+      val meta =
+        if (rebuildCheckEvery > 0 && epoch > 0 &&
+            epoch % rebuildCheckEvery == 0 &&
+            family.refreeze(batch, epoch, idCol, textCol, wh, layer, table,
+              meta0, unseenThreshold, baseCorpus))
+          readMeta(family, spark, wh, layer, table)
+        else meta0
       val (keys, sets) = family.sketch(batch, idCol, textCol, wh, layer,
         table, meta, tracker)
       val kept = family.keep(batch, idCol, textCol, wh, layer, table, meta,
@@ -1026,7 +996,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keys = bandedKeys(minhashFromShingles(sh, numHashes), numHashes,
       bands, keepSig = false)
-    stageAndPromote(MinHashFamily,
+    commitBuild(MinHashFamily,
       Seq((shingleK, numHashes, bands, nBuckets, nSetBuckets,
           NearDedupIndexFormatVersion, setsLayout(setsAsTexts)))
         .toDF("shingle_k", "num_hashes", "bands", "n_buckets",
@@ -1116,7 +1086,7 @@ object Dedup {
     // and died on the deleted files (the r14 texts-`_sets` defect
     // class, caught again here by the minhash texts-layout spec)
     val cross = JobCounting.described(sc, "nd-probe: pruned bands join") {
-      tracker.snapshotted(wh.read(spark, layer, s"${table}_bands")
+      tracker.snapshotted(meta.snap.read(spark, s"${table}_bands")
         .filter(col("pb").isin(pbs.map(Int.box): _*) &&
           col("epoch") =!= lit(excludeEpoch))
         .select(col("band"), col("band_hash"), col("doc_id").as("__cid"))
@@ -1293,15 +1263,15 @@ object Dedup {
     // without the rep collapse — identical values, append-friendly rows
     val freqTab = sh.groupBy("sh").agg(count(lit(1)).as("freq"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the dictionary joins the staged group [[stageAndPromote]] promotes
-    wh.stagePartitioned(
+    // the dictionary commits with the group ([[commitBuild]])
+    val freqRows = Warehouse.Write(s"${table}_freq",
       clusterFor(freqTab
           .withColumn("freq",
             least(col("freq"), lit(Int.MaxValue.toLong)).cast("int"))
           .withColumn("sbucket",
             pmod(col("sh"), lit(nPostBuckets.toLong)).cast("int")),
         "sbucket", "sh"),
-      layer, s"${table}_freq", Seq("sbucket"))
+      partCols = Seq("sbucket"))
     val capped = sh.join(freqTab, "sh")
       .filter(col("freq") <= maxShingleFreq)
       .select("doc_id", "sh", "freq")
@@ -1315,7 +1285,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val storedPost =
       if (containment) posted else prefixRows(posted, tMinJaccard)
-    stageAndPromote(ExactNgramFamily,
+    commitBuild(ExactNgramFamily,
       Seq((shingleK, maxShingleFreq, nPostBuckets, nSetBuckets,
           NgramIndexFormatVersion, containment, tMinJaccard,
           setsLayout(setsAsTexts)))
@@ -1326,7 +1296,8 @@ object Dedup {
       posted.groupBy("doc_id")
         .agg(collect_list(col("sh")).as("set"),
           count(lit(1)).cast("int").as("n")),
-      df, idCol, textCol, setsAsTexts, nSetBuckets, wh, layer, table)
+      df, idCol, textCol, setsAsTexts, nSetBuckets, wh, layer, table,
+      freqRows)
     posted.unpersist(); freqTab.unpersist(); sh.unpersist()
   }
 
@@ -1350,7 +1321,7 @@ object Dedup {
   private def readCorpusSets(spark: SparkSession, wh: Warehouse,
       layer: String, table: String, meta: IndexMeta, rowFilter: Column,
       tracker: PersistTracker)(capped: DataFrame => DataFrame): DataFrame = {
-    val raw = wh.read(spark, layer, s"${table}_sets").filter(rowFilter)
+    val raw = meta.snap.read(spark, s"${table}_sets").filter(rowFilter)
     if (meta.texts)
       tracker.snapshotted(
         capped(shingledHashed(raw, "doc_id", "text", meta.shingleK,
@@ -1379,7 +1350,7 @@ object Dedup {
     * it per probe is the cheapest shape at every scale. */
   private def frozenCap(spark: SparkSession, wh: Warehouse, layer: String,
       table: String, meta: NgramMeta)(sh: DataFrame): DataFrame =
-    sh.join(wh.read(spark, layer, s"${table}_freq").select("sh", "freq"),
+    sh.join(meta.snap.read(spark, s"${table}_freq").select("sh", "freq"),
         Seq("sh"), "left")
       .withColumn("freq", coalesce(col("freq"), lit(0)))
       .filter(col("freq") <= meta.maxFreq)
@@ -1412,7 +1383,7 @@ object Dedup {
       // pages outside them (the measured 28 MB small-batch floor).
       // Above the limit the plain shuffle join over isin-pruned buckets
       // is the right shape (both sides large).
-      val cappedB = frozenFreqJoin(shB, wh, layer, table,
+      val cappedB = frozenFreqJoin(shB, meta.snap, table,
           broadcastShingleLimit)
         .withColumn("freq", coalesce(col("freq"), lit(0)))
         .filter(col("freq") <= meta.maxFreq)
@@ -1447,11 +1418,10 @@ object Dedup {
     * ([[bucketPrune]]), a broadcast left-semi pruning to exactly the
     * batch's shingles, and the now-tiny survivor set broadcast back.
     * Above it, bucket pruning + shuffle join (both sides large). */
-  private def frozenFreqJoin(shB: DataFrame, wh: Warehouse,
-      layer: String, table: String,
-      broadcastShingleLimit: Long): DataFrame = {
+  private def frozenFreqJoin(shB: DataFrame, snap: Warehouse.Snapshot,
+      table: String, broadcastShingleLimit: Long): DataFrame = {
     val (small, prune) = bucketPrune(shB, broadcastShingleLimit)
-    val freq = wh.read(shB.sparkSession, layer, s"${table}_freq")
+    val freq = snap.read(shB.sparkSession, s"${table}_freq")
       .filter(prune).select("sh", "freq")
     if (small)
       shB.join(broadcast(freq.join(broadcast(shB.select("sh").distinct()),
@@ -1514,20 +1484,24 @@ object Dedup {
     * the drift. */
   def ngramIndexStaleness(batch: DataFrame, idCol: String,
       textCol: String, wh: Warehouse, layer: String, table: String,
-      broadcastShingleLimit: Long = 2000000L): DataFrame =
-    staleness(batch, idCol, textCol, wh, layer, table,
+      broadcastShingleLimit: Long = 2000000L): DataFrame = {
+    val row = staleness(batch, idCol, textCol, table,
       readMeta(ExactNgramFamily, batch.sparkSession, wh, layer, table),
       broadcastShingleLimit)
+    batch.sparkSession.createDataFrame(java.util.List.of(row), row.schema)
+  }
 
+  /** The staleness row, computed while the batch's shingles are pinned:
+    * the shingle frame is built once and serves both the bucket-pruning
+    * collect and the aggregate. */
   private def staleness(batch: DataFrame, idCol: String, textCol: String,
-      wh: Warehouse, layer: String, table: String, meta: NgramMeta,
-      broadcastShingleLimit: Long): DataFrame = {
+      table: String, meta: NgramMeta, broadcastShingleLimit: Long): Row = {
     val shB = postingShingles(batch, idCol, textCol, meta)
     try {
       // same scan shape as a probe, by construction: the one shared
       // [[frozenFreqJoin]] — the staleness signal must measure through
       // exactly the dictionary join the probe runs
-      val joined = frozenFreqJoin(shB, wh, layer, table,
+      val joined = frozenFreqJoin(shB, meta.snap, table,
         broadcastShingleLimit)
       joined.agg(
         count(lit(1)).as("n_postings"),
@@ -1538,24 +1512,21 @@ object Dedup {
           .as("n_capped"),
         (sum(when(col("freq") > meta.maxFreq, 1L).otherwise(0L))
           .cast("double")
-          / count(lit(1)).cast("double")).as("capped_frac"))
+          / count(lit(1)).cast("double")).as("capped_frac")).head()
     } finally shB.unpersist()
   }
 
   /** The staleness row's unseen fraction (null for an empty batch). */
-  private def unseenFrac(staleness: DataFrame): Double = {
-    val row = staleness.head()
+  private def unseenFrac(row: Row): Double =
     if (row.isNullAt(2)) 0.0 else row.getDouble(2)
-  }
 
   /** Re-freeze the posting index over `corpus` under `m`'s build
     * parameters, preserving ALL layout flags: a Jaccard-only index
     * re-freezes as Jaccard-only at the same floor, and a texts-layout
     * `_sets` re-freezes as texts (an omitted setsAsTexts here silently
     * reverted the footprint win on first rebuild — r14 ADVICE,
-    * spec-pinned in PostingIndexSpec). The rebuild lands as one
-    * marker-gated staged-group swap — atomic under a crash at any point
-    * between table promotions (r11 ADVICE). */
+    * spec-pinned in PostingIndexSpec). The rebuild commits as one group
+    * version — atomic under a crash at any point (r11 ADVICE). */
   private def refrozen(m: NgramMeta, corpus: DataFrame, idCol: String,
       textCol: String, wh: Warehouse, layer: String, table: String): Unit =
     ngramIndexPersist(corpus, idCol, textCol, wh, layer, table,
@@ -1575,8 +1546,8 @@ object Dedup {
       table: String, unseenThreshold: Double = 0.5): Boolean = {
     val meta = readMeta(ExactNgramFamily, batch.sparkSession, wh, layer,
       table)
-    val stale = unseenFrac(staleness(batch, idCol, textCol, wh, layer,
-      table, meta, 2000000L)) > unseenThreshold
+    val stale = unseenFrac(staleness(batch, idCol, textCol, table, meta,
+      2000000L)) > unseenThreshold
     if (stale)
       refrozen(meta, corpus.unionByName(batch), idCol, textCol, wh, layer,
         table)
@@ -1599,13 +1570,13 @@ object Dedup {
     * skips it — either way the index state its probe sees is
     * byte-identical to the first attempt's), then recomputes the same
     * survivors. The rebuild folds committed epochs into the base
-    * partition, same forfeit as compaction. */
+    * partition, same forfeit as compaction. Returns whether it rebuilt. */
   private[textops] def ngramRefreeze(batch: DataFrame, epoch: Long,
       idCol: String, textCol: String, wh: Warehouse, layer: String,
       table: String, meta: NgramMeta, unseenThreshold: Double,
-      baseCorpus: Option[DataFrame]): Unit =
-    if (unseenFrac(staleness(batch, idCol, textCol, wh, layer, table, meta,
-        2000000L)) > unseenThreshold) {
+      baseCorpus: Option[DataFrame]): Boolean =
+    unseenFrac(staleness(batch, idCol, textCol, table, meta, 2000000L)) >
+        unseenThreshold && {
       // rebuild source = base corpus ∪ kept survivors of COMMITTED
       // epochs: excluding the current epoch makes the source — and
       // with it the rebuilt index — replay-invariant, so a replayed
@@ -1619,7 +1590,7 @@ object Dedup {
       (baseCorpus.map(_.select(col(idCol), col(textCol))).toSeq ++
           keptPrev.toSeq)
         .reduceOption(_ unionByName _)
-        .foreach(refrozen(meta, _, idCol, textCol, wh, layer, table))
+        .exists { c => refrozen(meta, c, idCol, textCol, wh, layer, table); true }
     }
 
   /** Incremental exact n-gram Jaccard: every pair a full
@@ -1680,7 +1651,7 @@ object Dedup {
         // batch's per-bucket key RANGES, as on the dictionary scan
         val (small, postPrune) = bucketPrune(prefB, broadcastShingleLimit)
         val postC = prefixRows(
-          wh.read(spark, layer, s"${table}_post")
+          meta.snap.read(spark, s"${table}_post")
             .filter(postPrune && col("epoch") =!= lit(excludeEpoch)),
           threshold)
         // a small batch BROADCASTS into the corpus-posting join: the
@@ -1797,7 +1768,7 @@ object Dedup {
     val (bSmall, postPrune) = bucketPrune(postB, broadcastShingleLimit)
     def maybeB(df: DataFrame): DataFrame = if (bSmall) broadcast(df) else df
     val prefB = prefixRows(postB, threshold)
-    val postC = wh.read(spark, layer, s"${table}_post")
+    val postC = meta.snap.read(spark, s"${table}_post")
       .filter(postPrune && col("epoch") =!= lit(excludeEpoch))
     val prefC = prefixRows(postC, threshold)
     // directed positional bound, exactly [[containmentPairs]]': overlap

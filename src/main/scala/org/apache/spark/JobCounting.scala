@@ -68,7 +68,7 @@ object JobCounting {
     sc.setLocalProperty(Key, tag)
     try {
       val a = body
-      sc.listenerBus.waitUntilEmpty()
+      drain(sc)
       val jobs = starts.asScala.toSeq.sortBy(_._1).map { case (id, (t0, desc)) =>
         val secs =
           if (ends.containsKey(id)) (ends.get(id) - t0) / 1000.0 else Double.NaN
@@ -80,6 +80,9 @@ object JobCounting {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Waits until every event posted so far has reached every listener. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   private def describe(e: SparkListenerJobStart,
                        executions: ConcurrentHashMap[String, String]): String = {

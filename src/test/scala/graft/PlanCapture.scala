@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
   * fix for noop-tracker persists aliasing post-compaction reads — so
   * partition-pruning evidence now lives in the checkpoint job's plan,
   * not the final collect's `queryExecution`. Listener delivery is
-  * async: after `body` returns we poll until the captured set is
-  * stable for a beat (bounded by a hard deadline), which is enough for
-  * the synchronous actions these specs run. */
+  * async: after `body` returns the listener bus is drained
+  * ([[org.apache.spark.JobCounting.drain]]), so every execution `body`
+  * started has been captured. */
 object PlanCapture {
   def plansDuring(spark: org.apache.spark.sql.SparkSession)
                  (body: => Unit): Seq[String] = {
@@ -27,17 +27,7 @@ object PlanCapture {
     spark.sparkContext.addSparkListener(listener)
     try {
       body
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      var lastSize = -1
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             (plans.size() != lastSize ||
-              System.nanoTime() - stableSince < 500L * 1000 * 1000)) {
-        if (plans.size() != lastSize) {
-          lastSize = plans.size(); stableSince = System.nanoTime()
-        }
-        Thread.sleep(50)
-      }
+      org.apache.spark.JobCounting.drain(spark.sparkContext)
       plans.asScala.toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }

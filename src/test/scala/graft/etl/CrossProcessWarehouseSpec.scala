@@ -3,25 +3,19 @@ package graft.etl
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** The TWO-JVM warehouse story (r13 verdict, "what's wrong" #3): the
-  * per-table rename locks serialize swap/recovery/read-planning inside
-  * one driver JVM, and [[Warehouse.swapIn]] additionally tolerates a
-  * cross-PROCESS reader restoring `._old` inside its rename window via
-  * a one-shot retry — but until this spec nothing exercised a real
-  * second process (e.g. a Verify run concurrent with an ingest driver
-  * on the same root). Here a child JVM ([[WarehouseReaderProcess]])
-  * reads the table in a tight loop while this JVM swaps it
-  * continuously. Contract pinned:
-  *   - every child read that SUCCEEDS is internally consistent (one
-  *     table version, never a mix of two versions' files — the child
-  *     exits 2 on a mixed read);
-  *   - loud per-read failures are allowed (the documented
-  *     plain-parquet snapshot limitation: a swap completing between a
-  *     read's plan and its action fails it loudly, never partially);
-  *   - the writer's swaps all complete despite the cross-process
-  *     races — no stranded `._tmp`/`._old`, final table readable and
-  *     consistent.
+/** The TWO-JVM warehouse story: a child JVM ([[WarehouseReaderProcess]])
+  * reads the warehouse in a tight loop while this JVM commits to it
+  * continuously — a Verify run concurrent with an ingest driver on the
+  * same root. Contract pinned:
+  *   - every child read pins ONE committed version and is consistent
+  *     with it (one table version, or one group generation across every
+  *     member — the child exits 2 otherwise);
+  *   - no child read fails (exit 4, each failure's cause printed): a
+  *     pinned version's files outlive the commits that supersede it;
+  *   - the writer never waits for the reader, and its commits leave no
+  *     temp manifest behind; the final state is readable and consistent.
   */
 class CrossProcessWarehouseSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
@@ -34,7 +28,7 @@ class CrossProcessWarehouseSpec extends AnyFunSuite {
 
   /** Launch the second-JVM reader; returns (process, log-text reader). */
   private def launchReader(root: String, tableSpec: String, iters: Int,
-                           groupMarker: Option[String] = None)
+                           group: Option[String] = None)
       : (Process, () => String) = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
@@ -51,12 +45,44 @@ class CrossProcessWarehouseSpec extends AnyFunSuite {
     val childDir = Files.createTempDirectory("graft_xproc_wd").toFile
     val cmd = (Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g", "-cp", cp,
       "graft.etl.WarehouseReaderProcess", root, "gold", tableSpec,
-      iters.toString) ++ groupMarker.toSeq)
+      iters.toString) ++ group.toSeq)
     val pb = new ProcessBuilder(cmd: _*)
     pb.directory(childDir)
     pb.redirectErrorStream(true)
     pb.redirectOutput(log)
     (pb.start(), () => new String(Files.readAllBytes(log.toPath), "UTF-8"))
+  }
+
+  private def awaitReady(p: Process, logText: () => String): Unit = {
+    // wait for the child's session before committing, so the commits
+    // overlap the READS, not the JVM boot
+    val readyBy = System.currentTimeMillis() + 180000
+    while (!logText().contains("READY") && p.isAlive &&
+           System.currentTimeMillis() < readyBy) Thread.sleep(200)
+    assert(logText().contains("READY"),
+      s"reader never became READY:\n${logText()}")
+  }
+
+  /** Waits for the reader and checks its verdict: every read succeeded
+    * and was consistent with the one version it pinned. */
+  private def readerVerdict(p: Process, logText: () => String,
+                            iters: Int): Int = {
+    assert(p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS),
+      "reader did not finish")
+    assert(p.exitValue() == 0,
+      s"reader exit ${p.exitValue()} (2 = MIXED read, 3 = no read " +
+      s"succeeded, 4 = a read failed):\n${logText()}")
+    val m = "READER ok=(\\d+) versions=(\\d+)".r.findFirstMatchIn(logText())
+    assert(m.nonEmpty, s"no READER summary:\n${logText()}")
+    assert(m.get.group(1).toInt === iters, logText())
+    m.get.group(2).toInt
+  }
+
+  private def noTempManifests(wh: Warehouse, owner: String): Unit = {
+    val s = Files.list(Paths.get(wh.path("gold", owner), "_log"))
+    val left = try s.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(".")).toList finally s.close()
+    assert(left.isEmpty, s"temp manifests left behind: $left")
   }
 
   test("second-JVM reader across continuous swaps: consistent reads, no stranded swap state") {
@@ -65,145 +91,71 @@ class CrossProcessWarehouseSpec extends AnyFunSuite {
     wh.overwrite(versionDf(5L), "gold", "t")
     val (p, logText) = launchReader(root, "t", 200)
     try {
-      // wait for the child's session (READY) before swapping, so the
-      // swap storm overlaps the READS, not the JVM boot
-      val readyBy = System.currentTimeMillis() + 180000
-      while (!logText().contains("READY") && p.isAlive &&
-             System.currentTimeMillis() < readyBy) Thread.sleep(200)
-      assert(logText().contains("READY"),
-        s"reader never became READY:\n${logText()}")
-      // swap continuously (each version atomic-by-rename) until the
-      // reader finishes its 200 reads — bounded by wall clock too, so a
-      // reader stalled by machine load can't drive thousands of swaps
-      // (the suite-under-contention flake class)
+      awaitReady(p, logText)
+      // overwrite continuously until the reader finishes its 200 reads —
+      // bounded by wall clock too, so a reader stalled by machine load
+      // can't drive thousands of commits
       var v = 5L
-      val swapDeadline = System.currentTimeMillis() + 120000
-      while (p.isAlive && v < 5000L &&
-             System.currentTimeMillis() < swapDeadline) {
+      val deadline = System.currentTimeMillis() + 120000
+      while (p.isAlive && v < 5000L && System.currentTimeMillis() < deadline) {
         v += 1
-        wh.rebuild(versionDf(v), "gold", "t")
+        wh.overwrite(versionDf(v), "gold", "t")
       }
-      assert(p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS),
-        "reader did not finish")
-      assert(p.exitValue() == 0,
-        s"reader exit ${p.exitValue()} (2 = MIXED read observed, " +
-        s"3 = no read ever succeeded):\n${logText()}")
-      val m = "READER ok=(\\d+) loud=(\\d+)".r.findFirstMatchIn(logText())
-      assert(m.nonEmpty, s"no READER summary:\n${logText()}")
-      assert(m.get.group(1).toInt > 0, "no successful cross-process reads")
-      assert(v > 6L, "writer never swapped during the read window")
-      // the writer side survived every cross-process race: nothing
-      // stranded, final state readable and consistent
-      assert(!Files.exists(Paths.get(wh.path("gold", "t._tmp"))),
-        "stranded ._tmp after cross-process swap storm")
-      assert(!Files.exists(Paths.get(wh.path("gold", "t._old"))),
-        "stranded ._old after cross-process swap storm")
+      readerVerdict(p, logText, 200)
+      assert(v > 6L, "writer never committed during the read window")
+      noTempManifests(wh, "t")
       val rows = wh.read(spark, "gold", "t")
         .select("v").as[Long].collect()
       assert(rows.distinct.length == 1 && rows.length == rows.head.toInt)
+      assert(rows.head === v)
     } finally {
       if (p.isAlive) p.destroyForcibly()
     }
   }
 
   test("second-JVM reader across a live ingest's group promotions + epoch appends: no mixed-generation group reads") {
-    // The INGEST-side two-process story (r14 verdict, next-round #6):
-    // the r14 spec pinned single-table swapIn; here the writer drives
-    // the staged-GROUP protocol the index rebuilds use (marker-gated
-    // multi-table swap, generation stamped into every row) while ALSO
-    // appending epoch partitions continuously — the live ingest
-    // driver's full write mix — and the child reads the whole group
-    // (meta+bands+sets analog) under readGroupConsistent. Contract:
-    //   - every read the protocol ACCEPTS sees exactly one generation
-    //     across all three tables (child exits 2 otherwise);
-    //   - reads a promotion raced are discarded/loud, never trusted;
-    //   - the reader never RESUMES the writer's group promotions
-    //     (resumePending is the writer's own crash recovery; racing it
-    //     from a reader process would double-promote staged tmps);
-    //   - the writer survives: no stranded ._tmp/._old/._pending/gver
-    //     tmp, final group consistent.
+    // The INGEST-side two-process story: the writer drives the group
+    // commits a standing index makes (every member rewritten as one
+    // version, the generation `g` stamped into every row) while ALSO
+    // appending epoch partitions continuously — the live ingest driver's
+    // full write mix — and the child reads the whole group
+    // (meta+bands+sets analog) from one pinned version per read.
     val root = Files.createTempDirectory("graft_xprocg").toString
     val wh = Warehouse(root)
-    val tables = Seq("gm", "gb", "gs")
-    def stageGen(g: Long): Unit = {
-      wh.stage(Seq(g).toDF("g"), "gold", "gm")
-      Seq("gb", "gs").foreach { t =>
-        wh.stagePartitioned(
+    val tables = Seq("g_m", "g_b", "g_s")
+    def rebuild(g: Long): Unit =
+      wh.commit("gold", "g",
+        Warehouse.Write("g_m", Seq(g).toDF("g")) +:
+        Seq("g_b", "g_s").map(t => Warehouse.Write(t,
           spark.range(20).select(lit(g).as("g"), lit(-1L).as("epoch")),
-          "gold", t, Seq("epoch"))
-      }
-      wh.promoteStagedGroup("gold", "g", tables)
-    }
-    stageGen(1L)
+          partCols = Seq("epoch"))): _*)
+    rebuild(1L)
     val (p, logText) = launchReader(root, tables.mkString(","), 80,
-      groupMarker = Some("g"))
+      group = Some("g"))
     try {
-      val readyBy = System.currentTimeMillis() + 180000
-      while (!logText().contains("READY") && p.isAlive &&
-             System.currentTimeMillis() < readyBy) Thread.sleep(200)
-      assert(logText().contains("READY"),
-        s"reader never became READY:\n${logText()}")
-      // the live ingest mix: epoch appends carrying the CURRENT
-      // generation, plus group re-promotions. Each promotion is gated
-      // on the reader having ACCEPTED at least one read since the last
-      // one (the child's PROG lines): a promotion discards any read it
-      // overlaps, so an unthrottled promoter on a loaded machine can
-      // race every read and starve the ok>0 liveness assertion — the
-      // gate guarantees quiescent windows without weakening the mixed-
-      // read detection (appends never pause, and every read that DOES
-      // overlap a promotion must still be discarded or consistent).
-      def childOk(): Int =
-        "PROG ok=(\\d+)".r.findAllMatchIn(logText())
-          .foldLeft(0)((_, m) => m.group(1).toInt)
+      awaitReady(p, logText)
+      // epoch appends carrying the CURRENT generation, and a group
+      // rebuild every third epoch — never waiting for the reader.
+      // Bounded by wall clock, and by an epoch cap that bounds the
+      // manifest's file count.
       var g = 1L
       var e = 0L
-      var okAtPromo = 0
-      // wall-clock bound: a child stalled by machine load must not drive
-      // thousands of epoch appends (each adds a partition dir, making
-      // the child's reads — and the stall — progressively worse)
-      // the epoch cap also bounds partition-directory accumulation: at
-      // thousands of epochs the child's reads (which list every epoch
-      // dir) degrade to seconds each and the post-writer wait expires
-      val appendDeadline = System.currentTimeMillis() + 120000
-      while (p.isAlive && e < 300L &&
-             System.currentTimeMillis() < appendDeadline) {
+      val deadline = System.currentTimeMillis() + 120000
+      while (p.isAlive && e < 300L && System.currentTimeMillis() < deadline) {
         e += 1
-        Seq("gb", "gs").foreach { t =>
-          wh.appendPartitioned(
-            spark.range(5).select(lit(g).as("g"), lit(e).as("epoch")),
-            "gold", t, Seq("epoch"))
-        }
-        if (e % 3 == 0 && childOk() > okAtPromo) {
-          g += 1; stageGen(g); okAtPromo = childOk()
-        }
+        wh.commit("gold", "g", Seq("g_b", "g_s").map(t => Warehouse.Write(t,
+          spark.range(5).select(lit(g).as("g"), lit(e).as("epoch")),
+          Warehouse.Append, Seq("epoch"))): _*)
+        if (e % 3 == 0) { g += 1; rebuild(g) }
       }
-      assert(p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS),
-        "reader did not finish")
-      assert(p.exitValue() == 0,
-        s"reader exit ${p.exitValue()} (2 = MIXED group read observed, " +
-        s"3 = no read ever succeeded):\n${logText()}")
-      val m = "READER ok=(\\d+) loud=(\\d+)".r.findFirstMatchIn(logText())
-      assert(m.nonEmpty, s"no READER summary:\n${logText()}")
-      assert(m.get.group(1).toInt > 0,
-        "no successful cross-process group reads")
-      assert(g > 2L, "writer never re-promoted during the read window")
-      // writer-side hygiene across every cross-process race
-      for (t <- tables) {
-        assert(!Files.exists(Paths.get(wh.path("gold", s"$t._tmp"))),
-          s"stranded $t._tmp")
-        assert(!Files.exists(Paths.get(wh.path("gold", s"$t._old"))),
-          s"stranded $t._old")
-      }
-      assert(!Files.exists(Paths.get(wh.path("gold", "g._pending"))),
-        "stranded group marker")
-      assert(!Files.exists(Paths.get(wh.path("gold", "g._gver._tmp"))),
-        "stranded gver tmp")
+      readerVerdict(p, logText, 80)
+      assert(g > 2L, "writer never rebuilt during the read window")
+      noTempManifests(wh, "g")
       // final group consistent from this JVM too
-      val gs = wh.readGroupConsistent("gold", "g") {
-        tables.flatMap(t => wh.read(spark, "gold", t)
-          .select("g").as[Long].collect())
-      }
-      assert(gs.nonEmpty && gs.get.distinct.length == 1)
+      val snap = wh.snapshot("gold", "g")
+      val gs = tables.flatMap(t => snap.read(spark, t)
+        .select("g").as[Long].collect())
+      assert(gs.distinct === Seq(g))
     } finally {
       if (p.isAlive) p.destroyForcibly()
     }

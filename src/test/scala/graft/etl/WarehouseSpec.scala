@@ -1,13 +1,16 @@
 package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.functions.{col, lit, upper}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Atomic table swaps: the single-rename window must be RECOVERABLE,
-  * not just reclaimable — a crash between `target → ._old` and
-  * `._tmp → target` leaves no live table, and both the next read and
-  * the next rebuild must restore the pre-swap copy instead of failing
-  * (r10 ADVICE on swapIn).
+/** The manifest commit protocol ([[Warehouse]]) under every crash state
+  * a commit can leave on disk, built here by hand — data written with no
+  * manifest, a temp manifest never linked, a linked manifest whose temp
+  * file survived, a vacuum stopped half way — for one table and for a
+  * table group: reads return the last committed version (never a mixed
+  * group), the next commit succeeds, and vacuum reclaims the orphans.
   */
 class WarehouseSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
@@ -16,146 +19,192 @@ class WarehouseSpec extends AnyFunSuite {
   private def freshWh() = Warehouse(
     Files.createTempDirectory("graft_whspec").toString)
 
-  test("read recovers a table stranded mid-swap in ._old") {
-    val wh = freshWh()
-    wh.overwrite(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "gold", "t")
-    // simulate the crash window: the live dir was renamed aside and the
-    // process died before tmp moved in
-    Files.move(Paths.get(wh.path("gold", "t")),
-      Paths.get(wh.path("gold", "t._old")), StandardCopyOption.ATOMIC_MOVE)
-    assert(!Files.exists(Paths.get(wh.path("gold", "t"))))
-    val rows = wh.read(spark, "gold", "t").as[(Long, String)].collect().toSet
-    assert(rows === Set((1L, "a"), (2L, "b")))
-    assert(Files.exists(Paths.get(wh.path("gold", "t"))))
-    assert(!Files.exists(Paths.get(wh.path("gold", "t._old"))))
+  /** `n` rows, each stamped with `v`. */
+  private def stamped(v: Long, n: Int = 3) =
+    spark.range(n).select(lit(v).as("v"))
+
+  private def stamps(wh: Warehouse, table: String): Set[Long] =
+    wh.read(spark, "gold", table).select("v").as[Long].collect().toSet
+
+  private def logFiles(log: Path): Seq[String] = {
+    val s = Files.list(log)
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
   }
 
-  test("rebuild after a mid-swap crash restores then swaps; stale ._old reclaimed") {
+  private def temps(log: Path): Seq[String] = logFiles(log).filter(_.startsWith("."))
+
+  /** Drives the four crash states through one table group; `commit`
+    * writes version `v` of every member, `read` returns the stamps every
+    * member holds as one set per member. */
+  private def crashStates(wh: Warehouse, owner: String,
+                          commit: Long => Unit,
+                          read: () => Seq[Set[Long]]): Unit = {
+    val dir = Paths.get(wh.path("gold", owner))
+    val log = dir.resolve("_log")
+    def sees(v: Long) = assert(read().forall(_ == Set(v)), read())
+    commit(1L)
+    // data written, no manifest
+    stamped(2L).write.parquet(dir.resolve("_cdead").toString)
+    sees(1L)
+    // temp manifest written, not linked: a whole commit minus its link
+    commit(3L)
+    Files.move(log.resolve("1.json"), log.resolve(".unlinked.tmp"))
+    sees(1L)
+    // the next commit succeeds, taking the version the crash never linked
+    commit(4L)
+    assert(Files.exists(log.resolve("1.json")))
+    sees(4L)
+    // manifest linked, temp file left behind
+    Files.copy(log.resolve("1.json"), log.resolve(".linked.tmp"))
+    sees(4L)
+    commit(5L)
+    sees(5L)
+    // vacuum half done: superseded manifests pruned, their files not yet
+    Files.delete(log.resolve("0.json"))
+    Files.delete(log.resolve("1.json"))
+    sees(5L)
+    commit(6L)
+    sees(6L)
+    assert(WarehouseTestKit.unreferenced(wh, "gold", owner).nonEmpty)
+    // vacuum reclaims every orphan: data of crashed and superseded
+    // writes, temp manifests, superseded manifests
+    wh.vacuum(WarehouseTestKit.afterRetention)
+    sees(6L)
+    assert(WarehouseTestKit.unreferenced(wh, "gold", owner).isEmpty)
+    assert(!Files.exists(dir.resolve("_cdead")))
+    assert(temps(log).isEmpty, temps(log))
+    assert(logFiles(log) === Seq("3.json"))
+    // a vacuum within the retention deletes nothing a reader might hold
+    commit(7L)
+    val before = WarehouseTestKit.onDisk(wh, "gold", owner)
+    wh.vacuum()
+    assert(WarehouseTestKit.onDisk(wh, "gold", owner) === before)
+    sees(7L)
+  }
+
+  test("crash states of a table commit: last version read, next commit, vacuum") {
     val wh = freshWh()
-    wh.overwrite(Seq((1L, "a")).toDF("k", "v"), "gold", "t")
-    Files.move(Paths.get(wh.path("gold", "t")),
-      Paths.get(wh.path("gold", "t._old")), StandardCopyOption.ATOMIC_MOVE)
-    // a rebuild whose input is the (recovered) table itself
-    wh.rebuild(wh.read(spark, "gold", "t")
-      .withColumn("v", org.apache.spark.sql.functions.upper(
-        org.apache.spark.sql.functions.col("v"))), "gold", "t")
-    val rows = wh.read(spark, "gold", "t").as[(Long, String)].collect().toSet
-    assert(rows === Set((1L, "A")))
-    assert(!Files.exists(Paths.get(wh.path("gold", "t._old"))))
-    // a STALE ._old (swap completed, delete crashed) is reclaimed, not
-    // restored over the live table
-    Files.createDirectory(Paths.get(wh.path("gold", "t._old")))
-    wh.rebuild(wh.read(spark, "gold", "t"), "gold", "t")
-    assert(wh.read(spark, "gold", "t").count() === 1L)
-    assert(!Files.exists(Paths.get(wh.path("gold", "t._old"))))
+    crashStates(wh, "t",
+      v => wh.overwrite(stamped(v), "gold", "t"),
+      () => Seq(stamps(wh, "t")))
+  }
+
+  test("crash states of a group commit: never a mixed group; vacuum reclaims") {
+    val wh = freshWh()
+    val members = Seq("g_a", "g_b")
+    crashStates(wh, "g",
+      v => wh.commit("gold", "g", members.map(m =>
+        Warehouse.Write(m,
+          spark.range(3).select(lit(v).as("v"), (col("id") % 2).as("p")),
+          partCols = Seq("p"))): _*),
+      () => {
+        // one pinned version serves every member
+        val snap = wh.snapshot("gold", "g")
+        members.map(m => snap.read(spark, m).select("v").as[Long].collect().toSet)
+      })
+    // a member write commits a new group version and leaves the others
+    wh.appendPartitioned(stamped(7L, 1).withColumn("p", lit(5L)), "gold", "g_a",
+      Seq("p"))
+    assert(wh.read(spark, "gold", "g_a").count() === 4L)
+    assert(wh.read(spark, "gold", "g_b").count() === 3L)
+  }
+
+  test("an overwrite computed from its own table is safe and atomic") {
+    val wh = freshWh()
+    wh.overwritePartitioned(Seq((1L, "a", 0), (2L, "b", 1)).toDF("k", "v", "p"),
+      "gold", "t", Seq("p"))
+    // the new version's plan scans the version it replaces
+    wh.overwritePartitioned(wh.read(spark, "gold", "t")
+      .withColumn("v", upper(col("v"))), "gold", "t", Seq("p"))
+    assert(wh.read(spark, "gold", "t").as[(Long, String, Int)].collect().toSet ===
+      Set((1L, "A", 0), (2L, "B", 1)))
+    // so does a partition replace, which keeps the partitions it misses
+    wh.overwritePartitionsDynamic(wh.read(spark, "gold", "t")
+      .filter(col("p") === 1).withColumn("k", col("k") * 10), "gold", "t", Seq("p"))
+    assert(wh.read(spark, "gold", "t").as[(Long, String, Int)].collect().toSet ===
+      Set((1L, "A", 0), (20L, "B", 1)))
+    // a failing overwrite commits nothing
+    intercept[Exception] {
+      wh.overwrite(wh.read(spark, "gold", "t")
+        .withColumn("k", org.apache.spark.sql.functions.raise_error(lit("boom"))),
+        "gold", "t")
+    }
+    assert(wh.read(spark, "gold", "t").count() === 2L)
+    // a partitioned write keeps the column types it was written with
+    assert(wh.read(spark, "gold", "t").schema("p").dataType ===
+      org.apache.spark.sql.types.IntegerType)
   }
 
   test("concurrent reads during swaps: no failure, no stranded ._tmp (r11 ADVICE race)") {
-    // the production shape: the ingest loop compacts (rebuild = swap)
-    // the same table concurrent probes read. Un-serialized, a read
-    // landing inside the rename window restores ._old onto the live
-    // path and the swap's second rename throws, stranding ._tmp.
+    // the production shape: the ingest loop compacts (overwrites) the
+    // same table concurrent probes read. Every read pins one version,
+    // whose files outlive the commits that supersede it, so no read
+    // fails — not even transiently — and every read is one whole
+    // version.
     val wh = freshWh()
     wh.overwrite(Seq.tabulate(64)(i => (i.toLong, s"v$i")).toDF("k", "v"),
       "gold", "race")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val readerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    def transientSwapRead(t: Throwable): Boolean = {
-      // the one failure plain parquet cannot exclude: a reader that
-      // PLANNED before the swap executes against files the swap
-      // reclaimed. It fails LOUDLY (never a partial result — a missing
-      // file kills the job) and a retry sees a whole generation; only
-      // a table format with snapshot manifests removes it entirely.
-      val m = Option(t.getMessage).getOrElse("")
-      m.contains("FAILED_READ_FILE") || m.contains("PATH_NOT_FOUND")
-    }
     val readers = (1 to 4).map { _ =>
       new Thread(() => {
         while (!stop.get()) {
-          try {
-            val n = wh.read(spark, "gold", "race").count()
-            // successful reads are never mixed-generation: the listing
-            // is one atomic-rename snapshot, so it's all-old or all-new
-            assert(n === 64L)
-          } catch {
-            case t: Throwable if transientSwapRead(t) => () // retry loop
-            case t: Throwable => readerErr.set(t); stop.set(true)
-          }
+          try assert(wh.read(spark, "gold", "race").count() === 64L)
+          catch { case t: Throwable => readerErr.set(t); stop.set(true) }
         }
       })
     }
     readers.foreach(_.start())
     try {
       (1 to 8).foreach { _ =>
-        wh.rebuild(wh.read(spark, "gold", "race"), "gold", "race")
+        wh.overwrite(wh.read(spark, "gold", "race"), "gold", "race")
       }
     } finally { stop.set(true); readers.foreach(_.join(30000)) }
     assert(readerErr.get() === null,
-      s"reader failed during swap: ${readerErr.get()}")
-    assert(!Files.exists(Paths.get(wh.path("gold", "race._tmp"))))
-    assert(!Files.exists(Paths.get(wh.path("gold", "race._old"))))
+      s"reader failed during overwrites: ${readerErr.get()}")
+    assert(temps(WarehouseTestKit.log(wh, "gold", "race")).isEmpty)
+    assert(wh.snapshot("gold", "race").version === 8L)
     assert(wh.read(spark, "gold", "race").count() === 64L)
   }
 
-  test("staged group: crash between swaps resumes to the all-new state") {
-    // two tables that must change together; the group promotion dies
-    // after swapping only the first — a reader-side resume must finish
-    // the second before anything trusts the pair
+  test("concurrent commits to one table: every writer's rows survive") {
+    // writers that lose the link race re-apply their change to the
+    // version that won, without rewriting data
     val wh = freshWh()
-    wh.overwrite(Seq((1L, "old")).toDF("k", "v"), "gold", "ga")
-    wh.overwrite(Seq((1L, "old")).toDF("k", "v"), "gold", "gb")
-    wh.stage(Seq((1L, "new")).toDF("k", "v"), "gold", "ga")
-    wh.stage(Seq((1L, "new")).toDF("k", "v"), "gold", "gb")
-    // simulate the crash: marker down, first table swapped, second not
-    val marker = Paths.get(wh.path("gold", "g._pending"))
-    Files.createFile(marker)
-    wh.promoteStaged("gold", "ga")
-    assert(wh.read(spark, "gold", "ga").as[(Long, String)].head()._2 === "new")
-    assert(wh.read(spark, "gold", "gb").as[(Long, String)].head()._2 === "old")
-    // resume finishes the group and clears the marker; a second resume
-    // (or one after a clean completion) is a no-op
-    wh.resumePending("gold", "g", Seq("ga", "gb"))
-    assert(wh.read(spark, "gold", "gb").as[(Long, String)].head()._2 === "new")
-    assert(!Files.exists(marker))
-    wh.resumePending("gold", "g", Seq("ga", "gb"))
-    assert(wh.read(spark, "gold", "ga").as[(Long, String)].head()._2 === "new")
-    // clean full-protocol run end to end
-    wh.stage(Seq((2L, "v3")).toDF("k", "v"), "gold", "ga")
-    wh.stage(Seq((2L, "v3")).toDF("k", "v"), "gold", "gb")
-    wh.promoteStagedGroup("gold", "g", Seq("ga", "gb"))
-    assert(wh.read(spark, "gold", "ga").as[(Long, String)].head()._1 === 2L)
-    assert(wh.read(spark, "gold", "gb").as[(Long, String)].head()._1 === 2L)
-    assert(!Files.exists(marker))
+    val threads = (1 to 6).map { i =>
+      new Thread(() => wh.append(stamped(i.toLong, 1), "gold", "many"))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    assert(stamps(wh, "many") === (1L to 6L).toSet)
+    assert(wh.snapshot("gold", "many").version === 5L)
   }
 
   test("repeated swaps of a many-partition table do not leak directory fds") {
-    // deleteRecursively used Files.list WITHOUT closing the stream: one
-    // directory fd leaked per subdirectory of every deleted `._old`
-    // tree. On a partitioned index (hundreds of partition dirs) a few
-    // compactions blow the process fd limit — the r13 20-epoch ingest
-    // probe died with "Too many open files" at its third fold. The fd
-    // count is read from /proc/self/fd (Linux is this build's target).
+    // vacuum walks and deletes every superseded version's partition
+    // directories; an unclosed directory stream leaks one fd per
+    // directory (the r13 20-epoch ingest probe died with "Too many open
+    // files" at its third fold when deletes leaked). The fd count is
+    // read from /proc/self/fd (Linux is this build's target).
     def fds(): Int = {
       val s = Files.list(Paths.get("/proc/self/fd"))
       try s.count().toInt finally s.close()
     }
     val wh = freshWh()
-    import org.apache.spark.sql.functions.col
     val df = spark.range(0, 400, 1, 4)
       .select(col("id"), (col("id") % 200).as("p"))
     wh.overwritePartitioned(df, "gold", "fdleak", Seq("p"))
-    wh.rebuildPartitioned(wh.read(spark, "gold", "fdleak"),
-      "gold", "fdleak", Seq("p")) // settle lazily-opened JVM/Spark fds
-    val fd0 = fds()
-    (1 to 3).foreach { _ =>
-      wh.rebuildPartitioned(wh.read(spark, "gold", "fdleak"),
+    def rewrite(): Unit = {
+      wh.overwritePartitioned(wh.read(spark, "gold", "fdleak"),
         "gold", "fdleak", Seq("p"))
+      wh.vacuum(WarehouseTestKit.afterRetention)
     }
-    // pre-fix this leaked ≥ 200 fds per swap (one per partition dir of
-    // the deleted ._old); post-fix the count stays put modulo the
-    // session's own churn
+    rewrite() // settle lazily-opened JVM/Spark fds
+    val fd0 = fds()
+    (1 to 3).foreach(_ => rewrite())
     assert(fds() - fd0 < 150,
-      s"open fds grew from $fd0 to ${fds()} across 3 partitioned swaps")
+      s"open fds grew from $fd0 to ${fds()} across 3 partitioned rewrites")
     assert(wh.read(spark, "gold", "fdleak").count() === 400L)
+    assert(WarehouseTestKit.unreferenced(wh, "gold", "fdleak").isEmpty)
   }
 }

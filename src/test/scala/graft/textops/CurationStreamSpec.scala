@@ -2,7 +2,7 @@ package graft.textops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.TestSessions
+import graft.etl.{TestSessions, WarehouseTestKit}
 
 /** Streaming corpus curation: bootstrap + epoch ingest must reproduce
   * the batch pipeline's final kept set (clique duplicates, id-ordered
@@ -191,12 +191,10 @@ class CurationStreamSpec extends AnyFunSuite {
     CurationStream.curationBootstrap(initialRows.toDF("doc_id", "text"),
       "doc_id", "text", wh, "gold", "cur", threshold = 0.5, bands = 8,
       nBuckets = 8, nSetBuckets = 4)
-    def dirs(t: String): Set[String] = {
-      val d = new java.io.File(wh.path("gold", t))
-      if (!d.exists) Set.empty
-      else d.listFiles().filter(f => f.isDirectory &&
-        f.getName.startsWith("pepoch=")).map(_.getName).toSet
-    }
+    def dirs(t: String): Set[String] =
+      if (!wh.exists("gold", t)) Set.empty
+      else WarehouseTestKit.partitionValues(wh, "gold", t, "pepoch")
+        .map("pepoch=" + _)
     def run(e: Int): Unit = CurationStream.curationIngestBatch(
       Seq((400L + e,
         s"the funnel fold micro batch number $e is about its own new subject"))
@@ -236,15 +234,10 @@ class CurationStreamSpec extends AnyFunSuite {
     CurationStream.curationBootstrap(initialRows.toDF("doc_id", "text"),
       "doc_id", "text", wh, "gold", "cur", threshold = 0.5, bands = 8,
       nBuckets = 8, nSetBuckets = 4)
-    def epochDirs(t: String): Set[String] = {
-      val d = new java.io.File(wh.path("gold", t))
-      if (!d.exists) Set.empty
-      else d.listFiles().flatMap { p =>
-        val kids = p.listFiles()
-        if (kids == null) Array.empty[java.io.File] else kids
-      }.filter(f => f.isDirectory && f.getName.startsWith("epoch="))
-        .map(_.getName).toSet
-    }
+    def epochDirs(t: String): Set[String] =
+      if (!wh.exists("gold", t)) Set.empty
+      else WarehouseTestKit.partitionValues(wh, "gold", t, "epoch")
+        .map("epoch=" + _)
     // each epoch's doc must be genuinely NOVEL (kept): the sibling
     // funnel test's near-identical template texts differ by one token,
     // J ≈ 0.57 ≥ 0.5, so the stream correctly DROPS them as near-dups

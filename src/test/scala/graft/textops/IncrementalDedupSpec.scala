@@ -2,7 +2,7 @@ package graft.textops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.TestSessions
+import graft.etl.{TestSessions, WarehouseTestKit}
 import CurationStream.MinHashFamily
 
 /** Incremental near-dedup against a persisted band index: the probe must
@@ -37,10 +37,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
   private lazy val batch = batchRows.toDF("doc_id", "text")
 
   /** Spark jobs of one ingest epoch of `batch` against the index over
-    * `corpus`, in the test session: 83 with the index meta read once,
-    * in one action; 91 when each epoch read it 3 times at 3 jobs a
-    * read. */
-  private val IngestEpochJobs = 83
+    * `corpus`, in the test session: 79 with every index read planned
+    * from its manifest; 83 when each read inferred its schema from a
+    * Parquet footer; 91 when each epoch read the meta 3 times at 3 jobs
+    * a read. */
+  private val IngestEpochJobs = 79
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
     java.nio.file.Files.createTempDirectory(s"graft_ndidx_$tag").toString)
@@ -112,19 +113,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
     }
     val before = pairSet(Dedup.nearDedupIncrementPairs(batch, "doc_id",
       "text", wh, "gold", "nd", threshold = 0.5))
-    def nFiles = {
-      def cnt(p: String) = {
-        val d = new java.io.File(p)
-        if (!d.exists) 0
-        else {
-          def walk(f: java.io.File): Int =
-            if (f.isDirectory) f.listFiles().map(walk).sum
-            else if (f.getName.endsWith(".parquet")) 1 else 0
-          walk(d)
-        }
-      }
-      cnt(wh.path("gold", "nd_bands")) + cnt(wh.path("gold", "nd_sets"))
-    }
+    def nFiles = Seq("nd_bands", "nd_sets")
+      .map(WarehouseTestKit.files(wh, "gold", _).size).sum
     val filesBefore = nFiles
     Dedup.indexCompact(MinHashFamily, spark, wh, "gold", "nd")
     val after = pairSet(Dedup.nearDedupIncrementPairs(batch, "doc_id",
@@ -166,14 +156,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
       (205L, "clustered novel documents arriving together inside a single micro batch now"))
     q.processAllAvailable()
     q.stop()
-    val kept = spark.read.parquet(wh.path("gold", "nd_kept"))
+    val kept = wh.read(spark, "gold", "nd_kept")
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(201L, 203L, 204L))
     // and the index stayed CONSISTENT: every kept doc has band rows AND
     // a set row (the pre-fix failure left bands without sink rows)
-    val bandDocs = spark.read.parquet(wh.path("gold", "nd_bands"))
+    val bandDocs = wh.read(spark, "gold", "nd_bands")
       .select("doc_id").as[Long].collect().toSet
-    val setDocs = spark.read.parquet(wh.path("gold", "nd_sets"))
+    val setDocs = wh.read(spark, "gold", "nd_sets")
       .select("doc_id").as[Long].collect().toSet
     assert(kept.subsetOf(bandDocs) && kept.subsetOf(setDocs))
   }
@@ -182,13 +172,13 @@ class IncrementalDedupSpec extends AnyFunSuite {
   // rows with the set arrays SORTED (collect_list order is not
   // deterministic across runs; content is)
   private def ingestState(wh: graft.etl.Warehouse) = {
-    val kept = spark.read.parquet(wh.path("gold", "nd_kept"))
+    val kept = wh.read(spark, "gold", "nd_kept")
       .select(col("doc_id"), col("epoch").cast("long"))
       .as[(Long, Long)].collect().toSet
-    val bands = spark.read.parquet(wh.path("gold", "nd_bands"))
+    val bands = wh.read(spark, "gold", "nd_bands")
       .select(col("doc_id"), col("band"), col("band_hash"))
       .as[(Long, Int, Long)].collect().toSeq.sorted
-    val sets = spark.read.parquet(wh.path("gold", "nd_sets"))
+    val sets = wh.read(spark, "gold", "nd_sets")
       .select(col("doc_id"), sort_array(col("set")), col("n"))
       .as[(Long, Seq[Long], Long)].collect().toSeq.sortBy(_._1)
     (kept, bands, sets)
@@ -241,15 +231,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val wh = freshWh("cadence")
     Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", wh, "gold", "nd",
       shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8, nSetBuckets = 4)
-    def nFiles = {
-      def cnt(p: String) = {
-        def walk(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles().map(walk).sum
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        val d = new java.io.File(p); if (d.exists) walk(d) else 0
-      }
-      cnt(wh.path("gold", "nd_bands")) + cnt(wh.path("gold", "nd_sets"))
-    }
+    def nFiles = Seq("nd_bands", "nd_sets")
+      .map(WarehouseTestKit.files(wh, "gold", _).size).sum
     // 6 epochs of novel docs, compacting every 2: epoch sub-partitions
     // fold into the base epoch on cadence, so the index never carries
     // more than compactEvery epochs' worth of small files
@@ -264,7 +247,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // after the last compaction (epoch 4) only epochs {-1, 4, 5} can
     // hold files: growth since then is bounded by the cadence, not the
     // epoch count
-    val epochs = spark.read.parquet(wh.path("gold", "nd_bands"))
+    val epochs = wh.read(spark, "gold", "nd_bands")
       .select(col("epoch").cast("long")).distinct().as[Long].collect().toSet
     assert(epochs.subsetOf(Set(-1L, 4L, 5L)))
     // a compaction must actually SHRINK the file count (epoch 4 folds
@@ -330,11 +313,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val whT = freshWh("ndtexts"); buildT(whT, texts = true)
     val whA = freshWh("ndtextsref"); buildT(whA, texts = false)
     // the stored table holds text, not set arrays — and the SAME docs
-    val colsT = spark.read.parquet(whT.path("gold", "nd_sets")).columns.toSet
+    val colsT = whT.read(spark, "gold", "nd_sets").columns.toSet
     assert(colsT.contains("text") && !colsT.contains("set"))
-    val idsT = spark.read.parquet(whT.path("gold", "nd_sets"))
+    val idsT = whT.read(spark, "gold", "nd_sets")
       .select("doc_id").as[Long].collect().toSet
-    val idsA = spark.read.parquet(whA.path("gold", "nd_sets"))
+    val idsA = whA.read(spark, "gold", "nd_sets")
       .select("doc_id").as[Long].collect().toSet
     assert(idsT === idsA)
     def pairs(w: graft.etl.Warehouse, b: org.apache.spark.sql.DataFrame) =
@@ -352,7 +335,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
         "text", whT, "gold", "nd", threshold = 0.5) ===
       Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id", "text",
         whA, "gold", "nd", threshold = 0.5))
-    val colsIng = spark.read.parquet(whT.path("gold", "nd_sets")).columns.toSet
+    val colsIng = whT.read(spark, "gold", "nd_sets").columns.toSet
     assert(colsIng.contains("text") && !colsIng.contains("set"))
     // a doc_id spanning TWO epochs with different text verifies per
     // stored (doc_id, epoch) row in BOTH layouts (the texts reader
@@ -376,21 +359,16 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(pairs(whT, batch) === pairs(whA, batch))
     // and the compacted texts files stayed zstd (codec survives the
     // rewrite — a snappy compaction would silently grow the table)
-    val aFile = {
-      val w = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(whT.path("gold", "nd_sets")))
-      try w.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      finally w.close()
-    }
-    assert(aFile.toString.contains("zstd"))
+    assert(WarehouseTestKit.files(whT, "gold", "nd_sets")
+      .forall(_.path.contains("zstd")))
   }
 
   test("ratio-triggered compaction folds only when the delta earns its rewrite") {
     IndexLifecycle.ratioTriggeredCompaction(MinHashFamily, corpus, batch)
   }
 
-  test("compaction after a crashed group promotion resumes it, not clobbers the staged tables") {
-    IndexLifecycle.crashedPromotionCompaction(MinHashFamily, corpus, batch)
+  test("compaction after a crashed group commit sees the last version") {
+    IndexLifecycle.crashedCommitCompaction(MinHashFamily, corpus, batch)
   }
 
   test("one ingest epoch: job count pinned, caller's job description restored") {
@@ -406,7 +384,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // column) — what any standing index built before v2 looks like
     val legacy = Seq((3, 32, 8, 8, 4))
       .toDF("shingle_k", "num_hashes", "bands", "n_buckets", "n_set_buckets")
-    legacy.write.mode("overwrite").parquet(wh.path("gold", "nd_meta"))
+    wh.overwrite(legacy, "gold", "nd_meta")
     val e = intercept[IllegalStateException] {
       Dedup.nearDedupIncrementPairs(batch, "doc_id", "text",
         wh, "gold", "nd", threshold = 0.5).collect()

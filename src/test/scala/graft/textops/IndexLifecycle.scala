@@ -1,17 +1,18 @@
 package graft.textops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 import org.scalatest.Assertions
 import org.apache.spark.JobCounting
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
-import graft.etl.{TestSessions, Warehouse}
+import graft.etl.{TestSessions, Warehouse, WarehouseTestKit}
 import graft.etl.TestSessions.spark.implicits._
 import CurationStream.{DedupFamily, ExactNgramFamily, MinHashFamily}
 
-/** Lifecycle behaviour both standing-index families share — resume of a
-  * crashed group promotion, the ratio-triggered fold, one ingest epoch —
+/** Lifecycle behaviour both standing-index families share — compaction
+  * after a crashed group commit, the ratio-triggered fold, one ingest
+  * epoch —
   * written once and run for each family by its spec
   * ([[IncrementalDedupSpec]] for MinHash, [[PostingIndexSpec]] for the
   * exact family) over that spec's corpus and batch. The index of a
@@ -52,9 +53,10 @@ object IndexLifecycle extends Assertions {
   /** Every row of every table of the family's group, columns sorted by
     * name and arrays sorted — equal for logically identical indexes
     * whatever their file split. */
-  private def snapshot(family: DedupFamily, wh: Warehouse) =
-    family.tables(family.tag).map { t =>
-      val df = spark.read.parquet(wh.path("gold", t))
+  private def snapshot(family: DedupFamily, wh: Warehouse) = {
+    val snap = wh.snapshot("gold", family.tag)
+    snap.tables.keys.toSeq.sorted.map { t =>
+      val df = snap.read(spark, t)
       df.select(df.columns.sorted.toSeq.map { c =>
           df.schema(c).dataType match {
             case _: ArrayType => sort_array(col(c)).as(c)
@@ -63,38 +65,34 @@ object IndexLifecycle extends Assertions {
         }: _*)
         .collect().map(_.toString).sorted.toSeq
     }
+  }
 
-  /** A one-shot maintenance call writes into the same `._tmp`
-    * namespace the staged-group protocol uses. Without resuming the
-    * pending group first, compaction after a mid-promotion crash
-    * overwrote the staged tables and the later marker-triggered resume
-    * promoted a half-group — a silently mixed index. */
-  def crashedPromotionCompaction(family: DedupFamily, corpus: DataFrame,
-                                 batch: DataFrame): Unit = {
+  /** A rebuild over corpus ∪ batch crashes after writing every table's
+    * files and its manifest, before linking it. A one-shot compaction
+    * after the crash must rewrite the LAST COMMITTED group — never the
+    * crashed rebuild's tables, never a mix — and its own commit must
+    * succeed; vacuum then reclaims everything the crash left. */
+  def crashedCommitCompaction(family: DedupFamily, corpus: DataFrame,
+                              batch: DataFrame): Unit = {
     val t = family.tag
-    val wh = freshWh("cresume")
-    build(family, wh, corpus) // the OLD index
-    val whNew = freshWh("cresumenew")
-    build(family, whNew, corpus.unionByName(batch))
-    val tables = family.tables(t)
-    tables.foreach { tb =>
-      Files.move(Paths.get(whNew.path("gold", tb)),
-        Paths.get(wh.path("gold", tb + "._tmp")),
-        StandardCopyOption.ATOMIC_MOVE)
-    }
-    // the crash: marker down, only the first two tables swapped
-    Files.createFile(Paths.get(wh.path("gold", s"$t._pending")))
-    tables.take(2).foreach(wh.promoteStaged("gold", _))
+    val wh = freshWh("ccrash")
+    build(family, wh, corpus)
+    val committed = snapshot(family, wh)
+    val log = WarehouseTestKit.log(wh, "gold", t)
+    val v = wh.snapshot("gold", t).version
+    build(family, wh, corpus.unionByName(batch))
+    Files.move(log.resolve(s"${v + 1}.json"), log.resolve(".crashed.tmp"))
+    assert(snapshot(family, wh) === committed)
     // the crash replay path is a DIRECT compaction call, not a probe
     Dedup.indexCompact(family, spark, wh, "gold", t)
-    assert(!Files.exists(Paths.get(wh.path("gold", s"$t._pending"))))
-    tables.foreach { tb =>
-      assert(!Files.exists(Paths.get(wh.path("gold", tb + "._tmp"))),
-        s"stranded tmp for $tb")
-    }
-    // logically identical to a clean from-scratch rebuild over the union
-    val whCtl = freshWh("cresumectl")
-    build(family, whCtl, corpus.unionByName(batch))
+    assert(wh.snapshot("gold", t).version === v + 1)
+    assert(snapshot(family, wh) === committed)
+    wh.vacuum(WarehouseTestKit.afterRetention)
+    assert(!Files.exists(log.resolve(".crashed.tmp")))
+    assert(WarehouseTestKit.unreferenced(wh, "gold", t).isEmpty)
+    // logically identical to a clean from-scratch build of the corpus
+    val whCtl = freshWh("ccrashctl")
+    build(family, whCtl, corpus)
     assert(snapshot(family, wh) === snapshot(family, whCtl))
   }
 
@@ -107,14 +105,9 @@ object IndexLifecycle extends Assertions {
     val t = family.tag
     val wh = freshWh("ratio")
     build(family, wh, corpus)
-    def epochDirs: Set[String] = {
-      val root = new java.io.File(wh.path("gold", t + family.keyTable))
-      Option(root.listFiles()).getOrElse(Array.empty)
-        .filter(_.isDirectory)
-        .flatMap(b => Option(b.listFiles()).getOrElse(Array.empty))
-        .map(_.getName).filter(_.startsWith("epoch="))
-        .filterNot(_ == "epoch=-1").toSet
-    }
+    def epochDirs: Set[String] =
+      WarehouseTestKit.partitionValues(wh, "gold", t + family.keyTable, "epoch")
+        .map("epoch=" + _) - "epoch=-1"
     // a tiny committed epoch: delta ≪ ratio × base → NOT due, no fold
     Dedup.indexAppend(family,
       Seq((900L, "one small appended document about nothing in particular"))

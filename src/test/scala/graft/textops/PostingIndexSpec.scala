@@ -2,7 +2,7 @@ package graft.textops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.etl.TestSessions
+import graft.etl.{TestSessions, WarehouseTestKit}
 import CurationStream.ExactNgramFamily
 
 /** Incremental exact-similarity dedup (the prefix-filter family) against
@@ -39,10 +39,20 @@ class PostingIndexSpec extends AnyFunSuite {
   private lazy val batch = batchRows.toDF("doc_id", "text")
 
   /** Spark jobs of one ingest epoch of `batch` against the index over
-    * `corpus`, in the test session: 69 with the index meta read once,
-    * in one action; 73 when each epoch read it 2 times at 3 jobs a
-    * read. */
-  private val IngestEpochJobs = 69
+    * `corpus`, in the test session: 65 with every index read planned
+    * from its manifest; 69 when each read inferred its schema from a
+    * Parquet footer; 73 when each epoch read the meta 2 times at 3 jobs
+    * a read. */
+  private val IngestEpochJobs = 65
+
+  /** Spark jobs of one [[Dedup.ngramRebuildIfStale]] decision on an
+    * in-distribution batch (staleness, then the append), in the test
+    * session: 25 with the staleness row computed while the batch's
+    * shingles are pinned and every index read planned from its
+    * manifest; 29 when the `_meta` and `_freq` reads inferred schemas
+    * from Parquet footers and the staleness aggregate re-shingled the
+    * batch after releasing it. */
+  private val RebuildIfStaleJobs = 25
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
     java.nio.file.Files.createTempDirectory(s"graft_ngidx_$tag").toString)
@@ -191,6 +201,16 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(s2.getDouble(2) === 0.0)
   }
 
+  test("one rebuild-if-stale decision: job count pinned") {
+    val wh = freshWh("stalejobs")
+    build(wh)
+    val inDist = Seq((400L, corpusRows.head._2)).toDF("doc_id", "text")
+    val (stale, jobs) = org.apache.spark.JobCounting.countJobs(spark.sparkContext)(
+      Dedup.ngramRebuildIfStale(corpus, inDist, "doc_id", "text", wh, "gold", "ng"))
+    assert(!stale)
+    assert(jobs <= RebuildIfStaleJobs, s"jobs: $jobs")
+  }
+
   test("batch keep: ngramJaccardKeep == transitive closure of the exact pairs") {
     // corpus alone: exact dups {0,1} collapse to 0 (size 2), near dups
     // {2,3} to 2 (size 2), 4 and 5 are singletons
@@ -209,13 +229,13 @@ class PostingIndexSpec extends AnyFunSuite {
   // one observable index/sink snapshot: kept rows, posting rows, and
   // set rows with arrays sorted (collect_list order is run-dependent)
   private def ingestState(wh: graft.etl.Warehouse) = {
-    val kept = spark.read.parquet(wh.path("gold", "ng_kept"))
+    val kept = wh.read(spark, "gold", "ng_kept")
       .select(col("doc_id"), col("epoch").cast("long"))
       .as[(Long, Long)].collect().toSet
-    val post = spark.read.parquet(wh.path("gold", "ng_post"))
+    val post = wh.read(spark, "gold", "ng_post")
       .select(col("doc_id"), col("sh"), col("__pos"), col("__n"))
       .as[(Long, Long, Int, Int)].collect().toSeq.sorted
-    val sets = spark.read.parquet(wh.path("gold", "ng_sets"))
+    val sets = wh.read(spark, "gold", "ng_sets")
       .select(col("doc_id"), sort_array(col("set")), col("n"))
       .as[(Long, Seq[Long], Int)].collect().toSeq.sortBy(_._1)
     (kept, post, sets)
@@ -284,7 +304,7 @@ class PostingIndexSpec extends AnyFunSuite {
       (203L, "entirely separate subject matter appears in the second micro batch"))
     q.processAllAvailable()
     q.stop()
-    val kept = spark.read.parquet(wh.path("gold", "ng_kept"))
+    val kept = wh.read(spark, "gold", "ng_kept")
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(201L, 203L))
   }
@@ -292,15 +312,8 @@ class PostingIndexSpec extends AnyFunSuite {
   test("auto-compaction cadence: files bounded across epochs, probes identical") {
     val wh = freshWh("cadence")
     build(wh)
-    def nFiles = {
-      def cnt(p: String) = {
-        def walk(f: java.io.File): Int =
-          if (f.isDirectory) f.listFiles().map(walk).sum
-          else if (f.getName.endsWith(".parquet")) 1 else 0
-        val d = new java.io.File(p); if (d.exists) walk(d) else 0
-      }
-      cnt(wh.path("gold", "ng_post")) + cnt(wh.path("gold", "ng_sets"))
-    }
+    def nFiles = Seq("ng_post", "ng_sets")
+      .map(WarehouseTestKit.files(wh, "gold", _).size).sum
     val counts = (0 to 5).map { e =>
       val b = Seq((400L + e,
         s"novel cadence document number $e with its own distinct wording"))
@@ -309,7 +322,7 @@ class PostingIndexSpec extends AnyFunSuite {
         wh, "gold", "ng", threshold = 0.5, compactEvery = 2)
       nFiles
     }
-    val epochs = spark.read.parquet(wh.path("gold", "ng_post"))
+    val epochs = wh.read(spark, "gold", "ng_post")
       .select(col("epoch").cast("long")).distinct().as[Long].collect().toSet
     assert(epochs.subsetOf(Set(-1L, 4L, 5L)))
     assert(counts(4) < counts(3), s"file counts per epoch: $counts")
@@ -342,12 +355,10 @@ class PostingIndexSpec extends AnyFunSuite {
     // kept each doc.
     val wh = freshWh("keptfold")
     build(wh)
-    def keptDirs: Set[String] = {
-      val d = new java.io.File(wh.path("gold", "ng_kept"))
-      if (!d.exists) Set.empty
-      else d.listFiles().filter(f => f.isDirectory &&
-        f.getName.startsWith("pepoch=")).map(_.getName).toSet
-    }
+    def keptDirs: Set[String] =
+      if (!wh.exists("gold", "ng_kept")) Set.empty
+      else WarehouseTestKit.partitionValues(wh, "gold", "ng_kept", "pepoch")
+        .map("pepoch=" + _)
     def mkB(e: Int) = Seq((900L + e,
       s"kept fold document number $e with wholly distinct content tokens"))
       .toDF("doc_id", "text")
@@ -370,13 +381,13 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(keptDirs === Set("pepoch=-1", "pepoch=9", "pepoch=10", "pepoch=11"))
     // folding lost NO observability: every epoch's kept doc still
     // carries its epoch in the data column
-    val byEpoch = spark.read.parquet(wh.path("gold", "ng_kept"))
+    val byEpoch = wh.read(spark, "gold", "ng_kept")
       .select(col("doc_id"), col("epoch").cast("long"))
       .as[(Long, Long)].collect().toSet
     assert(byEpoch === (0 to 11).map(e => (900L + e, e.toLong)).toSet)
     // and the statistics-rebuild source (epoch =!= current) still sees
     // every committed survivor: 12 kept docs, none from a future epoch
-    val src = spark.read.parquet(wh.path("gold", "ng_kept"))
+    val src = wh.read(spark, "gold", "ng_kept")
       .filter(col("epoch") =!= lit(12L)).count()
     assert(src === 12L)
   }
@@ -411,7 +422,7 @@ class PostingIndexSpec extends AnyFunSuite {
       wh, "gold", "ng", threshold = 0.5,
       rebuildCheckEvery = 1, unseenThreshold = 0.5,
       baseCorpus = Some(corpus))
-    val kept = spark.read.parquet(wh.path("gold", "ng_kept"))
+    val kept = wh.read(spark, "gold", "ng_kept")
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(600L))
     // statistics re-froze: the same drifted batch now reads in-distribution
@@ -438,75 +449,65 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(viaCtl.exists { case (a, b, _) => a == 600L && b == 610L })
   }
 
-  test("kill between rebuild table swaps: reader resume yields the all-new index") {
+  test("kill before a rebuild's group commit: readers see the old index") {
     // the r11-ADVICE crash window: the (re)build used to overwrite
     // _meta/_freq/_post/_sets as four sequential non-atomic writes — a
     // crash between _freq and _post left a new dictionary over
     // old-ordered postings, and the replayed staleness check read the
     // NEW _freq, measured low, and skipped the rebuild. Now the four
-    // stage to ._tmp and promote behind a pending marker; readers
-    // finish a crashed promotion before trusting the group.
+    // commit as one group version: a rebuild killed after writing every
+    // table's files and its manifest, but before linking it, changed
+    // nothing a reader sees.
     val wh = freshWh("killswap")
     build(wh) // the OLD index (over `corpus`)
-    // the new index content = a rebuild over corpus ∪ batch, staged by
-    // hand from a clean scratch build (what ngramIndexPersist stages)
-    val whNew = freshWh("killswapnew")
-    Dedup.ngramIndexPersist(corpus.unionByName(batch), "doc_id", "text",
-      whNew, "gold", "ng", shingleK = 3, maxShingleFreq = 1000,
-      nPostBuckets = 8, nSetBuckets = 4)
-    val tables = Seq("ng_meta", "ng_freq", "ng_post", "ng_sets")
-    tables.foreach { t =>
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(whNew.path("gold", t)),
-        java.nio.file.Paths.get(wh.path("gold", t + "._tmp")),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    // simulate the crash mid-promotion: marker down, only the first two
-    // tables swapped — the EXACT mixed state the defect produced
-    // (new dictionary `_freq`, old postings `_post`)
-    java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(wh.path("gold", "ng._pending")))
-    wh.promoteStaged("gold", "ng_meta")
-    wh.promoteStaged("gold", "ng_freq")
-    // replay: the staleness check (any probe would do — all read meta
-    // first) resumes the promotion before measuring
-    val probe = Seq((700L, corpusRows.head._2)).toDF("doc_id", "text")
-    val stale = Dedup.ngramIndexStaleness(probe, "doc_id", "text",
-      wh, "gold", "ng").head()
-    assert(stale.getDouble(2) === 0.0)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(wh.path("gold", "ng._pending"))))
-    tables.foreach { t =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(wh.path("gold", t + "._tmp"))),
-        s"stranded tmp for $t")
-    }
-    // the resumed index is EXACTLY a clean rebuild over corpus ∪ batch:
-    // logically identical tables vs a third from-scratch control build
-    val whCtl = freshWh("killswapctl")
-    Dedup.ngramIndexPersist(corpus.unionByName(batch), "doc_id", "text",
-      whCtl, "gold", "ng", shingleK = 3, maxShingleFreq = 1000,
-      nPostBuckets = 8, nSetBuckets = 4)
+    val log = WarehouseTestKit.log(wh, "gold", "ng")
+    val v = wh.snapshot("gold", "ng").version
+    def rebuild(w: graft.etl.Warehouse) =
+      Dedup.ngramIndexPersist(corpus.unionByName(batch), "doc_id", "text",
+        w, "gold", "ng", shingleK = 3, maxShingleFreq = 1000,
+        nPostBuckets = 8, nSetBuckets = 4)
+    rebuild(wh)
+    // the kill: the new version's manifest exists only as a temp file
+    java.nio.file.Files.move(log.resolve(s"${v + 1}.json"),
+      log.resolve(".killed.tmp"))
     def snap(w: graft.etl.Warehouse) = (
-      spark.read.parquet(w.path("gold", "ng_meta")).collect().toSeq,
-      spark.read.parquet(w.path("gold", "ng_freq"))
+      w.read(spark, "gold", "ng_meta").collect().toSeq,
+      w.read(spark, "gold", "ng_freq")
         .select("sh", "freq").as[(Long, Int)].collect().toSeq.sorted,
-      spark.read.parquet(w.path("gold", "ng_post"))
+      w.read(spark, "gold", "ng_post")
         .select(col("doc_id"), col("sh"), col("__pos"), col("__n"))
         .as[(Long, Long, Int, Int)].collect().toSeq.sorted,
-      spark.read.parquet(w.path("gold", "ng_sets"))
+      w.read(spark, "gold", "ng_sets")
         .select(col("doc_id"), sort_array(col("set")), col("n"))
         .as[(Long, Seq[Long], Int)].collect().toSeq.sortBy(_._1))
+    // every table reads as the old index: a from-scratch control over
+    // `corpus` alone
+    val whOld = freshWh("killswapold")
+    build(whOld)
+    assert(snap(wh) === snap(whOld))
+    val probe = Seq((700L, corpusRows.head._2)).toDF("doc_id", "text")
+    assert(Dedup.ngramIndexStaleness(probe, "doc_id", "text",
+      wh, "gold", "ng").head().getDouble(2) === 0.0)
+    // the replayed rebuild commits, and its index is EXACTLY a clean
+    // rebuild over corpus ∪ batch
+    rebuild(wh)
+    val whCtl = freshWh("killswapctl")
+    rebuild(whCtl)
     assert(snap(wh) === snap(whCtl))
-    // and a probe over the resumed index behaves like the control's
+    // and a probe over it behaves like the control's
     val b2 = Seq((800L, batchRows.find(_._1 == 102L).get._2))
       .toDF("doc_id", "text")
-    val viaResumed = pairSet(Dedup.ngramJaccardIncrementPairs(b2, "doc_id",
+    val viaReplayed = pairSet(Dedup.ngramJaccardIncrementPairs(b2, "doc_id",
       "text", wh, "gold", "ng", threshold = 0.5), ("id_a", "id_b", "jaccard"))
     val viaCtl = pairSet(Dedup.ngramJaccardIncrementPairs(b2, "doc_id",
       "text", whCtl, "gold", "ng", threshold = 0.5),
       ("id_a", "id_b", "jaccard"))
-    assert(viaResumed === viaCtl && viaResumed.nonEmpty)
+    assert(viaReplayed === viaCtl && viaReplayed.nonEmpty)
+    // vacuum reclaims the killed rebuild's files and temp manifest
+    wh.vacuum(WarehouseTestKit.afterRetention)
+    assert(WarehouseTestKit.unreferenced(wh, "gold", "ng").isEmpty)
+    assert(!java.nio.file.Files.exists(log.resolve(".killed.tmp")))
+    assert(snap(wh) === snap(whCtl))
   }
 
   test("jaccard-only floor layout: probes at t >= floor identical, below-floor and containment rejected") {
@@ -522,8 +523,8 @@ class PostingIndexSpec extends AnyFunSuite {
     val whFull = freshWh("floorfull")
     build(whFull)
     // the floor stored strictly fewer posting rows
-    val nFloor = spark.read.parquet(whFloor.path("gold", "ng_post")).count()
-    val nFull = spark.read.parquet(whFull.path("gold", "ng_post")).count()
+    val nFloor = whFloor.read(spark, "gold", "ng_post").count()
+    val nFull = whFull.read(spark, "gold", "ng_post").count()
     assert(nFloor < nFull, s"floor=$nFloor full=$nFull")
     // at the floor threshold: pairs identical to the full layout
     def probe(w: graft.etl.Warehouse, t: Double) =
@@ -569,12 +570,12 @@ class PostingIndexSpec extends AnyFunSuite {
     val whA = freshWh("textsfull")
     build(whA)
     // the stored table holds text, not set arrays
-    val cols = spark.read.parquet(whT.path("gold", "ng_sets")).columns.toSet
+    val cols = whT.read(spark, "gold", "ng_sets").columns.toSet
     assert(cols.contains("text") && !cols.contains("set"))
     // row membership identical: exactly the docs with >=1 capped shingle
-    val idsT = spark.read.parquet(whT.path("gold", "ng_sets"))
+    val idsT = whT.read(spark, "gold", "ng_sets")
       .select("doc_id").as[Long].collect().toSet
-    val idsA = spark.read.parquet(whA.path("gold", "ng_sets"))
+    val idsA = whA.read(spark, "gold", "ng_sets")
       .select("doc_id").as[Long].collect().toSet
     assert(idsT === idsA)
     def jac(w: graft.etl.Warehouse, b: org.apache.spark.sql.DataFrame) =
@@ -590,7 +591,7 @@ class PostingIndexSpec extends AnyFunSuite {
       epoch = 1L)
     Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whA, "gold", "ng",
       epoch = 1L)
-    val colsApp = spark.read.parquet(whT.path("gold", "ng_sets")).columns.toSet
+    val colsApp = whT.read(spark, "gold", "ng_sets").columns.toSet
     assert(colsApp.contains("text") && !colsApp.contains("set"))
     val b2 = Seq((300L, batchRows.find(_._1 == 102L).get._2),
       (301L, corpusRows.find(_._1 == 2L).get._2))
@@ -603,14 +604,8 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(con(whT, b2) === con(whA, b2))
     // and the compacted texts files stayed zstd (codec survives the
     // rewrite — a snappy compaction would silently grow the table)
-    val aFile = {
-      val w = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(whT.path("gold", "ng_sets")))
-      try w.filter(_.toString.endsWith(".parquet")).findFirst().get()
-      finally w.close()
-    }
-    assert(aFile.toString.contains(".zstd.") ||
-      aFile.getFileName.toString.contains("zstd"))
+    assert(WarehouseTestKit.files(whT, "gold", "ng_sets")
+      .forall(_.path.contains(".zstd.")))
   }
 
   test("texts _sets layout composes with the jaccard-only floor") {
@@ -639,7 +634,7 @@ class PostingIndexSpec extends AnyFunSuite {
     // setsAsTexts re-froze a texts index as arrays on the first
     // rebuild, silently reverting the footprint win (r14 ADVICE).
     def setsCols(wh: graft.etl.Warehouse) =
-      spark.read.parquet(wh.path("gold", "ng_sets")).columns.toSet
+      wh.read(spark, "gold", "ng_sets").columns.toSet
     def assertTexts(wh: graft.etl.Warehouse, where: String) = {
       val c = setsCols(wh)
       assert(c.contains("text") && !c.contains("set"),
@@ -721,7 +716,7 @@ class PostingIndexSpec extends AnyFunSuite {
     // column) — what any standing index built before v4 looks like
     val legacy = Seq((3, 1000, 8, 4))
       .toDF("shingle_k", "max_freq", "n_post_buckets", "n_set_buckets")
-    legacy.write.mode("overwrite").parquet(wh.path("gold", "ng_meta"))
+    wh.overwrite(legacy, "gold", "ng_meta")
     val e = intercept[IllegalStateException] {
       Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
         wh, "gold", "ng", threshold = 0.5).collect()
@@ -743,8 +738,8 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(inc.exists { case (a, b, j) => a == 4L && b == 101L && j >= 0.5 })
   }
 
-  test("compaction after a crashed group promotion resumes it, not clobbers the staged tables") {
-    IndexLifecycle.crashedPromotionCompaction(ExactNgramFamily, corpus, batch)
+  test("compaction after a crashed group commit sees the last version") {
+    IndexLifecycle.crashedCommitCompaction(ExactNgramFamily, corpus, batch)
   }
 
   test("ratio-triggered compaction folds only when the delta earns its rewrite") {
@@ -762,13 +757,11 @@ class PostingIndexSpec extends AnyFunSuite {
     // corpus-sized no-op added to every plain index compaction.
     val wh = freshWh("nofold")
     build(wh)
-    Seq((1L, 0L, 0L)).toDF("doc_id", "epoch", "pepoch")
-      .write.partitionBy("pepoch").parquet(wh.path("gold", "ng_kept"))
-    val before = new java.io.File(wh.path("gold", "ng_kept"))
-      .listFiles().map(f => f.getName -> f.lastModified()).toMap
+    wh.overwritePartitioned(Seq((1L, 0L, 0L)).toDF("doc_id", "epoch", "pepoch"),
+      "gold", "ng_kept", Seq("pepoch"))
+    val before = wh.snapshot("gold", "ng_kept")
     Dedup.indexCompact(ExactNgramFamily, spark, wh, "gold", "ng")
-    val after = new java.io.File(wh.path("gold", "ng_kept"))
-      .listFiles().map(f => f.getName -> f.lastModified()).toMap
-    assert(after === before, "kept sink rewritten by a fold-less compaction")
+    assert(wh.snapshot("gold", "ng_kept") === before,
+      "kept sink rewritten by a fold-less compaction")
   }
 }
