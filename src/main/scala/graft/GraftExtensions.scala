@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{FloatVecCosine, FloatVecL2, Md5Long, ZOrderKey}
+import graft.functions.{FloatVecCosine, FloatVecL2, JaroWinkler, Md5Long, ZOrderKey}
 
-/** Session extension registering the engine's native functions, so any
-  * session — including spark-sql / JDBC entry points — gets them via
+/** The one way SQL names the engine's native functions. [[Sessions.build]]
+  * installs it on every session the repo builds; any other session —
+  * spark-sql / JDBC entry points included — gets the same names via
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (Programmatic sessions can instead call
-  * `functions.VectorExpressions.register(spark)`.)
+  * DataFrame code uses the Column builders in `graft.functions` instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -31,18 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("zorder_key"),
       new ExpressionInfo(classOf[ZOrderKey].getName, "zorder_key"),
       exprs => ZOrderKey(exprs(0), exprs(1))))
-    // algebraic prefilter for fuzzy-match predicates; runs inside the
-    // operator-optimization fixpoint so the injected guard participates
-    // in normal predicate pushdown
-    e.injectOptimizerRule(_ => graft.plans.LevenshteinPrefilter)
-    e.injectOptimizerRule(_ => graft.plans.JaroWinklerPrefilter)
     e.injectFunction((
       new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[graft.functions.JaroWinkler].getName,
-        "jaro_winkler"),
-      exprs => graft.functions.JaroWinkler(exprs(0), exprs(1))))
-    // whole-operator extension: plans TopKPerGroupPlan into the
-    // partial/final bounded-heap execs (plans/TopKPerGroup.scala)
-    e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
+      exprs => JaroWinkler(exprs(0), exprs(1))))
   }
 }

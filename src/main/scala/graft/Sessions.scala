@@ -2,12 +2,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one way the engine builds a SparkSession. Every main — Bench,
-  * CalibRef, Verify, Inspect, ScaleProbe, RunPipeline and the
-  * cross-process warehouse reader — and the test session go through
-  * [[build]], so a plan captured by one tool is the plan the others run.
+  * CalibRef, Verify, Inspect, RunPipeline and the cross-process
+  * warehouse reader — and the test session go through [[build]], so a
+  * plan captured by one tool is the plan the others run.
   *
-  * `GraftExtensions` is deliberately NOT installed here: its optimizer
-  * rules and top-k strategy would change every Bench/Verify plan. */
+  * [[build]] installs [[GraftExtensions]], the one path by which SQL
+  * names the native functions (`vec_cosine`, `vec_l2`, `md5_long`,
+  * `zorder_key`, `jaro_winkler`). It adds no optimizer rule or planner
+  * strategy: the top-k strategy installs itself on whatever session runs
+  * `graft.plans.TopKPerGroup.topK`. */
 object Sessions {
   /** The core count a main runs on: `SPARK_GRAFT_CPUS` if set, else the
     * caller's own default. */
@@ -30,6 +33,7 @@ object Sessions {
       // static conf, so it must be set before the first session).
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

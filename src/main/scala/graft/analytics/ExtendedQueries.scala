@@ -662,7 +662,7 @@ object ExtendedQueries {
     val o = t(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderpriority").as("pr"),
       col("o_totalprice").cast(DecimalType(18, 4)).as("price"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpo").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_dpo").toString
     o.write.partitionBy("pr").mode("overwrite").parquet(tmp)
     val patch = o.filter(col("pr") === "1-URGENT")
       .withColumn("price", (col("price") * 2).cast(DecimalType(18, 4)))
@@ -798,7 +798,7 @@ object ExtendedQueries {
   // ------------------------------------------------------------------
   private val s18Compaction: QFn = (s, dir) => {
     val src = t(s, dir, "customer")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact")
+    val tmp = org.apache.spark.ScratchDirs.create("graft_compact")
     val frag = s"$tmp/frag"; val compact = s"$tmp/compact"
     src.repartition(64).write.mode("overwrite").parquet(frag)
     s.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compact)
@@ -1344,7 +1344,7 @@ object ExtendedQueries {
   // table.
   // ------------------------------------------------------------------
   private val s19PermissiveJson: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonq").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_jsonq").toString
     t(s, dir, "documents")
       .select(when(col("doc_id") % 13 === 0, lit("{\"doc_id\":"))
         .otherwise(to_json(struct(col("doc_id"), col("lang"),
@@ -1851,7 +1851,7 @@ object ExtendedQueries {
       .when(col("o_orderstatus") === "P", lit("r3_pending_status"))
       .otherwise(lit(null).cast("string"))
     val routed = o.withColumn("rule", rule)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dq").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_dq").toString
     routed.filter(col("rule").isNotNull)
       .write.mode("overwrite").parquet(s"$tmp/quarantine")
     routed.filter(col("rule").isNull)
@@ -2091,7 +2091,7 @@ object ExtendedQueries {
     val o = t(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderdate"),
       col("o_totalprice").cast(DecimalType(18, 4)).as("price"))
-    val root = java.nio.file.Files.createTempDirectory("graft_tt")
+    val root = org.apache.spark.ScratchDirs.create("graft_tt")
     def commit(df: DataFrame, name: String): String = {
       val p = root.resolve(name)
       df.write.parquet(p.toString)
@@ -2796,11 +2796,10 @@ object ExtendedQueries {
   // (brand, first-word) block key with explicit repartition (the j10
   // scale shape: no full-side broadcast, no AQE single-partition
   // collapse), the provable length-ratio guard in front of the scorer
-  // (the same bound JaroWinklerPrefilter injects — written explicitly
-  // here so the driver session needs no extensions), threshold on the
-  // ROUNDED score, and the native partial/final top-k operator for the
-  // per-brand cut — k·partitions rows per brand cross the exchange, not
-  // every matching pair.
+  // (`StrSim.jaroWinklerLengthGuard`, whose scaladoc carries the proof),
+  // threshold on the ROUNDED score, and the native partial/final top-k
+  // operator for the per-brand cut — k·partitions rows per brand cross
+  // the exchange, not every matching pair.
   // ------------------------------------------------------------------
   private val j21JwTopPairs: QFn = (s, dir) => {
     val p = t(s, dir, "part").select(
@@ -2813,13 +2812,10 @@ object ExtendedQueries {
     val b = p.select(col("p_brand"), col("w1"), col("p_partkey").as("key_b"),
                      col("p_name").as("name_b"))
       .repartition(n, col("p_brand"), col("w1"))
-    val guard = least(length(col("name_a")), length(col("name_b")))
-      .cast("double") >=
-      lit(0.749999) * greatest(length(col("name_a")), length(col("name_b")))
-        .cast("double")
     val pairs = a.hint("shuffle_hash").join(b, Seq("p_brand", "w1"))
       .filter(col("key_a") < col("key_b"))
-      .filter(guard)
+      .filter(graft.functions.StrSim.jaroWinklerLengthGuard(
+        col("name_a"), col("name_b"), 0.95))
       .withColumn("jw", round(
         graft.functions.StrSim.jaro_winkler(col("name_a"), col("name_b")), 6))
       .filter(col("jw") >= 0.95)

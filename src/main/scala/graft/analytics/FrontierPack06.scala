@@ -1025,7 +1025,7 @@ object Frontier10Queries {
   // split directly from the source table.
   // ------------------------------------------------------------------
   private val s22CsvQuarantine: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csvq").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_csvq").toString
     t(s, dir, "orders")
       .select(when(col("o_orderkey") % 17 === 0,
         concat_ws(",", lit("XX"), lit("CORRUPT"), lit("notanumber")))

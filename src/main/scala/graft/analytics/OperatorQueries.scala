@@ -27,7 +27,7 @@ object OperatorQueries {
   // through a CSV file then aggregates (ref: proc_load_bronze.sql:36-42).
   private val s1CsvLoad: QFn = (s, dir) => {
     val src = t(s, dir, "nation")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_csv").toString
     src.write.mode("overwrite").option("header", "true").csv(tmp)
     s.read.schema(src.schema).option("header", "true").csv(tmp)
       .agg(count(lit(1)).as("n_rows"),
@@ -40,7 +40,7 @@ object OperatorQueries {
   // read back and aggregate (ref: proc_load_bronze.sql:34-42, silver :229).
   private val s2Sink: QFn = (s, dir) => {
     val src = t(s, dir, "region")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_sink").toString
     src.write.mode("overwrite").parquet(tmp)   // full refresh
     src.write.mode("append").parquet(tmp)      // incremental append
     s.read.parquet(tmp)
@@ -70,7 +70,7 @@ object OperatorQueries {
   // (proc_load_metadata_driven.sql:26-85): target pre-exists with a subset
   // schema; the copy selects exactly the intersection.
   private val s7MetaCopy: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_meta").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_meta").toString
     val wh = graft.etl.Warehouse(tmp)
     // declared target: two of nation's three columns
     wh.overwrite(t(s, dir, "nation").select("n_nationkey", "n_name")
@@ -400,7 +400,7 @@ object OperatorQueries {
     val src = t(s, dir, "events").select(
       col("event_id"), col("user_id"), col("event_type"), col("value"),
       expr("ts div 1000000000").as("sec"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_jsonl").toString
     src.write.mode("overwrite").json(tmp)
     s.read.schema(src.schema).json(tmp)
       .agg(count(lit(1)).as("n_rows"),
@@ -420,7 +420,7 @@ object OperatorQueries {
   // stores numerics losslessly, so the aggregate is the identity check.
   private val s15OrcSource: QFn = (s, dir) => {
     val src = t(s, dir, "orders")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_orc").toString
     src.write.mode("overwrite").orc(tmp)
     s.read.schema(src.schema).orc(tmp)
       .agg(count(lit(1)).as("n_rows"),
@@ -573,7 +573,7 @@ object OperatorQueries {
   // rewriting history per column add is off the table).
   private val s13SchemaEvo: QFn = (s, dir) => {
     val src = t(s, dir, "nation")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_evo").toString
     src.select("n_nationkey", "n_name").write.mode("append").parquet(tmp)
     src.write.mode("append").parquet(tmp)
     s.read.option("mergeSchema", "true").parquet(tmp)
@@ -1047,7 +1047,7 @@ object OperatorQueries {
   // oracle's exact COUNT/SUM over distinct orders fails on any dup or
   // dropped row, and the control-table watermark must equal max − 1d.
   private val iDeltaAppend: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_delta").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_delta").toString
     val wh = graft.etl.Warehouse(tmp)
     val wmCtl = graft.etl.Watermark(wh)
     val orders = t(s, dir, "orders")
@@ -1086,7 +1086,7 @@ object OperatorQueries {
   // nondeterministic part); everything else is oracled as literals +
   // table counts.
   private val iAuditLog: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_audit").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_audit").toString
     val wh = graft.etl.Warehouse(tmp)
     val audit = graft.etl.Audit(wh)
     val batch = audit.nextBatchId(s)
@@ -1858,7 +1858,7 @@ object OperatorQueries {
   // and counts pruned files). At 100 TB this is the difference between
   // reading 12 months and reading 84.
   private val s16Dpp: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_dpp").toString
     t(s, dir, "orders")
       .withColumn("order_month", date_format(col("o_orderdate"), "yyyy-MM"))
       .write.mode("overwrite").partitionBy("order_month").parquet(tmp)
@@ -1868,7 +1868,7 @@ object OperatorQueries {
     // runs, and DPP only fires on a surviving selective Filter
     val months = (1992 to 1998).flatMap(y =>
       (1 to 12).map(m => (f"$y-$m%02d", y)))
-    val dimTmp = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimTmp = org.apache.spark.ScratchDirs.create("graft_dpp_dim").toString
     s.createDataFrame(months).toDF("order_month", "order_year")
       .write.mode("overwrite").parquet(dimTmp)
     val dim = s.read.parquet(dimTmp)

@@ -44,7 +44,7 @@ object StreamingQueries {
   private val staged = new ConcurrentHashMap[String, String]()
   private def eventsDir(sfDir: String): String =
     staged.computeIfAbsent(sfDir, { d =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_st_events")
+      val tmp = org.apache.spark.ScratchDirs.create("graft_st_events")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$d/events.parquet"),
         tmp.resolve("events.parquet"))
@@ -155,8 +155,7 @@ object StreamingQueries {
   // equality proves the sink holds exactly the input — no loss, no
   // duplication — which is the whole exactly-once claim.
   private val stExactlyOnce: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_st_sink").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_st_sink").toString
     val ev = EventStream.readEvents(s, eventsDir(dir), maxFilesPerTrigger = 1)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     EventStream.sinkExactlyOnce(ev, s"$tmp/data", s"$tmp/ckpt")
@@ -184,7 +183,7 @@ object StreamingQueries {
   // with the plain events table. State stays bounded by the horizon —
   // the 100-TB claim for an unbounded replay-y stream.
   private val stDedupStream: QFn = (s, dir) => {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_st_dup")
+    val tmp = org.apache.spark.ScratchDirs.create("graft_st_dup")
     Seq("a", "b").foreach { tag =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/events.parquet"),
@@ -268,7 +267,7 @@ object StreamingQueries {
     val b = e.filter(col("ts") >= splitAUs * 1000 &&
                      col("ts") < splitBUs * 1000)
     val c = e.filter(col("ts") >= splitBUs * 1000 || day2)
-    val root = java.nio.file.Files.createTempDirectory("graft_late")
+    val root = org.apache.spark.ScratchDirs.create("graft_late")
     def writeOne(df: org.apache.spark.sql.DataFrame, name: String,
                  mtime: Long): Unit = {
       val tmp = root.resolve(name + "_stage")
@@ -483,7 +482,7 @@ object StreamingQueries {
   private def stageUpdFeed(s: SparkSession, dir: String): String =
     updStaged.computeIfAbsent(dir, { d =>
       val e = graft.Tables.load(s, d, "events")
-      val root = java.nio.file.Files.createTempDirectory("graft_upd")
+      val root = org.apache.spark.ScratchDirs.create("graft_upd")
       def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
         val tmp = root.resolve(name + "_stage")
         df.coalesce(1).write.parquet(tmp.toString)

@@ -60,9 +60,4 @@ object HashExpressions {
   /** Column API: native md5-derived 64-bit hash. */
   def md5_long(c: Column): Column =
     ColumnBridge.column(Md5Long(ColumnBridge.expression(c)))
-
-  /** Register for SQL entry points on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_long", exprs => Md5Long(exprs(0)), "scala_udf")
 }

@@ -104,8 +104,23 @@ object StrSim {
     ColumnBridge.column(JaroWinkler(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Register for SQL entry points on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinkler(exprs(0), exprs(1)), "scala_udf")
+  /** The length-ratio condition every pair with
+    * `jaro_winkler(a, b) >= tau` meets:
+    * `least(len(a), len(b)) >= (5·tau − 4 − ε) · greatest(len(a), len(b))`.
+    * Put in front of the scorer, it skips the O(|a|·|b|) match-window
+    * scan for most candidates of a blocked fuzzy join.
+    *
+    * The bound: Jaro counts m ≤ min(l1, l2) matches, so
+    * jaro ≤ (m/l1 + m/l2 + 1)/3 ≤ (1 + min/max + 1)/3, and the Winkler
+    * boost is capped by jw ≤ 0.6·jaro + 0.4 (prefix ≤ 4, weight 0.1).
+    * Chaining: jw ≥ tau forces min/max ≥ 5·tau − 4; for tau ≤ 0.8 the
+    * guard is vacuous. The ε = 1e-6 slack absorbs double rounding in the
+    * constant and the `round(jw, 6) >= tau` form (which implies raw
+    * jw ≥ tau − 5e-7), so the guard never drops a qualifying pair. Like
+    * the scorer, it is exact for ASCII, where characters are bytes. */
+  def jaroWinklerLengthGuard(a: Column, b: Column, tau: Double): Column = {
+    import org.apache.spark.sql.functions.{greatest, least, length, lit}
+    least(length(a), length(b)).cast("double") >=
+      lit(5.0 * tau - 4.0 - 1e-6) * greatest(length(a), length(b)).cast("double")
+  }
 }

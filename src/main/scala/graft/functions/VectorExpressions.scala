@@ -162,12 +162,4 @@ object VectorExpressions {
   def vec_l2(a: Column, b: Column): Column =
     ColumnBridge.column(
       FloatVecL2(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Register the vector functions for SQL entry points on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => FloatVecCosine(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_l2", exprs => FloatVecL2(exprs(0), exprs(1)), "scala_udf")
-  }
 }

@@ -58,9 +58,4 @@ object ZOrderExpressions {
   def zorder_key(x: Column, y: Column): Column =
     ColumnBridge.column(ZOrderKey(
       ColumnBridge.expression(x), ColumnBridge.expression(y)))
-
-  /** Register for SQL entry points on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "zorder_key", exprs => ZOrderKey(exprs(0), exprs(1)), "scala_udf")
 }

@@ -24,15 +24,15 @@ import Dedup.PersistTracker
   * and index appends, so a replayed epoch overwrites its own funnel row
   * rather than double-counting.
   *
-  * Equivalence to the batch run (probe-checked by `ScaleProbe
-  * curationstream`): when near-dup clusters are cliques (replica-style
-  * duplication — the dominant crawl shape) and batches arrive in id
-  * order, the streamed kept set is IDENTICAL to the batch pipeline's
-  * (min-id rep per cluster): the earliest epoch keeps the cluster's
-  * min-id member and every later member dies against it. For
-  * non-clique chains the stream's corpus-wins policy can keep an extra
-  * member a full rebuild would collapse — the same stated divergence as
-  * [[Dedup.nearDedupIncrementKeep]].
+  * Equivalence to the batch run (probe-checked by the `curationstream`
+  * scale probe, which runs at commit 8822c58): when near-dup clusters
+  * are cliques (replica-style duplication — the dominant crawl shape)
+  * and batches arrive in id order, the streamed kept set is IDENTICAL
+  * to the batch pipeline's (min-id rep per cluster): the earliest epoch
+  * keeps the cluster's min-id member and every later member dies
+  * against it. For non-clique chains the stream's corpus-wins policy
+  * can keep an extra member a full rebuild would collapse — the same
+  * stated divergence as [[Dedup.nearDedupIncrementKeep]].
   */
 object CurationStream {
   import TextFunctions._

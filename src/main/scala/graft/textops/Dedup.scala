@@ -772,7 +772,7 @@ object Dedup {
     * `snap`: base = the `epoch=-1` files, delta = committed `epoch=N ≥ 0`
     * files other than `currentEpoch` (the in-flight epoch is never
     * foldable). Read from the manifest: no listing, no Spark job. */
-  private[graft] def epochFootprint(snap: Warehouse.Snapshot, table: String,
+  private def epochFootprint(snap: Warehouse.Snapshot, table: String,
       currentEpoch: Long): (Long, Long) = {
     val sizes = partitionSizes(snap, table, "epoch")
     (sizes.collect { case (-1L, b) => b }.sum,
@@ -1005,18 +1005,6 @@ object Dedup {
       textCol, setsAsTexts, nSetBuckets, wh, layer, table)
     sh.unpersist()
   }
-
-  /** Probe/diagnostic accessor: a frame's LSH band keys
-    * (doc_id, band, band_hash) under the given parameters — the
-    * long-horizon ScaleProbe lane joins these against the standing
-    * `_bands` table to MEASURE per-epoch candidate density (the r13
-    * verdict's open question: is the adversarial lane's per-epoch
-    * drift a per-candidate data cost or a kept-history tax). */
-  private[graft] def bandKeysFor(df: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, numHashes: Int,
-      bands: Int): DataFrame =
-    bandedKeys(minhashSignatures(df, idCol, textCol, shingleK, numHashes),
-      numHashes, bands, keepSig = false)
 
   private def pbKey(nBuckets: Int): Column =
     (col("band") * nBuckets + pmod(col("band_hash"), lit(nBuckets.toLong)))

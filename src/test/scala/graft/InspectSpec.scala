@@ -19,7 +19,7 @@ class InspectSpec extends AnyFunSuite {
     plan.replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
 
   test("writes the returned plan and every executed plan, and counts the jobs it ran") {
-    val dir = Files.createTempDirectory("graft_inspect").toString
+    val dir = org.apache.spark.ScratchDirs.create("graft_inspect").toString
     // a label an earlier operator left on this thread must not name the
     // entry's jobs
     spark.sparkContext.setJobDescription("stale label")

@@ -17,7 +17,7 @@ class StandingFingerprintSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshWh() = graft.etl.Warehouse(
-    java.nio.file.Files.createTempDirectory("graft_fp_spec").toString)
+    org.apache.spark.ScratchDirs.create("graft_fp_spec").toString)
 
   private def corpus(n: Int) =
     (0 until n).map(i => (i.toLong, s"document number $i body"))

@@ -9,7 +9,7 @@ class AuditWatermarkSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshWh() =
-    Warehouse(java.nio.file.Files.createTempDirectory("graft_awm").toString)
+    Warehouse(org.apache.spark.ScratchDirs.create("graft_awm").toString)
 
   test("watermark: default before first advance, max-wins after appends") {
     val wm = Watermark(freshWh())

@@ -41,8 +41,8 @@ class CrossProcessWarehouseSpec extends AnyFunSuite {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar"
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val log = Files.createTempFile("graft_xproc", ".log").toFile
-    val childDir = Files.createTempDirectory("graft_xproc_wd").toFile
+    val childDir = org.apache.spark.ScratchDirs.create("graft_xproc_wd").toFile
+    val log = new java.io.File(childDir, "child.log")
     val cmd = (Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g", "-cp", cp,
       "graft.etl.WarehouseReaderProcess", root, "gold", tableSpec,
       iters.toString) ++ group.toSeq)
@@ -86,7 +86,7 @@ class CrossProcessWarehouseSpec extends AnyFunSuite {
   }
 
   test("second-JVM reader across continuous swaps: consistent reads, no stranded swap state") {
-    val root = Files.createTempDirectory("graft_xproc").toString
+    val root = org.apache.spark.ScratchDirs.create("graft_xproc").toString
     val wh = Warehouse(root)
     wh.overwrite(versionDf(5L), "gold", "t")
     val (p, logText) = launchReader(root, "t", 200)
@@ -120,7 +120,7 @@ class CrossProcessWarehouseSpec extends AnyFunSuite {
     // appending epoch partitions continuously — the live ingest driver's
     // full write mix — and the child reads the whole group
     // (meta+bands+sets analog) from one pinned version per read.
-    val root = Files.createTempDirectory("graft_xprocg").toString
+    val root = org.apache.spark.ScratchDirs.create("graft_xprocg").toString
     val wh = Warehouse(root)
     val tables = Seq("g_m", "g_b", "g_s")
     def rebuild(g: Long): Unit =

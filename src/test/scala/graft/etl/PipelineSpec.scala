@@ -24,8 +24,8 @@ class PipelineSpec extends AnyFunSuite {
   private val IncrementalBatchJobs = 66
 
   private def freshRun(): Warehouse = {
-    val src = Files.createTempDirectory("graft_src")
-    val whRoot = Files.createTempDirectory("graft_wh").toString
+    val src = org.apache.spark.ScratchDirs.create("graft_src")
+    val whRoot = org.apache.spark.ScratchDirs.create("graft_wh").toString
     Fixtures.write(src)
     Pipeline.runAll(spark, PipelineConf(src.toString, whRoot))
     Warehouse(whRoot)
@@ -114,7 +114,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("incremental re-run: SCD1 update, SCD2 version, watermark delta") {
-    val src2 = Files.createTempDirectory("graft_src2")
+    val src2 = org.apache.spark.ScratchDirs.create("graft_src2")
     Fixtures.writeDelta(src2)
     val batch2 = Pipeline.runAll(spark, PipelineConf(src2.toString, wh.root))
     assert(batch2 >= 2)
@@ -217,14 +217,14 @@ class PipelineSpec extends AnyFunSuite {
         ((layer, table), r.getLong(2), actual)
       }
 
-  private lazy val wh2 = Warehouse(Files.createTempDirectory("graft_wh2").toString)
+  private lazy val wh2 = Warehouse(org.apache.spark.ScratchDirs.create("graft_wh2").toString)
 
   /** [[wh2]] loaded twice — the initial fixtures, then the incremental
     * delta — recording each batch's jobs, schema drift and logged row
     * counts. */
   private lazy val twoBatches: Seq[BatchRecord] =
     Seq(Fixtures.write _, Fixtures.writeDelta _).map { fixture =>
-      val src = Files.createTempDirectory("graft_src")
+      val src = org.apache.spark.ScratchDirs.create("graft_src")
       fixture(src)
       val wm = Watermark(wh2).read(spark, "crm_sales_details")
       val (batchId, jobs) = JobCounting.countJobs(spark.sparkContext) {
@@ -285,9 +285,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("concurrent layers load the same silver and gold tables as the steps run one at a time") {
-    val w = Warehouse(Files.createTempDirectory("graft_wh_seq").toString)
+    val w = Warehouse(org.apache.spark.ScratchDirs.create("graft_wh_seq").toString)
     val sequential = Seq(Fixtures.write _, Fixtures.writeDelta _).map { fixture =>
-      val src = Files.createTempDirectory("graft_src")
+      val src = org.apache.spark.ScratchDirs.create("graft_src")
       fixture(src)
       sequentialBatch(src, w)
       digests(w)
@@ -299,13 +299,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a failing silver step: siblings finish, gold never starts, runAll throws its error") {
-    val src = Files.createTempDirectory("graft_src_fail")
+    val src = org.apache.spark.ScratchDirs.create("graft_src_fail")
     Fixtures.write(src)
     // no products extract, so bronze keeps its crm_prd_info table, whose
     // one committed file is corrupt: the silver products step fails
     // reading it
     Files.delete(src.resolve("prd_info.csv"))
-    val w = Warehouse(Files.createTempDirectory("graft_wh_fail").toString)
+    val w = Warehouse(org.apache.spark.ScratchDirs.create("graft_wh_fail").toString)
     w.overwrite(spark.createDataFrame(java.util.List.of(
         org.apache.spark.sql.Row(1, "k", "n", 1, "l", "01-01-2020", null)),
       Schemas.crmPrdInfo), "bronze", "crm_prd_info")
@@ -356,7 +356,7 @@ class PipelineSpec extends AnyFunSuite {
     // their curation sinks
     import spark.implicits._
     wh2.overwrite(Seq(1, 2).toDF("x"), "scratch", "undeclared")
-    val wi = Warehouse(Files.createTempDirectory("graft_wh_index").toString)
+    val wi = Warehouse(org.apache.spark.ScratchDirs.create("graft_wh_index").toString)
     val docs = Seq(
       (0L, "the quick brown fox jumps over the lazy dog in the warm morning sun"),
       (1L, "pack my box with five dozen liquor jugs before the long trip south"),

@@ -17,7 +17,7 @@ class WarehouseSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshWh() = Warehouse(
-    Files.createTempDirectory("graft_whspec").toString)
+    org.apache.spark.ScratchDirs.create("graft_whspec").toString)
 
   /** `n` rows, each stamped with `v`. */
   private def stamped(v: Long, n: Int = 3) =

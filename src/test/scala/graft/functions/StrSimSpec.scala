@@ -7,7 +7,8 @@ import graft.etl.TestSessions
 
 /** The native JaroWinkler must reproduce the textbook values (and the
   * DuckDB empty-string quirk), agree between interpreted and codegen
-  * paths, and register as a SQL function.
+  * paths, resolve as a SQL function on the built session, and its length
+  * guard must never drop a qualifying pair.
   */
 class StrSimSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
@@ -52,11 +53,31 @@ class StrSimSpec extends AnyFunSuite {
   }
 
   test("SQL registration and null propagation") {
-    StrSim.register(spark)
     val r = spark.sql("SELECT jaro_winkler('MARTHA', 'MARHTA') AS s").head()
     assert(math.abs(r.getDouble(0) - 0.9611111111111111) < 1e-12)
     val n = Seq(("x")).toDF("a")
       .select(StrSim.jaro_winkler(col("a"), lit(null).cast("string")))
     assert(n.head().isNullAt(0))
+  }
+
+  test("guard never drops a qualifying pair on real part names") {
+    val parts = graft.Tables.load(spark, "/root/testdata/sf0.001", "part")
+      .select(col("p_partkey"), col("p_name"),
+        split(col("p_name"), " ").getItem(0).as("w1"))
+    val a = parts.select(col("w1"), col("p_partkey").as("ka"),
+                         col("p_name").as("na"))
+    val b = parts.select(col("w1"), col("p_partkey").as("kb"),
+                         col("p_name").as("nb"))
+    val joined = a.join(b, "w1").filter(col("ka") < col("kb"))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("ka").cast("long"), col("kb").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val unguarded = pairs(joined
+      .filter(round(StrSim.jaro_winkler(col("na"), col("nb")), 6) >= 0.92))
+    val guarded = pairs(joined
+      .filter(StrSim.jaroWinklerLengthGuard(col("na"), col("nb"), 0.92))
+      .filter(round(StrSim.jaro_winkler(col("na"), col("nb")), 6) >= 0.92))
+    assert(guarded === unguarded,
+      s"guard dropped ${(unguarded -- guarded).size} qualifying pairs")
   }
 }

@@ -7,7 +7,7 @@ import graft.textops.Similarity
 
 /** The native FloatVecCosine must agree bit-for-bit with the composable
   * HOF formula (same index-order double accumulation), survive codegen,
-  * and handle nulls/zero vectors/SQL registration.
+  * and handle nulls/zero vectors/SQL names on the built session.
   */
 class VectorExpressionsSpec extends AnyFunSuite {
   lazy val spark = TestSessions.spark
@@ -39,7 +39,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("registered SQL function works and identical vectors score 1.0") {
-    VectorExpressions.register(spark)
     vecs.createOrReplaceTempView("vec_t")
     val r = spark.sql("SELECT vec_cosine(a, a) AS s FROM vec_t").collect()
     assert(r.forall(row => math.abs(row.getDouble(0) - 1.0) < 1e-12))
@@ -54,8 +53,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
         val d = x.toDouble - y.toDouble; d * d }.sum)
       assert(r.getDouble(2) === ref) // same index-order accumulation
     }
-    // identical vectors → exactly 0; SQL registration path
-    VectorExpressions.register(spark)
+    // identical vectors → exactly 0; the SQL name the session resolves
     vecs.createOrReplaceTempView("vec_t2")
     val zeros = spark.sql("SELECT vec_l2(a, a) AS d FROM vec_t2").collect()
     assert(zeros.forall(_.getDouble(0) === 0.0))

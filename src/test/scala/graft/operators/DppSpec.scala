@@ -12,7 +12,7 @@ class DppSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("dim filter prunes fact partitions through the join") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp_spec").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_dpp_spec").toString
     (1 to 1000).map(i => (i.toLong, s"p${i % 10}"))
       .toDF("id", "part")
       .write.mode("overwrite").partitionBy("part").parquet(tmp)
@@ -20,7 +20,7 @@ class DppSpec extends AnyFunSuite {
     // the dim must come from a real source: a LocalRelation's filter is
     // constant-folded away before PartitionPruning runs, and without a
     // surviving selective Filter node the rule never fires
-    val dimPath = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimPath = org.apache.spark.ScratchDirs.create("graft_dpp_dim").toString
     (0 until 10).map(i => (s"p$i", i % 2)).toDF("part", "grp")
       .write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath)

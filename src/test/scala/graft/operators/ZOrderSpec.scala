@@ -50,7 +50,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("z-ordered files are rectangles; one-dimension filters prune") {
     val grid = for (x <- 0 until 64; y <- 0 until 64) yield (x, y)
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = org.apache.spark.ScratchDirs.create("graft_zorder").toString
     ZOrder.writeZOrdered(grid.toDF("x", "y"), col("x"), col("y"), dir,
       numFiles = 4)
     val stats = spark.read.parquet(dir)

@@ -12,7 +12,7 @@ class ReadersSpec extends AnyFunSuite {
   private lazy val src = Seq((1, "a", 1.5), (2, "b", 2.5)).toDF("id", "s", "v")
 
   test("csv/json/orc round-trip under the declared schema") {
-    val d = java.nio.file.Files.createTempDirectory("graft_src_fmt").toString
+    val d = org.apache.spark.ScratchDirs.create("graft_src_fmt").toString
     src.write.option("header", "true").csv(s"$d/c")
     src.write.json(s"$d/j")
     src.write.orc(s"$d/o")
@@ -29,7 +29,7 @@ class ReadersSpec extends AnyFunSuite {
   }
 
   test("permissive csv turns malformed cells into nulls, not failures") {
-    val d = java.nio.file.Files.createTempDirectory("graft_src_bad")
+    val d = org.apache.spark.ScratchDirs.create("graft_src_bad")
     java.nio.file.Files.write(d.resolve("bad.csv"),
       "id,s,v\n1,a,1.5\nnotanint,b,xyz\n".getBytes)
     val schema = StructType(Seq(StructField("id", IntegerType),
@@ -40,7 +40,7 @@ class ReadersSpec extends AnyFunSuite {
   }
 
   test("binaryFiles ingests raw bytes with path/length metadata and glob filter") {
-    val d = java.nio.file.Files.createTempDirectory("graft_src_bin")
+    val d = org.apache.spark.ScratchDirs.create("graft_src_bin")
     val pngA = graft.textops.Multimodal.generatePng(3L)
     val pngB = graft.textops.Multimodal.generatePng(7L)
     java.nio.file.Files.write(d.resolve("a.png"), pngA)
@@ -64,7 +64,7 @@ class ReadersSpec extends AnyFunSuite {
   }
 
   test("parquetChecked rejects schema drift") {
-    val d = java.nio.file.Files.createTempDirectory("graft_src_drift").toString
+    val d = org.apache.spark.ScratchDirs.create("graft_src_drift").toString
     src.write.parquet(s"$d/p")
     val wrong = StructType(Seq(StructField("id", LongType),
       StructField("s", StringType), StructField("v", DoubleType)))

@@ -14,7 +14,7 @@ class EventStreamSpec extends AnyFunSuite {
   /** The streaming file source wants a directory; testdata ships a single
     * parquet file — stage it into one. */
   private lazy val dir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_events")
+    val d = org.apache.spark.ScratchDirs.create("graft_events")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       d.resolve("events.parquet"))
@@ -60,8 +60,8 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("foreachBatch bridge lands stream events in the batch warehouse") {
-    val whRoot = java.nio.file.Files.createTempDirectory("graft_stream_wh").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val whRoot = org.apache.spark.ScratchDirs.create("graft_stream_wh").toString
+    val ckpt = org.apache.spark.ScratchDirs.create("graft_ckpt").toString
     val wh = graft.etl.Warehouse(whRoot)
     EventStream.sinkToWarehouse(
       EventStream.readEvents(spark, dir), wh, "bronze", "events_stream", ckpt)
@@ -97,7 +97,7 @@ class EventStreamSpec extends AnyFunSuite {
 
   test("streaming dedup drops duplicate event ids from a replayed source") {
     // stage the same file twice — an at-least-once upstream
-    val d2 = java.nio.file.Files.createTempDirectory("graft_events_dup")
+    val d2 = org.apache.spark.ScratchDirs.create("graft_events_dup")
     Seq("a", "b").foreach { tag =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
@@ -113,8 +113,8 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("exactly-once sink: replayed batches do not duplicate rows") {
-    val out = java.nio.file.Files.createTempDirectory("graft_eo_sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_eo_ckpt").toString
+    val out = org.apache.spark.ScratchDirs.create("graft_eo_sink").toString
+    val ckpt = org.apache.spark.ScratchDirs.create("graft_eo_ckpt").toString
     EventStream.sinkExactlyOnce(EventStream.readEvents(spark, dir), out, ckpt)
     val once = spark.read.parquet(out)
     val batch = graft.Tables.loadEvents(spark, dir)
@@ -142,7 +142,7 @@ class EventStreamSpec extends AnyFunSuite {
     // batches: sessions then close via BOTH paths (in-batch gap breach
     // and event-time timeout as the watermark advances between batches)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val d3 = java.nio.file.Files.createTempDirectory("graft_events_parts").toString
+    val d3 = org.apache.spark.ScratchDirs.create("graft_events_parts").toString
     val all = graft.Tables.loadEvents(spark, dir).orderBy("ts")
     val n = all.count()
     val rows = all.collect()
@@ -152,7 +152,7 @@ class EventStreamSpec extends AnyFunSuite {
         .coalesce(1).write.parquet(s"$d3/part_$i")
     }
     val stagedDirs = new java.io.File(d3).listFiles().map(_.toString).sorted
-    val oneDir = java.nio.file.Files.createTempDirectory("graft_events_seq").toString
+    val oneDir = org.apache.spark.ScratchDirs.create("graft_events_seq").toString
     stagedDirs.zipWithIndex.foreach { case (pd, i) =>
       val f = new java.io.File(pd).listFiles().filter(_.getName.endsWith(".parquet")).head
       val dst = java.nio.file.Paths.get(oneDir, f"events_$i%02d.parquet")

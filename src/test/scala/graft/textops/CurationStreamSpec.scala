@@ -35,7 +35,7 @@ class CurationStreamSpec extends AnyFunSuite {
     (201L, "the weather in that small town was very cold and the people were still quite happy with their lives"))
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
-    java.nio.file.Files.createTempDirectory(s"graft_curstream_$tag").toString)
+    org.apache.spark.ScratchDirs.create(s"graft_curstream_$tag").toString)
 
   private def gateBatch(df: org.apache.spark.sql.DataFrame) = df
     .filter(TextFunctions.langId(col("text")) === "en")
@@ -290,14 +290,12 @@ class CurationStreamSpec extends AnyFunSuite {
     CurationStream.curationBootstrap(initialRows.toDF("doc_id", "text"),
       "doc_id", "text", wh, "gold", "cur", threshold = 0.5, bands = 8,
       nBuckets = 8, nSetBuckets = 4)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_curstream_src").toString
+    val stage = org.apache.spark.ScratchDirs.create("graft_curstream_src").toString
     batch0Rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(stage)
     batch1Rows.toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(stage)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_curstream_ckpt").toString
+    val ckpt = org.apache.spark.ScratchDirs.create("graft_curstream_ckpt").toString
     val q = CurationStream.curationIngestStream(
       spark.readStream.schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1").parquet(stage),

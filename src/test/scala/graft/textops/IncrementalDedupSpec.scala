@@ -44,7 +44,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   private val IngestEpochJobs = 79
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
-    java.nio.file.Files.createTempDirectory(s"graft_ndidx_$tag").toString)
+    org.apache.spark.ScratchDirs.create(s"graft_ndidx_$tag").toString)
 
   private def pairSet(df: org.apache.spark.sql.DataFrame) =
     df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
@@ -127,8 +127,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val wh = freshWh("stream")
     Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", wh, "gold", "nd",
       shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8, nSetBuckets = 4)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ndstream_ckpt").toString
+    val ckpt = org.apache.spark.ScratchDirs.create("graft_ndstream_ckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val src =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]

@@ -21,7 +21,7 @@ object IndexLifecycle extends Assertions {
   private def spark = TestSessions.spark
 
   def freshWh(tag: String): Warehouse = Warehouse(
-    Files.createTempDirectory(s"graft_lifecycle_$tag").toString)
+    org.apache.spark.ScratchDirs.create(s"graft_lifecycle_$tag").toString)
 
   def build(family: DedupFamily, wh: Warehouse, docs: DataFrame): Unit =
     family match {

@@ -45,7 +45,7 @@ class IvfDriftSpec extends AnyFunSuite {
   }
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
-    java.nio.file.Files.createTempDirectory(s"graft_drift_$tag").toString)
+    org.apache.spark.ScratchDirs.create(s"graft_drift_$tag").toString)
 
   private def build(wh: graft.etl.Warehouse): Unit = {
     val cents = Similarity.ivfTrain(corpus, "vec_id", "embedding",

@@ -49,7 +49,7 @@ class IvfSpec extends AnyFunSuite {
         centroids, books, nprobe = 2)
       .select("vec_id", "code_0", "code_1", "code_2", "code_3", "adc")
       .collect().map(_.toSeq)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_annidx_t").toString
+    val tmp = org.apache.spark.ScratchDirs.create("graft_annidx_t").toString
     val wh = graft.etl.Warehouse(tmp)
     Similarity.ivfPqPersist(vecs, "vec_id", "embedding", centroids, books,
       wh, "gold", "idx")
@@ -78,13 +78,13 @@ class IvfSpec extends AnyFunSuite {
       .select(col("embedding").cast("array<double>")).head().getSeq[Double](0)
     // index A: persist base, append delta through the frozen artifacts
     val whA = graft.etl.Warehouse(
-      java.nio.file.Files.createTempDirectory("graft_annapp_a").toString)
+      org.apache.spark.ScratchDirs.create("graft_annapp_a").toString)
     Similarity.ivfPqPersist(base, "vec_id", "embedding", centroids, books,
       whA, "gold", "idx")
     Similarity.ivfPqAppend(delta, "vec_id", "embedding", whA, "gold", "idx")
     // index B: from-scratch encode of the union under the SAME codebooks
     val whB = graft.etl.Warehouse(
-      java.nio.file.Files.createTempDirectory("graft_annapp_b").toString)
+      org.apache.spark.ScratchDirs.create("graft_annapp_b").toString)
     Similarity.ivfPqPersist(vecs, "vec_id", "embedding", centroids, books,
       whB, "gold", "idx")
     val a = Similarity.ivfPqProbePersisted(spark, whA, "gold", "idx",

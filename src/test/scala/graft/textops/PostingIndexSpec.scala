@@ -55,7 +55,7 @@ class PostingIndexSpec extends AnyFunSuite {
   private val RebuildIfStaleJobs = 25
 
   private def freshWh(tag: String) = graft.etl.Warehouse(
-    java.nio.file.Files.createTempDirectory(s"graft_ngidx_$tag").toString)
+    org.apache.spark.ScratchDirs.create(s"graft_ngidx_$tag").toString)
 
   private def build(wh: graft.etl.Warehouse, cap: Int = 1000): Unit =
     Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh, "gold", "ng",
@@ -284,8 +284,7 @@ class PostingIndexSpec extends AnyFunSuite {
   test("ingest stream: each batch exact-dedups against what earlier batches kept") {
     val wh = freshWh("stream")
     build(wh)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_ngstream_ckpt").toString
+    val ckpt = org.apache.spark.ScratchDirs.create("graft_ngstream_ckpt").toString
     implicit val sqlCtx = spark.sqlContext
     val src =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
