@@ -38,6 +38,13 @@ final class Counted(df: DataFrame, metrics: (String, Column)*) {
   * DQ checks LOG rather than fail (matching the reference's design): each
   * is an aggregate + comparison appended to `audit/data_quality_issues`.
   * Hard failures (missing config) THROW, matching init_load_all.sql:43-47.
+  *
+  * Each `etl_log` and `data_quality_issues` row is its own durable
+  * append, one committed version per row. The row is already on the
+  * driver, so [[Warehouse]] encodes it there: an append submits no Spark
+  * job, and costs the Parquet encode plus the manifest rewrite. What
+  * still runs jobs here is reading: [[nextBatchId]] scans every `etl_log`
+  * file, and [[check]] counts its violations frame.
   */
 final case class Audit(wh: Warehouse) {
 

@@ -1,10 +1,13 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
@@ -34,6 +37,15 @@ import scala.jdk.CollectionConverters._
   * and a reader keeps its snapshot until [[vacuum]] reclaims it. This is
   * the Delta Lake log design (Armbrust et al., VLDB 2020), for one
   * filesystem with atomic create-if-absent links.
+  *
+  * Rows that are already on the driver are written from the driver. An
+  * unpartitioned write of a local relation (`Seq(...).toDF()`, perhaps
+  * under column renames) is encoded by Spark's own Parquet writer in the
+  * calling thread: no Spark job, the same file a write task would make.
+  * That is every audit, DQ and watermark row the ETL logs ([[Audit]],
+  * [[Watermark]]) and a standing index's `_meta` row. Every other write
+  * is a Spark write job. Neither leaves a `_SUCCESS` marker: the
+  * manifest is the commit.
   *
   * A TABLE GROUP is several tables that change together (a standing dedup
   * index: `_meta`, its key table, `_sets`, ...): one log at
@@ -193,7 +205,13 @@ final case class Warehouse(root: String) {
         s"$layer.${w.table}: written schema ${schema.simpleString} differs " +
         s"from its declaration ${d.simpleString}"))
     val out = owner.resolve("_c" + java.util.UUID.randomUUID())
-    w.df.write.options(w.options).partitionBy(w.partCols: _*).parquet(out.toString)
+    localRows(w.df.queryExecution.analyzed) match {
+      case Some(rows) if w.partCols.isEmpty =>
+        writeOnDriver(w.df.sparkSession, rows, w.df.schema, w.options, out)
+      case _ =>
+        w.df.write.options(NoSuccessMarker ++ w.options).partitionBy(w.partCols: _*)
+          .parquet(out.toString)
+    }
     val s = Files.walk(out)
     val files = try s.iterator().asScala.filter { p =>
       val n = p.getFileName.toString
@@ -233,6 +251,49 @@ object Warehouse {
   case object Overwrite extends Mode
   case object Append extends Mode
   case object ReplacePartitions extends Mode
+
+  /** The Hadoop committer's `_SUCCESS` file: no manifest reads it. */
+  private val NoSuccessMarker =
+    Map("mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+
+  /** The rows of a frame that is already on the driver, in its column
+    * order: a local relation (`Seq(...).toDF()`), perhaps under column
+    * renames (`toDF("a", "b")`). */
+  private def localRows(plan: LogicalPlan): Option[Seq[InternalRow]] = plan match {
+    case l: LocalRelation => Some(l.data)
+    case Project(list, child) =>
+      val ordinals = list.map {
+        case a: Attribute => child.output.indexWhere(_.exprId == a.exprId)
+        case Alias(a: Attribute, _) => child.output.indexWhere(_.exprId == a.exprId)
+        case _ => -1
+      }
+      val types = child.output.map(_.dataType)
+      if (ordinals.contains(-1)) None
+      else localRows(child).map(_.map(r =>
+        InternalRow.fromSeq(ordinals.map(i => r.get(i, types(i))))))
+    case _ => None
+  }
+
+  /** Writes `rows` to one Parquet file in `out` without a Spark job:
+    * the driver encodes them with the writer a Spark write task uses,
+    * set up as a Spark write sets it up, so the file (schema, physical
+    * types, Spark's row metadata) is the one a task would write. No rows
+    * still make a file, which carries the schema, as Spark's writer
+    * does. */
+  private def writeOnDriver(spark: SparkSession, rows: Seq[InternalRow],
+                            schema: StructType, options: Map[String, String],
+                            out: Path): Unit = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
+    val factory = new ParquetFileFormat().prepareWrite(session, job, options, schema)
+    val task = new TaskAttemptContextImpl(job.getConfiguration,
+      new TaskAttemptID("driver", 0, TaskType.MAP, 0, 0))
+    Files.createDirectories(out)
+    val file = out.resolve(
+      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(task)}")
+    val writer = factory.newInstance(file.toString, schema, task)
+    try rows.foreach(writer.write) finally writer.close()
+  }
 
   /** `old` after write `w`, whose new files are `t`. */
   private def applied(old: Option[TableFiles], w: Write, t: TableFiles): TableFiles =

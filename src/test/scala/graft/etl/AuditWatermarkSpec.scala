@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.JobCounting
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
@@ -62,6 +63,22 @@ class AuditWatermarkSpec extends AnyFunSuite {
     assert(audit.check(spark, 1L, "t", "some", dirty, "d") === 2L)
     assert(wh.read(spark, "audit", "data_quality_issues")
       .filter(col("check_name") === "some").head().getAs[Long]("n_bad_rows") === 2L)
+  }
+
+  test("audit rows, DQ issues and watermarks are appended without a Spark job") {
+    val wh = freshWh()
+    val (audit, wm) = (Audit(wh), Watermark(wh))
+    def jobs(body: => Unit): Int = JobCounting.countJobs(spark.sparkContext)(body)._2
+    val t = Timestamp.valueOf("2025-04-01 00:00:00")
+    // the first round creates each table, the second appends to it
+    for (i <- 1 to 2) {
+      assert(jobs(audit.log(spark, EtlLogEntry(i, "bronze", "t", t, t, 5L, "Success", ""))) === 0)
+      assert(jobs(audit.logIssue(spark, DqIssue(i, "t", "dup_keys", 2L, "d", t))) === 0)
+      assert(jobs(wm.advance(spark, "t", t)) === 0)
+    }
+    assert(wh.read(spark, "audit", "etl_log").count() === 2L)
+    assert(wh.read(spark, "audit", "data_quality_issues").count() === 2L)
+    assert(wm.read(spark, "t") === t)
   }
 
   test("audit: N threads logging at once onto a fresh warehouse leave N rows") {

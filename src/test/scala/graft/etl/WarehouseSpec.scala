@@ -1,8 +1,15 @@
 package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.JobCounting
 import org.apache.spark.sql.functions.{col, lit, upper}
 import java.nio.file.{Files, Path, Paths}
+import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 /** The manifest commit protocol ([[Warehouse]]) under every crash state
@@ -178,6 +185,100 @@ class WarehouseSpec extends AnyFunSuite {
     threads.foreach(_.join(60000))
     assert(stamps(wh, "many") === (1L to 6L).toSet)
     assert(wh.snapshot("gold", "many").version === 5L)
+  }
+
+  /** The footer of the Parquet file at `p`. */
+  private def footer(p: Path): FileMetaData = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new HPath(p.toString), new Configuration()))
+    try r.getFooter.getFileMetaData finally r.close()
+  }
+
+  /** The data files a plain `df.write.parquet` puts in `dir`. */
+  private def sparkWritten(df: org.apache.spark.sql.DataFrame, dir: Path): Seq[Path] = {
+    df.write.parquet(dir.toString)
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toSeq
+    finally s.close()
+  }
+
+  /** The data files of `table`'s latest version. */
+  private def committed(wh: Warehouse, layer: String, table: String): Seq[Path] =
+    WarehouseTestKit.files(wh, layer, table).map(f => Paths.get(wh.path(layer, table), f.path))
+
+  private val at = Timestamp.valueOf("2025-01-02 03:04:05.123456")
+  private val entries = Seq(
+    EtlLogEntry(1L, "bronze", "a", at, at, 7L, "Success", ""),
+    EtlLogEntry(2L, "silver", "b", at, null, -1L, "Failed", null))
+
+  test("rows already on the driver commit without a Spark job, as Spark writes them") {
+    val wh = freshWh()
+    val (_, jobs) = JobCounting.countJobs(spark.sparkContext)(
+      wh.append(entries.toDF(), "audit", "etl_log"))
+    assert(jobs === 0)
+    // a rename over the local rows is still on the driver
+    val (_, renamedJobs) = JobCounting.countJobs(spark.sparkContext)(
+      wh.append(Seq(("t", at)).toDF("table_name", "last_load"), "audit", "watermarks"))
+    assert(renamedJobs === 0)
+    assert(wh.read(spark, "audit", "watermarks").as[(String, Timestamp)].collect() ===
+      Array(("t", at)))
+    val Seq(driverFile) = committed(wh, "audit", "etl_log")
+    val sparkDir = org.apache.spark.ScratchDirs.create("graft_whspec_spark").resolve("t")
+    val sparkFile = sparkWritten(entries.toDF(), sparkDir).head
+    val (d, s) = (footer(driverFile), footer(sparkFile))
+    assert(d.getSchema === s.getSchema)
+    def tsType(m: FileMetaData) =
+      m.getSchema.getType(m.getSchema.getFieldIndex("start_time")).asPrimitiveType
+        .getPrimitiveTypeName
+    assert(tsType(d) === tsType(s))
+    assert(d.getKeyValueMetaData === s.getKeyValueMetaData)
+    assert(d.getKeyValueMetaData.containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    assert(driverFile.getFileName.toString.endsWith(".snappy.parquet"))
+    // the same rows back, through the manifest and through a plain read
+    val back = wh.read(spark, "audit", "etl_log").as[EtlLogEntry].collect().toSet
+    assert(back === entries.toSet)
+    assert(spark.read.parquet(sparkDir.toString).as[EtlLogEntry].collect().toSet === back)
+    // no Hadoop success marker beside either kind of write
+    wh.append(spark.range(1).select(lit(1L).as("v")), "gold", "marker")
+    for (t <- Seq("audit" -> "etl_log", "gold" -> "marker"))
+      assert(WarehouseTestKit.unreferenced(wh, t._1, t._2).isEmpty, t)
+  }
+
+  test("a table holding files of both write paths reads back every row") {
+    val wh = freshWh()
+    wh.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "gold", "mixed")
+    wh.append(spark.range(3, 6).select(col("id").as("k"), lit("s").as("v")),
+      "gold", "mixed")
+    // renamed, then reordered: a projection of the local rows
+    wh.append(Seq((null: String, 9L)).toDF("v", "k").select("k", "v"), "gold", "mixed")
+    assert(wh.read(spark, "gold", "mixed").as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "b"), (3L, "s"), (4L, "s"), (5L, "s"), (9L, null)))
+  }
+
+  test("an empty local frame commits a readable table with its schema") {
+    val wh = freshWh()
+    val empty = Seq.empty[EtlLogEntry].toDF()
+    assert(JobCounting.countJobs(spark.sparkContext)(
+      wh.overwrite(empty, "audit", "etl_log"))._2 === 0)
+    val t = wh.read(spark, "audit", "etl_log")
+    assert(t.count() === 0L)
+    assert(t.schema.map(f => f.name -> f.dataType) ===
+      Schemas.declared(("audit", "etl_log")).map(f => f.name -> f.dataType))
+    // one file carrying the schema, as Spark's writer leaves for no rows
+    val sparkDir = org.apache.spark.ScratchDirs.create("graft_whspec_empty").resolve("t")
+    val (files, sparkFiles) = (committed(wh, "audit", "etl_log"), sparkWritten(empty, sparkDir))
+    assert(files.size === 1 && sparkFiles.size === 1)
+    assert(footer(files.head).getSchema === footer(sparkFiles.head).getSchema)
+    assert(spark.read.parquet(files.head.toString).schema.fieldNames ===
+      empty.schema.fieldNames)
+  }
+
+  test("a local write that differs from its declared schema is rejected") {
+    val wh = freshWh()
+    val e = intercept[IllegalArgumentException](
+      wh.append(Seq((1L, "x")).toDF("batch_id", "layer"), "audit", "etl_log"))
+    assert(e.getMessage.contains("differs from its declaration"))
+    assert(!wh.exists("audit", "etl_log"))
   }
 
   test("repeated swaps of a many-partition table do not leak directory fds") {
