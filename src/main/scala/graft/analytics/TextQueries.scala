@@ -941,37 +941,6 @@ object TextQueries {
       wh, "gold", "nd", threshold = 0.5).orderBy("id_a", "id_b")
   }
 
-  // d8-texts — the same increment probe against the TEXTS `_sets`
-  // layout of the MINHASH index (nearDedupIndexPersist
-  // setsAsTexts=true, format v2): `_sets` stores (doc_id, text) zstd
-  // instead of the incompressible hashed-shingle arrays — the same
-  // footprint cut the posting index shipped in r14, now on the family
-  // whose `_sets` owned the remaining 100 TB footprint story — and the
-  // probe re-shingles its candidates' pruned partitions (no frozen
-  // dictionary here: minhash sets are uncapped, so the recompute is
-  // shingle → collect, identical values by construction). Oracled by
-  // the SAME SQL as d_near_dedup_increment: recompute-equals-stored as
-  // a driver-checked hash match, not just a spec assertion.
-  private def incIndexTextsWh(s: SparkSession, dir: String): graft.etl.Warehouse = {
-    val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val wh = graft.etl.Warehouse(
-      s"${sys.props("java.io.tmpdir")}/graft_ndtexts$key")
-    buildOnce(s, wh, "ndt_fp", docs(s, dir),
-      "k=3,nh=32,b=8,nb=16,nsb=16,sets=texts",
-      Dedup.NearDedupIndexFormatVersion) {
-      Dedup.nearDedupIndexPersist(docs(s, dir), "doc_id", "text",
-        wh, "gold", "nd", shingleK = 3, numHashes = 32, bands = 8,
-        nBuckets = 16, nSetBuckets = 16, setsAsTexts = true)
-    }
-    wh
-  }
-
-  private val dNearIncrementTexts: QFn = (s, dir) => {
-    val wh = incIndexTextsWh(s, dir)
-    Dedup.nearDedupIncrementPairs(incBatch(s, dir), "doc_id", "text",
-      wh, "gold", "nd", threshold = 0.5).orderBy("id_a", "id_b")
-  }
-
   // d8b — the KEEP side of the same ingest: corpus always wins. A batch
   // cluster (component of batch-internal pairs) dies entirely if any
   // member near-matches an indexed corpus doc; otherwise its min-id
@@ -1087,34 +1056,6 @@ object TextQueries {
 
   private val dNgramIncrementFloor: QFn = (s, dir) => {
     val wh = incNgramFloorWh(s, dir)
-    Dedup.ngramJaccardIncrementPairs(incBatch(s, dir), "doc_id", "text",
-      wh, "gold", "ng", threshold = 0.5).orderBy("id_a", "id_b")
-  }
-
-  // d8c-texts — the same increment probe against the TEXTS `_sets`
-  // layout (ngramIndexPersist setsAsTexts=true): `_sets` stores
-  // (doc_id, text) zstd instead of the incompressible hashed arrays —
-  // the r14 footprint cut (97.0 → 32.3 MB on the probe corpus, the
-  // index's dominant table) — and the probe re-shingles its candidates'
-  // pruned partitions under the frozen dictionary. Oracled by the SAME
-  // SQL as d_ngram_increment: the recompute-equals-stored contract as
-  // a driver-checked hash match, not just a spec assertion.
-  private def incNgramTextsWh(s: SparkSession, dir: String): graft.etl.Warehouse = {
-    val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val wh = graft.etl.Warehouse(
-      s"${sys.props("java.io.tmpdir")}/graft_ngtexts$key")
-    buildOnce(s, wh, "ngt_fp", docs(s, dir),
-      "k=3,cap=1000,npb=16,nsb=16,sets=texts",
-      Dedup.NgramIndexFormatVersion) {
-      Dedup.ngramIndexPersist(docs(s, dir), "doc_id", "text", wh, "gold",
-        "ng", shingleK = 3, maxShingleFreq = 1000,
-        nPostBuckets = 16, nSetBuckets = 16, setsAsTexts = true)
-    }
-    wh
-  }
-
-  private val dNgramIncrementTexts: QFn = (s, dir) => {
-    val wh = incNgramTextsWh(s, dir)
     Dedup.ngramJaccardIncrementPairs(incBatch(s, dir), "doc_id", "text",
       wh, "gold", "ng", threshold = 0.5).orderBy("id_a", "id_b")
   }
@@ -2388,11 +2329,13 @@ object TextQueries {
     "d_embedding_dup" -> dEmbDup,
     "d_containment" -> dContainment,
     "d_near_dedup_increment" -> dNearIncrement,
-    "d_near_dedup_increment_texts" -> dNearIncrementTexts,
+    // each `_texts` entry keeps its ledger name and oracle SQL and runs
+    // its base entry's probe: an index stores `_sets` in one layout
+    "d_near_dedup_increment_texts" -> dNearIncrement,
     "d_near_dedup_increment_keep" -> dNearIncrementKeep,
     "d_ngram_increment" -> dNgramIncrement,
     "d_ngram_increment_floor" -> dNgramIncrementFloor,
-    "d_ngram_increment_texts" -> dNgramIncrementTexts,
+    "d_ngram_increment_texts" -> dNgramIncrement,
     "d_containment_increment" -> dContainIncrement,
     "d_ngram_staleness" -> dNgramStaleness,
     "d_ngram_increment_keep" -> dNgramIncrementKeep,

@@ -1,25 +1,19 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
 
 /** Surrogate-key assignment (proc_load_gold.sql:54,109).
   *
-  * The reference uses a global ROW_NUMBER() — correct but single-partition
-  * in Spark (every row funnels through one task). [[global]] keeps those
-  * exact semantics for small dimensions; [[scalable]] is the 100 TB path:
-  * sort → zipWithIndex (two phases: per-partition counts, then offset add),
-  * contiguous and deterministic for a total ordering, with no
-  * single-partition collapse.
+  * The reference numbers rows with a global ROW_NUMBER(), which in Spark
+  * funnels every row through one task. [[scalable]] is the one path here
+  * (the gold customer and product keys in [[GoldLoader]], and
+  * `FrontierPack21`'s contiguous numberings): sort → zipWithIndex (two
+  * phases: per-partition counts, then offset add), contiguous and
+  * deterministic for a total ordering, with no single-partition
+  * collapse.
   */
 object SurrogateKeys {
-
-  /** Exact reference semantics; fine for dimension-sized inputs. */
-  def global(df: DataFrame, keyName: String, order: Seq[Column]): DataFrame =
-    df.withColumn(keyName,
-      row_number().over(Window.orderBy(order: _*)).cast(LongType))
 
   /** Two-phase contiguous numbering starting at 1. `order` must be a total
     * ordering (include a unique tiebreaker) for deterministic keys. */

@@ -64,17 +64,16 @@ object CurationStream {
     /** A batch's per-doc index rows under `meta`: (key rows carrying
       * `keyPart`, sets (doc_id, set, n)), pinned on `tracker`. */
     private[textops] def sketch(batch: DataFrame, idCol: String,
-        textCol: String, wh: Warehouse, layer: String, table: String,
-        meta: Meta, tracker: PersistTracker): (DataFrame, DataFrame)
+        textCol: String, table: String, meta: Meta,
+        tracker: PersistTracker): (DataFrame, DataFrame)
     /** The key rows an index stores of a sketch's. */
     private[textops] def stored(keys: DataFrame, meta: Meta): DataFrame = keys
     /** Probe the index with a batch's sketch and keep the survivors,
       * corpus wins: (doc_id, cluster_size). */
     private[textops] def keep(batch: DataFrame, idCol: String,
-        textCol: String, wh: Warehouse, layer: String, table: String,
-        meta: Meta, keys: DataFrame, sets: DataFrame, threshold: Double,
-        broadcastDocLimit: Long, tracker: PersistTracker,
-        excludeEpoch: Long): DataFrame
+        textCol: String, table: String, meta: Meta, keys: DataFrame,
+        sets: DataFrame, threshold: Double, broadcastDocLimit: Long,
+        tracker: PersistTracker, excludeEpoch: Long): DataFrame
     /** Re-freeze frozen statistics at epoch start; whether the index was
       * rebuilt. A family without them has nothing to do. */
     private[textops] def refreeze(batch: DataFrame, epoch: Long,
@@ -95,21 +94,20 @@ object CurationStream {
     private[textops] def meta(m: Row, snap: Warehouse.Snapshot) =
       Dedup.MinhashMeta(m.getAs[Int]("shingle_k"), m.getAs[Int]("num_hashes"),
         m.getAs[Int]("bands"), m.getAs[Int]("n_buckets"),
-        m.getAs[Int]("n_set_buckets"), m.getAs[String]("sets_layout"))(snap)
+        m.getAs[Int]("n_set_buckets"))(snap)
     private[textops] def keyTable = "_bands"
     private[textops] def keyPart = "pb"
     private[textops] def keySort = Seq("band", "band_hash")
     private[textops] def sketch(batch: DataFrame, idCol: String,
-        textCol: String, wh: Warehouse, layer: String, table: String,
-        meta: Meta, tracker: PersistTracker) =
+        textCol: String, table: String, meta: Meta,
+        tracker: PersistTracker) =
       Dedup.minhashSketch(batch, idCol, textCol, meta, tracker)
     private[textops] def keep(batch: DataFrame, idCol: String,
-        textCol: String, wh: Warehouse, layer: String, table: String,
-        meta: Meta, keys: DataFrame, sets: DataFrame, threshold: Double,
-        broadcastDocLimit: Long, tracker: PersistTracker,
-        excludeEpoch: Long) =
-      Dedup.minhashKeep(batch, idCol, textCol, wh, layer, table, meta, keys,
-        sets, threshold, broadcastDocLimit, tracker, excludeEpoch)
+        textCol: String, table: String, meta: Meta, keys: DataFrame,
+        sets: DataFrame, threshold: Double, broadcastDocLimit: Long,
+        tracker: PersistTracker, excludeEpoch: Long) =
+      Dedup.minhashKeep(batch, idCol, textCol, table, meta, keys, sets,
+        threshold, broadcastDocLimit, tracker, excludeEpoch)
   }
 
   /** Exact prefix-filter posting index ([[Dedup.ngramIndexPersist]]):
@@ -124,27 +122,24 @@ object CurationStream {
     private[textops] def meta(m: Row, snap: Warehouse.Snapshot) =
       Dedup.NgramMeta(m.getAs[Int]("shingle_k"), m.getAs[Int]("max_freq"),
         m.getAs[Int]("n_post_buckets"), m.getAs[Int]("n_set_buckets"),
-        m.getAs[Boolean]("containment"), m.getAs[Double]("t_min"),
-        m.getAs[String]("sets_layout"))(snap)
+        m.getAs[Boolean]("containment"), m.getAs[Double]("t_min"))(snap)
     private[textops] def keyTable = "_post"
     private[textops] def keyPart = "sbucket"
     private[textops] def keySort = Seq("sh", "doc_id")
     private[textops] def sketch(batch: DataFrame, idCol: String,
-        textCol: String, wh: Warehouse, layer: String, table: String,
-        meta: Meta, tracker: PersistTracker) =
-      Dedup.batchPostings(batch, idCol, textCol, wh, layer, table, meta,
-        tracker)
+        textCol: String, table: String, meta: Meta,
+        tracker: PersistTracker) =
+      Dedup.batchPostings(batch, idCol, textCol, table, meta, tracker)
     /** A Jaccard-only index stores only the `t_min`-prefix posting
       * rows, at build and on every append. */
     override private[textops] def stored(keys: DataFrame, meta: Meta) =
       if (meta.containment) keys else Dedup.prefixRows(keys, meta.tMin)
     private[textops] def keep(batch: DataFrame, idCol: String,
-        textCol: String, wh: Warehouse, layer: String, table: String,
-        meta: Meta, keys: DataFrame, sets: DataFrame, threshold: Double,
-        broadcastDocLimit: Long, tracker: PersistTracker,
-        excludeEpoch: Long) =
-      Dedup.ngramKeep(batch, idCol, wh, layer, table, meta, keys, sets,
-        threshold, broadcastDocLimit, tracker, excludeEpoch)
+        textCol: String, table: String, meta: Meta, keys: DataFrame,
+        sets: DataFrame, threshold: Double, broadcastDocLimit: Long,
+        tracker: PersistTracker, excludeEpoch: Long) =
+      Dedup.ngramKeep(batch, idCol, table, meta, keys, sets, threshold,
+        broadcastDocLimit, tracker, excludeEpoch)
     override private[textops] def refreeze(batch: DataFrame, epoch: Long,
         idCol: String, textCol: String, wh: Warehouse, layer: String,
         table: String, meta: Meta, unseenThreshold: Double,

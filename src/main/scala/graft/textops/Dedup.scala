@@ -55,31 +55,24 @@ object Dedup {
   private[textops] final class PersistTracker(active: Boolean) {
     private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def add(df: DataFrame): DataFrame = { if (active) frames += df; df }
-    /** Persist-and-track when live; pass through UNPERSISTED under the
-      * noop tracker. For frames scanning WAREHOUSE paths this is the
-      * only safe shape: a cache entry nobody releases outlives the
-      * next compaction swap, and Spark's CacheManager matches file
-      * relations by root path — so a later, semantically fresh probe
-      * of the rewritten table aliases the stale entry and dies on the
-      * deleted files (caught by the r14 texts-layout spec). */
-    def persisted(df: DataFrame): DataFrame =
-      if (active) {
-        frames += df
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else df
+    /** Persist MEMORY_AND_DISK under either tracker; a live one releases
+      * it with the batch, the noop one leaves it to the session. */
+    def pinned(df: DataFrame): DataFrame =
+      add(df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     /** Snapshot a multi-consumer probe frame that scans warehouse
       * paths. Live tracker → tracked persist, released per epoch (the
       * ingest loops). Noop tracker (one-shot probes) → EAGER
       * `localCheckpoint`: an RDD block snapshot with NO CacheManager
-      * entry, so nothing aliases a post-compaction read of the
-      * rewritten root path ([[persisted]]'s hazard), yet downstream
-      * consumers stop re-evaluating the scan — the r14 texts-layout
-      * probe re-ran its pruned-texts shingle scan three times (count +
-      * range-collect + per-join pipeline) through the unpersisted noop
-      * path. Blocks are freed by the ContextCleaner once the probe's
-      * frames are unreachable. */
+      * entry. A persist nobody releases would outlive the next
+      * compaction swap, and Spark's CacheManager matches file relations
+      * by root path — so a later, semantically fresh probe of the
+      * rewritten table would alias the stale entry and die on the
+      * deleted files. The snapshot avoids that, yet downstream
+      * consumers stop re-evaluating the scan (an unpersisted noop-path
+      * frame re-runs its whole scan once per consumer). Blocks are freed
+      * by the ContextCleaner once the probe's frames are unreachable. */
     def snapshotted(df: DataFrame): DataFrame =
-      if (active) persisted(df)
+      if (active) pinned(df)
       else df.localCheckpoint(true)
     def unpersistAll(): Unit = { frames.foreach(_.unpersist()); frames.clear() }
   }
@@ -122,32 +115,25 @@ object Dedup {
     * distinct shuffle carries (long, long) rows. Docs shorter than k
     * words yield no shingles. */
   private def shingled(df: DataFrame, idCol: String, textCol: String,
-                       shingleK: Int, hash: Seq[Column] => Column,
-                       carry: Seq[String] = Nil): DataFrame = {
+                       shingleK: Int, hash: Seq[Column] => Column): DataFrame = {
     require(shingleK >= 2, s"shingleK must be >= 2, got $shingleK")
     val words = split(normText(col(textCol)), " ")
-    val carried = carry.map(col)
-    df.select(col(idCol).cast(LongType).as("doc_id") +: carried :+
-        words.as("__w"): _*)
-      .select(col("doc_id") +: carried ++: Seq(col("__w"),
-        posexplode(col("__w")).as(Seq("__p", "__x"))): _*)
+    df.select(col(idCol).cast(LongType).as("doc_id"), words.as("__w"))
+      .select(col("doc_id"), col("__w"),
+        posexplode(col("__w")).as(Seq("__p", "__x")))
       .filter(col("__p") <= size(col("__w")) - shingleK)
-      .select(col("doc_id") +: carried :+
+      .select(col("doc_id"),
         hash(col("__x") +: (2 to shingleK).map(j =>
-          element_at(col("__w"), col("__p") + j))).as("sh"): _*)
+          element_at(col("__w"), col("__p") + j))).as("sh"))
       .distinct()
   }
 
   /** xxhash64 shingle stage — fastest form (hashes the k word columns
     * directly, no intermediate concat string); used by the minhash /
-    * jaccard family, which re-hashes the longs per seed downstream.
-    * `carry` passes extra source columns through unchanged (the texts
-    * `_sets` readers carry `epoch` so recomputed sets stay one row per
-    * stored (doc_id, epoch), mirroring the arrays rows). */
+    * jaccard family, which re-hashes the longs per seed downstream. */
   private[graft] def shingledHashed(df: DataFrame, idCol: String,
-                                      textCol: String, shingleK: Int,
-                                      carry: Seq[String] = Nil): DataFrame =
-    shingled(df, idCol, textCol, shingleK, ws => xxhash64(ws: _*), carry)
+                                      textCol: String, shingleK: Int): DataFrame =
+    shingled(df, idCol, textCol, shingleK, ws => xxhash64(ws: _*))
 
   /** md5-derived shingle stage — same schema, but fingerprint bits are
     * reproducible in DuckDB ([[md5Hash64]]); the simhash family uses this
@@ -270,8 +256,7 @@ object Dedup {
     // would otherwise collide in EVERY band and put C(k,2) pairs per
     // band through the bucket join; reps make that one class.
     val (reps, members) = collapseExact(df, idCol, textCol, tracker)
-    val sh = tracker.add(shingledHashed(reps, idCol, textCol, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sh = tracker.pinned(shingledHashed(reps, idCol, textCol, shingleK))
     minhashVerifiedFromShingles(sh, members, numHashes, bands, threshold,
       broadcastDocLimit, tracker)
   }
@@ -294,8 +279,8 @@ object Dedup {
     val cands = a.join(b, Seq("band", "band_hash"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
-    val repPairs = verifyJaccard(cands, sh, threshold, broadcastDocLimit,
-      tracker)
+    val repPairs = verifyPairs(cands, tracker.pinned(shingleSets(sh)),
+      directed = false, threshold, broadcastDocLimit, tracker = tracker)
     (repPairs, members, sh.select("doc_id").distinct())
   }
 
@@ -407,15 +392,17 @@ object Dedup {
   // sort keys, its `_meta` columns and format version, a batch's per-doc
   // sketch rows (key rows + shingle sets), its probe and keep, and — the
   // exact family only — the statistics re-freeze. Everything else exists
-  // once, below: reading `_meta` ([[readMeta]]), writing `_sets` in its
-  // arrays or texts layout and committing the group ([[commitBuild]]),
-  // the epoch-keyed row write ([[writeIndexRows]]), [[indexAppend]],
-  // [[indexCompact]] / [[indexCompactIfDue]] with the kept-sink fold, one
-  // ingest epoch ([[ingestBatch]]) and its stream ([[ingestStream]]).
+  // once, below: reading `_meta` ([[readMeta]]), writing `_sets` and
+  // committing the group ([[commitBuild]]), the epoch-keyed row write
+  // ([[writeIndexRows]]), [[indexAppend]], [[indexCompact]] /
+  // [[indexCompactIfDue]] with the kept-sink fold, one ingest epoch
+  // ([[ingestBatch]]) and its stream ([[ingestStream]]).
   //
-  // `_sets` is (doc_id, set, n) partitioned by `dbucket` (= doc_id mod
+  // `_sets` has ONE layout in both families: the hashed-shingle arrays
+  // (doc_id, set, n) — n Int — partitioned by `dbucket` (= doc_id mod
   // nSetBuckets): exact verification prunes to the partitions holding its
-  // candidates' sets. The key table and `_sets` carry an `epoch`
+  // candidates' sets and scores them as stored ([[scored]]). The key
+  // table and `_sets` carry an `epoch`
   // sub-partition (base build = −1): streaming appends key their rows by
   // epoch so a replayed epoch overwrites ITSELF, and probes exclude an
   // in-flight epoch's own rows — the exactly-once discipline, uniform
@@ -434,59 +421,30 @@ object Dedup {
   private[textops] sealed abstract class IndexMeta {
     def shingleK: Int
     def nSetBuckets: Int
-    def setsLayout: String
     def snap: Warehouse.Snapshot
-    final def texts: Boolean = setsLayout == SetsLayoutTexts
   }
 
   private[textops] final case class MinhashMeta(shingleK: Int,
-      numHashes: Int, bands: Int, nBuckets: Int, nSetBuckets: Int,
-      setsLayout: String)(val snap: Warehouse.Snapshot) extends IndexMeta
+      numHashes: Int, bands: Int, nBuckets: Int, nSetBuckets: Int)(
+      val snap: Warehouse.Snapshot) extends IndexMeta
 
   private[textops] final case class NgramMeta(shingleK: Int, maxFreq: Int,
       nPostBuckets: Int, nSetBuckets: Int, containment: Boolean,
-      tMin: Double, setsLayout: String)(val snap: Warehouse.Snapshot)
-      extends IndexMeta
+      tMin: Double)(val snap: Warehouse.Snapshot) extends IndexMeta
 
-  /** MinHash band-index on-disk format: v2 added `format_version` and
-    * the `sets_layout` flag (`arrays` | `texts`) to `_meta` — the same
-    * texts `_sets` option the posting index shipped in its v5
-    * ([[SetsLayoutTexts]]; the minhash `_sets` is the same
-    * incompressible-hash-arrays table, and with the ngram index cut to
-    * 5.5× corpus it owned the 100 TB footprint story). */
-  private[graft] val NearDedupIndexFormatVersion = 2
+  /** MinHash band-index on-disk format: v2 added `format_version` and a
+    * `_sets` layout flag (hashed arrays | zstd texts) to `_meta`; v3
+    * drops the flag with the texts layout — `_sets` is always the
+    * arrays, with an Int `n` as in the posting index. */
+  private[graft] val NearDedupIndexFormatVersion = 3
 
   /** Posting-index on-disk format: v2 added the `epoch` sub-partition,
     * v3 the clustered one-file-per-bucket sorted layout, v4 the
     * Int-narrowed `freq`/`__pos`/`__n`/`n` columns plus the layout
-    * flags (`containment`/`t_min`) in `_meta`, v5 the `sets_layout`
-    * flag (`arrays` | `texts`). */
-  private[graft] val NgramIndexFormatVersion = 5
-
-  /** `_sets` stores (doc_id, set, n) hashed-shingle ARRAYS — xxhash64
-    * values, i.e. uniform-random longs that no codec compresses (the
-    * r14 probe: zstd 97.0 → 97.0 MB, sorted-delta 92.3 MB). */
-  private[textops] val SetsLayoutArrays = "arrays"
-
-  /** `_sets` stores (doc_id, text) instead and probes RE-SHINGLE their
-    * candidates' pruned partitions ([[readCorpusSets]]) — text
-    * compresses where hashes cannot (r14 probe: 97.0 → 32.3 MB zstd,
-    * the index's dominant table cut 3×), at a bounded re-shingle CPU
-    * cost per probe. Row membership, the
-    * dbucket/epoch partition keys, and the recomputed (set, n) values
-    * are identical to the arrays layout by construction. */
-  private[textops] val SetsLayoutTexts = "texts"
-
-  /** zstd for the texts `_sets` writes: measured 53.5 (snappy) vs
-    * 32.3 MB (zstd) on the probe corpus — the only index table where
-    * codec choice moves the footprint, because only it stores text. */
-  private val SetsTextsWriteOptions = Map("compression" -> "zstd")
-
-  private def setsLayout(texts: Boolean): String =
-    if (texts) SetsLayoutTexts else SetsLayoutArrays
-
-  private def setsOptions(texts: Boolean): Map[String, String] =
-    if (texts) SetsTextsWriteOptions else Map.empty
+    * flags (`containment`/`t_min`) in `_meta`, v5 a `_sets` layout flag
+    * (hashed arrays | zstd texts); v6 drops the flag with the texts
+    * layout. */
+  private[graft] val NgramIndexFormatVersion = 6
 
   /** Read a standing index's `_meta` from the group's latest version,
     * which the meta then pins ([[IndexMeta]]). A version other than the
@@ -534,26 +492,14 @@ object Dedup {
     clusterFor(keys.withColumn("epoch", lit(epoch)), family.keyPart,
       family.keySort: _*)
 
-  /** `_sets` rows of `epoch` in the index's layout, clustered for their
-    * partitioned write: the (doc_id, set, n) arrays, or — texts layout —
-    * the docs' (doc_id, text) restricted to the docs that HAVE a set, so
-    * row membership is IDENTICAL across layouts (exactly the docs with
-    * ≥1 indexed shingle: a probe's verification join sees the same doc
-    * set either way). */
-  private def setsRows(sets: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, texts: Boolean, nSetBuckets: Int,
-      epoch: Long): DataFrame = {
-    val rows =
-      if (texts)
-        docs.select(col(idCol).cast(LongType).as("doc_id"),
-            col(textCol).as("text"))
-          .join(sets.select("doc_id"), Seq("doc_id"), "left_semi")
-      else sets
-    clusterFor(rows
+  /** `_sets` rows (doc_id, set, n) of `epoch`, clustered for their
+    * partitioned write. */
+  private def setsRows(sets: DataFrame, nSetBuckets: Int,
+      epoch: Long): DataFrame =
+    clusterFor(sets
         .withColumn("dbucket", pmod(col("doc_id"), lit(nSetBuckets.toLong)))
         .withColumn("epoch", lit(epoch)),
       "dbucket", "doc_id")
-  }
 
   /** The build half of the lifecycle, shared by both persists: `_meta`,
     * the key table, `_sets` and the family's `extra` tables (the exact
@@ -565,18 +511,14 @@ object Dedup {
     * rebuild: a silently mixed index (r11 ADVICE). With one manifest a
     * crash before the commit leaves the old group whole. */
   private def commitBuild(family: DedupFamily, meta: DataFrame,
-      keys: DataFrame, sets: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, setsAsTexts: Boolean, nSetBuckets: Int,
-      wh: Warehouse, layer: String, table: String,
-      extra: Warehouse.Write*): Unit =
+      keys: DataFrame, sets: DataFrame, nSetBuckets: Int, wh: Warehouse,
+      layer: String, table: String, extra: Warehouse.Write*): Unit =
     wh.commit(layer, table, Seq(
       Warehouse.Write(s"${table}_meta", meta),
       Warehouse.Write(table + family.keyTable, keyRows(family, keys, -1L),
         partCols = Seq(family.keyPart, "epoch")),
-      Warehouse.Write(s"${table}_sets",
-        setsRows(sets, docs, idCol, textCol, setsAsTexts, nSetBuckets, -1L),
-        partCols = Seq("dbucket", "epoch"),
-        options = setsOptions(setsAsTexts))) ++ extra: _*)
+      Warehouse.Write(s"${table}_sets", setsRows(sets, nSetBuckets, -1L),
+        partCols = Seq("dbucket", "epoch"))) ++ extra: _*)
 
   /** The epoch-keyed row write: a batch's key rows (carrying the
     * family's bucket column) and sets land in their (bucket, epoch)
@@ -586,22 +528,20 @@ object Dedup {
     * which once emitted duplicate candidates and wrong set sizes on
     * retry (r10 verdict); −1 is a plain partitioned append into the base
     * epoch (one-shot maintenance, where the caller owns retry
-    * semantics). A texts `_sets` stores `docs`' texts, zstd-compressed
-    * as at build. The two tables' files are written concurrently
+    * semantics). The two tables' files are written concurrently
     * ([[Warehouse.commit]]). */
   private def writeIndexRows(family: DedupFamily)(meta: family.Meta,
-      keys: DataFrame, sets: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, wh: Warehouse, layer: String, table: String,
-      epoch: Long): Unit = {
+      keys: DataFrame, sets: DataFrame, wh: Warehouse, layer: String,
+      table: String, epoch: Long): Unit = {
     val mode =
       if (epoch >= 0L) Warehouse.ReplacePartitions else Warehouse.Append
     wh.commit(layer, table,
       Warehouse.Write(table + family.keyTable,
         keyRows(family, family.stored(keys, meta), epoch), mode,
         Seq(family.keyPart, "epoch")),
-      Warehouse.Write(s"${table}_sets", setsRows(sets, docs, idCol, textCol,
-        meta.texts, meta.nSetBuckets, epoch), mode, Seq("dbucket", "epoch"),
-        setsOptions(meta.texts)))
+      Warehouse.Write(s"${table}_sets",
+        setsRows(sets, meta.nSetBuckets, epoch), mode,
+        Seq("dbucket", "epoch")))
   }
 
   /** Append new docs to a standing index without touching existing
@@ -626,10 +566,9 @@ object Dedup {
       table: String, epoch: Long): Unit = {
     val tracker = PersistTracker.live()
     try {
-      val (keys, sets) = family.sketch(df, idCol, textCol, wh, layer, table,
-        meta, tracker)
-      writeIndexRows(family)(meta, keys, sets, df, idCol, textCol, wh,
-        layer, table, epoch)
+      val (keys, sets) = family.sketch(df, idCol, textCol, table, meta,
+        tracker)
+      writeIndexRows(family)(meta, keys, sets, wh, layer, table, epoch)
     } finally tracker.unpersistAll()
   }
 
@@ -638,9 +577,8 @@ object Dedup {
     * leaves thousands of tiny files per bucket — degraded scan
     * parallelism, the failure mode [[Warehouse.compact]] exists for.
     * Rewrites the key table and `_sets` partition-preserving (one group
-    * version for both, clustered within partitions; a texts `_sets` keeps
-    * its zstd codec — a snappy rewrite would silently grow it ~1.7×),
-    * then vacuums the warehouse ([[Warehouse.vacuum]]);
+    * version for both, clustered within partitions), then vacuums the
+    * warehouse ([[Warehouse.vacuum]]);
     * probes are row-identical before and after because row content is
     * untouched (spec-enforced). `_freq` is never appended to, so it has
     * no small-file accumulation to compact.
@@ -656,26 +594,24 @@ object Dedup {
     * partitions are never folded by `foldEpochsBelow = N`). */
   def indexCompact(family: DedupFamily, spark: SparkSession, wh: Warehouse,
       layer: String, table: String,
-      foldEpochsBelow: Long = Long.MinValue): Unit =
-    compact(family, readMeta(family, spark, wh, layer, table), spark, wh,
-      layer, table, foldEpochsBelow)
+      foldEpochsBelow: Long = Long.MinValue): Unit = {
+    readMeta(family, spark, wh, layer, table) // rejects another format
+    compact(family, spark, wh, layer, table, foldEpochsBelow)
+  }
 
-  private def compact(family: DedupFamily, meta: IndexMeta,
-      spark: SparkSession, wh: Warehouse, layer: String, table: String,
+  private def compact(family: DedupFamily, spark: SparkSession,
+      wh: Warehouse, layer: String, table: String,
       foldEpochsBelow: Long): Unit = {
     // the latest version, not the meta's: an ingest epoch compacts after
     // its own append
     val snap = wh.snapshot(layer, table)
-    def rewrite(t: String, part: String, sort: Seq[String],
-                options: Map[String, String]) =
+    def rewrite(t: String, part: String, sort: Seq[String]) =
       Warehouse.Write(t, clusterFor(snap.read(spark, t)
           .withColumn("epoch", foldedBelow("epoch", foldEpochsBelow)),
-          part, sort: _*), partCols = Seq(part, "epoch"), options = options)
+          part, sort: _*), partCols = Seq(part, "epoch"))
     wh.commit(layer, table,
-      rewrite(table + family.keyTable, family.keyPart, family.keySort,
-        Map.empty),
-      rewrite(s"${table}_sets", "dbucket", Seq("doc_id"),
-        setsOptions(meta.texts)))
+      rewrite(table + family.keyTable, family.keyPart, family.keySort),
+      rewrite(s"${table}_sets", "dbucket", Seq("doc_id")))
     foldSinkPartitions(spark, wh, layer, s"${table}_kept", foldEpochsBelow)
     wh.vacuum()
   }
@@ -866,11 +802,10 @@ object Dedup {
               meta0, unseenThreshold, baseCorpus))
           readMeta(family, spark, wh, layer, table)
         else meta0
-      val (keys, sets) = family.sketch(batch, idCol, textCol, wh, layer,
-        table, meta, tracker)
-      val kept = family.keep(batch, idCol, textCol, wh, layer, table, meta,
-        keys, sets, threshold, broadcastDocLimit, tracker,
-        excludeEpoch = epoch)
+      val (keys, sets) = family.sketch(batch, idCol, textCol, table, meta,
+        tracker)
+      val kept = family.keep(batch, idCol, textCol, table, meta, keys, sets,
+        threshold, broadcastDocLimit, tracker, excludeEpoch = epoch)
       JobCounting.described(spark.sparkContext,
           s"${family.tag}-ingest: survivor rows + index append") {
         // EAGER checkpoint, not a lazy persist: the keep pipeline READS
@@ -901,7 +836,7 @@ object Dedup {
         writeIndexRows(family)(meta,
           keys.join(keptIds, Seq("doc_id"), "left_semi"),
           sets.join(keptIds, Seq("doc_id"), "left_semi"),
-          keptDocs, idCol, textCol, wh, layer, table, epoch)
+          wh, layer, table, epoch)
         // release so a long-running stream holds at most one epoch's
         // cache (r9 ADVICE: these leaked per-epoch into /tmp/blockmgr)
         tracker.unpersistAll()
@@ -912,11 +847,11 @@ object Dedup {
             .withColumn("pepoch", lit(epoch)),
           layer, s"${table}_kept", Seq("pepoch"))
         if (compactEvery > 0 && epoch > 0 && epoch % compactEvery == 0)
-          compact(family, meta, spark, wh, layer, table,
+          compact(family, spark, wh, layer, table,
             foldEpochsBelow = epoch)
         else if (compactMinRatio > 0.0 && epoch > 0)
           foldIfDue(family, wh, layer, table, epoch, compactMinRatio)(
-            compact(family, meta, spark, wh, layer, table,
+            compact(family, spark, wh, layer, table,
               foldEpochsBelow = epoch))
         nKept
       }
@@ -936,37 +871,38 @@ object Dedup {
   /** Exact verification of directed corpus→batch candidates
     * (__cid, __bid), shared by both families' probes: ONE job yields
     * the candidates' `dbucket` values (≤ nSetBuckets — a bounded
-    * collect) and the broadcast-gate count; `readSets` reads the corpus
-    * sets pruned to exactly those buckets and without the replayed
-    * epoch's own rows. Small candidate sets broadcast into the set
-    * joins — the alternative shuffles the fat set ARRAYS, the most
-    * expensive bytes in the index, to meet a few thousand pair rows.
-    * Scores use [[joinVerify]]'s arithmetic exactly (int sizes →
-    * double, one IEEE division), so incremental scores are
-    * bit-identical to a rebuild's. Returns (__cid, __bid, jaccard). */
+    * collect) and the broadcast-gate count; the corpus sets are read
+    * pruned to exactly those buckets ([[corpusSets]]). Small candidate
+    * sets broadcast into the set joins — the alternative shuffles the
+    * fat set ARRAYS, the most expensive bytes in the index, to meet a
+    * few thousand pair rows. Scores are [[scored]]'s, so incremental
+    * scores are bit-identical to a rebuild's. Returns
+    * (__cid, __bid, jaccard). */
   private def verifyCross(cands: DataFrame, setsB: DataFrame,
-      nSetBuckets: Int, excludeEpoch: Long, threshold: Double,
-      broadcastLimit: Long)(readSets: Column => DataFrame): DataFrame = {
+      table: String, meta: IndexMeta, excludeEpoch: Long,
+      threshold: Double, broadcastLimit: Long): DataFrame = {
     val dbRows = cands
-      .groupBy(pmod(col("__cid"), lit(nSetBuckets.toLong)).cast("int").as("db"))
+      .groupBy(pmod(col("__cid"), lit(meta.nSetBuckets.toLong)).cast("int")
+        .as("db"))
       .agg(count(lit(1)).as("c")).collect()
-    val dbs = dbRows.map(_.getInt(0)).sorted
-    val setsC = readSets(col("dbucket").isin(dbs.map(Int.box): _*) &&
-      col("epoch") =!= lit(excludeEpoch))
+    val setsC = corpusSets(cands.sparkSession, table, meta,
+      dbRows.map(_.getInt(0)), excludeEpoch)
     val candsB =
       if (dbRows.map(_.getLong(1)).sum <= broadcastLimit) broadcast(cands)
       else cands
-    candsB
-      .join(setsC.select(col("doc_id").as("__cid"), col("set").as("set_a"),
-        col("n").as("n_a")), "__cid")
-      .join(setsB.select(col("doc_id").as("__bid"), col("set").as("set_b"),
-        col("n").as("n_b")), "__bid")
-      .withColumn("__i", size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard", col("__i").cast("double")
-        / (col("n_a") + col("n_b") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("__cid", "__bid", "jaccard")
+    scored(candsB, setsC, setsB, directed = false, threshold,
+      ("__cid", "__bid"))
   }
+
+  /** The corpus-side verification sets (doc_id, set, n) of `meta`'s
+    * version, pruned to the `dbucket` partitions `dbs` and without the
+    * replayed epoch's own rows. */
+  private def corpusSets(spark: SparkSession, table: String,
+      meta: IndexMeta, dbs: Array[Int], excludeEpoch: Long): DataFrame =
+    meta.snap.read(spark, s"${table}_sets")
+      .filter(col("dbucket").isin(dbs.sorted.map(Int.box): _*) &&
+        col("epoch") =!= lit(excludeEpoch))
+      .select("doc_id", "set", "n")
 
   // ------------------------------------------------- the MinHash family
 
@@ -978,42 +914,48 @@ object Dedup {
     *                     (= band·nBuckets + band_hash mod nBuckets): a
     *                     batch's candidate lookup prunes to exactly the
     *                     partitions its own band keys hash into
-    *   `<table>_sets`  — the hashed-shingle sets (or texts)
+    *   `<table>_sets`  — the hashed-shingle sets
     *
     * Band rows are per-DOC (no exact-dup collapse): k identical copies
     * cost k index rows, and a batch probe that hits the class emits all
     * k pairs — output-sized, since every one of those pairs is a true
     * result. Docs whose text yields no shingles have no rows (they can
-    * never pair — the [[minhashLshVerified]] contract). */
+    * never pair — the [[minhashLshVerified]] contract). The build's
+    * cached frames are released whether or not its commit succeeds. */
   def nearDedupIndexPersist(df: DataFrame, idCol: String, textCol: String,
       wh: Warehouse, layer: String, table: String,
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 16,
-      nBuckets: Int = 64, nSetBuckets: Int = 64,
-      setsAsTexts: Boolean = false): Unit = {
+      nBuckets: Int = 64, nSetBuckets: Int = 64): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    val sh = shingledHashed(df, idCol, textCol, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keys = bandedKeys(minhashFromShingles(sh, numHashes), numHashes,
-      bands, keepSig = false)
-    commitBuild(MinHashFamily,
-      Seq((shingleK, numHashes, bands, nBuckets, nSetBuckets,
-          NearDedupIndexFormatVersion, setsLayout(setsAsTexts)))
-        .toDF("shingle_k", "num_hashes", "bands", "n_buckets",
-          "n_set_buckets", "format_version", "sets_layout"),
-      keys.withColumn("pb", pbKey(nBuckets)), shingleSets(sh), df, idCol,
-      textCol, setsAsTexts, nSetBuckets, wh, layer, table)
-    sh.unpersist()
+    val tracker = PersistTracker.live()
+    try {
+      val sh = tracker.pinned(shingledHashed(df, idCol, textCol, shingleK))
+      commitBuild(MinHashFamily,
+        Seq((shingleK, numHashes, bands, nBuckets, nSetBuckets,
+            NearDedupIndexFormatVersion))
+          .toDF("shingle_k", "num_hashes", "bands", "n_buckets",
+            "n_set_buckets", "format_version"),
+        bandRows(sh, numHashes, bands, nBuckets), shingleSets(sh),
+        nSetBuckets, wh, layer, table)
+    } finally tracker.unpersistAll()
   }
 
-  private def pbKey(nBuckets: Int): Column =
-    (col("band") * nBuckets + pmod(col("band_hash"), lit(nBuckets.toLong)))
-      .cast("int")
+  /** The MinHash family's key rows (doc_id, band, band_hash, pb) of
+    * (doc_id, sh) rows — at build and in every sketch. */
+  private def bandRows(sh: DataFrame, numHashes: Int, bands: Int,
+      nBuckets: Int): DataFrame =
+    bandedKeys(minhashFromShingles(sh, numHashes), numHashes, bands,
+      keepSig = false)
+      .withColumn("pb", (col("band") * nBuckets +
+        pmod(col("band_hash"), lit(nBuckets.toLong))).cast("int"))
 
-  /** Per-doc hashed-shingle sets (doc_id, set, n). */
+  /** Per-doc hashed-shingle sets (doc_id, set, n) of (doc_id, sh) rows —
+    * the one set aggregate of every family, index and operator; `n` is
+    * Int, as the posting index narrowed it (format v4). */
   private def shingleSets(sh: DataFrame): DataFrame =
     sh.groupBy("doc_id")
-      .agg(collect_list(col("sh")).as("set"), count(lit(1)).as("n"))
+      .agg(collect_list(col("sh")).as("set"), count(lit(1)).cast("int").as("n"))
 
   /** The MinHash family's sketch: a batch's band keys
     * (doc_id, band, band_hash, pb) and shingle sets (doc_id, set, n)
@@ -1024,15 +966,10 @@ object Dedup {
   private[textops] def minhashSketch(batch: DataFrame, idCol: String,
       textCol: String, meta: MinhashMeta,
       tracker: PersistTracker): (DataFrame, DataFrame) = {
-    val sh = tracker.add(
-      shingledHashed(batch, idCol, textCol, meta.shingleK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val keys = tracker.add(
-      bandedKeys(minhashFromShingles(sh, meta.numHashes), meta.numHashes,
-        meta.bands, keepSig = false)
-        .withColumn("pb", pbKey(meta.nBuckets))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    (keys, shingleSets(sh))
+    val sh = tracker.pinned(
+      shingledHashed(batch, idCol, textCol, meta.shingleK))
+    (tracker.pinned(bandRows(sh, meta.numHashes, meta.bands, meta.nBuckets)),
+      shingleSets(sh))
   }
 
   /** Batch→corpus verified pairs from the MinHash index, batch-sized by
@@ -1049,9 +986,8 @@ object Dedup {
     * pre-epoch corpus instead of matching its first attempt's
     * survivors. */
   private def minhashCross(keysB: DataFrame, setsB: DataFrame,
-      wh: Warehouse, layer: String, table: String, meta: MinhashMeta,
-      threshold: Double, tracker: PersistTracker,
-      excludeEpoch: Long): DataFrame = {
+      table: String, meta: MinhashMeta, threshold: Double,
+      tracker: PersistTracker, excludeEpoch: Long): DataFrame = {
     val spark = keysB.sparkSession
     val sc = spark.sparkContext
     // bounded collect: ≤ bands·nBuckets pb values by construction —
@@ -1071,8 +1007,7 @@ object Dedup {
     // a noop-tracker persist outlives compaction swaps — Spark's
     // CacheManager aliases file relations by root path, so the next
     // same-plan probe after a compaction re-executed a stale listing
-    // and died on the deleted files (the r14 texts-`_sets` defect
-    // class, caught again here by the minhash texts-layout spec)
+    // and died on the deleted files
     val cross = JobCounting.described(sc, "nd-probe: pruned bands join") {
       tracker.snapshotted(meta.snap.read(spark, s"${table}_bands")
         .filter(col("pb").isin(pbs.map(Int.box): _*) &&
@@ -1084,9 +1019,8 @@ object Dedup {
         .select("__cid", "__bid").distinct())
     }
     JobCounting.described(sc, "nd-probe: corpus sets verify") {
-      verifyCross(cross, setsB, meta.nSetBuckets, excludeEpoch, threshold,
-        2000000L)(readCorpusSets(spark, wh, layer, table, meta, _,
-          tracker)(identity))
+      verifyCross(cross, setsB, table, meta, excludeEpoch, threshold,
+        2000000L)
     }
   }
 
@@ -1104,7 +1038,7 @@ object Dedup {
     val meta = readMeta(MinHashFamily, batch.sparkSession, wh, layer, table)
     val (keys, sets) = minhashSketch(batch, idCol, textCol, meta,
       PersistTracker.noop)
-    val cross = minhashCross(keys, sets, wh, layer, table, meta, threshold,
+    val cross = minhashCross(keys, sets, table, meta, threshold,
       PersistTracker.noop, Long.MinValue)
     minhashLshVerified(batch, idCol, textCol, meta.shingleK, meta.numHashes,
       meta.bands, threshold).unionByName(undirected(cross))
@@ -1132,21 +1066,20 @@ object Dedup {
     val meta = readMeta(MinHashFamily, batch.sparkSession, wh, layer, table)
     val (keys, sets) = minhashSketch(batch, idCol, textCol, meta,
       PersistTracker.noop)
-    minhashKeep(batch, idCol, textCol, wh, layer, table, meta, keys, sets,
-      threshold, broadcastDocLimit, PersistTracker.noop, Long.MinValue)
+    minhashKeep(batch, idCol, textCol, table, meta, keys, sets, threshold,
+      broadcastDocLimit, PersistTracker.noop, Long.MinValue)
   }
 
   /** [[nearDedupIncrementKeep]] over a precomputed sketch — the MinHash
     * family's keep, which the ingest loop runs with a live tracker and
     * its own epoch excluded. */
   private[textops] def minhashKeep(batch: DataFrame, idCol: String,
-      textCol: String, wh: Warehouse, layer: String, table: String,
-      meta: MinhashMeta, keysB: DataFrame, setsB: DataFrame,
-      threshold: Double, broadcastDocLimit: Long, tracker: PersistTracker,
-      excludeEpoch: Long): DataFrame = {
+      textCol: String, table: String, meta: MinhashMeta, keysB: DataFrame,
+      setsB: DataFrame, threshold: Double, broadcastDocLimit: Long,
+      tracker: PersistTracker, excludeEpoch: Long): DataFrame = {
     val sc = batch.sparkSession.sparkContext
-    val crossPairs = minhashCross(keysB, setsB, wh, layer, table, meta,
-      threshold, tracker, excludeEpoch)
+    val crossPairs = minhashCross(keysB, setsB, table, meta, threshold,
+      tracker, excludeEpoch)
     val matched = crossPairs.select(col("__bid").as("__mid")).distinct()
     val (repPairs, members, live) =
       JobCounting.described(sc, "nd-keep: batch-internal verify") {
@@ -1202,7 +1135,7 @@ object Dedup {
     *                    over stored columns — and gives containment its
     *                    full-postings destination side from the same
     *                    table.
-    *   `<table>_sets` — the capped shingle sets (or texts).
+    *   `<table>_sets` — the capped shingle sets.
     *
     * At 100 TB the postings/freq tables are the skinny derivative of
     * the text — a probe scans bucket-pruned slices of them instead of
@@ -1224,124 +1157,68 @@ object Dedup {
     * destination postings) and Jaccard probes BELOW the floor are
     * rejected with an explicit error instead of silently under-
     * recalling. Layout flags persist in `_meta` and every probe
-    * validates against them.
-    *
-    * `setsAsTexts = true` opts into the TEXTS `_sets` layout
-    * ([[SetsLayoutTexts]]): `_sets` stores (doc_id, text) zstd-
-    * compressed instead of the incompressible hashed arrays, and every
-    * probe re-derives its candidates' (set, n) from the pruned text
-    * partitions under the frozen dictionary ([[readCorpusSets]]) —
-    * identical values by construction (same shingle + frozen-freq-cap
-    * arithmetic as this build), measured 97.0 → 32.3 MB on the r14
-    * probe corpus (the index's dominant table, 5.7× → 1.9× corpus). */
+    * validates against them. The build's cached frames are released
+    * whether or not its commit succeeds. */
   def ngramIndexPersist(df: DataFrame, idCol: String, textCol: String,
       wh: Warehouse, layer: String, table: String,
       shingleK: Int = 3, maxShingleFreq: Int = 1000,
       nPostBuckets: Int = 64, nSetBuckets: Int = 64,
-      containment: Boolean = true, tMinJaccard: Double = 0.0,
-      setsAsTexts: Boolean = false): Unit = {
+      containment: Boolean = true, tMinJaccard: Double = 0.0): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
     require(containment || tMinJaccard > 0.0,
       "a Jaccard-only index needs a positive tMinJaccard floor")
-    val sh = shingledHashed(df, idCol, textCol, shingleK)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // frozen document frequency: plain per-doc count (shingledHashed is
-    // distinct per doc), the member-weighted freq of the batch operator
-    // without the rep collapse — identical values, append-friendly rows
-    val freqTab = sh.groupBy("sh").agg(count(lit(1)).as("freq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the dictionary commits with the group ([[commitBuild]])
-    val freqRows = Warehouse.Write(s"${table}_freq",
-      clusterFor(freqTab
-          .withColumn("freq",
-            least(col("freq"), lit(Int.MaxValue.toLong)).cast("int"))
-          .withColumn("sbucket",
-            pmod(col("sh"), lit(nPostBuckets.toLong)).cast("int")),
-        "sbucket", "sh"),
-      partCols = Seq("sbucket"))
-    val capped = sh.join(freqTab, "sh")
-      .filter(col("freq") <= maxShingleFreq)
-      .select("doc_id", "sh", "freq")
-    // __pos and __n share one sorted window, as in [[ngramJaccardPairs]]
+    val tracker = PersistTracker.live()
+    try {
+      val sh = tracker.pinned(shingledHashed(df, idCol, textCol, shingleK))
+      // frozen document frequency: plain per-doc count (shingledHashed is
+      // distinct per doc), the member-weighted freq of the batch operator
+      // without the rep collapse — identical values, append-friendly rows
+      val freqTab = tracker.pinned(
+        sh.groupBy("sh").agg(count(lit(1)).as("freq")))
+      // the dictionary commits with the group ([[commitBuild]])
+      val freqRows = Warehouse.Write(s"${table}_freq",
+        clusterFor(freqTab
+            .withColumn("freq",
+              least(col("freq"), lit(Int.MaxValue.toLong)).cast("int"))
+            .withColumn("sbucket", sbucketOf(nPostBuckets)),
+          "sbucket", "sh"),
+        partCols = Seq("sbucket"))
+      val posted = tracker.pinned(positioned(sh.join(freqTab, "sh")
+          .filter(col("freq") <= maxShingleFreq))
+        .select("sh", "doc_id", "__pos", "__n"))
+      val storedPost =
+        if (containment) posted else prefixRows(posted, tMinJaccard)
+      commitBuild(ExactNgramFamily,
+        Seq((shingleK, maxShingleFreq, nPostBuckets, nSetBuckets,
+            NgramIndexFormatVersion, containment, tMinJaccard))
+          .toDF("shingle_k", "max_freq", "n_post_buckets", "n_set_buckets",
+            "format_version", "containment", "t_min"),
+        storedPost.withColumn("sbucket", sbucketOf(nPostBuckets)),
+        shingleSets(posted), nSetBuckets, wh, layer, table, freqRows)
+    } finally tracker.unpersistAll()
+  }
+
+  /** The `_post`/`_freq` partition of a shingle `sh`. */
+  private def sbucketOf(nPostBuckets: Int): Column =
+    pmod(col("sh"), lit(nPostBuckets.toLong)).cast("int")
+
+  /** The one positioned-postings builder, shared by the index build, the
+    * batch probe and the batch operators: capped (doc_id, sh, freq)
+    * rows gain each doc's rare-first position `__pos` and capped size
+    * `__n` (both Int), under the global total order (freq, sh). Both
+    * come from ONE sorted window (same partition + ordering,
+    * whole-partition frame for the count) → a single WindowExec pass.
+    * Over one shared order the prefix ([[prefixRows]]) and positional
+    * ([[candidatePairs]]) theorems hold across any two posting sets —
+    * within a corpus, a batch, or corpus↔batch. */
+  private def positioned(capped: DataFrame): DataFrame = {
     val rareFirst = Window.partitionBy("doc_id").orderBy("freq", "sh")
-    val posted = capped
+    capped
       .withColumn("__pos", row_number().over(rareFirst))
       .withColumn("__n", count(lit(1)).over(rareFirst.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing)).cast("int"))
-      .select("sh", "doc_id", "__pos", "__n")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val storedPost =
-      if (containment) posted else prefixRows(posted, tMinJaccard)
-    commitBuild(ExactNgramFamily,
-      Seq((shingleK, maxShingleFreq, nPostBuckets, nSetBuckets,
-          NgramIndexFormatVersion, containment, tMinJaccard,
-          setsLayout(setsAsTexts)))
-        .toDF("shingle_k", "max_freq", "n_post_buckets", "n_set_buckets",
-          "format_version", "containment", "t_min", "sets_layout"),
-      storedPost.withColumn("sbucket",
-        pmod(col("sh"), lit(nPostBuckets.toLong)).cast("int")),
-      posted.groupBy("doc_id")
-        .agg(collect_list(col("sh")).as("set"),
-          count(lit(1)).cast("int").as("n")),
-      df, idCol, textCol, setsAsTexts, nSetBuckets, wh, layer, table,
-      freqRows)
-    posted.unpersist(); freqTab.unpersist(); sh.unpersist()
   }
-
-  /** The corpus-side verification sets (doc_id, set, n), pruned by
-    * `rowFilter` (candidate dbucket membership + replayed-epoch
-    * exclusion). Arrays layout: the stored arrays, selected. Texts
-    * layout: the candidates' pruned TEXT partitions re-shingled, with
-    * `capped` applying the family's set rule to the (doc_id, epoch, sh)
-    * rows — identity for MinHash (its sets are uncapped), the frozen
-    * dictionary's cap for the exact family ([[frozenCap]]) — so the
-    * recomputed (set, n) equal what the arrays layout stored, for base
-    * and appended epochs alike. Grouped by (doc_id, epoch), NOT doc_id:
-    * the arrays layout stores one row per (doc_id, epoch), so a doc_id
-    * appended in two epochs must verify per-version here too, not as a
-    * merged union set (the layouts would otherwise diverge on that
-    * corpus). ONE texts pass, ONE snapshot
-    * ([[PersistTracker.snapshotted]] — a bare noop-tracker persist would
-    * alias post-compaction reads of the rewritten root path, and no
-    * snapshot re-runs the whole pipeline per verify join: containment
-    * consumes it twice). CPU is bounded by the candidates' buckets. */
-  private def readCorpusSets(spark: SparkSession, wh: Warehouse,
-      layer: String, table: String, meta: IndexMeta, rowFilter: Column,
-      tracker: PersistTracker)(capped: DataFrame => DataFrame): DataFrame = {
-    val raw = meta.snap.read(spark, s"${table}_sets").filter(rowFilter)
-    if (meta.texts)
-      tracker.snapshotted(
-        capped(shingledHashed(raw, "doc_id", "text", meta.shingleK,
-            carry = Seq("epoch")))
-          .groupBy("doc_id", "epoch")
-          .agg(collect_list(col("sh")).as("set"),
-            count(lit(1)).cast("int").as("n"))
-          .select("doc_id", "set", "n"))
-    else raw.select("doc_id", "set", "n")
-  }
-
-  /** The exact family's set rule for re-shingled corpus texts: EXACTLY
-    * the ingest-side arithmetic ([[batchPostings]]' left join +
-    * coalesce-0 + cap), so recomputed sets equal the stored arrays
-    * (base-build shingles are all in the frozen dictionary, so its inner
-    * join ≡ this left join there; appended docs were capped with
-    * coalesce-0 at ingest — the same expression). The dictionary join
-    * deliberately does NOT reuse the batch path's [[frozenFreqJoin]]:
-    * its broadcast gating + per-bucket range pruning each cost an extra
-    * evaluation of the shingle frame (count + range collect), and the
-    * corpus-side candidate slice — unlike a small batch — spans most
-    * shingle buckets, so the pruning buys little; checkpointing the
-    * shingle frame to avoid the re-evaluations materializes every
-    * (doc, shingle) row (measured SLOWER than the r14 triple-scan at
-    * sf0.1). `_freq` is the skinny derivative; one shuffle join against
-    * it per probe is the cheapest shape at every scale. */
-  private def frozenCap(spark: SparkSession, wh: Warehouse, layer: String,
-      table: String, meta: NgramMeta)(sh: DataFrame): DataFrame =
-    sh.join(meta.snap.read(spark, s"${table}_freq").select("sh", "freq"),
-        Seq("sh"), "left")
-      .withColumn("freq", coalesce(col("freq"), lit(0)))
-      .filter(col("freq") <= meta.maxFreq)
 
   /** The exact family's sketch — the shared probe-side pipeline: the
     * batch's capped, positioned postings under the index's FROZEN
@@ -1353,8 +1230,8 @@ object Dedup {
     * prefix/positional theorems hold across the corpus↔batch join
     * exactly as within the batch. */
   private[textops] def batchPostings(batch: DataFrame, idCol: String,
-      textCol: String, wh: Warehouse, layer: String, table: String,
-      meta: NgramMeta, tracker: PersistTracker,
+      textCol: String, table: String, meta: NgramMeta,
+      tracker: PersistTracker,
       broadcastShingleLimit: Long = 2000000L): (DataFrame, DataFrame) =
     JobCounting.described(batch.sparkSession.sparkContext,
         "ng-probe: batch postings") {
@@ -1375,27 +1252,18 @@ object Dedup {
           broadcastShingleLimit)
         .withColumn("freq", coalesce(col("freq"), lit(0)))
         .filter(col("freq") <= meta.maxFreq)
-      val rareFirst = Window.partitionBy("doc_id").orderBy("freq", "sh")
       // snapshotted (scans `_freq` through the dictionary join, which a
       // statistics rebuild rewrites) — see [[minhashCross]]' cross
-      val postB = tracker.snapshotted(cappedB
-        .withColumn("__pos", row_number().over(rareFirst))
-        .withColumn("__n", count(lit(1)).over(rareFirst.rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)).cast("int"))
+      val postB = tracker.snapshotted(positioned(cappedB)
         .select("sh", "doc_id", "__pos", "__n", "sbucket"))
-      val setsB = tracker.add(postB.groupBy("doc_id")
-        .agg(collect_list(col("sh")).as("set"),
-          count(lit(1)).cast("int").as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      (postB, setsB)
+      (postB, tracker.pinned(shingleSets(postB)))
     }
 
   /** A batch's (doc_id, sh, sbucket) shingle rows, pinned. */
   private def postingShingles(batch: DataFrame, idCol: String,
       textCol: String, meta: NgramMeta): DataFrame =
     shingledHashed(batch, idCol, textCol, meta.shingleK)
-      .withColumn("sbucket",
-        pmod(col("sh"), lit(meta.nPostBuckets.toLong)).cast("int"))
+      .withColumn("sbucket", sbucketOf(meta.nPostBuckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Batch shingles ⟕ frozen `_freq` dictionary — the ONE scan shape
@@ -1449,11 +1317,15 @@ object Dedup {
     (small, prune)
   }
 
-  /** Prefix row-filter at probe threshold `t` over positioned postings
-    * — same 1e-9 ceil slack as [[ngramJaccardPairs]] (err toward a
-    * longer prefix: extra candidates, never lost recall). A Jaccard-only
-    * index stores exactly these rows at its `t_min` floor, at build and
-    * on every append. */
+  /** Prefix row-filter at threshold `t` over positioned postings
+    * ([[positioned]]): under the rare-first order, a pair scoring ≥ t
+    * must share a shingle inside a doc's first |d| − ⌈t·|d|⌉ + 1 (for
+    * containment: the SOURCE doc's). ceil over a FP product can round
+    * UP past the exact ⌈t·n⌉ (e.g. 500·0.87 = 435.00000000000006),
+    * which would SHORTEN the prefix and lose recall; the 1e-9 slack
+    * errs toward a one-longer prefix (extra candidates, never missed
+    * pairs). A Jaccard-only index stores exactly these rows at its
+    * `t_min` floor, at build and on every append. */
   private[textops] def prefixRows(p: DataFrame, t: Double): DataFrame =
     p.filter(col("__pos") <=
       col("__n") - ceil(col("__n") * lit(t) - lit(1e-9)) + 1)
@@ -1489,18 +1361,14 @@ object Dedup {
       // same scan shape as a probe, by construction: the one shared
       // [[frozenFreqJoin]] — the staleness signal must measure through
       // exactly the dictionary join the probe runs
-      val joined = frozenFreqJoin(shB, meta.snap, table,
-        broadcastShingleLimit)
-      joined.agg(
-        count(lit(1)).as("n_postings"),
-        sum(when(col("freq").isNull, 1L).otherwise(0L)).as("n_unseen"),
-        (sum(when(col("freq").isNull, 1L).otherwise(0L)).cast("double")
-          / count(lit(1)).cast("double")).as("unseen_frac"),
-        sum(when(col("freq") > meta.maxFreq, 1L).otherwise(0L))
-          .as("n_capped"),
-        (sum(when(col("freq") > meta.maxFreq, 1L).otherwise(0L))
-          .cast("double")
-          / count(lit(1)).cast("double")).as("capped_frac")).head()
+      val n = count(lit(1))
+      val unseen = sum(when(col("freq").isNull, 1L).otherwise(0L))
+      val capped = sum(when(col("freq") > meta.maxFreq, 1L).otherwise(0L))
+      frozenFreqJoin(shB, meta.snap, table, broadcastShingleLimit).agg(
+        n.as("n_postings"), unseen.as("n_unseen"),
+        (unseen.cast("double") / n.cast("double")).as("unseen_frac"),
+        capped.as("n_capped"),
+        (capped.cast("double") / n.cast("double")).as("capped_frac")).head()
     } finally shB.unpersist()
   }
 
@@ -1509,17 +1377,16 @@ object Dedup {
     if (row.isNullAt(2)) 0.0 else row.getDouble(2)
 
   /** Re-freeze the posting index over `corpus` under `m`'s build
-    * parameters, preserving ALL layout flags: a Jaccard-only index
-    * re-freezes as Jaccard-only at the same floor, and a texts-layout
-    * `_sets` re-freezes as texts (an omitted setsAsTexts here silently
-    * reverted the footprint win on first rebuild — r14 ADVICE,
-    * spec-pinned in PostingIndexSpec). The rebuild commits as one group
-    * version — atomic under a crash at any point (r11 ADVICE). */
+    * parameters, preserving its layout flags: a Jaccard-only index
+    * re-freezes as Jaccard-only at the same floor (spec-pinned in
+    * PostingIndexSpec for both rebuild paths). The rebuild commits as
+    * one group version — atomic under a crash at any point (r11
+    * ADVICE). */
   private def refrozen(m: NgramMeta, corpus: DataFrame, idCol: String,
       textCol: String, wh: Warehouse, layer: String, table: String): Unit =
     ngramIndexPersist(corpus, idCol, textCol, wh, layer, table,
       m.shingleK, m.maxFreq, m.nPostBuckets, m.nSetBuckets, m.containment,
-      m.tMin, setsAsTexts = m.texts)
+      m.tMin)
 
   /** Statistics-refresh policy around [[ngramIndexStaleness]]: if the
     * batch's unseen shingle-mass fraction exceeds `unseenThreshold`,
@@ -1588,8 +1455,8 @@ object Dedup {
     * candidates join the batch's prefix rows against the bucket-pruned
     * `_post` scan (both sides prefix-filtered, PPJoin positional bound);
     * batch↔batch candidates self-join the batch prefix. Both verify
-    * exactly against the capped sets with [[joinVerify]]'s arithmetic
-    * — bit-identical scores to a rebuild. Returns (id_a, id_b, jaccard)
+    * exactly against the capped sets with [[scored]]'s arithmetic —
+    * bit-identical scores to a rebuild. Returns (id_a, id_b, jaccard)
     * with id_a < id_b. */
   def ngramJaccardIncrementPairs(batch: DataFrame, idCol: String,
       textCol: String, wh: Warehouse, layer: String, table: String,
@@ -1598,10 +1465,10 @@ object Dedup {
       broadcastShingleLimit: Long = 2000000L): DataFrame = {
     val meta = readMeta(ExactNgramFamily, batch.sparkSession, wh, layer,
       table)
-    val (postB, setsB) = batchPostings(batch, idCol, textCol, wh, layer,
-      table, meta, PersistTracker.noop, broadcastShingleLimit)
-    val (cross, internal) = ngramIncrementParts(postB, setsB, wh, layer,
-      table, meta, threshold, broadcastDocLimit, maxComponentShingles,
+    val (postB, setsB) = batchPostings(batch, idCol, textCol, table, meta,
+      PersistTracker.noop, broadcastShingleLimit)
+    val (cross, internal) = ngramIncrementParts(postB, setsB, table, meta,
+      threshold, broadcastDocLimit, maxComponentShingles,
       broadcastShingleLimit, PersistTracker.noop, Long.MinValue)
     internal.unionByName(undirected(cross))
   }
@@ -1614,23 +1481,17 @@ object Dedup {
     * epoch recomputes against exactly the pre-epoch corpus (same
     * contract as [[minhashCross]]). */
   private def ngramIncrementParts(postB: DataFrame, setsB: DataFrame,
-      wh: Warehouse, layer: String, table: String, meta: NgramMeta,
-      threshold: Double, broadcastDocLimit: Long,
-      maxComponentShingles: Long, broadcastShingleLimit: Long,
-      tracker: PersistTracker, excludeEpoch: Long)
-      : (DataFrame, DataFrame) = {
+      table: String, meta: NgramMeta, threshold: Double,
+      broadcastDocLimit: Long, maxComponentShingles: Long,
+      broadcastShingleLimit: Long, tracker: PersistTracker,
+      excludeEpoch: Long): (DataFrame, DataFrame) = {
     val spark = postB.sparkSession
     require(meta.containment || threshold >= meta.tMin - 1e-12,
       s"Jaccard probe at threshold $threshold against a Jaccard-only " +
       s"index with prefix floor t_min=${meta.tMin}: stored postings " +
       "cannot guarantee recall below the floor — rebuild the index " +
       "with a lower tMinJaccard (or containment = true)")
-    val prefB = tracker.add(prefixRows(postB, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    def alpha = ceil((col("x.__n") + col("y.__n"))
-      * lit(threshold / (1 + threshold)) - lit(1e-9))
-    def posOk = least(col("x.__n") - col("x.__pos"),
-      col("y.__n") - col("y.__pos")) + 1 >= alpha
+    val prefB = tracker.pinned(prefixRows(postB, threshold))
     val crossCands =
       JobCounting.described(spark.sparkContext,
           "ng-probe: pruned postings join") {
@@ -1649,28 +1510,17 @@ object Dedup {
         // dictionary semi-join). Snapshotted (scans `_post`) — see
         // [[minhashCross]]' cross
         val prefBr = if (small) broadcast(prefB) else prefB
-        tracker.snapshotted(
-          postC.as("x").join(prefBr.as("y"), Seq("sh"))
-          .filter(col("x.doc_id") =!= col("y.doc_id") && posOk)
-          .select(col("x.doc_id").as("__cid"), col("y.doc_id").as("__bid"))
-          .distinct())
+        tracker.snapshotted(candidatePairs(postC, prefBr, threshold,
+          directed = false, ("__cid", "__bid")).distinct())
       }
     JobCounting.described(spark.sparkContext,
         "ng-probe: corpus sets verify") {
-      val cross = verifyCross(crossCands, setsB, meta.nSetBuckets,
-        excludeEpoch, threshold, broadcastShingleLimit)(
-        readCorpusSets(spark, wh, layer, table, meta, _, tracker)(
-          frozenCap(spark, wh, layer, table, meta)))
-      val selfCands = prefB.as("x").join(prefB.as("y"), Seq("sh"))
-        .filter(col("x.doc_id") < col("y.doc_id") && posOk)
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      val internal =
-        if (setsB.count() <= broadcastDocLimit)
-          joinVerify(selfCands, broadcast(setsB), broadcast(setsB),
-            threshold)
-        else
-          verifyJaccardByComponent(selfCands, setsB, threshold,
-            maxComponentShingles, useComponents = false)
+      val cross = verifyCross(crossCands, setsB, table, meta, excludeEpoch,
+        threshold, broadcastShingleLimit)
+      val internal = verifyPairs(candidatePairs(prefB, prefB, threshold,
+          directed = false, ("id_a", "id_b"), ordered = true),
+        setsB, directed = false, threshold, broadcastDocLimit,
+        maxComponentShingles, useComponents = false)
       (cross, internal)
     }
   }
@@ -1691,9 +1541,9 @@ object Dedup {
       broadcastShingleLimit: Long = 2000000L): DataFrame = {
     val meta = readMeta(ExactNgramFamily, batch.sparkSession, wh, layer,
       table)
-    val (postB, setsB) = batchPostings(batch, idCol, textCol, wh, layer,
-      table, meta, PersistTracker.noop, broadcastShingleLimit)
-    ngramKeep(batch, idCol, wh, layer, table, meta, postB, setsB, threshold,
+    val (postB, setsB) = batchPostings(batch, idCol, textCol, table, meta,
+      PersistTracker.noop, broadcastShingleLimit)
+    ngramKeep(batch, idCol, table, meta, postB, setsB, threshold,
       broadcastDocLimit, PersistTracker.noop, Long.MinValue,
       maxComponentShingles, broadcastShingleLimit)
   }
@@ -1702,13 +1552,12 @@ object Dedup {
     * family's keep, which the ingest loop runs with a live tracker and
     * its own epoch excluded. */
   private[textops] def ngramKeep(batch: DataFrame, idCol: String,
-      wh: Warehouse, layer: String, table: String, meta: NgramMeta,
-      postB: DataFrame, setsB: DataFrame, threshold: Double,
-      broadcastDocLimit: Long, tracker: PersistTracker, excludeEpoch: Long,
-      maxComponentShingles: Long = 1000000L,
+      table: String, meta: NgramMeta, postB: DataFrame, setsB: DataFrame,
+      threshold: Double, broadcastDocLimit: Long, tracker: PersistTracker,
+      excludeEpoch: Long, maxComponentShingles: Long = 1000000L,
       broadcastShingleLimit: Long = 2000000L): DataFrame = {
-    val (cross, internal) = ngramIncrementParts(postB, setsB, wh, layer,
-      table, meta, threshold, broadcastDocLimit, maxComponentShingles,
+    val (cross, internal) = ngramIncrementParts(postB, setsB, table, meta,
+      threshold, broadcastDocLimit, maxComponentShingles,
       broadcastShingleLimit, tracker, excludeEpoch)
     val matched = cross.select(col("__bid").as(idCol)).distinct()
     val comp = graft.operators.ConnectedComponents
@@ -1746,9 +1595,8 @@ object Dedup {
       s"containment probe against a Jaccard-only index (prefix floor " +
       s"t_min=${meta.tMin}): destination-side postings were not stored " +
       "— rebuild the index with containment = true")
-    val nSetBuckets = meta.nSetBuckets
-    val (postB, setsB) = batchPostings(batch, idCol, textCol, wh, layer,
-      table, meta, PersistTracker.noop, broadcastShingleLimit)
+    val (postB, setsB) = batchPostings(batch, idCol, textCol, table, meta,
+      PersistTracker.noop, broadcastShingleLimit)
     // a small batch broadcasts into every corpus-posting join (see
     // [[ngramJaccardIncrementPairs]]); the batch's FULL buckets bound
     // every corpus-side scan (a corpus posting can only candidate-match
@@ -1758,50 +1606,29 @@ object Dedup {
     val prefB = prefixRows(postB, threshold)
     val postC = meta.snap.read(spark, s"${table}_post")
       .filter(postPrune && col("epoch") =!= lit(excludeEpoch))
-    val prefC = prefixRows(postC, threshold)
-    // directed positional bound, exactly [[containmentPairs]]': overlap
-    // from a shared shingle at (pos_s, pos_d) is ≤ min(n_s−pos_s,
-    // n_d−pos_d)+1 and must reach ⌈t·n_s⌉
-    def posOk = least(col("x.__n") - col("x.__pos"),
-      col("y.__n") - col("y.__pos")) + 1 >=
-      ceil(col("x.__n") * lit(threshold) - lit(1e-9))
     def cands(src: DataFrame, dst: DataFrame): DataFrame =
-      src.as("x").join(dst.as("y"), Seq("sh"))
-        .filter(col("x.doc_id") =!= col("y.doc_id") && posOk)
-        .select(col("x.doc_id").as("id_src"), col("y.doc_id").as("id_dst"))
+      candidatePairs(src, dst, threshold, directed = true,
+        ("id_src", "id_dst"))
     // eager localCheckpoint, not persist: this one-shot probe scans
     // `_post`, and a cache entry nobody releases outlives compaction
     // swaps (root-path aliasing — see [[minhashCross]]' cross); the
     // snapshot also stops the three downstream consumers (the dbs
     // collect + both set joins) re-evaluating the candidate join
+    val prefC = prefixRows(postC, threshold)
     val all = (cands(maybeB(prefB), postC)         // batch → corpus
       .unionByName(cands(prefC, maybeB(postB)))    // corpus → batch
       .unionByName(cands(prefB, postB))            // batch → batch
       .distinct())
       .localCheckpoint(true)
-    val dbs = all
-      .select(pmod(col("id_src"), lit(nSetBuckets.toLong)).cast("int").as("d"))
-      .unionByName(all.select(
-        pmod(col("id_dst"), lit(nSetBuckets.toLong)).cast("int").as("d")))
-      .distinct().as[Int].collect().sorted
-    val setsC = readCorpusSets(spark, wh, layer, table, meta,
-      col("dbucket").isin(dbs.map(Int.box): _*) &&
-        col("epoch") =!= lit(excludeEpoch),
-      PersistTracker.noop)(frozenCap(spark, wh, layer, table, meta))
+    val dbs = all.select(explode(array(col("id_src"), col("id_dst"))).as("id"))
+      .select(pmod(col("id"), lit(meta.nSetBuckets.toLong)).cast("int"))
+      .distinct().as[Int].collect()
     // either endpoint may be corpus or batch: resolve each side against
     // the union of the pruned corpus sets and the batch sets
-    val sets = setsC.unionByName(setsB)
-    all
-      .join(sets.select(col("doc_id").as("id_src"), col("set").as("set_s"),
-        col("n").as("n_s")), "id_src")
-      .join(sets.select(col("doc_id").as("id_dst"),
-        col("set").as("set_d")), "id_dst")
-      .withColumn("containment",
-        size(array_intersect(col("set_s"), col("set_d"))).cast("double")
-          / col("n_s").cast("double"))
-      .filter(col("containment") >= threshold)
-      .select("id_src", "id_dst", "containment")
-      .distinct()
+    val sets = corpusSets(spark, table, meta, dbs, excludeEpoch)
+      .unionByName(setsB)
+    scored(all, sets, sets, directed = true, threshold,
+      ("id_src", "id_dst")).distinct()
   }
 
   /** Exact-duplicate collapse — the stage every production near-dup
@@ -1828,8 +1655,7 @@ object Dedup {
       .select(col(idCol).cast(LongType).as("__mid"), col(textCol))
       .withColumn("__rep", min(col("__mid")).over(w))
       .withColumn("__csize", count(lit(1)).over(w))
-    val members = tracker.add(tagged.select(col("__rep"), col("__mid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val members = tracker.pinned(tagged.select(col("__rep"), col("__mid")))
     // NOTE (r15 A/B): reps is consumed twice downstream, but pinning it
     // measured 1.04-1.10x SLOWER across the d_* family at bench SF —
     // the text column is fat and the duplicated window pass is cheaper
@@ -1871,53 +1697,78 @@ object Dedup {
     intra.unionByName(crossOut)
   }
 
-  /** Exact-Jaccard verification of candidate (id_a, id_b) pairs (dupes
-    * allowed) against the shingle index. The per-doc shingle-array table
+  /** The output columns of a verified pair set: undirected Jaccard
+    * (id_a, id_b, jaccard) or directed containment
+    * (id_src, id_dst, containment). */
+  private def pairCols(directed: Boolean): (String, String, String) =
+    if (directed) ("id_src", "id_dst", "containment")
+    else ("id_a", "id_b", "jaccard")
+
+  /** The exact score of a pair from its overlap `__i` and set sizes
+    * `__na`/`__nb`: Jaccard |a∩b| / |a∪b|, or directed containment
+    * |a∩b| / |a| (src → dst). Int sizes → double and ONE IEEE
+    * division — the only score arithmetic of every verifier (broadcast,
+    * grouped, incremental), so an incremental probe's scores are
+    * bit-identical to a rebuild's. */
+  private def score(directed: Boolean): Column =
+    if (directed)
+      (col("__i").cast("double") / col("__na").cast("double"))
+        .as("containment")
+    else
+      (col("__i").cast("double")
+        / (col("__na") + col("__nb") - col("__i")).cast("double"))
+        .as("jaccard")
+
+  /** The one pair scorer: each candidate (a, b) row joins both
+    * endpoints' sets (doc_id, set, n), scores one codegen'd
+    * `array_intersect` ([[score]]) and survives at ≥ `threshold`.
+    * Returns (a, b, jaccard | containment) under the `ids` names;
+    * duplicate candidates stay duplicated, callers dedupe where they
+    * need to. With broadcast set sides this is map-side and cheap;
+    * with shuffled sides every pair drags an array payload through an
+    * exchange — which is why the large-corpus path ([[verifyPairs]])
+    * groups instead. */
+  private def scored(pairs: DataFrame, setsA: DataFrame, setsB: DataFrame,
+      directed: Boolean, threshold: Double,
+      ids: (String, String)): DataFrame = {
+    val (a, b) = ids
+    pairs
+      .join(setsA.select(col("doc_id").as(a), col("set").as("__sa"),
+        col("n").as("__na")), a)
+      .join(setsB.select(col("doc_id").as(b), col("set").as("__sb"),
+        col("n").as("__nb")), b)
+      .withColumn("__i", size(array_intersect(col("__sa"), col("__sb"))))
+      .select(col(a), col(b), score(directed))
+      .filter(col(pairCols(directed)._3) >= threshold)
+  }
+
+  /** Exact verification of candidate pairs (dupes allowed) against the
+    * per-doc sets (doc_id, set, n) — Jaccard (id_a, id_b, jaccard) or
+    * directed containment (id_src, id_dst, containment). The set table
     * is one row per doc (~8·|d| bytes), so for corpora up to
     * `broadcastDocLimit` docs it broadcasts: candidates stream past it
-    * map-side, each pair costs one codegen'd array_intersect, survivors
-    * (true near-dups — few by definition) dedupe at the end. That keeps
-    * the heavy candidate stream out of any array-payload shuffle — the
-    * difference between a 1.6 GB and a 16 GB exchange at 50k docs / 40M
-    * candidates. Beyond the limit it falls back to dedupe-first + shuffle
-    * joins (arrays move once per *distinct* pair).
+    * map-side ([[scored]]), survivors (true near-dups — few by
+    * definition) dedupe at the end. That keeps the heavy candidate
+    * stream out of any array-payload shuffle — the difference between
+    * a 1.6 GB and a 16 GB exchange at 50k docs / 40M candidates. Beyond
+    * the limit, [[groupedPairVerify]] ships each set once per group.
     *
     * NOTE: choosing the strategy takes a `sets.count()` — so the verified
     * dedup operators MATERIALIZE the shingle pipeline when the plan is
     * built (an AQE-style runtime statistic), and they pin their index
     * DataFrames MEMORY_AND_DISK for the session (LRU-evictable; batch
     * callers scoring many corpora should spark.catalog.clearCache()). */
-  private def verifyJaccard(cands: DataFrame, sh: DataFrame, threshold: Double,
-                            broadcastDocLimit: Long,
-                            tracker: PersistTracker)
-      : DataFrame = {
-    val sets = tracker.add(sh.groupBy("doc_id")
-      .agg(collect_list(col("sh")).as("set"), count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    if (sets.count() <= broadcastDocLimit)
-      joinVerify(cands, broadcast(sets), broadcast(sets), threshold)
-    else
-      verifyJaccardByComponent(cands, sets, threshold, tracker = tracker)
-  }
-
-  /** Pair-at-a-time exact verification: each candidate row joins both
-    * endpoint sets and scores one `array_intersect`. With broadcast
-    * sides this is map-side and cheap; with shuffled sides every pair
-    * drags an array payload through an exchange — which is why the
-    * large-corpus path below only uses it for oversized components. */
-  private def joinVerify(pairs: DataFrame, setsA: DataFrame,
-                         setsB: DataFrame, threshold: Double): DataFrame =
-    pairs
-      .join(setsA.select(col("doc_id").as("id_a"), col("set").as("set_a"),
-        col("n").as("n_a")), "id_a")
-      .join(setsB.select(col("doc_id").as("id_b"), col("set").as("set_b"),
-        col("n").as("n_b")), "id_b")
-      .withColumn("__i", size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard", col("__i").cast("double")
-        / (col("n_a") + col("n_b") - col("__i")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .distinct()
+  private def verifyPairs(cands: DataFrame, sets: DataFrame,
+      directed: Boolean, threshold: Double, broadcastDocLimit: Long,
+      maxComponentShingles: Long = 1000000L, useComponents: Boolean = true,
+      tracker: PersistTracker = PersistTracker.noop): DataFrame =
+    if (sets.count() <= broadcastDocLimit) {
+      val (a, b, _) = pairCols(directed)
+      scored(cands, broadcast(sets), broadcast(sets), directed, threshold,
+        (a, b)).distinct()
+    } else
+      groupedPairVerify(cands, sets, directed, threshold,
+        maxComponentShingles, useComponents, tracker)
 
   /** Component+block-grouped exact verification — the
     * >broadcastDocLimit path. The r7 probe showed the pair-join form's
@@ -1926,8 +1777,8 @@ object Dedup {
     * cliques-ish, so the same arrays ship over and over. Grouping by
     * connected component of the CANDIDATE GRAPH (star contraction,
     * O(log) rounds over 16-byte edges) lets every doc's set move ONCE
-    * into its component's task, where a sorted-merge intersect scores
-    * all of the component's pairs locally: exchange volume drops from
+    * into its component's task, where a sorted-merge intersect counts
+    * all of the component's overlaps locally: exchange volume drops from
     * O(pairs·|set|) to O(docs·|set|) — input-sized.
     *
     * Components whose shingle mass exceeds `maxComponentShingles`
@@ -1947,24 +1798,23 @@ object Dedup {
     * fat task.
     *
     * Grouping is a compute partition, not a semantic one: each listed
-    * pair is scored exactly once (its group is a function of the
-    * pair), with the same intersect/size arithmetic as the broadcast
-    * path (one IEEE division), so output is row-identical to
-    * [[joinVerify]] / [[containmentJoinVerify]] (spec-enforced).
+    * pair is counted exactly once (its group is a function of the
+    * pair) and scored by the same [[score]] expression as the broadcast
+    * path, so output is row-identical to it (spec-enforced); for a
+    * directed score only LISTED (src, dst) pairs are emitted.
     *
     * `useComponents = false` skips the candidate-graph clustering
     * entirely and keys EVERY pair by its left-endpoint id-range block —
     * the right mode when the candidate graph is known to chain (the
     * prefix-filter family): see the block comment inside. */
-  private def groupedPairVerify(cands: DataFrame, sets: DataFrame,
-      aCol: String, bCol: String, directed: Boolean, threshold: Double,
-      outCol: String, maxComponentShingles: Long,
-      useComponents: Boolean,
+  private[textops] def groupedPairVerify(cands: DataFrame, sets: DataFrame,
+      directed: Boolean, threshold: Double,
+      maxComponentShingles: Long = 1000000L, useComponents: Boolean = true,
       tracker: PersistTracker = PersistTracker.noop): DataFrame = {
     val spark = cands.sparkSession
     import spark.implicits._
-    val pairs = tracker.add(cands.distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val (aCol, bCol, scoreCol) = pairCols(directed)
+    val pairs = tracker.pinned(cands.distinct())
     // bounded stats over the already-materialized sets index: average
     // set size prices the id-range width so a block's LEFT-endpoint
     // mass lands near maxComponentShingles — but the width is ALSO
@@ -1985,15 +1835,14 @@ object Dedup {
     def blockOf(c: String): Column =
       lit(-1L) - expr(s"CAST($c AS BIGINT) div ${idsPerBlock}L")
     val (keyed, setsG) = if (useComponents) {
-      val comp = tracker.add(graft.operators.ConnectedComponents
-        .componentsStarContraction(pairs, aCol, bCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val comp = tracker.pinned(graft.operators.ConnectedComponents
+        .componentsStarContraction(pairs, aCol, bCol))
       val setsC = sets.join(comp.select(col("id").as("doc_id"), col("comp")),
         "doc_id")
-      val big = tracker.add(setsC.groupBy("comp").agg(sum(col("n")).as("__tot"))
+      val big = tracker.pinned(setsC.groupBy("comp")
+        .agg(sum(col("n")).as("__tot"))
         .filter(col("__tot") > maxComponentShingles)
-        .select("comp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("comp"))
       // group key: the component for right-sized components; an id-range
       // block of the LEFT endpoint inside oversized ones. Block keys sit
       // below -1 so they cannot collide with component keys (a component
@@ -2001,11 +1850,10 @@ object Dedup {
       // would only merge two groups — still correct, just lumpier tasks.
       val gkey = when(col("__big").isNotNull, blockOf(aCol))
         .otherwise(col("comp"))
-      val k = tracker.add(pairs
+      val k = tracker.pinned(pairs
         .join(comp.select(col("id").as(aCol), col("comp")), aCol)
         .join(big.withColumn("__big", lit(true)), Seq("comp"), "left")
-        .select(gkey.as("__g"), col(aCol), col(bCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(gkey.as("__g"), col(aCol), col(bCol)))
       // each group needs exactly its own pairs' endpoint sets: a left
       // endpoint ships once (its block is fixed by its id), a right
       // endpoint once per distinct group its partners pull it into
@@ -2058,25 +1906,13 @@ object Dedup {
             else if (sa(i) > sb(j)) j += 1
             else { c += 1; i += 1; j += 1 }
           }
-          // same arithmetic as the broadcast verifiers: int sizes →
-          // double, one IEEE division (by the union for Jaccard, by
-          // |src| for containment)
-          val score =
-            if (directed) c.toDouble / sa.length.toDouble
-            else c.toDouble / (sa.length + sb.length - c).toDouble
-          if (score >= threshold) Iterator.single((a, b, score))
-          else Iterator.empty
+          Iterator.single((a, b, c, sa.length, sb.length))
         }
       }
-    }.toDF(aCol, bCol, outCol)
+    }.toDF(aCol, bCol, "__i", "__na", "__nb")
+      .select(col(aCol), col(bCol), score(directed))
+      .filter(col(scoreCol) >= threshold)
   }
-
-  private[textops] def verifyJaccardByComponent(cands: DataFrame, sets: DataFrame,
-      threshold: Double, maxComponentShingles: Long = 1000000L,
-      useComponents: Boolean = true,
-      tracker: PersistTracker = PersistTracker.noop): DataFrame =
-    groupedPairVerify(cands, sets, "id_a", "id_b", directed = false,
-      threshold, "jaccard", maxComponentShingles, useComponents, tracker)
 
   /** Exact n-gram Jaccard pairs via an AllPairs-style prefix-filtered
     * inverted index (Bayardo, Ma & Srikant, "Scaling Up All Pairs
@@ -2087,7 +1923,7 @@ object Dedup {
     * docs' first |d| − ⌈t·|d|⌉ + 1 shingles — so only those prefixes are
     * indexed for the self-join, and the quadratic bucket cost runs over
     * the rarest fraction of postings with zero recall loss. Candidates
-    * are then verified exactly against the full sets ([[verifyJaccard]]).
+    * are then verified exactly against the full sets ([[verifyPairs]]).
     *
     * `maxShingleFreq` additionally drops shingles present in more than
     * that many docs — the guard against boilerplate shingles (at 100 TB a
@@ -2099,9 +1935,9 @@ object Dedup {
                         maxShingleFreq: Int = 1000,
                         broadcastDocLimit: Long = 200000L,
                         maxComponentShingles: Long = 1000000L): DataFrame = {
-    val (repPairs, members, live) = ngramVerifiedParts(df, idCol, textCol,
+    val (repPairs, members, live) = exactVerifiedParts(df, idCol, textCol,
       shingleK, threshold, maxShingleFreq, broadcastDocLimit,
-      maxComponentShingles)
+      maxComponentShingles, directed = false)
     expandPairs(repPairs, members, live, "jaccard", directed = false)
   }
 
@@ -2119,9 +1955,9 @@ object Dedup {
                        maxShingleFreq: Int = 1000,
                        broadcastDocLimit: Long = 200000L,
                        maxComponentShingles: Long = 1000000L): DataFrame = {
-    val (repPairs, members, live) = ngramVerifiedParts(df, idCol, textCol,
+    val (repPairs, members, live) = exactVerifiedParts(df, idCol, textCol,
       shingleK, threshold, maxShingleFreq, broadcastDocLimit,
-      maxComponentShingles)
+      maxComponentShingles, directed = false)
     keepFromParts(pinnedPairs(repPairs), members, live)
   }
 
@@ -2147,17 +1983,15 @@ object Dedup {
     val tracker = PersistTracker.live()
     try {
       val (reps, members) = collapseExact(df, idCol, textCol, tracker)
-      val sh = tracker.add(shingledHashed(reps, idCol, textCol, shingleK)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val sh = tracker.pinned(shingledHashed(reps, idCol, textCol, shingleK))
       val (mhRep, mhMem, mhLive) = minhashVerifiedFromShingles(sh, members,
         numHashes, bands, threshold, broadcastDocLimit, tracker)
       val mh = expandPairs(mhRep, mhMem, mhLive, "jaccard",
         directed = false).select("id_a", "id_b")
-      val csize = reps.select(col(idCol).cast(LongType).as("doc_id"),
-        col("__csize"))
-      val (exRep, exMem, exLive) = ngramVerifiedFromShingles(
-        sh.join(csize, "doc_id"), members, threshold, maxShingleFreq,
-        broadcastDocLimit, maxComponentShingles)
+      val (exRep, exMem, exLive) = exactVerifiedFromShingles(
+        sh.join(repSizes(reps, idCol), "doc_id"), members, threshold,
+        maxShingleFreq, broadcastDocLimit, maxComponentShingles,
+        directed = false)
       val exact = expandPairs(exRep, exMem, exLive, "jaccard",
         directed = false).select("id_a", "id_b")
       // ONE aggregate job computes both counts (was: materialize-and-
@@ -2177,37 +2011,49 @@ object Dedup {
     } finally tracker.unpersistAll()
   }
 
-  /** The rep-level core of [[ngramJaccardPairs]] — exact-dup collapse,
-    * capped/positioned index, prefix+positional candidates, exact
-    * verification — everything up to (but not including) the member
-    * expansion; the prefix-filter analog of [[minhashVerifiedParts]].
-    * Returns (repPairs (id_a, id_b, jaccard); members (__rep, __mid);
-    * live (doc_id) — reps with ≥1 surviving shingle). */
-  private def ngramVerifiedParts(df: DataFrame, idCol: String,
+  /** Each rep's (doc_id, __csize): its exact-dup class size, which the
+    * exact family's document frequency counts so the cap keeps its
+    * uncollapsed semantics. */
+  private def repSizes(reps: DataFrame, idCol: String): DataFrame =
+    reps.select(col(idCol).cast(LongType).as("doc_id"), col("__csize"))
+
+  /** The rep-level core of [[ngramJaccardPairs]] and [[containmentPairs]]
+    * — exact-dup collapse, capped/positioned index, prefix+positional
+    * candidates, exact verification — everything up to (but not
+    * including) the member expansion; the prefix-filter analog of
+    * [[minhashVerifiedParts]]. Returns (repPairs — (id_a, id_b, jaccard)
+    * or, `directed`, (id_src, id_dst, containment); members
+    * (__rep, __mid); live (doc_id) — reps with ≥1 surviving shingle). */
+  private def exactVerifiedParts(df: DataFrame, idCol: String,
       textCol: String, shingleK: Int, threshold: Double,
       maxShingleFreq: Int, broadcastDocLimit: Long,
-      maxComponentShingles: Long): (DataFrame, DataFrame, DataFrame) = {
+      maxComponentShingles: Long, directed: Boolean)
+      : (DataFrame, DataFrame, DataFrame) = {
     // exact-duplicate classes first ([[collapseExact]]): the index and
     // the quadratic candidate join see one representative per distinct
     // text; member pairs are rebuilt at the end. __csize rides along so
     // shingle DOC frequency still counts members — the cap keeps its
     // original semantics exactly.
     val (reps, members) = collapseExact(df, idCol, textCol)
-    val csize = reps.select(col(idCol).cast(LongType).as("doc_id"),
-      col("__csize"))
     // sh has exactly one consumer (capped) — persisting it would only
     // force an extra materialization; capped is the reused index.
-    val sh = shingledHashed(reps, idCol, textCol, shingleK).join(csize, "doc_id")
-    ngramVerifiedFromShingles(sh, members, threshold, maxShingleFreq,
-      broadcastDocLimit, maxComponentShingles)
+    val sh = shingledHashed(reps, idCol, textCol, shingleK)
+      .join(repSizes(reps, idCol), "doc_id")
+    exactVerifiedFromShingles(sh, members, threshold, maxShingleFreq,
+      broadcastDocLimit, maxComponentShingles, directed)
   }
 
-  /** [[ngramVerifiedParts]] from a precomputed shingle frame (already
+  /** [[exactVerifiedParts]] from a precomputed shingle frame (already
     * joined with each rep's `__csize`) — the exact-pipeline half of the
-    * shared-stage split; see [[minhashVerifiedFromShingles]]. */
-  private def ngramVerifiedFromShingles(sh: DataFrame, members: DataFrame,
+    * shared-stage split; see [[minhashVerifiedFromShingles]]. Jaccard
+    * self-joins the prefixes (id_a < id_b); containment joins the
+    * SOURCE prefix against the full postings — C(src→dst) ≥ t forces a
+    * shared shingle inside src's prefix, so only that side is
+    * filtered. */
+  private def exactVerifiedFromShingles(sh: DataFrame, members: DataFrame,
       threshold: Double, maxShingleFreq: Int, broadcastDocLimit: Long,
-      maxComponentShingles: Long): (DataFrame, DataFrame, DataFrame) = {
+      maxComponentShingles: Long, directed: Boolean)
+      : (DataFrame, DataFrame, DataFrame) = {
     // global frequency + cap as ONE window count over the sh partition:
     // a single exchange of the posting stream, where a groupBy+join pair
     // would shuffle the big side twice (once into the aggregate, once as
@@ -2217,53 +2063,57 @@ object Dedup {
       .filter(col("freq") <= maxShingleFreq)
       .select("doc_id", "sh", "freq")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // __pos and __n share one sorted window (same partition + ordering,
-    // whole-partition frame for the count) → a single WindowExec pass
-    val rareFirst = Window.partitionBy("doc_id").orderBy("freq", "sh")
-    val indexed = capped
-      .withColumn("__pos", row_number().over(rareFirst))
-      .withColumn("__n", count(lit(1)).over(
-        rareFirst.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-    // ceil over a FP product can round UP past the exact ⌈t·n⌉ (e.g.
-    // 500·0.87 = 435.00000000000006) which would SHORTEN the prefix and
-    // lose recall; the 1e-9 slack errs toward a one-longer prefix (extra
-    // candidates, never missed pairs).
-    val prefix = indexed.filter(
-      col("__pos") <= col("__n") - ceil(col("__n") * lit(threshold) - lit(1e-9)) + 1)
+    val post = positioned(capped)
+    val prefix = prefixRows(post, threshold)
     // raw co-occurrence rows go straight to verification — dedup happens
-    // on the survivor side (see verifyJaccard), not on the 10×-larger
-    // candidate stream. The PPJoin positional filter (Xiao et al.,
-    // WWW'08) drops occurrences that cannot certify a qualifying pair:
-    // all common shingles lie in the suffixes from this occurrence on,
-    // so min(suffix_x, suffix_y)+1 must reach the Jaccard overlap bound
-    // α = ⌈t/(1+t)·(n_x+n_y)⌉. A true pair's FIRST common shingle always
-    // passes (its suffixes contain the whole overlap), so recall is
-    // untouched while typical low-similarity co-occurrences die here,
-    // before the verify join. (Same 1e-9 slack: err toward keeping.)
-    def pairwiseCands(p: DataFrame): DataFrame = {
-      val alpha = ceil(
-        (col("x.__n") + col("y.__n")) * lit(threshold / (1 + threshold)) - lit(1e-9))
-      p.as("x").join(p.as("y"), Seq("sh"))
-        .filter(col("x.doc_id") < col("y.doc_id"))
-        .filter(least(col("x.__n") - col("x.__pos"), col("y.__n") - col("y.__pos")) + 1 >= alpha)
-        .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-    }
-    val sets = capped.groupBy("doc_id")
-      .agg(collect_list(col("sh")).as("set"), count(lit(1)).as("n"))
+    // on the survivor side (see verifyPairs), not on the 10×-larger
+    // candidate stream
+    val (a, b, _) = pairCols(directed)
+    val cands =
+      if (directed) candidatePairs(prefix, post, threshold, directed, (a, b))
+      else candidatePairs(prefix, prefix, threshold, directed, (a, b),
+        ordered = true)
+    val sets = shingleSets(capped)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val repPairs =
-      if (sets.count() <= broadcastDocLimit)
-        joinVerify(pairwiseCands(prefix), broadcast(sets), broadcast(sets),
-          threshold)
-      else
-        // block-only grouping (no CC): prefix-filter candidate graphs
-        // chain into one giant component via organic sub-threshold
-        // co-occurrences (measured: 297M candidates / 6.8M true at 250k
-        // distinct docs), so star contraction over the candidate edge
-        // set is pure overhead here — see groupedPairVerify
-        verifyJaccardByComponent(pairwiseCands(prefix), sets, threshold,
-          maxComponentShingles, useComponents = false)
-    (repPairs, members, capped.select("doc_id").distinct())
+    // block-only grouping (no CC) past the broadcast limit: prefix-filter
+    // candidate graphs chain into one giant component via organic
+    // sub-threshold co-occurrences (measured: 297M candidates / 6.8M
+    // true at 250k distinct docs), so star contraction over the
+    // candidate edge set is pure overhead here — see groupedPairVerify
+    (verifyPairs(cands, sets, directed, threshold, broadcastDocLimit,
+        maxComponentShingles, useComponents = false),
+      members, capped.select("doc_id").distinct())
+  }
+
+  /** Candidate pairs of two positioned posting sets x and y
+    * ([[positioned]]) that share a shingle — `x` the (prefix) source
+    * side — named `ids`. `ordered` keeps x.doc_id < y.doc_id (a
+    * symmetric self-join lists each pair once), else x.doc_id ≠
+    * y.doc_id.
+    *
+    * The PPJoin positional filter (Xiao et al., WWW'08) drops
+    * occurrences that cannot certify a qualifying pair: all common
+    * shingles lie in the suffixes from this occurrence on, so
+    * min(n_x − pos_x, n_y − pos_y) + 1 must reach the overlap the score
+    * needs — Jaccard α = ⌈t/(1+t)·(n_x+n_y)⌉, directed containment
+    * ⌈t·n_x⌉. A true pair's FIRST common shingle always passes (its
+    * suffixes contain the whole overlap), so recall is untouched while
+    * typical low-similarity co-occurrences die here, before the verify
+    * join (same 1e-9 slack as [[prefixRows]]: err toward keeping). */
+  private def candidatePairs(x: DataFrame, y: DataFrame, threshold: Double,
+      directed: Boolean, ids: (String, String),
+      ordered: Boolean = false): DataFrame = {
+    val need =
+      if (directed) ceil(col("x.__n") * lit(threshold) - lit(1e-9))
+      else ceil((col("x.__n") + col("y.__n"))
+        * lit(threshold / (1 + threshold)) - lit(1e-9))
+    val idOk =
+      if (ordered) col("x.doc_id") < col("y.doc_id")
+      else col("x.doc_id") =!= col("y.doc_id")
+    x.as("x").join(y.as("y"), Seq("sh"))
+      .filter(idOk && least(col("x.__n") - col("x.__pos"),
+        col("y.__n") - col("y.__pos")) + 1 >= need)
+      .select(col("x.doc_id").as(ids._1), col("y.doc_id").as(ids._2))
   }
 
   /** Directed containment pairs: C(src → dst) = |src ∩ dst| / |src| ≥
@@ -2276,91 +2126,19 @@ object Dedup {
     * inside src's first |src| − ⌈t·|src|⌉ + 1 rarest shingles (else the
     * overlap tops out at ⌈t·|src|⌉ − 1) — so only the SOURCE side is
     * prefix-indexed while the destination side joins its full capped
-    * postings. Exact verification against the sets follows, as in
-    * [[ngramJaccardPairs]]; recall is exact, no banding escape. */
+    * postings. The index, candidates and verification are
+    * [[ngramJaccardPairs]]' ([[exactVerifiedParts]]); recall is exact,
+    * no banding escape. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        shingleK: Int = 3, threshold: Double = 0.8,
                        maxShingleFreq: Int = 1000,
                        broadcastDocLimit: Long = 200000L,
                        maxComponentShingles: Long = 1000000L): DataFrame = {
-    // exact-dup classes + member-weighted doc frequency, exactly as in
-    // ngramJaccardPairs (see comments there)
-    val (reps, members) = collapseExact(df, idCol, textCol)
-    val csize = reps.select(col(idCol).cast(LongType).as("doc_id"),
-      col("__csize"))
-    val sh = shingledHashed(reps, idCol, textCol, shingleK).join(csize, "doc_id")
-    // same single-exchange freq/cap + single-pass window as
-    // ngramJaccardPairs (see comments there)
-    val capped = sh
-      .withColumn("freq", sum(col("__csize")).over(Window.partitionBy("sh")))
-      .filter(col("freq") <= maxShingleFreq)
-      .select("doc_id", "sh", "freq")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val rareFirst = Window.partitionBy("doc_id").orderBy("freq", "sh")
-    val indexed = capped
-      .withColumn("__pos", row_number().over(rareFirst))
-      .withColumn("__n", count(lit(1)).over(
-        rareFirst.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-    // same 1e-9 ceil slack as ngramJaccardPairs: err toward a longer
-    // prefix (extra candidates), never a shorter one (lost recall)
-    val prefix = indexed.filter(
-      col("__pos") <= col("__n") - ceil(col("__n") * lit(threshold) - lit(1e-9)) + 1)
-    // directed positional filter (the PPJoin bound adapted to
-    // containment): from a shared shingle at rare-first positions
-    // (pos_s, pos_d), the remaining overlap is at most
-    // min(n_s − pos_s, n_d − pos_d) + 1, which must reach ⌈t·n_s⌉ for
-    // C(src→dst) ≥ t. A true pair's FIRST common shingle always passes
-    // (the whole overlap lies at or after it in both orders), so recall
-    // is exact; same 1e-9 ceil slack, erring toward keeping.
-    def pairwiseCands(px: DataFrame, iy: DataFrame): DataFrame =
-      px.as("x").join(iy.as("y"), Seq("sh"))
-        .filter(col("x.doc_id") =!= col("y.doc_id"))
-        .filter(least(col("x.__n") - col("x.__pos"),
-            col("y.__n") - col("y.__pos")) + 1 >=
-          ceil(col("x.__n") * lit(threshold) - lit(1e-9)))
-        .select(col("x.doc_id").as("id_src"), col("y.doc_id").as("id_dst"))
-    val sets = capped.groupBy("doc_id")
-      .agg(collect_list(col("sh")).as("set"), count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val repPairs =
-      if (sets.count() <= broadcastDocLimit)
-        containmentJoinVerify(pairwiseCands(prefix, indexed),
-          broadcast(sets), broadcast(sets), threshold)
-      else
-        // block-only grouping, same rationale as ngramJaccardPairs
-        verifyDirectedByComponent(pairwiseCands(prefix, indexed), sets,
-          threshold, maxComponentShingles, useComponents = false)
-    expandPairs(repPairs, members, capped.select("doc_id").distinct(),
-      "containment", directed = true)
+    val (repPairs, members, live) = exactVerifiedParts(df, idCol, textCol,
+      shingleK, threshold, maxShingleFreq, broadcastDocLimit,
+      maxComponentShingles, directed = true)
+    expandPairs(repPairs, members, live, "containment", directed = true)
   }
-
-  /** Pair-at-a-time containment verification — the directed twin of
-    * [[joinVerify]] (score divides by the SOURCE size only). */
-  private def containmentJoinVerify(pairs: DataFrame, setsS: DataFrame,
-      setsD: DataFrame, threshold: Double): DataFrame =
-    pairs
-      .join(setsS.select(col("doc_id").as("id_src"), col("set").as("set_s"),
-        col("n").as("n_s")), "id_src")
-      .join(setsD.select(col("doc_id").as("id_dst"), col("set").as("set_d")), "id_dst")
-      .withColumn("containment",
-        size(array_intersect(col("set_s"), col("set_d"))).cast("double")
-          / col("n_s").cast("double"))
-      .filter(col("containment") >= threshold)
-      .select("id_src", "id_dst", "containment")
-      .distinct()
-
-  /** Directed analog of [[verifyJaccardByComponent]]: identical
-    * component+block grouping over the (undirected view of the)
-    * candidate edges, but each LISTED (src, dst) pair scores
-    * overlap/|src| — containment's asymmetric score. Only listed pairs
-    * are emitted, so output is row-identical to
-    * [[containmentJoinVerify]] over the same candidates. */
-  private[textops] def verifyDirectedByComponent(cands: DataFrame,
-      sets: DataFrame, threshold: Double,
-      maxComponentShingles: Long = 1000000L,
-      useComponents: Boolean = true): DataFrame =
-    groupedPairVerify(cands, sets, "id_src", "id_dst", directed = true,
-      threshold, "containment", maxComponentShingles, useComponents)
 
   /** 64-bit SimHash over word shingles: bit i is the sign of the weighted
     * sum of shingle-hash bits. Column-level convenience for tests; the

@@ -299,67 +299,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(viaInc.exists { case (a, b, _) => a == 102L && b == 200L })
   }
 
-  test("texts _sets layout: probes identical to arrays across build, append, ingest, compact") {
-    // MinHash-index twin of the posting index's v5 texts layout
-    // (format v2): `_sets` stores (doc_id, text) zstd instead of the
-    // incompressible hashed-shingle arrays, and probes re-shingle
-    // their candidates' pruned partitions — every probe result must be
-    // IDENTICAL to the arrays layout's through the whole lifecycle.
-    def buildT(wh: graft.etl.Warehouse, texts: Boolean) =
-      Dedup.nearDedupIndexPersist(corpus, "doc_id", "text", wh, "gold",
-        "nd", shingleK = 3, numHashes = 32, bands = 8, nBuckets = 8,
-        nSetBuckets = 4, setsAsTexts = texts)
-    val whT = freshWh("ndtexts"); buildT(whT, texts = true)
-    val whA = freshWh("ndtextsref"); buildT(whA, texts = false)
-    // the stored table holds text, not set arrays — and the SAME docs
-    val colsT = whT.read(spark, "gold", "nd_sets").columns.toSet
-    assert(colsT.contains("text") && !colsT.contains("set"))
-    val idsT = whT.read(spark, "gold", "nd_sets")
-      .select("doc_id").as[Long].collect().toSet
-    val idsA = whA.read(spark, "gold", "nd_sets")
-      .select("doc_id").as[Long].collect().toSet
-    assert(idsT === idsA)
-    def pairs(w: graft.etl.Warehouse, b: org.apache.spark.sql.DataFrame) =
-      pairSet(Dedup.nearDedupIncrementPairs(b, "doc_id", "text",
-        w, "gold", "nd", threshold = 0.5))
-    def keep(w: graft.etl.Warehouse, b: org.apache.spark.sql.DataFrame) =
-      Dedup.nearDedupIncrementKeep(b, "doc_id", "text", w, "gold", "nd",
-        threshold = 0.5).as[(Long, Long)].collect().toSet
-    assert(pairs(whT, batch) === pairs(whA, batch) &&
-      pairs(whT, batch).nonEmpty)
-    assert(keep(whT, batch) === keep(whA, batch))
-    // the full ingest epoch (keep → epoch-keyed index append → sink)
-    // writes texts rows for its survivors on the texts index
-    assert(Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id",
-        "text", whT, "gold", "nd", threshold = 0.5) ===
-      Dedup.ingestBatch(MinHashFamily, batch, epoch = 0L, "doc_id", "text",
-        whA, "gold", "nd", threshold = 0.5))
-    val colsIng = whT.read(spark, "gold", "nd_sets").columns.toSet
-    assert(colsIng.contains("text") && !colsIng.contains("set"))
-    // a doc_id spanning TWO epochs with different text verifies per
-    // stored (doc_id, epoch) row in BOTH layouts (the texts reader
-    // groups by epoch too — merged union sets would diverge here)
-    def ep(id: Long, text: String) = Seq((id, text)).toDF("doc_id", "text")
-    for (w <- Seq(whT, whA)) {
-      Dedup.indexAppend(MinHashFamily,
-        ep(300L, "two epoch versions of one document first variant body text"),
-        "doc_id", "text", w, "gold", "nd", epoch = 1L)
-      Dedup.indexAppend(MinHashFamily,
-        ep(300L, "two epoch versions of one document second variant body text"),
-        "doc_id", "text", w, "gold", "nd", epoch = 2L)
-    }
-    val b2 = ep(400L,
-      "two epoch versions of one document first variant body text here")
-    assert(pairs(whT, b2) === pairs(whA, b2) && pairs(whT, b2).nonEmpty)
-    // compaction (fold epochs into base) preserves layout and results
-    Dedup.indexCompact(MinHashFamily, spark, whT, "gold", "nd", foldEpochsBelow = 2L)
-    Dedup.indexCompact(MinHashFamily, spark, whA, "gold", "nd", foldEpochsBelow = 2L)
-    assert(pairs(whT, b2) === pairs(whA, b2))
-    assert(pairs(whT, batch) === pairs(whA, batch))
-    // and the compacted texts files stayed zstd (codec survives the
-    // rewrite — a snappy compaction would silently grow the table)
-    assert(WarehouseTestKit.files(whT, "gold", "nd_sets")
-      .forall(_.path.contains("zstd")))
+  test("a doc_id spanning two epochs verifies per stored row") {
+    IndexLifecycle.twoEpochDocVerifiesPerRow(MinHashFamily, corpus)
+  }
+
+  test("a build whose commit fails releases its cached frames") {
+    IndexLifecycle.failedBuildReleasesCache(MinHashFamily, corpus)
   }
 
   test("ratio-triggered compaction folds only when the delta earns its rewrite") {
@@ -383,12 +328,22 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // column) — what any standing index built before v2 looks like
     val legacy = Seq((3, 32, 8, 8, 4))
       .toDF("shingle_k", "num_hashes", "bands", "n_buckets", "n_set_buckets")
-    wh.overwrite(legacy, "gold", "nd_meta")
-    val e = intercept[IllegalStateException] {
-      Dedup.nearDedupIncrementPairs(batch, "doc_id", "text",
-        wh, "gold", "nd", threshold = 0.5).collect()
+    def rejected() = {
+      val e = intercept[IllegalStateException] {
+        Dedup.nearDedupIncrementPairs(batch, "doc_id", "text",
+          wh, "gold", "nd", threshold = 0.5).collect()
+      }
+      assert(e.getMessage.contains("rebuild") &&
+        e.getMessage.contains("format"))
     }
-    assert(e.getMessage.contains("rebuild") &&
-      e.getMessage.contains("format"))
+    wh.overwrite(legacy, "gold", "nd_meta")
+    rejected()
+    // and a v2 index, whose meta carries the `_sets` layout flag (arrays
+    // | texts) the one-layout v3 dropped
+    wh.overwrite(Seq((3, 32, 8, 8, 4, 2, "arrays"))
+        .toDF("shingle_k", "num_hashes", "bands", "n_buckets",
+          "n_set_buckets", "format_version", "sets_layout"),
+      "gold", "nd_meta")
+    rejected()
   }
 }

@@ -1,6 +1,6 @@
 package graft.textops
 
-import java.nio.file.Files
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import org.scalatest.Assertions
 import org.apache.spark.JobCounting
 import org.apache.spark.sql.DataFrame
@@ -12,7 +12,7 @@ import CurationStream.{DedupFamily, ExactNgramFamily, MinHashFamily}
 
 /** Lifecycle behaviour both standing-index families share — compaction
   * after a crashed group commit, the ratio-triggered fold, one ingest
-  * epoch —
+  * epoch, a build whose commit fails, a doc_id appended in two epochs —
   * written once and run for each family by its spec
   * ([[IncrementalDedupSpec]] for MinHash, [[PostingIndexSpec]] for the
   * exact family) over that spec's corpus and batch. The index of a
@@ -156,5 +156,48 @@ object IndexLifecycle extends Assertions {
         "caller's phase")
       jobs
     } finally sc.setJobDescription(null)
+  }
+
+  /** A build whose group commit throws — here the group's `_log` is a
+    * plain file, so its manifest cannot be written once every table's
+    * files are — must release the frames it cached for the build: a
+    * cache entry nobody releases lives as long as the session. */
+  def failedBuildReleasesCache(family: DedupFamily,
+                               corpus: DataFrame): Unit = {
+    val wh = freshWh("failedcommit")
+    val group = Paths.get(wh.path("gold", family.tag))
+    Files.createDirectories(group)
+    Files.createFile(group.resolve("_log"))
+    spark.catalog.clearCache()
+    intercept[FileAlreadyExistsException](build(family, wh, corpus))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** A doc_id appended in two epochs with different text keeps one
+    * `_sets` row per (doc_id, epoch), and a probe verifies against each
+    * stored row: an index holding both versions probes as exactly the
+    * union of indexes holding either one — never as one merged set. */
+  def twoEpochDocVerifiesPerRow(family: DedupFamily,
+                                corpus: DataFrame): Unit = {
+    val t = family.tag
+    def doc(id: Long, text: String) = Seq((id, text)).toDF("doc_id", "text")
+    val body = "two epoch versions of one document first variant body text"
+    val v1 = doc(600L, body)
+    val v2 = doc(600L, body + " again")
+    val probe = doc(700L, body + " here")
+    val whBoth = freshWh("twoepoch")
+    build(family, whBoth, corpus)
+    Dedup.indexAppend(family, v2, "doc_id", "text", whBoth, "gold", t,
+      epoch = 2L)
+    val p2 = pairs(family, whBoth, probe)
+    Dedup.indexAppend(family, v1, "doc_id", "text", whBoth, "gold", t,
+      epoch = 1L)
+    val whOne = freshWh("oneepoch")
+    build(family, whOne, corpus)
+    Dedup.indexAppend(family, v1, "doc_id", "text", whOne, "gold", t,
+      epoch = 1L)
+    val p1 = pairs(family, whOne, probe)
+    assert(p1.nonEmpty && p1 != p2)
+    assert(pairs(family, whBoth, probe) === p1 ++ p2)
   }
 }

@@ -556,156 +556,67 @@ class PostingIndexSpec extends AnyFunSuite {
     assert(cont.getMessage.contains("Jaccard-only"))
   }
 
-  test("texts _sets layout: probes identical to arrays across build, append, compact") {
-    // setsAsTexts stores (doc_id, text) in `_sets` instead of the
-    // incompressible hashed arrays; probes re-derive candidate sets
-    // from the pruned text partitions under the frozen dictionary.
-    // The contract: every probe result is IDENTICAL to the arrays
-    // layout's, through the whole maintenance lifecycle.
-    val whT = freshWh("texts")
-    Dedup.ngramIndexPersist(corpus, "doc_id", "text", whT, "gold", "ng",
-      shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
-      nSetBuckets = 4, setsAsTexts = true)
-    val whA = freshWh("textsfull")
-    build(whA)
-    // the stored table holds text, not set arrays
-    val cols = whT.read(spark, "gold", "ng_sets").columns.toSet
-    assert(cols.contains("text") && !cols.contains("set"))
-    // row membership identical: exactly the docs with >=1 capped shingle
-    val idsT = whT.read(spark, "gold", "ng_sets")
-      .select("doc_id").as[Long].collect().toSet
-    val idsA = whA.read(spark, "gold", "ng_sets")
-      .select("doc_id").as[Long].collect().toSet
-    assert(idsT === idsA)
-    def jac(w: graft.etl.Warehouse, b: org.apache.spark.sql.DataFrame) =
-      pairSet(Dedup.ngramJaccardIncrementPairs(b, "doc_id", "text",
-        w, "gold", "ng", threshold = 0.5), ("id_a", "id_b", "jaccard"))
-    def con(w: graft.etl.Warehouse, b: org.apache.spark.sql.DataFrame) =
-      pairSet(Dedup.containmentIncrementPairs(b, "doc_id", "text",
-        w, "gold", "ng", threshold = 0.8), ("id_src", "id_dst", "containment"))
-    assert(jac(whT, batch) === jac(whA, batch) && jac(whT, batch).nonEmpty)
-    assert(con(whT, batch) === con(whA, batch) && con(whT, batch).nonEmpty)
-    // epoch append writes texts rows; post-append probes still agree
-    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whT, "gold", "ng",
-      epoch = 1L)
-    Dedup.indexAppend(ExactNgramFamily, batch, "doc_id", "text", whA, "gold", "ng",
-      epoch = 1L)
-    val colsApp = whT.read(spark, "gold", "ng_sets").columns.toSet
-    assert(colsApp.contains("text") && !colsApp.contains("set"))
-    val b2 = Seq((300L, batchRows.find(_._1 == 102L).get._2),
-      (301L, corpusRows.find(_._1 == 2L).get._2))
-      .toDF("doc_id", "text")
-    assert(jac(whT, b2) === jac(whA, b2) && jac(whT, b2).nonEmpty)
-    // compaction (fold epochs into base) preserves layout and results
-    Dedup.indexCompact(ExactNgramFamily, spark, whT, "gold", "ng", foldEpochsBelow = 2L)
-    Dedup.indexCompact(ExactNgramFamily, spark, whA, "gold", "ng", foldEpochsBelow = 2L)
-    assert(jac(whT, b2) === jac(whA, b2))
-    assert(con(whT, b2) === con(whA, b2))
-    // and the compacted texts files stayed zstd (codec survives the
-    // rewrite — a snappy compaction would silently grow the table)
-    assert(WarehouseTestKit.files(whT, "gold", "ng_sets")
-      .forall(_.path.contains(".zstd.")))
-  }
-
-  test("texts _sets layout composes with the jaccard-only floor") {
-    val whTF = freshWh("textsfloor")
-    Dedup.ngramIndexPersist(corpus, "doc_id", "text", whTF, "gold", "ng",
-      shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
-      nSetBuckets = 4, containment = false, tMinJaccard = 0.5,
-      setsAsTexts = true)
-    val whFull = freshWh("textsfloorref")
-    build(whFull)
-    def jac(w: graft.etl.Warehouse, t: Double) =
-      pairSet(Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
-        w, "gold", "ng", threshold = t), ("id_a", "id_b", "jaccard"))
-    assert(jac(whTF, 0.5) === jac(whFull, 0.5) && jac(whTF, 0.5).nonEmpty)
-    // the floor's rejection paths still fire on the combined layout
-    assert(intercept[IllegalArgumentException] {
-      Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
-        whTF, "gold", "ng", threshold = 0.3).collect()
-    }.getMessage.contains("t_min"))
-  }
-
-  test("texts _sets layout survives both staleness-rebuild paths") {
+  test("both staleness-rebuild paths keep the index's layout flags") {
     // Both rebuild paths — the one-shot policy (ngramRebuildIfStale)
     // and the mid-stream re-freeze inside the ingest epoch — must
-    // re-persist with the INDEX'S OWN layout flags: an omitted
-    // setsAsTexts re-froze a texts index as arrays on the first
-    // rebuild, silently reverting the footprint win (r14 ADVICE).
-    def setsCols(wh: graft.etl.Warehouse) =
-      wh.read(spark, "gold", "ng_sets").columns.toSet
-    def assertTexts(wh: graft.etl.Warehouse, where: String) = {
-      val c = setsCols(wh)
-      assert(c.contains("text") && !c.contains("set"),
-        s"$where re-froze the texts layout as ${c.mkString(",")}")
+    // re-persist with the INDEX'S OWN layout flags: a Jaccard-only index
+    // re-freezes as Jaccard-only at its own floor (an omitted flag once
+    // silently reverted a rebuilt index's layout — r14 ADVICE).
+    def assertFloor(wh: graft.etl.Warehouse, where: String) = {
+      val m = wh.read(spark, "gold", "ng_meta")
+        .select("containment", "t_min").as[(Boolean, Double)].head()
+      assert(m === ((false, 0.5)), s"$where re-froze the layout as $m")
+      // and the rebuilt index still rejects what its layout cannot serve
+      assert(intercept[IllegalArgumentException] {
+        Dedup.containmentIncrementPairs(batch, "doc_id", "text",
+          wh, "gold", "ng", threshold = 0.8).collect()
+      }.getMessage.contains("Jaccard-only"))
     }
+    def buildFloor(wh: graft.etl.Warehouse) =
+      Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh, "gold", "ng",
+        shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
+        nSetBuckets = 4, containment = false, tMinJaccard = 0.5)
     // novel-content batch → unseen_frac ≈ 1 → rebuild fires
     val novel = Seq(
       (500L, "wholly novel vocabulary appears across this entire batch today"),
       (501L, "nothing in the frozen dictionary resembles any of these words"))
       .toDF("doc_id", "text")
     // path 1: the one-shot policy
-    val wh1 = freshWh("textsreb1")
-    Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh1, "gold", "ng",
-      shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
-      nSetBuckets = 4, setsAsTexts = true)
+    val wh1 = freshWh("floorreb1")
+    buildFloor(wh1)
+    val v1 = wh1.snapshot("gold", "ng").version
     assert(Dedup.ngramRebuildIfStale(corpus, novel, "doc_id", "text",
       wh1, "gold", "ng", unseenThreshold = 0.5))
-    assertTexts(wh1, "ngramRebuildIfStale")
+    assert(wh1.snapshot("gold", "ng").version > v1)
+    assertFloor(wh1, "ngramRebuildIfStale")
     // path 2: the mid-stream re-freeze (epoch > 0, cadence 1, low bar)
-    val wh2 = freshWh("textsreb2")
-    Dedup.ngramIndexPersist(corpus, "doc_id", "text", wh2, "gold", "ng",
-      shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
-      nSetBuckets = 4, setsAsTexts = true)
-    Dedup.ingestBatch(ExactNgramFamily, novel, epoch = 1L, "doc_id", "text", wh2,
-      "gold", "ng", threshold = 0.5, rebuildCheckEvery = 1,
+    val wh2 = freshWh("floorreb2")
+    buildFloor(wh2)
+    val v2 = wh2.snapshot("gold", "ng").version
+    Dedup.ingestBatch(ExactNgramFamily, novel, epoch = 1L, "doc_id", "text",
+      wh2, "gold", "ng", threshold = 0.5, rebuildCheckEvery = 1,
       unseenThreshold = 0.1, baseCorpus = Some(corpus))
-    assertTexts(wh2, "ingestBatch mid-stream rebuild")
-    // and the rebuilt index still probes identically to an arrays twin
-    val whA = freshWh("textsrebref")
+    assert(wh2.snapshot("gold", "ng").version > v2 + 1,
+      "no re-freeze before the epoch's own append")
+    assertFloor(wh2, "ingestBatch mid-stream rebuild")
+    // and the rebuilt floor index probes identically to a full-layout
+    // index rebuilt the same way
+    val whA = freshWh("floorrebref")
     build(whA)
     Dedup.ngramRebuildIfStale(corpus, novel, "doc_id", "text",
       whA, "gold", "ng", unseenThreshold = 0.5)
-    val jT = pairSet(Dedup.ngramJaccardIncrementPairs(batch, "doc_id",
-      "text", wh1, "gold", "ng", threshold = 0.5),
-      ("id_a", "id_b", "jaccard"))
-    val jA = pairSet(Dedup.ngramJaccardIncrementPairs(batch, "doc_id",
-      "text", whA, "gold", "ng", threshold = 0.5),
-      ("id_a", "id_b", "jaccard"))
-    assert(jT === jA && jT.nonEmpty)
+    def jac(w: graft.etl.Warehouse) =
+      pairSet(Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
+        w, "gold", "ng", threshold = 0.5), ("id_a", "id_b", "jaccard"))
+    assert(jac(wh1) === jac(whA) && jac(wh1).nonEmpty)
   }
 
-  test("texts _sets layout: a doc_id spanning two epochs verifies per stored row") {
-    // the arrays layout stores one `_sets` row per (doc_id, epoch); the
-    // texts reader must group its re-shingle by epoch too, or the two
-    // layouts diverge on a doc_id appended twice with different text
-    // (merged union set vs per-version sets — r14 ADVICE)
-    def ep(id: Long, text: String) = Seq((id, text)).toDF("doc_id", "text")
-    val whT = freshWh("textsepoch")
-    Dedup.ngramIndexPersist(corpus, "doc_id", "text", whT, "gold", "ng",
-      shingleK = 3, maxShingleFreq = 1000, nPostBuckets = 8,
-      nSetBuckets = 4, setsAsTexts = true)
-    val whA = freshWh("textsepochref")
-    build(whA)
-    for (w <- Seq(whT, whA)) {
-      Dedup.indexAppend(ExactNgramFamily,
-        ep(600L, "two epoch versions of one document first variant body text"),
-        "doc_id", "text", w, "gold", "ng", epoch = 1L)
-      Dedup.indexAppend(ExactNgramFamily,
-        ep(600L, "two epoch versions of one document second variant body text"),
-        "doc_id", "text", w, "gold", "ng", epoch = 2L)
-    }
-    val b = ep(700L,
-      "two epoch versions of one document first variant body text here")
-    def jac(w: graft.etl.Warehouse) =
-      pairSet(Dedup.ngramJaccardIncrementPairs(b, "doc_id", "text",
-        w, "gold", "ng", threshold = 0.5), ("id_a", "id_b", "jaccard"))
-    def con(w: graft.etl.Warehouse) =
-      pairSet(Dedup.containmentIncrementPairs(b, "doc_id", "text",
-        w, "gold", "ng", threshold = 0.8),
-        ("id_src", "id_dst", "containment"))
-    assert(jac(whT) === jac(whA) && jac(whT).nonEmpty)
-    assert(con(whT) === con(whA))
+  test("a doc_id spanning two epochs verifies per stored row") {
+    IndexLifecycle.twoEpochDocVerifiesPerRow(ExactNgramFamily, corpus)
+  }
+
+  test("a build whose commit fails releases its cached frames") {
+    IndexLifecycle.failedBuildReleasesCache(ExactNgramFamily, corpus)
   }
 
   test("format_version: a pre-v4 index fails with an explicit rebuild-required error") {
@@ -715,13 +626,23 @@ class PostingIndexSpec extends AnyFunSuite {
     // column) — what any standing index built before v4 looks like
     val legacy = Seq((3, 1000, 8, 4))
       .toDF("shingle_k", "max_freq", "n_post_buckets", "n_set_buckets")
-    wh.overwrite(legacy, "gold", "ng_meta")
-    val e = intercept[IllegalStateException] {
-      Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
-        wh, "gold", "ng", threshold = 0.5).collect()
+    def rejected() = {
+      val e = intercept[IllegalStateException] {
+        Dedup.ngramJaccardIncrementPairs(batch, "doc_id", "text",
+          wh, "gold", "ng", threshold = 0.5).collect()
+      }
+      assert(e.getMessage.contains("rebuild") &&
+        e.getMessage.contains("format"))
     }
-    assert(e.getMessage.contains("rebuild") &&
-      e.getMessage.contains("format"))
+    wh.overwrite(legacy, "gold", "ng_meta")
+    rejected()
+    // and a v5 index, whose meta carries the `_sets` layout flag (arrays
+    // | texts) the one-layout v6 dropped
+    wh.overwrite(Seq((3, 1000, 8, 4, 5, true, 0.0, "texts"))
+        .toDF("shingle_k", "max_freq", "n_post_buckets", "n_set_buckets",
+          "format_version", "containment", "t_min", "sets_layout"),
+      "gold", "ng_meta")
+    rejected()
   }
 
   test("build-time cap drops boilerplate from corpus AND batch sets") {

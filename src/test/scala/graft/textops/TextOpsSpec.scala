@@ -63,7 +63,7 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("component-grouped verification ≡ broadcast verification (forced shuffle path)") {
-    // broadcastDocLimit = 0 forces verifyJaccardByComponent; the default
+    // broadcastDocLimit = 0 forces groupedPairVerify; the default
     // limit takes the broadcast pair-join. Identical output row sets —
     // on both the banding-candidate (minhash) and prefix-filter (ngram)
     // pipelines — is the contract the 250k-doc corpus relies on.
@@ -106,15 +106,17 @@ class TextOpsSpec extends AnyFunSuite {
       .filter(col("id_a") < col("id_b"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double)].collect().toSet
-    val blocked = rows(Dedup.verifyJaccardByComponent(cands, sets, 0.3,
-      maxComponentShingles = 1L))
-    val grouped = rows(Dedup.verifyJaccardByComponent(cands, sets, 0.3))
+    val blocked = rows(Dedup.groupedPairVerify(cands, sets,
+      directed = false, 0.3, maxComponentShingles = 1L))
+    val grouped = rows(Dedup.groupedPairVerify(cands, sets,
+      directed = false, 0.3))
     // and the CC-free block-only mode (the prefix-filter family's path)
     // must emit the identical rows at any block width
-    val blockOnly = rows(Dedup.verifyJaccardByComponent(cands, sets, 0.3,
+    val blockOnly = rows(Dedup.groupedPairVerify(cands, sets,
+      directed = false, 0.3, useComponents = false))
+    val blockOnlyTiny = rows(Dedup.groupedPairVerify(cands, sets,
+      directed = false, 0.3, maxComponentShingles = 1L,
       useComponents = false))
-    val blockOnlyTiny = rows(Dedup.verifyJaccardByComponent(cands, sets, 0.3,
-      maxComponentShingles = 1L, useComponents = false))
     assert(blocked === grouped)
     assert(blockOnly === grouped)
     assert(blockOnlyTiny === grouped)
